@@ -1,0 +1,37 @@
+package graft.perfbench
+
+/** Just enough JSON output for the run record and the trace file. */
+object Json {
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def value(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => value(x)
+    case s: String => str(s)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => value(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case b: Boolean => b.toString
+    case m: Map[_, _] => obj(m.toSeq.map { case (k, x) => k.toString -> x }: _*)
+    case xs: Iterable[_] => arr(xs.toSeq)
+    case raw: Raw => raw.json
+    case other => str(other.toString)
+  }
+
+  def obj(kv: (String, Any)*): String =
+    kv.map { case (k, v) => str(k) + ":" + value(v) }.mkString("{", ",", "}")
+
+  def arr(xs: Seq[Any]): String = xs.map(value).mkString("[", ",", "]")
+
+  /** Already-rendered JSON, embedded verbatim. */
+  final case class Raw(json: String)
+}
