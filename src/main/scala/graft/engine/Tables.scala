@@ -29,7 +29,6 @@ object Tables {
     */
   def ensure(spark: SparkSession, dir: String): Unit = synchronized {
     graft.functions.TextHashExprs.register(spark)
-    graft.functions.ArgMaxLong.register(spark)
     if (spark.conf.getOption(confKey).contains(dir)) return
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Driver refreshes of the testdata have alternated between

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, Expression, GreaterThan, If, IsNotNull, IsNull, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
@@ -39,6 +40,13 @@ case class ArgMaxLong(valueExpr: Expression, ord1: Expression,
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "argmax_long"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.forall(_.dataType == LongType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"${ArgMaxLong.Signature} got " +
+        children.map(_.dataType.sql.toLowerCase).mkString("(", ", ", ")"))
 
   private lazy val bv = AttributeReference("bv", LongType)()
   private lazy val b1 = AttributeReference("b1", LongType)()
@@ -95,9 +103,14 @@ case class ArgMaxLong(valueExpr: Expression, ord1: Expression,
 }
 
 object ArgMaxLong {
-  /** Register `argmax_long(v, o1, o2)` as a SQL-callable aggregate. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_long", exprs => ArgMaxLong(exprs(0), exprs(1), exprs(2)),
-      "built-in")
+  val Signature = "argmax_long(bigint, bigint, bigint)"
+
+  /** The SQL builder: a wrong arity fails analysis naming [[Signature]]
+    * (argument types are checked by `checkInputDataTypes`). */
+  def build(exprs: Seq[Expression]): ArgMaxLong =
+    if (exprs.length == 3) ArgMaxLong(exprs(0), exprs(1), exprs(2))
+    else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+      Map("functionName" -> s"`$Signature`", "expectedNum" -> "3",
+        "actualNum" -> exprs.length.toString,
+        "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
 }

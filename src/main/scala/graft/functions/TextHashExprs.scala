@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -404,29 +405,29 @@ object LloydArgmin {
 }
 
 object TextHashExprs {
-  /** Register SQL-callable forms (idempotent). */
+  /** Every native SQL function, by name. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "lloyd_argmin" -> (es => LloydArgmin(es(0), es(1))),
+    "ivf_assign" -> (es => IvfAssign(es(0), es(1))),
+    "rolling_hash_arr" -> (es => RollingHashArray(es(0), es(1))),
+    "rolling_hash_str" -> (es => RollingHashStr(es(0), es(1))),
+    "affine_minhash" -> (es => AffineMinHash(es(0), es(1))),
+    "simhash32" -> (es => SimHash32(es(0))),
+    "lsh_sig16" -> (es => LshSig16(es(0))),
+    "lsh_bands" -> (es => LshBands(es(0), es(1))),
+    "pq_encode" -> (es => PqEncode(es(0))),
+    "pq_adc_e6" -> (es => PqAdcE6(es(0), es(1))),
+    "float_dot" -> (es => FloatVecDot(es(0), es(1))),
+    "argmax_long" -> ArgMaxLong.build)
+
+  /** Install every native SQL function into the session's registry,
+    * skipping names it already holds: repeated calls (one per
+    * `Tables.t`) neither rebuild an entry nor log a replacement. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("lloyd_argmin",
-      es => LloydArgmin(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("ivf_assign",
-      es => IvfAssign(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("rolling_hash_arr",
-      es => RollingHashArray(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("rolling_hash_str",
-      es => RollingHashStr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("affine_minhash",
-      es => AffineMinHash(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash32",
-      es => SimHash32(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("lsh_sig16",
-      es => LshSig16(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("lsh_bands",
-      es => LshBands(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("pq_encode",
-      es => PqEncode(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("pq_adc_e6",
-      es => PqAdcE6(es(0), es(1)), "built-in")
-    FloatVecDot.register(spark)
+    builders.foreach { case (name, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

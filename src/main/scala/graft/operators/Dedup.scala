@@ -366,43 +366,29 @@ object Dedup {
   val MinhashK = 32
   val MinhashBands = 8 // 4 rows per band
 
+  /** The d03 pair frame: the gated d03 entry always rebuilds (its
+    * bench cost stays honest) and refreshes it; [[DupCluster]]'s d06
+    * fixpoint consumes it instead of re-deriving the identical
+    * signature/band/rerank pipeline. */
+  private[operators] val minhashLshPairsMemo =
+    Memo("minhash_pairs") { (s, dir) =>
+      // persisted only for the build: feeds band explosion + both
+      // signature-compare sides; dropped once the (tiny) pair list is
+      // checkpoint-materialized
+      val sigs = minhashSignatures(s, dir).persist()
+      val g = minhashPairsFrom(sigs)
+        .localCheckpoint() // eager: materializes the pair list NOW
+      sigs.unpersist(true)
+      g
+    }
+
   /** MinHash(k=32) + LSH(8 bands × 4 rows): candidate pairs from band
     * equality, then signature agreement ≥ 50 %. The full pipeline is
     * deterministic integer math, so it is oracle-checkable — unusual
     * for MinHash implementations, which normally bake in an engine
     * hash. At 100 TB only (band_idx, band_key) pairs shuffle. */
-  /** The last built d03 pair frame, keyed by (session, dir) — the
-    * [[graft.operators.Similarity.knnGraph]] build-once convention:
-    * the gated d03 entry always rebuilds (its bench cost stays
-    * honest) and refreshes this; [[DupCluster]]'s d06 fixpoint
-    * consumes [[minhashLshPairsMemo]] instead of re-deriving the
-    * identical signature/band/rerank pipeline. Same immutable-dir +
-    * single-threaded-driver assumptions as the other memos. */
-  @volatile private var lastMinhashPairs
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Memoized [[minhashLshPairs]] for derived consumers (d06's CC
-    * fixpoint): returns the same-(session, dir) checkpointed pair
-    * frame when one exists, builds otherwise. */
-  private[operators] def minhashLshPairsMemo(
-      s: SparkSession, dir: String): DataFrame =
-    lastMinhashPairs match {
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir => g
-      case _ => Memos.timedBuild("minhash_pairs", dir)(
-        minhashLshPairs(s, dir))
-    }
-
-  def minhashLshPairs(s: SparkSession, dir: String): DataFrame = {
-    // persisted only for the build: feeds band explosion + both
-    // signature-compare sides; dropped once the (tiny) pair list is
-    // checkpoint-materialized
-    val sigs = minhashSignatures(s, dir).persist()
-    val g = minhashPairsFrom(sigs)
-      .localCheckpoint() // eager: materializes the pair list NOW
-    sigs.unpersist(true)
-    lastMinhashPairs = Some((s, dir, g))
-    g
-  }
+  def minhashLshPairs(s: SparkSession, dir: String): DataFrame =
+    minhashLshPairsMemo.refresh(s, dir)
 
   private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     shingleHashesMemo(s, dir)
@@ -784,33 +770,15 @@ object Dedup {
   def substringSpans(s: SparkSession, dir: String): DataFrame =
     substringSpansMemo(s, dir).orderBy("doc_id", "span_start")
 
-  @volatile private var lastSubstringSpans
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Build-once span table — [[substringSpansCore]] localCheckpoint-
-    * materialized per (session, dir): the shingleHashesMemo convention
-    * applied to the chain that d19 (report), d20 (rewrite) and x32
-    * (final assembly) each consume — exactly as a production pipeline
-    * materializes the span table once and every rewrite stage reads
-    * it from storage. The span frame is 4 integers per maximal
-    * duplicated span — orders of magnitude smaller than the window
-    * stream that derives it — and checkpoint blocks survive the
-    * inter-query `clearCache` by design (the CacheSpec-documented
-    * allowed residue). */
-  private[operators] def substringSpansMemo(
-      s: SparkSession, dir: String): DataFrame =
-    lastSubstringSpans match {
-      // Memos.alive: auto-invalidate on lost checkpoint blocks
-      // (executor loss on a real cluster) instead of repeatedly
-      // handing out a dead frame
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g) => g
-      case _ => Memos.timedBuild("substring_spans", dir) {
-        val g = substringSpansCore(s, dir)
-        lastSubstringSpans = Some((s, dir, g))
-        g
-      }
-    }
+  /** Build-once span table — [[substringSpansCore]] materialized per
+    * (session, dir): the chain that d19 (report), d20 (rewrite) and
+    * x32 (final assembly) each consume — exactly as a production
+    * pipeline materializes the span table once and every rewrite
+    * stage reads it from storage. The span frame is 4 integers per
+    * maximal duplicated span — orders of magnitude smaller than the
+    * window stream that derives it. */
+  private[operators] val substringSpansMemo =
+    Memo("substring_spans")(substringSpansCore)
 
   /** The stride-1 window-hash stream: token hashes once per token
     * (narrow), then the O(16) fold per position — (doc_id, pos, h)
@@ -964,36 +932,23 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  @volatile private var lastDecontamBase
-      : Option[(SparkSession, String, DataFrame)] = None
-
   /** Build-once decontamination base — the tokenize + distinct-8-gram-
-    * hash pass of [[decontamFrames]], localCheckpoint-materialized per
-    * (session, dir): the shingleHashesMemo convention applied to the
-    * census's single most expensive text pass, which x29 (removal
+    * hash pass of [[decontamFrames]], materialized per (session, dir):
+    * the census's single most expensive text pass, which x29 (removal
     * list) and x31 (per-source card) previously each rebuilt from the
     * raw text. The frame is (doc_id, source, split, gs) — ~8 B per
-    * distinct corpus 8-gram, the d19 cost class paid ONCE — and
-    * checkpoint blocks survive the inter-query `clearCache` by design
-    * (the CacheSpec-documented allowed residue). */
-  private def decontamBaseMemo(s: SparkSession, dir: String): DataFrame =
-    lastDecontamBase match {
-      // Memos.alive: auto-invalidate on lost checkpoint blocks
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g) => g
-      case _ => Memos.timedBuild("decontam_base", dir) {
-        val g = fanOut(docs(s, dir))
-          .select(col("doc_id"), col("source"), lower(col("text")).as("t"),
-            tokens(col("text")).as("tk"))
-          .select(col("doc_id"), col("source"),
-            splitOf(expr(rollingHashExpr("t", P)) % 100).as("split"),
-            expr(s"array_distinct(${hashArrayExpr(ngramsExpr("tk", DecontamN), P)})")
-              .as("gs"))
-          .filter(size(col("gs")) > 0)
-          .localCheckpoint() // eager: one tokenize+hash pass, shared
-        lastDecontamBase = Some((s, dir, g))
-        g
-      }
+    * distinct corpus 8-gram, the d19 cost class paid ONCE. */
+  private[operators] val decontamBaseMemo =
+    Memo("decontam_base") { (s, dir) =>
+      fanOut(docs(s, dir))
+        .select(col("doc_id"), col("source"), lower(col("text")).as("t"),
+          tokens(col("text")).as("tk"))
+        .select(col("doc_id"), col("source"),
+          splitOf(expr(rollingHashExpr("t", P)) % 100).as("split"),
+          expr(s"array_distinct(${hashArrayExpr(ngramsExpr("tk", DecontamN), P)})")
+            .as("gs"))
+        .filter(size(col("gs")) > 0)
+        .localCheckpoint() // eager: one tokenize+hash pass, shared
     }
 
   /** The x29 chain up to (train docs with gram counts, per-doc hit
@@ -1045,11 +1000,5 @@ object Dedup {
         col("m.h").as("max_hit_ratio_e6"),
         (-col("m.nd")).as("worst_doc"))
       .orderBy("source")
-  }
-
-  private[operators] def invalidateMemos(): Unit = {
-    lastMinhashPairs = None
-    lastSubstringSpans = None
-    lastDecontamBase = None
   }
 }

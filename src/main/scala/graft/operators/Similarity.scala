@@ -26,10 +26,8 @@ import graft.functions.FloatVecDot
   */
 object Similarity {
 
-  private def emb(s: SparkSession, dir: String): DataFrame = {
-    FloatVecDot.register(s)
+  private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "embeddings")
-  }
 
   /** Raw embeddings table (native expressions registered), WITHOUT
     * the fan-out or the norm projection — for consumers that keep
@@ -162,14 +160,19 @@ object Similarity {
     * baseline is the documented LSH trade (OperatorsSpec's
     * "bucketed embedding near-dups are a non-empty subset of brute
     * force" pins containment: no invented pairs). */
-  def embeddingNearDupsBucketed(s: SparkSession, dir: String): DataFrame = {
-    val (scored, handles) = bucketedScoredPairsTracked(s, dir)
-    val g = thresholdedPairs(scored)
-      .localCheckpoint() // eager: the thresholded pair list is tiny
-    handles.foreach(_.unpersist(true))
-    lastNearDupPairs = Some((s, dir, g))
-    g
-  }
+  def embeddingNearDupsBucketed(s: SparkSession, dir: String): DataFrame =
+    embeddingNearDupsBucketedMemo.refresh(s, dir)
+
+  /** The d08 pair frame: the gated d08 entry always rebuilds and
+    * refreshes it; [[DupCluster]]'s d09 fixpoint consumes it. */
+  private[operators] val embeddingNearDupsBucketedMemo =
+    Memo("neardup_bucketed") { (s, dir) =>
+      val (scored, handles) = bucketedScoredPairsTracked(s, dir)
+      val g = thresholdedPairs(scored)
+        .localCheckpoint() // eager: the thresholded pair list is tiny
+      handles.foreach(_.unpersist(true))
+      g
+    }
 
   private def thresholdedPairs(scored: DataFrame): DataFrame =
     scored
@@ -185,22 +188,6 @@ object Similarity {
   private[graft] def embeddingNearDupsBucketedLazy(
       s: SparkSession, dir: String): DataFrame =
     thresholdedPairs(bucketedScoredPairs(s, dir))
-
-  /** The last built d08 pair frame, keyed by (session, dir) — the
-    * [[knnGraph]] build-once convention: the gated d08 entry always
-    * rebuilds and refreshes this; [[DupCluster]]'s d09 fixpoint
-    * consumes [[embeddingNearDupsBucketedMemo]]. */
-  @volatile private var lastNearDupPairs
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Memoized [[embeddingNearDupsBucketed]] for derived consumers. */
-  private[operators] def embeddingNearDupsBucketedMemo(
-      s: SparkSession, dir: String): DataFrame =
-    lastNearDupPairs match {
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir => g
-      case _ => Memos.timedBuild("neardup_bucketed", dir)(
-        embeddingNearDupsBucketed(s, dir))
-    }
 
   /** Shared core of d08 and s09: exact cosine over the LSH-band
     * candidate pairs (ida < idb, un-thresholded). ONE definition of
@@ -268,31 +255,36 @@ object Similarity {
     *
     * Build-once convention (the DupCluster.clusters posture): THIS
     * entry always rebuilds — the gated s09 query is the graph build,
-    * so its bench cost stays honest — and refreshes [[lastKnnGraph]];
-    * the six derived consumers (s10/s11-via-mutual/s13/s15/s22/s23)
-    * go through [[knnGraphMemo]] and reuse a same-(session, dir, k)
-    * frame, exactly as a production pipeline writes the graph stage
-    * once and reads it from storage. The result is localCheckpoint-
-    * materialized (n·k rows — tiny), which also lets the build drop
-    * its intermediate signature/band/scored caches eagerly instead
-    * of leaking them to session clearCache. */
-  def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    // persisted only for the duration of the build: the symmetrizing
-    // union reads the scored pairs twice; once the ranked graph is
-    // checkpoint-materialized the scored/signature/band frames are
-    // dead weight and are unpersisted before returning
-    val (scored0, handles) = bucketedScoredPairsTracked(s, dir)
-    val scored = scored0.persist()
-    val g = rankedGraph(scored, k)
-      .localCheckpoint() // eager: materializes the n·k graph NOW
-    // blocking: the spec that pins "the build leaves only the n·k
-    // checkpoint resident" must not race an async block drop, and the
-    // frames being freed were just materialized (cheap to remove)
-    scored.unpersist(true)
-    handles.foreach(_.unpersist(true))
-    lastKnnGraph = Some((s, dir, k, g))
-    g
-  }
+    * so its bench cost stays honest — and refreshes [[knnGraphMemo]],
+    * through which the six derived consumers (s10/s11-via-mutual/s13/
+    * s15/s22/s23) reuse a same-(session, dir, k) frame, exactly as a
+    * production pipeline writes the graph stage once and reads it from
+    * storage. Round-8 telemetry: the seven graph-family queries each
+    * rebuilt the same ~90 MB of band/score intermediates — 26.4 s of
+    * the 184.7 s sf0.1 bench — for an identical n·k result. The result
+    * is localCheckpoint-materialized (n·k rows — tiny), which also
+    * lets the build drop its intermediate signature/band/scored
+    * caches eagerly instead of leaking them to session clearCache. */
+  def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame =
+    knnGraphMemo.refresh(s, dir, k)
+
+  private[operators] val knnGraphMemo =
+    Memo.keyed[Int, DataFrame]("knn_graph") { (s, dir, k) =>
+      // persisted only for the duration of the build: the symmetrizing
+      // union reads the scored pairs twice; once the ranked graph is
+      // checkpoint-materialized the scored/signature/band frames are
+      // dead weight and are unpersisted before returning
+      val (scored0, handles) = bucketedScoredPairsTracked(s, dir)
+      val scored = scored0.persist()
+      val g = rankedGraph(scored, k)
+        .localCheckpoint() // eager: materializes the n·k graph NOW
+      // blocking: the spec that pins "the build leaves only the n·k
+      // checkpoint resident" must not race an async block drop, and the
+      // frames being freed were just materialized (cheap to remove)
+      scored.unpersist(true)
+      handles.foreach(_.unpersist(true))
+      g
+    }
 
   private def rankedGraph(scored: DataFrame, k: Int): DataFrame = {
     val edges = scored.select(
@@ -313,25 +305,6 @@ object Similarity {
   private[graft] def knnGraphLazy(
       s: SparkSession, dir: String, k: Int = 3): DataFrame =
     rankedGraph(bucketedScoredPairs(s, dir), k)
-
-  /** The last built s09 graph, keyed by (session, dir, k) — same
-    * memo contract, lifetime, and single-threaded-driver assumption
-    * as [[DupCluster]]'s label memos (see its scaladoc). */
-  @volatile private var lastKnnGraph
-      : Option[(SparkSession, String, Int, DataFrame)] = None
-
-  /** Memoized [[knnGraph]] for derived consumers: returns the
-    * same-(session, dir, k) checkpointed graph when one exists,
-    * builds it otherwise. Round-8 telemetry: the seven graph-family
-    * queries each rebuilt the same ~90 MB of band/score intermediates
-    * — 26.4 s of the 184.7 s sf0.1 bench, 39.6 s of 369 s at sf1 —
-    * for an identical n·k result. */
-  private[operators] def knnGraphMemo(
-      s: SparkSession, dir: String, k: Int = 3): DataFrame =
-    lastKnnGraph match {
-      case Some((ms, mdir, mk, g)) if (ms eq s) && mdir == dir && mk == k => g
-      case _ => Memos.timedBuild("knn_graph", dir)(knnGraph(s, dir, k))
-    }
 
   /** s10: mutual-k-NN filter — the symmetrization step every
     * kNN-graph consumer (agglomerative/community clustering, UMAP
@@ -679,8 +652,8 @@ object Similarity {
   }
 
   /** Lazy (un-checkpointed) Lloyd state for plan inspection — the
-    * gated entries ride [[lloydStateFresh]]/[[lloydStateMemo]], whose
-    * eager localCheckpoint hides the loop's shape behind an RDD scan;
+    * gated entries ride [[lloydStateMemo]], whose eager
+    * localCheckpoint hides the loop's shape behind an RDD scan;
     * PlanSpec pins the no-window map-side-argmin assignment here. */
   private[graft] def lloydStateLazy(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
@@ -688,42 +661,24 @@ object Similarity {
     (stats, asg)
   }
 
-  /** The last built Lloyd state, keyed by (session, dir) — the
-    * [[substringSpansMemo]] build-once convention applied to the
-    * 2-round EM loop that s26, s27 AND d21 each rebuilt (~2 s each at
-    * sf0.1, ~5 s at sf1): exactly as a production pipeline trains the
-    * clustering once and every downstream stage reads the assignment
-    * from storage. Holds (per-(bucket,dim) stats, slim (vec_id,
-    * bucket, d2) assignment) — the checkpointed assignment drops the
-    * 64-long component array, so the blocks are 3 longs per vector. */
-  @volatile private var lastLloyd
-      : Option[(SparkSession, String, (DataFrame, DataFrame))] = None
-
-  /** Build the Lloyd state NOW (eager localCheckpoint), refresh the
-    * memo, and drop the component cache — the gated s26 entry always
-    * pays this honest rebuild; consumers take [[lloydStateMemo]]. */
-  private[operators] def lloydStateFresh(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
+  /** Build-once Lloyd state — the 2-round EM loop that s26, s27 AND
+    * d21 each rebuilt (~2 s each at sf0.1, ~5 s at sf1): exactly as a
+    * production pipeline trains the clustering once and every
+    * downstream stage reads the assignment from storage. Holds
+    * (per-(bucket,dim) stats, slim (vec_id, bucket, d2) assignment) —
+    * the checkpointed assignment drops the 64-long component array,
+    * so the blocks are 3 longs per vector. The gated s26 entry pays
+    * the honest rebuild through `refresh`; the derived consumers
+    * (s27's quality report, d21's semantic dedup) read the memo. */
+  private[operators] val lloydStateMemo = Memo("lloyd_state") { (s, dir) =>
     val (stats, asg, xs) = lloydStateTracked(s, dir)
     val g = (stats.localCheckpoint(), asg.localCheckpoint())
     xs.unpersist() // both checkpoints are materialized; cache done
-    lastLloyd = Some((s, dir, g))
     g
   }
 
-  /** Memoized [[lloydStateFresh]] for the derived consumers (s27's
-    * quality report, d21's semantic dedup). Memos.alive: auto-rebuild
-    * on lost checkpoint blocks (executor loss on a real cluster). */
-  private[operators] def lloydStateMemo(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    lastLloyd match {
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g._1) && Memos.alive(g._2) => g
-      case _ => Memos.timedBuild("lloyd_state", dir)(lloydStateFresh(s, dir))
-    }
-
   def kmeansLloyd(s: SparkSession, dir: String): DataFrame = {
-    val (stats, _) = lloydStateFresh(s, dir)
+    val (stats, _) = lloydStateMemo.refresh(s, dir)
     stats.select(col("bucket"), col("dim").cast("int").as("dim"),
         col("n_vectors"), col("mean_e6"))
       .orderBy("bucket", "dim")
@@ -1530,7 +1485,7 @@ object Similarity {
     * measured-linear path. kth cosine = min(cs) of the ranked list
     * (ranks are cs-descending), so no second window is needed. */
   def knnOutliers(s: SparkSession, dir: String): DataFrame = {
-    val agg = knnGraphMemo(s, dir)
+    val agg = knnGraphMemo(s, dir, 3)
       .groupBy("vec_id")
       .agg(count(lit(1)).cast("long").as("n_neighbors"),
         max(col("cs_e6")).as("best_cs_e6"),
@@ -1585,7 +1540,7 @@ object Similarity {
     // (the round-8 persists here leaked to session clearCache — the
     // ADVICE-flagged accumulation); outDeg is a tiny groupBy over the
     // checkpointed n·k rows, cheap to recompute per iteration
-    val g = knnGraphMemo(s, dir)
+    val g = knnGraphMemo(s, dir, 3)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     val outDeg = g.groupBy("src").agg(count(lit(1)).as("out_deg"))
     val nodes = emb(s, dir).select("vec_id")
@@ -1794,11 +1749,5 @@ object Similarity {
       .join(nearest, "source")
       .join(disp, "source")
       .orderBy("source")
-  }
-
-  private[operators] def invalidateMemos(): Unit = {
-    lastNearDupPairs = None
-    lastKnnGraph = None
-    lastLloyd = None
   }
 }

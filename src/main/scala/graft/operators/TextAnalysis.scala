@@ -1968,31 +1968,17 @@ object TextAnalysis {
       .select("doc_id", "source", "y", "bucket", "tf")
   }
 
-  @volatile private var lastLabeledFeatures
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Build-once labeled feature stream per (session, dir) — the
-    * substringSpansMemo convention, EAGER ON CONSTRUCTION. Round-15
-    * verdict item 5: cls_weights (t36/x33's full-corpus training) and
-    * cls_eval (t37's split training + scoring) each rebuilt this
-    * corpus-scale tokenize+hash+label pass inside their own builds —
-    * together ~35 s of the sf0.1 cold start, visible in
-    * memo_build_sec. One localCheckpoint-materialized frame now
-    * serves both trainings (and the label guard fires here, at the
-    * shared build, exactly once). Production analog: featurize once,
-    * train N model variants from the artifact. */
-  private[operators] def labeledFeaturesMemo(
-      s: SparkSession, dir: String): DataFrame =
-    lastLabeledFeatures match {
-      // Memos.alive: auto-invalidate on lost checkpoint blocks
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g) => g
-      case _ => Memos.timedBuild("labeled_features", dir) {
-        val g = labeledFeatures(s, dir).localCheckpoint()
-        lastLabeledFeatures = Some((s, dir, g))
-        g
-      }
-    }
+  /** Build-once labeled feature stream per (session, dir), EAGER ON
+    * CONSTRUCTION. Round-15 verdict item 5: cls_weights (t36/x33's
+    * full-corpus training) and cls_eval (t37's split training +
+    * scoring) each rebuilt this corpus-scale tokenize+hash+label pass
+    * inside their own builds — together ~35 s of the sf0.1 cold
+    * start. One materialized frame now serves both trainings (and the
+    * label guard fires here, at the shared build, exactly once).
+    * Production analog: featurize once, train N model variants from
+    * the artifact. */
+  private[operators] val labeledFeaturesMemo =
+    Memo("labeled_features")(labeledFeatures(_, _).localCheckpoint())
 
   /** The hard-example batch-perceptron loop over a labeled feature
     * stream — the t36 scaladoc's recurrence, factored out so t36
@@ -2078,42 +2064,15 @@ object TextAnalysis {
     wDf
   }
 
-  @volatile private var lastClsWeights
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Build-once trained weight table — t36's full-corpus model,
-    * localCheckpoint-materialized per (session, dir) (the
-    * substringSpansMemo convention): [[ClsBuckets]] rows shared by
-    * t36 (the gated artifact) and x33 (serving it in the final
-    * assembly), exactly as a production pipeline trains once and
-    * every downstream filter reads the weight artifact from storage.
-    * EAGER ON CONSTRUCTION: the first call per (session, dir) runs
-    * the 4-round training loop. */
-  private[operators] def clsWeightsMemo(
-      s: SparkSession, dir: String): DataFrame =
-    lastClsWeights match {
-      // Memos.alive: auto-invalidate on lost checkpoint blocks
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g) => g
-      case _ =>
-        // built OUTSIDE timedBuild so memo_build_sec attributes the
-        // shared feature pass to its own labeled_features row, not to
-        // whichever training happens to touch it first
-        val ft = labeledFeaturesMemo(s, dir)
-        Memos.timedBuild("cls_weights", dir) {
-          // localCheckpoint the (driver-built) table so the memo keeps
-          // its LogicalRDD probe key and alive() rate-limiting
-          val g = trainWeights(s, ft).localCheckpoint()
-          lastClsWeights = Some((s, dir, g))
-          g
-        }
-    }
-
-  private[operators] def invalidateMemos(): Unit = {
-    lastLabeledFeatures = None
-    lastClsWeights = None
-    lastClsEval = None
-  }
+  /** Build-once trained weight table — t36's full-corpus model:
+    * [[ClsBuckets]] rows shared by t36 (the gated artifact) and x33
+    * (serving it in the final assembly), exactly as a production
+    * pipeline trains once and every downstream filter reads the weight
+    * artifact from storage. EAGER ON CONSTRUCTION: the first call per
+    * (session, dir) runs the 4-round training loop. The driver-built
+    * table is localCheckpointed so it is probed like every memo. */
+  private[operators] val clsWeightsMemo = Memo("cls_weights")((s, dir) =>
+    trainWeights(s, labeledFeaturesMemo(s, dir)).localCheckpoint())
 
   /** Keep set under the TRAINED model (x33's filter): documents whose
     * perceptron margin under [[clsWeightsMemo]]'s weights is > 0 —
@@ -2178,30 +2137,13 @@ object TextAnalysis {
   def classifierEval(s: SparkSession, dir: String): DataFrame =
     clsEvalMemo(s, dir).orderBy("source", "holdout")
 
-  @volatile private var lastClsEval
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Build-once t37 acceptance report per (session, dir) — the
-    * clsWeightsMemo convention: the split model trains once and its
-    * ~40-row confusion card is read many times (exactly how an
-    * offline acceptance check is consumed). EAGER ON CONSTRUCTION:
-    * the first call runs the 16-round split training. */
-  private def clsEvalMemo(s: SparkSession, dir: String): DataFrame =
-    lastClsEval match {
-      // Memos.alive: auto-invalidate on lost checkpoint blocks
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g) => g
-      case _ =>
-        // shared feature memo built outside the timer (cls_weights'
-        // convention) — this is where the round-15 ~35 s double
-        // featurization drops out of the cold start
-        val ft = labeledFeaturesMemo(s, dir)
-        Memos.timedBuild("cls_eval", dir) {
-          val g = buildClassifierEval(s, ft)
-          lastClsEval = Some((s, dir, g))
-          g
-        }
-    }
+  /** Build-once t37 acceptance report per (session, dir): the split
+    * model trains once and its ~40-row confusion card is read many
+    * times (exactly how an offline acceptance check is consumed).
+    * EAGER ON CONSTRUCTION: the first call runs the 16-round split
+    * training. */
+  private[operators] val clsEvalMemo = Memo("cls_eval")((s, dir) =>
+    buildClassifierEval(s, labeledFeaturesMemo(s, dir)))
 
   private def buildClassifierEval(s: SparkSession, ftMemo: DataFrame)
       : DataFrame = {

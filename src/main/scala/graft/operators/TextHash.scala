@@ -141,33 +141,19 @@ object TextHash {
       .select(col("doc_id"), expr(hashArrayExpr("shs", P)).as("hv"),
         size(col("shs")).as("n_sh"))
 
-  @volatile private var lastShingleHashes
-      : Option[(org.apache.spark.sql.SparkSession, String, DataFrame)] = None
-
   /** Build-once corpus fingerprint table — [[shingleHashes]] of the
-    * documents table, localCheckpoint-materialized per (session, dir):
-    * the d03-pair/knn-graph convention applied to the primitive that
-    * TEN gated queries (d02/d03/d11/d12/d18/x15/t05/t19/t31/t32 + the
-    * x26 card) previously each rebuilt from the raw text — exactly as
-    * a production pipeline materializes the signature table once and
-    * every dedup/text stage reads it from storage. The frame is
-    * (doc_id, hv, n_sh) — ~8 B per corpus shingle, two orders of
-    * magnitude smaller than the text it summarizes — and checkpoint
-    * blocks survive the inter-query `clearCache` by design (the
-    * CacheSpec-documented allowed residue). Direct [[shingleHashes]]
-    * callers (ScaleStress telemetry, ad-hoc frames) always rebuild. */
-  private[operators] def shingleHashesMemo(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    lastShingleHashes match {
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir => g
-      case _ => Memos.timedBuild("shingle_hashes", dir) {
-        val g = shingleHashes(graft.engine.Tables.t(s, dir, "documents"))
-          .localCheckpoint()
-        lastShingleHashes = Some((s, dir, g))
-        g
-      }
+    * documents table, materialized once per (session, dir): the
+    * primitive that TEN gated queries (d02/d03/d11/d12/d18/x15/t05/
+    * t19/t31/t32 + the x26 card) previously each rebuilt from the raw
+    * text — exactly as a production pipeline materializes the
+    * signature table once and every dedup/text stage reads it from
+    * storage. The frame is (doc_id, hv, n_sh) — ~8 B per corpus
+    * shingle, two orders of magnitude smaller than the text it
+    * summarizes. Direct [[shingleHashes]] callers (ScaleStress
+    * telemetry, ad-hoc frames) always rebuild. */
+  private[operators] val shingleHashesMemo =
+    Memo("shingle_hashes") { (s, dir) =>
+      shingleHashes(graft.engine.Tables.t(s, dir, "documents"))
+        .localCheckpoint()
     }
-
-  private[operators] def invalidateMemos(): Unit =
-    lastShingleHashes = None
 }

@@ -66,40 +66,6 @@ class Round16Spec extends AnyFunSuite {
     assert(got == plain, "null-group running sum diverges")
   }
 
-  test("labeledFeaturesMemo serves the un-memoized stream, and " +
-      "invalidate forces a genuine rebuild") {
-    val dir = "/root/testdata/sf0.001"
-    Memos.invalidate()
-    val memo = TextAnalysis.labeledFeaturesMemo(spark, dir)
-    val direct = TextAnalysis.labeledFeatures(spark, dir)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(rows(memo) == rows(direct),
-      "memoized feature stream diverges from the direct build")
-    // same (session, dir) → the SAME frame, no rebuild
-    assert(TextAnalysis.labeledFeaturesMemo(spark, dir) eq memo,
-      "second access must hand out the cached frame")
-    // invalidate → a REBUILT frame (its own checkpoint identity —
-    // the probe-freshness non-inheritance law), same rows
-    Memos.invalidate()
-    val rebuilt = TextAnalysis.labeledFeaturesMemo(spark, dir)
-    assert(!(rebuilt eq memo), "invalidate must drop the memo")
-    assert(Memos.probeKey(rebuilt) != Memos.probeKey(memo),
-      "rebuilt feature frame must carry its own checkpoint identity")
-    assert(rows(rebuilt) == rows(direct))
-    Memos.invalidate()
-    // drop THIS test's checkpoint blocks synchronously: invalidate()
-    // only unreferences them, and the async ContextCleaner reclaim
-    // races later suites' storage accounting (CacheSpec's ≤8 MB
-    // residue law measures deltas on the shared session)
-    val mine = Seq(memo, rebuilt).flatMap(_.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }).toSet
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (mine(id)) rdd.unpersist(blocking = true)
-    }
-  }
-
   test("keep-best arg-max puts NULL scores last, like the old window") {
     import spark.implicits._
     // cluster 0: a null-scored member among scored ones — the window's

@@ -34,7 +34,7 @@ class Round17Spec extends AnyFunSuite {
 
   test("argmax_long ≡ max_by(v, struct(o1, o2)) incl. NULL fields") {
     import spark.implicits._
-    graft.functions.ArgMaxLong.register(spark)
+    graft.functions.TextHashExprs.register(spark)
     // deterministic pseudo-random frame: groups of mixed size, NULL
     // values, NULL ordering fields, equal-o1 ties broken by o2, and a
     // single-row group. (o1, o2) stays unique within each group —
