@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.functions._
 
 /** Cross-engine-deterministic text hashing primitives — SQL fragments
@@ -122,9 +123,12 @@ object TextHash {
     // current caller passes a scan-level frame; any future caller
     // whose analyzed plan carries more than narrow scan-level nodes
     // skips the probe and keeps the unconditional repartition (the
-    // pre-round-16 behavior — correct, never double-executing).
-    val scanLevel = df.queryExecution.analyzed.collect { case p => p.nodeName }
-      .forall(FanOutNarrowNodes)
+    // pre-round-16 behavior — correct, never double-executing). The
+    // plan walk does not enter subquery plans, and df.rdd would run a
+    // scalar subquery's job, so a node carrying one is not narrow.
+    val scanLevel = df.queryExecution.analyzed.collect { case p => p }
+      .forall(p => FanOutNarrowNodes(p.nodeName) &&
+        !p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
     if (scanLevel && df.rdd.getNumPartitions >= n) df else df.repartition(n)
   }
 

@@ -15,8 +15,9 @@ import graft.engine.Tables
   * TPC-H-ish test tables. Conventions:
   *  - Output column names are stable aliases matched 1:1 by the
   *    DuckDB oracle SQL in [[graft.SparkEntry.oracleSql]].
-  *  - Double-typed aggregates are `round`ed (2dp for money sums, 4dp
-  *    for averages/ratios) so cross-engine float summation order
+  *  - Money sums are exact BIGINT cents rendered as DOUBLE once
+  *    ([[cents]], [[money]]); other double aggregates are `round`ed
+  *    (4dp for averages/ratios) so cross-engine float summation order
   *    cannot flip the hash compare.
   *  - Every result carries a deterministic `ORDER BY` on a unique key.
   *  - Scale notes: filters/projections sit directly over the parquet
@@ -28,65 +29,83 @@ object Relational {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.t(s, dir, name)
 
-  /** Round a money-sum to 2dp. */
+  /** Round to 2dp (a quantity sum or a single price; money sums use
+    * [[money]]). */
   private def m(c: Column): Column = round(c, 2)
 
-  /** Exact-decimal money math: parquet stores 2-dp doubles; casting to
-    * DECIMAL(12,2) before summing makes the aggregate exact and
-    * engine-order-independent, so the DuckDB oracle matches bit-for-bit
-    * (double summation order differs between engines; decimal does not).
-    */
-  private val D12 = DecimalType(12, 2)
-  private def dec(c: Column): Column = c.cast(D12)
-  private val oneD: Column = lit(1).cast(D12)
-  /** Sum in decimal (exact, order-independent), then render as DOUBLE.
-    * The decimal intermediate means engines cannot diverge on float
-    * summation order; the final decimal→double cast is correctly
-    * rounded in both engines, so the output is bit-identical however
-    * the comparing harness stringifies it. (A DECIMAL output type is
-    * hash-fragile: `134122313.70` stringifies with a trailing zero as
-    * decimal but as `134122313.7` once anything converts it to float.)
+  /** Money math in exact BIGINT fixed point. The parquet money columns
+    * (prices, discounts, taxes, balances) are 2-dp-coded doubles: each
+    * is the double nearest some k/100, so `cents` recovers k exactly —
+    * it equals the unscaled value of `CAST(x AS DECIMAL(12,2))`,
+    * negatives included (not true of 3-dp ties like 0.125, which the
+    * tables never hold). Sums and products of cents then run as long
+    * arithmetic, exact and associative, so engine summation order
+    * cannot move a result: a product like ep·(1−d)·(1+t) is
+    * ep_c·(100−d_c)·(100+t_c) at scale 6. This is Catalyst's own
+    * `DecimalAggregates` move (sum unscaled longs while the result
+    * fits 18 digits), applied where a DECIMAL(12,2) sum's declared
+    * DECIMAL(22,2)+ type is too wide for that rule and would update
+    * a `java.math.BigDecimal` per row.
     *
-    * Bound: exactness of the final cast needs the sum's unscaled value
-    * (digits × 10^scale) under 2^53 — DuckDB converts the unscaled int
-    * then divides by 10^scale, which double-rounds past that. Holds
-    * through sf0.1 for every query here (worst case sum_charge:
-    * ~3e9 × 10^6 = 3e15 < 9.0e15); at sf1+ render at a reduced scale. */
-  private def dsum(e: Column): Column = sum(e).cast(DoubleType)
+    * Bound: an unscaled sum must stay inside a long (|S| < 9.2e18).
+    * The widest, q01's scale-6 sum_charge, is ~3e15 at sf0.1 and
+    * ~3e16 at sf1, so it overflows near sf300. Under ANSI mode (the
+    * session default) long overflow throws ARITHMETIC_OVERFLOW rather
+    * than wrapping, so the bound fails loudly, never silently. */
+  private[graft] def cents(c: Column): Column = floor(c * 100 + 0.5)
 
-  /** 4-dp average from an exact DECIMAL sum and a count: one exact
-    * double cast, one division, floor(·1e4 + 0.5)/1e4 — every step is
-    * the same IEEE op in both engines, unlike round(avg(double), 4),
+  /** Render an unscaled sum S at `scale` as the DOUBLE nearest
+    * S / 10^scale — bit-identical to the correctly rounded
+    * `CAST(DECIMAL → DOUBLE)` of both Spark and the DuckDB oracle (a
+    * DECIMAL output type would be hash-fragile: `134122313.70`
+    * stringifies with a trailing zero as decimal but not as float).
+    * Below 2^53, S and 10^scale are exact doubles and one IEEE
+    * division is correctly rounded; past it `S.toDouble / 10^scale`
+    * would round twice, so S is rendered as decimal text and parsed
+    * (`Double.parseDouble` is correctly rounded). It applies to a
+    * finished sum, never inside one. */
+  private[graft] def money(unscaled: Column, scale: Int): Column = {
+    val exact = 1L << 53
+    when(unscaled.between(-exact, exact),
+      unscaled.cast(DoubleType) / math.pow(10, scale))
+      .otherwise(regexp_replace(unscaled.cast(StringType),
+        s"(\\d{$scale})$$", ".$1").cast(DoubleType))
+  }
+
+  /** 4-dp average from an exact cents sum and a count: one exact
+    * double render, one division, floor(·1e4 + 0.5)/1e4 — every step
+    * is the same IEEE op in both engines, unlike round(avg(double), 4),
     * whose input depends on summation order and whose rounding
     * resolves representation ties engine-specifically. */
-  private def avg4(sumDec: Column, n: Column): Column =
-    floor(sumDec.cast(DoubleType) / n * 10000 + 0.5) / 10000.0
+  private def avg4(sumCents: Column, n: Column): Column =
+    floor(money(sumCents, 2) / n * 10000 + 0.5) / 10000.0
 
   // ---------------------------------------------------------------
   // Aggregation (SURVEY §2.4: A2, A3) — TPC-H Q1 pricing summary.
   // Partial aggregation keeps the shuffle at |groups| ≈ 6 rows.
   def q01_pricing_summary(s: SparkSession, dir: String): DataFrame = {
+    val ep = cents(col("l_extendedprice"))
+    val disc = cents(col("l_discount"))
     t(s, dir, "lineitem")
       .filter(col("l_shipdate") <= lit("2000-12-01"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         m(sum(col("l_quantity"))).as("sum_qty"),
-        dsum(dec(col("l_extendedprice"))).as("sum_base_price"),
-        dsum(dec(col("l_extendedprice")) * (oneD - dec(col("l_discount"))))
-          .as("sum_disc_price"),
-        dsum(dec(col("l_extendedprice")) * (oneD - dec(col("l_discount"))) *
-          (oneD + dec(col("l_tax")))).as("sum_charge"),
-        // averages derive from the exact DECIMAL sums (avg4) — a
+        money(sum(ep), 2).as("sum_base_price"),
+        money(sum(ep * (lit(100) - disc)), 4).as("sum_disc_price"),
+        money(sum(ep * (lit(100) - disc) * (lit(100) + cents(col("l_tax")))), 6)
+          .as("sum_charge"),
+        // averages derive from the exact cents sums (avg4) — a
         // round(avg(double)) would depend on summation order
-        sum(dec(col("l_quantity"))).as("sq_dec"),
-        sum(dec(col("l_extendedprice"))).as("sp_dec"),
-        sum(dec(col("l_discount"))).as("sd_dec"),
+        sum(cents(col("l_quantity"))).as("sq_c"),
+        sum(ep).as("sp_c"),
+        sum(disc).as("sd_c"),
         count(lit(1)).as("count_order"))
       .select(col("l_returnflag"), col("l_linestatus"), col("sum_qty"),
         col("sum_base_price"), col("sum_disc_price"), col("sum_charge"),
-        avg4(col("sq_dec"), col("count_order")).as("avg_qty"),
-        avg4(col("sp_dec"), col("count_order")).as("avg_price"),
-        avg4(col("sd_dec"), col("count_order")).as("avg_disc"),
+        avg4(col("sq_c"), col("count_order")).as("avg_qty"),
+        avg4(col("sp_c"), col("count_order")).as("avg_price"),
+        avg4(col("sd_c"), col("count_order")).as("avg_disc"),
         col("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
   }
@@ -109,7 +128,7 @@ object Relational {
       .join(t(s, dir, "customer"),
         col("o_custkey") === col("c_custkey"), "inner")
       .groupBy(col("c_mktsegment"))
-      .agg(dsum(dec(col("o_totalprice"))).as("revenue"),
+      .agg(money(sum(cents(col("o_totalprice"))), 2).as("revenue"),
         count(lit(1)).as("n_orders"))
       .orderBy("c_mktsegment")
   }
@@ -173,7 +192,7 @@ object Relational {
       .join(broadcast(t(s, dir, "part")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
-      .agg(dsum(dec(col("l_extendedprice"))).as("revenue"),
+      .agg(money(sum(cents(col("l_extendedprice"))), 2).as("revenue"),
         count(lit(1)).as("n_lines"))
       .orderBy("p_brand")
   }
@@ -191,7 +210,7 @@ object Relational {
         col("s_nationkey") === col("c_nationkey"))
       .groupBy(col("s_suppkey"))
       .agg(count(lit(1)).as("n_matches"),
-        dsum(dec(col("c_acctbal"))).as("sum_bal"))
+        money(sum(cents(col("c_acctbal"))), 2).as("sum_bal"))
       .orderBy("s_suppkey")
   }
 
@@ -203,7 +222,7 @@ object Relational {
       .select(col("s_nationkey").as("nationkey"), col("s_acctbal").as("bal"))
     c.union(p)
       .groupBy(col("nationkey"))
-      .agg(count(lit(1)).as("n"), dsum(dec(col("bal"))).as("sum_bal"))
+      .agg(count(lit(1)).as("n"), money(sum(cents(col("bal"))), 2).as("sum_bal"))
       .orderBy("nationkey")
   }
 
@@ -246,7 +265,7 @@ object Relational {
           .otherwise("low").as("bucket"),
         col("o_totalprice"))
       .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"), dsum(dec(col("o_totalprice"))).as("total"))
+      .agg(count(lit(1)).as("n"), money(sum(cents(col("o_totalprice"))), 2).as("total"))
       .orderBy("bucket")
   }
 
@@ -308,7 +327,7 @@ object Relational {
   def q19_subquery_from(s: SparkSession, dir: String): DataFrame = {
     val spend = t(s, dir, "orders")
       .groupBy(col("o_custkey"))
-      .agg(dsum(dec(col("o_totalprice"))).as("spend"))
+      .agg(money(sum(cents(col("o_totalprice"))), 2).as("spend"))
     spend.filter(col("spend") > 1000000)
       .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("spend"))
@@ -318,14 +337,14 @@ object Relational {
   // Scalar subquery (Q3 extension): price above 1.5× global average.
   // Declarative: the single-row aggregate is broadcast, not collected.
   // The comparison is cleared of the double mean: price > sum/n · 1.5
-  // ⟺ price·2n > sum·3 in exact DECIMAL, so membership cannot flip on
+  // ⟺ price·2n > sum·3 in exact BIGINT cents, so membership cannot flip on
   // engine summation order (the q43/q48 convention).
   def q20_scalar_subquery(s: SparkSession, dir: String): DataFrame = {
     val tot = t(s, dir, "orders")
-      .agg(sum(dec(col("o_totalprice"))).as("s"), count(lit(1)).as("n"))
+      .agg(sum(cents(col("o_totalprice"))).as("s"), count(lit(1)).as("n"))
     t(s, dir, "orders")
       .join(broadcast(tot),
-        dec(col("o_totalprice")) * 2 * col("n") > col("s") * 3)
+        cents(col("o_totalprice")) * 2 * col("n") > col("s") * 3)
       .select(col("o_orderkey"), m(col("o_totalprice")).as("price"))
       .orderBy("o_orderkey")
   }
@@ -363,11 +382,11 @@ object Relational {
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
         col("o_orderdate"))
       .withColumn("rnk", row_number().over(byPrice))
-      // running sum accumulates in DECIMAL: a windowed double sum's
+      // running sum accumulates in cents: a windowed double sum's
       // association order is an engine implementation detail (segment
-      // trees vs sequential), the same hazard dsum avoids for groups
+      // trees vs sequential), the same hazard money sums avoid for groups
       .withColumn("running",
-        sum(dec(col("o_totalprice"))).over(byDate).cast(DoubleType))
+        money(sum(cents(col("o_totalprice"))).over(byDate), 2))
       .filter(col("rnk") <= 3)
       .select(col("o_custkey"), col("o_orderkey"), col("rnk"), col("running"))
       .orderBy("o_custkey", "rnk")
@@ -414,8 +433,8 @@ object Relational {
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("n_name"))
-      .agg(dsum(dec(col("l_extendedprice")) * (oneD - dec(col("l_discount"))))
-        .as("revenue"))
+      .agg(money(sum(cents(col("l_extendedprice")) *
+        (lit(100) - cents(col("l_discount")))), 4).as("revenue"))
       .orderBy("n_name")
   }
 
@@ -558,7 +577,7 @@ object Relational {
     t(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
-        dsum(dec(col("o_totalprice"))).as("total"))
+        money(sum(cents(col("o_totalprice"))), 2).as("total"))
       .filter(col("n_orders") >= 15)
       .orderBy("o_custkey")
   }
@@ -763,7 +782,7 @@ object Relational {
       .saltedJoin(orders, customer, "o_custkey", "c_custkey", salt = 8)
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_orders"),
-        dsum(dec(col("o_totalprice"))).as("revenue"))
+        money(sum(cents(col("o_totalprice"))), 2).as("revenue"))
       .select(col("c_nationkey").cast("int").as("nationkey"),
         col("n_orders"), col("revenue"))
       .orderBy("nationkey")

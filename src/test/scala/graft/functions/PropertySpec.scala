@@ -1,11 +1,15 @@
 package graft.functions
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{Decimal, DecimalType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lineage.LineParser
+import graft.queries.Relational
 
 /** Property-based laws for the native hash/sketch kernels — the
   * algebraic facts the operators LEAN on, made executable over
@@ -15,16 +19,30 @@ import graft.lineage.LineParser
   * plain min; permutation invariance is WHY partitioning (which
   * reorders rows) cannot change a signature; the fold-reference
   * equality is WHY the DuckDB oracle's list_reduce replication
-  * matches the compiled loop bit-for-bit.
+  * matches the compiled loop bit-for-bit. The money laws are WHY the
+  * BIGINT-cents sums in [[graft.queries.Relational]] render the same
+  * doubles as the DECIMAL sums of the DuckDB oracle.
   */
 class PropertySpec extends AnyFunSuite {
 
-  private def check(name: String, p: Prop): Unit = {
-    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)
+  private def check(name: String, p: Prop, cases: Int = 200): Unit = {
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(cases), p)
     assert(r.passed, s"$name: ${r.status}")
   }
 
   private val P = 1000000007L
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  /** The money laws run one Spark job per case, so they take fewer,
+    * larger cases (500 values each). The values go through an RDD, not
+    * a local relation, so the projection runs as generated code. */
+  private val MoneyCases = 20
 
   private val asciiStr: Gen[String] =
     Gen.chooseNum(0, 24).flatMap(n =>
@@ -104,5 +122,47 @@ class PropertySpec extends AnyFunSuite {
         p.getInputTables.contains(s"$db.$src") &&
           p.getOutputTables.contains(s"$db.$dst")
     })
+  }
+
+  test("money: cents(x) is the unscaled CAST(x AS DECIMAL(12,2)) of a 2-dp x") {
+    import spark.implicits._
+    // k/100 for |k| < 10^12 (the DECIMAL(12,2) range), with the .x5
+    // values (round()'s representation ties) and negatives drawn often
+    val k: Gen[Long] = Gen.frequency(
+      3 -> Gen.chooseNum(-999999999999L, 999999999999L),
+      2 -> Gen.chooseNum(-99999999999L, 99999999999L).map(_ * 10 + 5),
+      1 -> Gen.chooseNum(-1000L, 1000L))
+    check("cents", Prop.forAll(Gen.listOfN(500, k)) { ks =>
+      spark.sparkContext.parallelize(ks.map(_ / 100.0), 2).toDF("x")
+        .select(Relational.cents(col("x")), col("x").cast(DecimalType(12, 2)))
+        .collect()
+        .forall(r => r.getLong(0) == r.getDecimal(1).unscaledValue.longValueExact)
+    }, MoneyCases)
+  }
+
+  test("money: money(S, k) is Decimal(S, 38, k).toDouble bit for bit, |S| <= 2^62") {
+    import spark.implicits._
+    // past 2^53 a plain S.toDouble / 10^k rounds twice; draw that
+    // boundary, the full 2^62 range and small sums
+    val big = 1L << 62
+    val edge = 1L << 53
+    val s: Gen[Long] = Gen.frequency(
+      3 -> Gen.chooseNum(-big, big),
+      2 -> Gen.chooseNum(-4096L, 4096L).flatMap(d =>
+        Gen.oneOf(edge + d, -edge + d)),
+      1 -> Gen.chooseNum(-10000000L, 10000000L))
+    val scales = Seq(2, 4, 6)
+    check("money", Prop.forAll(Gen.listOfN(500, s)) { ss =>
+      spark.sparkContext.parallelize(ss, 2).toDF("s")
+        .select(col("s") +: scales.map(k => Relational.money(col("s"), k)): _*)
+        .collect()
+        .forall { r =>
+          scales.zipWithIndex.forall { case (k, i) =>
+            java.lang.Double.doubleToRawLongBits(r.getDouble(i + 1)) ==
+              java.lang.Double.doubleToRawLongBits(
+                Decimal(r.getLong(0), 38, k).toDouble)
+          }
+        }
+    }, MoneyCases)
   }
 }

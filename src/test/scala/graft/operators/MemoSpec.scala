@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkJobs
 
 /** The memo laws, table-driven over all 14 build-once frames.
   *
@@ -152,44 +153,6 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"outer build counted its nested build: $sec")
   }
 
-  /** Count Spark jobs started while `body` runs. Job IDS are
-    * recorded (not a bare counter) and fenced by a marker job's id:
-    * the listener bus is async and registered per call, so
-    * late-draining job-start events from a PRIOR action could leak
-    * into the window and flake the exact-zero assertion. Job ids are
-    * monotone, so only ids above the marker's belong to `body`. */
-  private def jobsDuring(body: => Unit): Int = {
-    import scala.jdk.CollectionConverters._
-    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        ids.add(Integer.valueOf(j.jobId))
-    }
-    // the listener bus is async (and its drain hook is
-    // private[spark]); wait until the seen-id set is quiescent
-    def settle(): Unit = {
-      var prev = -1
-      var stable = 0
-      var spins = 0
-      while (stable < 5 && spins < 100) {
-        val cur = ids.size()
-        if (cur == prev) stable += 1 else stable = 0
-        prev = cur
-        Thread.sleep(50)
-        spins += 1
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.range(1).count() // the fence job
-      settle()
-      val fence = ids.asScala.map(_.intValue).max
-      body
-      settle()
-      ids.asScala.map(_.intValue).count(_ > fence)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("probe keys by checkpoint RDD id and re-probes after invalidate") {
     import spark.implicits._
     Memos.invalidate()
@@ -201,10 +164,10 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // first access probes (one job); a fresh access inside the rate
     // window trusts the freshness and runs NO job
-    assert(jobsDuring(assert(Memos.alive(g))) >= 1,
+    assert(SparkJobs.during(spark)(assert(Memos.alive(g))) >= 1,
       "first alive() must pay the 1-row probe job (CollectLimit may\n" +
         "      split it across >1 incremental job)")
-    assert(jobsDuring(assert(Memos.alive(g))) == 0,
+    assert(SparkJobs.during(spark)(assert(Memos.alive(g))) == 0,
       "rate-limited alive() must not run a job")
 
     // invalidate drops freshness with the frames: the NEXT access
@@ -212,7 +175,7 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     Memos.invalidate()
     assert(Memos.lastProbeNs.isEmpty,
       "invalidate() must clear the probe-freshness map")
-    assert(jobsDuring(assert(Memos.alive(g))) >= 1,
+    assert(SparkJobs.during(spark)(assert(Memos.alive(g))) >= 1,
       "post-invalidate alive() must re-probe")
 
     // a REBUILT frame has its own id — its first access probes even
@@ -220,7 +183,7 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val g2 = Seq(4L, 5L).toDF("x").localCheckpoint()
     assert(Memos.probeKey(g2) != key,
       "rebuilt frame must not reuse the old probe key")
-    assert(jobsDuring(assert(Memos.alive(g2))) >= 1,
+    assert(SparkJobs.during(spark)(assert(Memos.alive(g2))) >= 1,
       "rebuilt frame must pay its own probe")
     // a frame COMPOSED over two checkpointed frames keys on ALL its
     // checkpoint leaves, so its freshness is distinct from both

@@ -1138,4 +1138,14 @@ class OperatorsSpec extends AnyFunSuite {
       s"stride-sampled d15 (${sampledGated.size} pairs) != exhaustive " +
         s"over the sampled sub-corpus (${subCorpus.size} pairs)")
   }
+
+  test("fanOut runs no job to probe a frame carrying a scalar subquery") {
+    // the partition-count probe (df.rdd) would run the subquery's job
+    // eagerly; a subquery-carrying plan must take the lazy repartition
+    graft.engine.Tables.ensure(spark, dir)
+    val df = spark.sql("SELECT doc_id, text FROM documents " +
+      "WHERE length(text) > (SELECT avg(length(text)) FROM documents)")
+    val jobs = graft.SparkJobs.during(spark) { TextHash.fanOut(df); () }
+    assert(jobs == 0, s"fanOut ran $jobs job(s) probing a subquery plan")
+  }
 }

@@ -1,7 +1,11 @@
 package graft.queries
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.{Decimal, DecimalType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression specs: the scale-critical physical-plan
@@ -10,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fallback for the theta joins) must survive refactors — a correct
   * but non-pushed plan is a 100 TB regression that row-level tests
   * cannot see. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -31,6 +35,26 @@ class PlanSpec extends AnyFunSuite {
     // only the referenced lineitem columns may be read
     assert(!p.contains("l_comment") && !p.contains("l_receiptdate"),
       "scan reads columns the query never references")
+  }
+
+  test("money queries keep every decimal within a long (precision <= 18)") {
+    // a DECIMAL wider than 18 digits updates a java.math.BigDecimal per
+    // row; the money sums run as BIGINT cents (Relational.cents/money)
+    val moneyQueries = Seq("q01_pricing_summary", "q03_join_inner",
+      "q09_join_broadcast", "q10_join_theta", "q11_union_all",
+      "q15_case_when", "q19_subquery_from", "q20_scalar_subquery",
+      "q23_window", "q26_star_join", "q35_having", "q49_skew_salted")
+    val wide = moneyQueries.flatMap { name =>
+      val df = graft.SparkEntry.queries(name)(spark, dir)
+      val types = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case p => (p.expressions ++ p.output)
+          .flatMap(_.flatMap(e => Try(e.dataType).toOption))
+      }.flatten.collect {
+        case d: DecimalType if d.precision > Decimal.MAX_LONG_DIGITS => d
+      }
+      if (types.isEmpty) None else Some(s"$name: ${types.distinct.mkString(", ")}")
+    }
+    assert(wide.isEmpty, s"wide decimals in executed plans:\n${wide.mkString("\n")}")
   }
 
   test("q09 MAPJOIN analog is a broadcast hash join") {
