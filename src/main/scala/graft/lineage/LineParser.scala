@@ -1,5 +1,8 @@
 package graft.lineage
 
+import java.util.concurrent.ForkJoinPool
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReferenceArray}
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedExtractValue, UnresolvedFunction, UnresolvedHaving, UnresolvedRelation, UnresolvedStar, UnresolvedSubqueryColumnAliases}
@@ -7,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Hive-script column-level lineage analyzer, Spark-native.
   *
@@ -57,23 +61,34 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
     * README.md:744-746). State resets per call; `USE db` carries
     * across statements within the call.
     *
+    * Statements are parsed concurrently (see `LineParser.ParseAhead`) and
+    * walked one at a time in script order on the calling thread, so
+    * lineage, `USE` carry-over and the order of [[getErrors]] are those
+    * of a sequential parse. The caller's `SQLConf` governs the parse of
+    * every statement. One instance serves one `parse` call at a time.
+    *
     * Degradation contract (the reference threw mid-script on any
     * unexpected statement shape, README.md:550, losing the lineage of
-    * every later statement): a statement that fails to parse or walk
-    * is recorded in [[getErrors]] and skipped; the remaining
-    * statements still contribute lineage. LineageCorpusSpec fuzzes
-    * this over the engine's full oracle-SQL corpus. */
+    * every later statement): a statement that fails to parse or walk,
+    * stack overflow included, is recorded in [[getErrors]] and
+    * skipped; the remaining statements still contribute lineage.
+    * LineageCorpusSpec fuzzes this over the engine's full oracle-SQL
+    * corpus. */
   def parse(sqlAll: String, validate: Boolean = false): LineParser = {
     currentDb = "default"
     inputTables.clear(); outputTables.clear(); colLines.clear()
     errors.clear()
-    sqlAll.split("(?<!\\\\);").map(_.trim).filter(_.nonEmpty).foreach { stmt =>
+    val stmts = sqlAll.split("(?<!\\\\);").map(_.trim).filter(_.nonEmpty)
+    val parsed = new ParseAhead(stmts)
+    stmts.indices.foreach { i =>
       conditions = mutable.LinkedHashSet.empty[String]
       cteScopes.clear()
-      try parseStatement(stmt)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          errors += ((stmt, s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+      try {
+        val (stmt, plan) = parsed(i)
+        dispatch(plan, stmt)
+      } catch {
+        case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
+          errors += ((stmts(i), s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
     }
     if (validate) runValidate()
@@ -81,28 +96,6 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
   }
 
   // -- statement dispatch -------------------------------------------
-
-  private def parseStatement(stmt0: String): Unit = {
-    // INSERT OVERWRITE [LOCAL] DIRECTORY '…' [STORED AS …] SELECT …:
-    // Spark's non-Hive parser rejects the statement outright, but the
-    // reference analyzed Hive scripts that use it (TOK_TMP_FILE dest,
-    // README.md:222-225). Parse first — only when that fails do we
-    // strip the directory clause and analyze the SELECT (so a path
-    // that happens to contain "select" can't corrupt a statement the
-    // parser handles natively, e.g. under a Hive-enabled parser that
-    // yields InsertIntoDir).
-    val (stmt, plan) =
-      try (stmt0, CatalystSqlParser.parsePlan(stmt0))
-      catch {
-        case e: Exception =>
-          stmt0 match {
-            case LineParser.InsertDirRe(sel) =>
-              (sel, CatalystSqlParser.parsePlan(sel))
-            case _ => throw e
-          }
-      }
-    dispatch(plan, stmt)
-  }
 
   private def dispatch(plan: LogicalPlan, stmt: String): Unit =
     plan match {
@@ -668,6 +661,72 @@ object LineParser {
     * SELECT; the directory clause itself carries no lineage. */
   private[lineage] val InsertDirRe =
     "(?is)^\\s*insert\\s+overwrite\\s+(?:local\\s+)?directory\\b.*?\\b(select\\b.*)$".r
+
+  /** Parse one statement. INSERT OVERWRITE [LOCAL] DIRECTORY '…'
+    * [STORED AS …] SELECT …: Spark's non-Hive parser rejects the
+    * statement outright, but the reference analyzed Hive scripts that
+    * use it (TOK_TMP_FILE dest, README.md:222-225). Parse first — only
+    * when that fails do we strip the directory clause and analyze the
+    * SELECT (so a path that happens to contain "select" can't corrupt
+    * a statement the parser handles natively, e.g. under a
+    * Hive-enabled parser that yields InsertIntoDir). Returns the text
+    * analyzed and its plan. */
+  private def parseStatement(stmt0: String): (String, LogicalPlan) =
+    try (stmt0, CatalystSqlParser.parsePlan(stmt0))
+    catch {
+      case e: Exception =>
+        stmt0 match {
+          case InsertDirRe(sel) => (sel, CatalystSqlParser.parsePlan(sel))
+          case _ => throw e
+        }
+    }
+
+  /** A script's statements parsed ahead of the walk. Up to
+    * `min(n - 1, common-pool parallelism)` helper tasks on the JVM
+    * common pool claim statements in index order and fill each one's
+    * slot with its plan or whatever it threw. [[apply]] is called for
+    * 0…n−1 in order and never waits on another thread: while slot i is
+    * empty the caller parses the next unclaimed statement itself, and
+    * once none is left it parses statement i itself, even if a helper
+    * is still at it. So a busy pool, a helper the OS has descheduled,
+    * or a call from a pool thread costs the caller at most one parse
+    * of a statement, never a wait of unknown length. Parsing needs
+    * none of the walk's state; every helper parses under the caller's
+    * `SQLConf`. */
+  private final class ParseAhead(stmts: Array[String]) {
+    private val conf = SQLConf.get
+    private val next = new AtomicInteger(0)
+    private val slots =
+      new AtomicReferenceArray[Either[Throwable, (String, LogicalPlan)]](stmts.length)
+
+    /** Fills slot i with statement i's parse unless another thread
+      * filled it first. Any Throwable fills it, to be rethrown on the
+      * caller. */
+    private def fill(i: Int): Unit =
+      slots.compareAndSet(i, null,
+        try scala.util.Right(parseStatement(stmts(i)))
+        catch { case t: Throwable => scala.util.Left(t) })
+
+    /** Parses the next unclaimed statement; false when none is left. */
+    private def claim(): Boolean = {
+      val i = next.getAndIncrement()
+      i < stmts.length && { fill(i); true }
+    }
+
+    for (_ <- 0 until math.min(stmts.length - 1, ForkJoinPool.getCommonPoolParallelism))
+      ForkJoinPool.commonPool().execute(() => SQLConf.withExistingConf(conf)(while (claim()) ()))
+
+    /** Statement i's analyzed text and plan; rethrows what its parse
+      * threw. */
+    def apply(i: Int): (String, LogicalPlan) = {
+      while (slots.get(i) == null && claim()) ()
+      if (slots.get(i) == null) fill(i)
+      slots.get(i) match {
+        case scala.util.Right(parsed) => parsed
+        case scala.util.Left(t) => throw t
+      }
+    }
+  }
 
   /** Literal-ish output names are replaced during UNION merge
     * (README.md:427-435). */

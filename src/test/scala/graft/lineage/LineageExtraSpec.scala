@@ -1,11 +1,15 @@
 package graft.lineage
 
+import org.apache.spark.sql.internal.SQLConf
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** Coverage beyond the reference goldens: remaining join-type tags
-  * (SURVEY §2.3), CTAS outputs (S5), DDL tolerance (S6-S10), and
-  * multi-statement scripts (S12). */
-class LineageExtraSpec extends AnyFunSuite {
+  * (SURVEY §2.3), CTAS outputs (S5), DDL tolerance (S6-S10),
+  * multi-statement scripts (S12), and the concurrent statement parse
+  * (stack overflow, conf propagation, script order). */
+class LineageExtraSpec extends AnyFunSuite with TimeLimits {
 
   private def parser = new LineParser()
 
@@ -233,5 +237,62 @@ class LineageExtraSpec extends AnyFunSuite {
     val cond = p.getColLines.head.conditionSet.find(_.startsWith("WHERE:"))
     assert(cond.exists(_.contains("in (select k from t2")),
       s"subquery text mangled: $cond")
+  }
+
+  test("a statement that overflows the stack is recorded, later ones still parse") {
+    // Catalyst's parser recurses at every nesting level; this depth
+    // overflows a default 1 MB thread stack many times over
+    val depth = 20000
+    val deep = "SELECT " + "(" * depth + "1" + ")" * depth
+    // the walk must not hang on the failed statement: interrupt it
+    implicit val signaler: Signaler = ThreadSignaler
+    failAfter(60.seconds) {
+      val p =
+        try parser.parse(s"USE a; $deep; SELECT 1")
+        catch { case e: StackOverflowError => fail("the overflow escaped parse", e) }
+      assert(p.getErrors.map(_._1) == List(deep))
+      assert(p.getErrors.head._2.startsWith("StackOverflowError"), p.getErrors.head._2)
+      assert(p.getColLines.map(c => (c.toTable, c.toNameParse)) ==
+        List((LineParser.TmpFile, "1")), p.getColLines.mkString("; "))
+    }
+  }
+
+  test("the caller's SQLConf governs the parse of every statement") {
+    // with double-quoted identifiers "a" is a column, else a literal
+    val script = "use d; insert overwrite table o select \"a\" from t; " +
+      "insert overwrite table o2 select \"b\" from t"
+    val quoted = new SQLConf
+    quoted.setConfString("spark.sql.ansi.enabled", "true")
+    quoted.setConfString("spark.sql.ansi.doubleQuotedIdentifiers", "true")
+    def lines(p: LineParser) =
+      p.getColLines.map(c => (c.toTable, c.fromName, c.conditionSet))
+    val p = parser
+    for (_ <- 1 to 50) {
+      assert(lines(SQLConf.withExistingConf(quoted)(p.parse(script))) == List(
+        ("d.o", "d.t.a", Set.empty[String]), ("d.o2", "d.t.b", Set.empty[String])))
+      assert(lines(p.parse(script)) == List(
+        ("d.o", "", Set("COLFUN:\"a\"")), ("d.o2", "", Set("COLFUN:\"b\""))))
+    }
+  }
+
+  test("errors and USE carry-over follow script order") {
+    // unparsable statements at indices 2, 5 and 9; USE b at index 6
+    val stmts = Seq(
+      "use a", "insert into table d1 select x from s1", "not sql 2",
+      "insert into table d3 select x from s3",
+      "insert into table d4 select x from s4", "not sql 5", "use b",
+      "insert into table d7 select x from s7",
+      "insert into table d8 select x from s8", "not sql 9",
+      "insert into table d10 select x from s10",
+      "insert into table d11 select x from s11")
+    val outs = Seq("a.d1", "a.d3", "a.d4", "b.d7", "b.d8", "b.d10", "b.d11")
+    val p = parser
+    for (_ <- 1 to 50) {
+      p.parse(stmts.mkString(";"))
+      assert(p.getErrors.map(_._1) == List("not sql 2", "not sql 5", "not sql 9"))
+      assert(p.getColLines.map(_.toTable) == outs)
+      assert(p.getColLines.map(_.fromName) == outs.map(_.replace(".d", ".s") + ".x"))
+      assert(p.getOutputTables == outs.toSet)
+    }
   }
 }
