@@ -83,10 +83,8 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
     stmts.indices.foreach { i =>
       conditions = mutable.LinkedHashSet.empty[String]
       cteScopes.clear()
-      try {
-        val (stmt, plan) = parsed(i)
-        dispatch(plan, stmt)
-      } catch {
+      try dispatch(parsed(i))
+      catch {
         case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
           errors += ((stmts(i), s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
@@ -97,16 +95,16 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
 
   // -- statement dispatch -------------------------------------------
 
-  private def dispatch(plan: LogicalPlan, stmt: String): Unit =
+  private def dispatch(plan: LogicalPlan): Unit =
     plan match {
       case w: UnresolvedWith =>
         // WITH before INSERT/SELECT (post-reference extension):
         // register each CTE's walked scope in order — later CTEs may
         // reference earlier ones — then dispatch the body.
         w.cteRelations.foreach { case (name, sa, _) =>
-          cteScopes(name.toLowerCase) = walkQuery(sa.child, stmt)
+          cteScopes(name.toLowerCase) = walkQuery(sa.child)
         }
-        dispatch(w.child, stmt)
+        dispatch(w.child)
       case SetCatalogAndNamespace(child) =>
         // USE db (README.md:637-640): mutate the db used by fillDB.
         // Read the namespace parts structurally (the last part is the
@@ -122,7 +120,7 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
       case i: InsertIntoStatement =>
         val dest = fillDB(relationParts(i.table))
         outputTables += dest
-        finishStatement(i.query, dest, stmt)
+        finishStatement(i.query, dest)
       case u @ Union(children, _, _)
           if children.forall(_.isInstanceOf[InsertIntoStatement]) =>
         // Hive multi-insert with several INSERT branches (S13). NOTE:
@@ -135,7 +133,7 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
         children.foreach { case i: InsertIntoStatement =>
           val dest = fillDB(relationParts(i.table))
           outputTables += dest
-          finishStatement(i.query, dest, stmt)
+          finishStatement(i.query, dest)
         }
       case c: CreateTableAsSelect =>
         val dest = fillDB(c.name.collectFirst {
@@ -143,15 +141,15 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
             u.nameParts
         }.getOrElse(Nil))
         outputTables += dest
-        finishStatement(c.query, dest, stmt)
+        finishStatement(c.query, dest)
       case d: InsertIntoDir =>
         // INSERT OVERWRITE [LOCAL] DIRECTORY: the reference records the
         // same TOK_TMP_FILE sentinel as a bare SELECT (README.md:222-225).
-        finishStatement(d.child, TmpFile, stmt)
+        finishStatement(d.child, TmpFile)
       case q if isQueryShape(q) =>
         // bare SELECT → TOK_TMP_FILE sentinel dest (README.md:222-225);
         // not recorded as an output table.
-        finishStatement(q, TmpFile, stmt)
+        finishStatement(q, TmpFile)
       case _ =>
         // DDL and friends (DROP/TRUNCATE/LOAD/ALTER): table-level ops
         // with no column lineage; inputs/outputs not recorded by the
@@ -176,12 +174,11 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
 
   /** Walk one statement's query, apply the top-level UNION positional
     * merge (README.md:396-415), emit ColLines. */
-  private def finishStatement(query: LogicalPlan, dest: String,
-      stmt: String): Unit = {
+  private def finishStatement(query: LogicalPlan, dest: String): Unit = {
     val branches = flattenUnion(query)
     val cols =
-      if (branches.size <= 1) walkQuery(query, stmt).cols
-      else mergeUnionCols(branches.map(b => walkQuery(b, stmt).cols))
+      if (branches.size <= 1) walkQuery(query).cols
+      else mergeUnionCols(branches.map(b => walkQuery(b).cols))
     val destCols: Seq[String] = {
       val parts = dest.split("\\.")
       if (parts.length == 2) meta.columns(parts(0), parts(1)) else Nil
@@ -255,19 +252,19 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
       entries.collectFirst { case (_, r @ TableRef(_, raw)) if raw == t => r }
   }
 
-  private def walkQuery(plan: LogicalPlan, stmt: String): Scope = plan match {
+  private def walkQuery(plan: LogicalPlan): Scope = plan match {
     case Project(list, child) =>
-      val env = walkFrom(child, stmt)
-      Scope(env.tablesInOrder, list.flatMap(extractCol(_, env, stmt)))
+      val env = walkFrom(child)
+      Scope(env.tablesInOrder, list.flatMap(extractCol(_, env)))
     case Aggregate(_, list, child, _) =>
       // GROUP BY keys are deliberately NOT recorded (README.md golden
       // sql25 has no GROUP tag, :1147-1150).
-      val env = walkFrom(child, stmt)
-      Scope(env.tablesInOrder, list.flatMap(extractCol(_, env, stmt)))
+      val env = walkFrom(child)
+      Scope(env.tablesInOrder, list.flatMap(extractCol(_, env)))
     case Union(children, _, _) =>
       // FROM-subquery union: branch cols concatenate (provenance is
       // resolved per-name later via `&`), no positional merge here.
-      val scopes = children.map(walkQuery(_, stmt))
+      val scopes = children.map(walkQuery(_))
       Scope(scopes.flatMap(_.tables), scopes.flatMap(_.cols))
     case s: SetOperation =>
       // INTERSECT / EXCEPT (post-reference extension, U3): output
@@ -276,17 +273,17 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
       // side decides membership, so it IS lineage, exactly like a
       // UNION branch. mergeUnionCols already implements the positional
       // name-preference + provenance concat.
-      val scopes = Seq(walkQuery(s.left, stmt), walkQuery(s.right, stmt))
+      val scopes = Seq(walkQuery(s.left), walkQuery(s.right))
       Scope(scopes.flatMap(_.tables), mergeUnionCols(scopes.map(_.cols)))
-    case Distinct(child) => walkQuery(child, stmt)
-    case Sort(_, _, child, _) => walkQuery(child, stmt)
-    case GlobalLimit(_, child) => walkQuery(child, stmt)
-    case LocalLimit(_, child) => walkQuery(child, stmt)
-    case SubqueryAlias(_, child) => walkQuery(child, stmt)
+    case Distinct(child) => walkQuery(child)
+    case Sort(_, _, child, _) => walkQuery(child)
+    case GlobalLimit(_, child) => walkQuery(child)
+    case LocalLimit(_, child) => walkQuery(child)
+    case SubqueryAlias(_, child) => walkQuery(child)
     case u: UnresolvedSubqueryColumnAliases =>
       // WITH t(a, b) AS (...) / FROM (...) t(a, b): positional rename
       // of the underlying scope's output columns
-      val inner = walkQuery(u.child, stmt)
+      val inner = walkQuery(u.child)
       Scope(inner.tables, inner.cols.zipWithIndex.map { case (c, i) =>
         if (i < u.outputColumnNames.size)
           c.copy(name = u.outputColumnNames(i).toLowerCase)
@@ -298,44 +295,37 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
         val n = name.toLowerCase; n -> cteScopes.get(n)
       }
       w.cteRelations.foreach { case (name, sa, _) =>
-        cteScopes(name.toLowerCase) = walkQuery(sa.child, stmt)
+        cteScopes(name.toLowerCase) = walkQuery(sa.child)
       }
-      val out = walkQuery(w.child, stmt)
+      val out = walkQuery(w.child)
       saved.foreach {
         case (n, Some(s)) => cteScopes(n) = s
         case (n, None) => cteScopes.remove(n)
       }
       out
-    case Filter(cond, child) =>
-      val scope = walkQuery(child, stmt)
-      // HAVING-style filter above a query block; record as WHERE.
-      conditions += "WHERE:" + render(cond,
-        Env(Seq((None, ScopeRef(scope)))), stmt)
-      scope
-    case UnresolvedHaving(cond, child) =>
-      // HAVING above an aggregate parses as its own node (not Filter);
-      // same treatment: record the condition as WHERE, pass the
-      // aggregate's columns through. (Found by the corpus output-
-      // column assertion: q35's lineage was silently empty — the node
-      // fell to the cols-less fallback below.)
-      val scope = walkQuery(child, stmt)
-      conditions += "WHERE:" + render(cond,
-        Env(Seq((None, ScopeRef(scope)))), stmt)
+    case _: Filter | _: UnresolvedHaving =>
+      // WHERE/HAVING-style filter above a query block (HAVING above an
+      // aggregate parses as its own node; q35's lineage was silently
+      // empty while it fell to the cols-less fallback below): record
+      // its one condition as WHERE, pass the block's columns through.
+      val scope = walkQuery(plan.children.head)
+      conditions += "WHERE:" + render(plan.expressions.head,
+        Env(Seq((None, ScopeRef(scope)))))
       scope
     case WithWindowDefinition(_, child, _) =>
       // WINDOW w AS (...) clause: a name→spec map with no lineage of
       // its own; output columns come from the child projection whose
       // window expressions reference the named spec. (Same corpus
       // finding: q42/q50/q54 had empty column lineage.)
-      walkQuery(child, stmt)
+      walkQuery(child)
     case other =>
-      val env = walkFrom(other, stmt)
+      val env = walkFrom(other)
       Scope(env.tablesInOrder, Nil)
   }
 
   /** Walk a FROM tree: register input tables, aliases, and JOIN/WHERE
     * conditions; return the lexical environment. */
-  private def walkFrom(plan: LogicalPlan, stmt: String): Env = plan match {
+  private def walkFrom(plan: LogicalPlan): Env = plan match {
     // a single-part relation name matching a CTE resolves to the CTE's
     // scope, never to a catalog table (SQL scoping; CTEs shadow tables)
     case r: UnresolvedRelation if cteRef(r).isDefined =>
@@ -353,38 +343,32 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
       Env(Seq((Some(id.name.toLowerCase),
         TableRef(filled, r.multipartIdentifier.last.toLowerCase))))
     case SubqueryAlias(id, child) =>
-      Env(Seq((Some(id.name.toLowerCase), ScopeRef(walkQuery(child, stmt)))))
-    case Join(left, right, joinType, cond, _) =>
-      val envL = walkFrom(left, stmt)
-      val envR = walkFrom(right, stmt)
-      val env = Env(envL.entries ++ envR.entries)
-      cond.foreach(c => conditions += joinTag(joinType) + ":" + render(c, env, stmt))
-      env
-    // `FROM t, LATERAL (subquery) x`: the subquery is held as a
+      Env(Seq((Some(id.name.toLowerCase), ScopeRef(walkQuery(child)))))
+    // `FROM t, LATERAL (subquery) x` holds its subquery as a
     // LateralSubquery EXPRESSION, not a plan child, so the generic
     // children-fallback would walk the left side only and silently
-    // drop the subquery's input tables from lineage (caught by the
-    // corpus cross-check on q45).
-    case lj: LateralJoin =>
-      val envL = walkFrom(lj.left, stmt)
-      val envR = walkFrom(lj.right.plan, stmt)
-      val env = Env(envL.entries ++ envR.entries)
-      lj.condition.foreach(c =>
-        conditions += joinTag(lj.joinType) + ":" + render(c, env, stmt))
+    // drop the subquery's input tables (corpus cross-check, q45).
+    case _: Join | _: LateralJoin =>
+      val (left, right, joinType, cond) = plan match {
+        case Join(l, r, t, c, _) => (l, r, t, c)
+        case LateralJoin(l, r, t, c) => (l, r.plan, t, c)
+      }
+      val env = Env(walkFrom(left).entries ++ walkFrom(right).entries)
+      cond.foreach(c => conditions += joinTag(joinType) + ":" + render(c, env))
       env
     case Filter(cond, child) =>
-      val env = walkFrom(child, stmt)
-      conditions += "WHERE:" + render(cond, env, stmt)
+      val env = walkFrom(child)
+      conditions += "WHERE:" + render(cond, env)
       env
     case other if isQueryShape(other) || other.isInstanceOf[UnresolvedWith] ||
         other.isInstanceOf[UnresolvedSubqueryColumnAliases] =>
-      Env(Seq((None, ScopeRef(walkQuery(other, stmt)))))
+      Env(Seq((None, ScopeRef(walkQuery(other)))))
     case other =>
       // unknown FROM node (VALUES, table-valued function, …): don't
       // bounce back to walkQuery — its own default calls walkFrom,
       // and an unmatched node would mutually recurse forever.
       other.children match {
-        case Seq(only) => walkFrom(only, stmt)
+        case Seq(only) => walkFrom(only)
         case _ => Env(Nil)
       }
   }
@@ -411,7 +395,7 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
 
   private case class Col(name: String, from: Seq[String], funs: Seq[String])
 
-  private def extractCol(ne: Expression, env: Env, stmt: String): Seq[Col] = {
+  private def extractCol(ne: Expression, env: Env): Seq[Col] = {
     ne match {
       case UnresolvedStar(target) =>
         // SELECT * / alias.*: expand via the metadata store
@@ -440,12 +424,12 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
         }
         val name = aliasName.getOrElse(expr match {
           case a: UnresolvedAttribute => a.nameParts.last.toLowerCase
-          case l: Literal => literalText(l, stmt)
+          case l: Literal => literalText(l)
           case _ => ""
         })
-        val atoms = sources(expr, env, stmt)
+        val atoms = sources(expr, env)
         val from = atoms.filterNot(notNormalCol)
-        val rendered = render(expr, env, stmt)
+        val rendered = render(expr, env)
         val joined = from.mkString(",")
         val funs =
           if (rendered.nonEmpty && rendered != joined) Seq("COLFUN:" + rendered)
@@ -460,99 +444,98 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
     * *result* strings pass through a `java.util.HashSet` exactly like
     * `getWhenColumn` (README.md:362-383) — this reproduces the golden
     * orderings, dedup included. */
-  private def sources(e: Expression, env: Env, stmt: String): Seq[String] =
+  private def sources(e: Expression, env: Env): Seq[String] =
     e match {
       case a: UnresolvedAttribute => Seq(resolveAttr(a.nameParts, env))
-      case l: Literal => Seq(literalText(l, stmt))
+      case l: Literal => Seq(literalText(l))
       case CaseWhen(branches, elseValue) =>
         val hs = new java.util.HashSet[String]()
         (branches.map(_._2) ++ elseValue.toSeq).foreach { v =>
-          hs.add(sources(v, env, stmt).mkString(","))
+          hs.add(sources(v, env).mkString(","))
         }
         val out = mutable.ArrayBuffer.empty[String]
         val it = hs.iterator()
         while (it.hasNext) out ++= it.next().split(",").filter(_.nonEmpty)
         out.toSeq
-      case UnresolvedExtractValue(child, _) => sources(child, env, stmt)
+      case UnresolvedExtractValue(child, _) => sources(child, env)
       case f: UnresolvedFunction =>
-        f.arguments.flatMap(sources(_, env, stmt))
+        f.arguments.flatMap(sources(_, env))
       case sub: SubqueryExpression =>
         // IN (SELECT …) / EXISTS / scalar subqueries (beyond the
         // reference, which only handles FROM-clause subqueries —
         // SURVEY §2.8 Q3): walk the subquery plan so its relations
         // reach inputTables; the subquery yields no source column for
         // the enclosing expression itself.
-        walkQuery(sub.plan, stmt)
+        walkQuery(sub.plan)
         Nil
-      case other => other.children.flatMap(sources(_, env, stmt))
+      case other => other.children.flatMap(sources(_, env))
     }
 
   // -- rendering (the reference's getCondition, README.md:306-333) ---
 
-  private def render(e: Expression, env: Env, stmt: String): String = e match {
+  private def render(e: Expression, env: Env): String = e match {
     case And(l, r) =>
-      s"(${render(l, env, stmt)} and ${render(r, env, stmt)})"
+      s"(${render(l, env)} and ${render(r, env)})"
     case Or(l, r) =>
-      s"(${render(l, env, stmt)} or ${render(r, env, stmt)})"
-    case Not(EqualTo(l, r)) => binop("<>", l, r, env, stmt)
-    case EqualTo(l, r) => binop("=", l, r, env, stmt)
-    case LessThan(l, r) => binop("<", l, r, env, stmt)
-    case LessThanOrEqual(l, r) => binop("<=", l, r, env, stmt)
-    case GreaterThan(l, r) => binop(">", l, r, env, stmt)
-    case GreaterThanOrEqual(l, r) => binop(">=", l, r, env, stmt)
-    case l: Like => binop("like", l.left, l.right, env, stmt)
-    case Add(l, r, _) => binop("+", l, r, env, stmt)
-    case Subtract(l, r, _) => binop("-", l, r, env, stmt)
-    case Multiply(l, r, _) => binop("*", l, r, env, stmt)
-    case Divide(l, r, _) => binop("/", l, r, env, stmt)
-    case Remainder(l, r, _) => binop("%", l, r, env, stmt)
-    case BitwiseAnd(l, r) => binop("&", l, r, env, stmt)
-    case BitwiseOr(l, r) => binop("|", l, r, env, stmt)
-    case BitwiseXor(l, r) => binop("^", l, r, env, stmt)
+      s"(${render(l, env)} or ${render(r, env)})"
+    case Not(EqualTo(l, r)) => binop("<>", l, r, env)
+    case EqualTo(l, r) => binop("=", l, r, env)
+    case LessThan(l, r) => binop("<", l, r, env)
+    case LessThanOrEqual(l, r) => binop("<=", l, r, env)
+    case GreaterThan(l, r) => binop(">", l, r, env)
+    case GreaterThanOrEqual(l, r) => binop(">=", l, r, env)
+    case l: Like => binop("like", l.left, l.right, env)
+    case Add(l, r, _) => binop("+", l, r, env)
+    case Subtract(l, r, _) => binop("-", l, r, env)
+    case Multiply(l, r, _) => binop("*", l, r, env)
+    case Divide(l, r, _) => binop("/", l, r, env)
+    case Remainder(l, r, _) => binop("%", l, r, env)
+    case BitwiseAnd(l, r) => binop("&", l, r, env)
+    case BitwiseOr(l, r) => binop("|", l, r, env)
+    case BitwiseXor(l, r) => binop("^", l, r, env)
     case In(v, list) =>
-      render(v, env, stmt) + " in (" +
-        list.map(render(_, env, stmt)).mkString(",") + ")"
-    case IsNull(c) => render(c, env, stmt) + " isnull"
-    case IsNotNull(c) => render(c, env, stmt) + " isnotnull"
+      render(v, env) + " in (" +
+        list.map(render(_, env)).mkString(",") + ")"
+    case IsNull(c) => render(c, env) + " isnull"
+    case IsNotNull(c) => render(c, env) + " isnotnull"
     case CaseWhen(branches, elseValue) =>
       val sb = new StringBuilder("case")
       branches.foreach { case (c, v) =>
-        sb.append(" when ").append(render(c, env, stmt))
-          .append(" then ").append(render(v, env, stmt))
+        sb.append(" when ").append(render(c, env))
+          .append(" then ").append(render(v, env))
       }
-      elseValue.foreach(v => sb.append(" else ").append(render(v, env, stmt)))
+      elseValue.foreach(v => sb.append(" else ").append(render(v, env)))
       sb.append(" end").toString
     case f: UnresolvedFunction =>
       val name = f.nameParts.last
-      val args = f.arguments.map(render(_, env, stmt)).mkString(",")
+      val args = f.arguments.map(render(_, env)).mkString(",")
       if (f.isDistinct) s"$name(distinct ($args))" else s"$name($args)"
     case UnresolvedExtractValue(child, key) =>
-      s"${render(child, env, stmt)}[${render(key, env, stmt)}]"
+      s"${render(child, env)}[${render(key, env)}]"
     case a: UnresolvedAttribute => resolveAttr(a.nameParts, env)
-    case l: Literal => literalText(l, stmt)
+    case l: Literal => literalText(l)
     case ins: InSubquery =>
-      walkQuery(ins.query.plan, stmt) // register the subquery's inputs
-      ins.values.map(render(_, env, stmt)).mkString(",") +
-        " in (" + originText(ins.query, stmt).getOrElse("subquery") + ")"
+      walkQuery(ins.query.plan) // register the subquery's inputs
+      ins.values.map(render(_, env)).mkString(",") +
+        " in (" + originText(ins.query).getOrElse("subquery") + ")"
     case sub: SubqueryExpression =>
-      walkQuery(sub.plan, stmt)
-      originText(sub, stmt).getOrElse("subquery")
+      walkQuery(sub.plan)
+      originText(sub).getOrElse("subquery")
     case Cast(child, dt, _, _) =>
-      s"cast(${render(child, env, stmt)} as ${dt.sql.toLowerCase})"
-    case Not(c) => "not " + render(c, env, stmt)
-    case UnaryMinus(c, _) => "-" + render(c, env, stmt)
+      s"cast(${render(child, env)} as ${dt.sql.toLowerCase})"
+    case Not(c) => "not " + render(c, env)
+    case UnaryMinus(c, _) => "-" + render(c, env)
     case _: UnresolvedStar => "*"
     case other =>
-      other.children.map(render(_, env, stmt)).mkString(",")
+      other.children.map(render(_, env)).mkString(",")
   }
 
-  private def binop(op: String, l: Expression, r: Expression, env: Env,
-      stmt: String): String =
-    s"${render(l, env, stmt)} $op ${render(r, env, stmt)}"
+  private def binop(op: String, l: Expression, r: Expression, env: Env): String =
+    s"${render(l, env)} $op ${render(r, env)}"
 
   /** Source text of any expression via parser origin offsets, if the
     * parser recorded a usable span. */
-  private def originText(e: Expression, stmt: String): Option[String] =
+  private def originText(e: Expression): Option[String] =
     (e.origin.sqlText, e.origin.startIndex, e.origin.stopIndex) match {
       case (Some(text), Some(a), Some(b)) if b >= a && b < text.length =>
         Some(text.substring(a, b + 1))
@@ -562,19 +545,13 @@ class LineParser(meta: MetaStore = EmptyMetaStore) {
   /** Exact source text of a literal via parser origin offsets — this
     * is what preserves quote style (`'x'` vs `"x"`) and number
     * formatting for golden parity. */
-  private def literalText(l: Literal, stmt: String): String = {
-    (l.origin.sqlText, l.origin.startIndex, l.origin.stopIndex) match {
-      case (Some(text), Some(a), Some(b)) if b >= a && b < text.length =>
-        text.substring(a, b + 1)
-      case _ =>
-        l.value match {
-          case null => "null"
-          case s: org.apache.spark.unsafe.types.UTF8String => s"'$s'"
-          case s: String => s"'$s'"
-          case v => v.toString
-        }
-    }
-  }
+  private def literalText(l: Literal): String =
+    originText(l).getOrElse(l.value match {
+      case null => "null"
+      case s: org.apache.spark.unsafe.types.UTF8String => s"'$s'"
+      case s: String => s"'$s'"
+      case v => v.toString
+    })
 
   // -- attribute resolution (getRealTable/getSubQueryTable,
   //    README.md:531-611) ------------------------------------------
@@ -669,14 +646,13 @@ object LineParser {
     * when that fails do we strip the directory clause and analyze the
     * SELECT (so a path that happens to contain "select" can't corrupt
     * a statement the parser handles natively, e.g. under a
-    * Hive-enabled parser that yields InsertIntoDir). Returns the text
-    * analyzed and its plan. */
-  private def parseStatement(stmt0: String): (String, LogicalPlan) =
-    try (stmt0, CatalystSqlParser.parsePlan(stmt0))
+    * Hive-enabled parser that yields InsertIntoDir). */
+  private def parseStatement(stmt: String): LogicalPlan =
+    try CatalystSqlParser.parsePlan(stmt)
     catch {
       case e: Exception =>
-        stmt0 match {
-          case InsertDirRe(sel) => (sel, CatalystSqlParser.parsePlan(sel))
+        stmt match {
+          case InsertDirRe(sel) => CatalystSqlParser.parsePlan(sel)
           case _ => throw e
         }
     }
@@ -697,7 +673,7 @@ object LineParser {
     private val conf = SQLConf.get
     private val next = new AtomicInteger(0)
     private val slots =
-      new AtomicReferenceArray[Either[Throwable, (String, LogicalPlan)]](stmts.length)
+      new AtomicReferenceArray[Either[Throwable, LogicalPlan]](stmts.length)
 
     /** Fills slot i with statement i's parse unless another thread
       * filled it first. Any Throwable fills it, to be rethrown on the
@@ -716,9 +692,8 @@ object LineParser {
     for (_ <- 0 until math.min(stmts.length - 1, ForkJoinPool.getCommonPoolParallelism))
       ForkJoinPool.commonPool().execute(() => SQLConf.withExistingConf(conf)(while (claim()) ()))
 
-    /** Statement i's analyzed text and plan; rethrows what its parse
-      * threw. */
-    def apply(i: Int): (String, LogicalPlan) = {
+    /** Statement i's plan; rethrows what its parse threw. */
+    def apply(i: Int): LogicalPlan = {
       while (slots.get(i) == null && claim()) ()
       if (slots.get(i) == null) fill(i)
       slots.get(i) match {

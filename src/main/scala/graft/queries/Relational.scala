@@ -649,9 +649,10 @@ object Relational {
   }
 
   // WITH clause referenced twice (CTE reuse): nations whose revenue
-  // exceeds the all-nation mean. The threshold compare stays in exact
-  // DECIMAL (rev·n > total) — no double mean to diverge on — and the
-  // revenue is cast to DOUBLE only at the output boundary.
+  // exceeds the all-nation mean. Revenue sums BIGINT cents (the SQL
+  // spelling of [[cents]]), the threshold compare stays in exact longs
+  // (rev·n > total) — no double mean to diverge on — and [[money]]
+  // renders the revenue only at the output boundary.
   // Scale note: Catalyst INLINES both CTE references (explain shows
   // the 3-table aggregate twice); that's fine here because the CTE
   // output is 25 rows and AQE's exchange reuse can dedupe identical
@@ -663,16 +664,18 @@ object Relational {
     s.sql("""
       WITH nat_rev AS (
         SELECT n_name,
-          sum(CAST(o_totalprice AS DECIMAL(12,2))) AS rev_dec,
+          sum(floor(o_totalprice * 100 + 0.5D)) AS rev_c,
           count(*) AS n_orders
         FROM orders JOIN customer ON o_custkey = c_custkey
           JOIN nation ON c_nationkey = n_nationkey
         GROUP BY n_name),
-      tot AS (SELECT sum(rev_dec) AS t_rev, count(*) AS n_nat FROM nat_rev)
-      SELECT n_name, CAST(rev_dec AS DOUBLE) AS revenue, n_orders
+      tot AS (SELECT sum(rev_c) AS t_rev, count(*) AS n_nat FROM nat_rev)
+      SELECT n_name, rev_c, n_orders
       FROM nat_rev, tot
-      WHERE rev_dec * CAST(n_nat AS DECIMAL(3,0)) > t_rev
+      WHERE rev_c * n_nat > t_rev
       ORDER BY n_name""")
+      .select(col("n_name"), money(col("rev_c"), 2).as("revenue"),
+        col("n_orders"))
   }
 
   // UNPIVOT (wide → long): per-returnflag metrics melted into

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Sessions, Tables}
 import graft.operators.{Dedup, DupCluster, TextHash}
 
 /** Dev tool: scale telemetry for the dedup/cluster family — the
@@ -31,13 +31,7 @@ object ScaleStress {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.t(spark, dir, "documents")
 

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Sessions, Tables}
 
 /** Dev tool: build an sf1-equivalent dataset by replicating the big
   * sf0.1 tables `factor`× with re-keyed ids (BASELINE.md's sf1
@@ -95,12 +95,7 @@ object ScaleUp {
           .map(java.util.regex.Pattern.quote).mkString("|")
         s"(?<!\\S)(?!(?i:$alt)(?!\\S))(\\S+)"
       }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
 
     def t(name: String): DataFrame = Tables.t(spark, src, name)

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CodegenSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(2)
 
   private def runAll(mode: String): Array[Row] = {
     val s = spark.newSession()

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * AnalysisException that names its signature. */
 class NativeInstallSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(2)
 
   test("a second install keeps the first registration") {
     val s = spark.newSession()

@@ -32,12 +32,7 @@ class PropertySpec extends AnyFunSuite {
 
   private val P = 1000000007L
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   /** The money laws run one Spark job per case, so they take fewer,
     * larger cases (500 values each). The values go through an RDD, not

@@ -21,12 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CacheSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   /** Bytes of block-manager storage currently resident (catalog
     * caches AND checkpoint/RDD-level blocks — the same measure

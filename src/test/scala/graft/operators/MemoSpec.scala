@@ -20,12 +20,7 @@ import graft.SparkJobs
   * CacheSpec's residue law still measures only its own queries. */
 class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   val dir = "/root/testdata/sf0.001"
 

@@ -22,12 +22,7 @@ import graft.operators.Multimodal.{ImageCodec, FakeCodec, MediaRow}
   */
 class MultimodalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   /** Deterministic LCG pixel for (img, x, y) — same generator on the
     * fixture side and the expectation side. */

@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * first principles), and x27's funnel monotonicity/conservation. */
 class Round10Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   val dir = "/root/testdata/sf0.01"
 

@@ -18,12 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round16Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   test("BucketedWindow.rank keeps a NULL partition key as its own group") {
     import spark.implicits._

@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * consistency, and octave-partition geometry. */
 class Round8Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   val dir = "/root/testdata/sf0.001"
 

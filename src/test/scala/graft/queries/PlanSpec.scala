@@ -16,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cannot see. */
 class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   val dir = "/root/testdata/sf0.001"
 
@@ -43,7 +38,8 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val moneyQueries = Seq("q01_pricing_summary", "q03_join_inner",
       "q09_join_broadcast", "q10_join_theta", "q11_union_all",
       "q15_case_when", "q19_subquery_from", "q20_scalar_subquery",
-      "q23_window", "q26_star_join", "q35_having", "q49_skew_salted")
+      "q23_window", "q26_star_join", "q35_having", "q43_cte",
+      "q49_skew_salted")
     val wide = moneyQueries.flatMap { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
       val types = collectWithSubqueries(df.queryExecution.executedPlan) {

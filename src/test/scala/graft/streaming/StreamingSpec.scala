@@ -13,12 +13,7 @@ import graft.streaming.Sessionize._
   * operators; results must agree with the batch twins. */
 class StreamingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
