@@ -1,6 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.types.{DataType, StructField}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -125,223 +131,81 @@ object Bench {
       .getOrElse(buildCollapsed())
   }
 
-  /** Canonicalize a plan line whose element ORDER is
-    * allocation-dependent: RewriteDistinctAggregates groups the
-    * distinct aggregates of a multi-countDistinct query in a HashMap
-    * keyed by ExpressionSet, whose bucket order follows raw exprId
-    * VALUES — stable in a fresh JVM, but in a long bench session the
-    * global expression counter differs per run (noisy queries
-    * resample → more expressions allocated), flipping which group
-    * gets which `gid` and reordering the Expand projections, the
-    * grouping Keys, and the per-gid FILTER functions (measured: q14's
-    * fingerprint flipped in 1 of 3 same-code runs, breaking the
-    * bench_merge fp-agreement gate). Every affected line carries the
-    * `gid#` column, so: blank the gid literals, then sort the
-    * top-level comma elements inside every bracket/paren group of
-    * those lines — order inside a list is never the structural signal
-    * the fingerprint exists to catch. */
-  private[graft] def canonGidLine(line: String): String = {
-    val blanked = line
-      .replaceAll("gid# = \\d+", "gid# = _")
-      // Expand projections' trailing gid value — scoped to the
-      // list-of-lists structure (`, N], [` / `, N]]`), so a genuine
-      // trailing integer constant elsewhere on a gid-carrying line
-      // still flips the fingerprint (round-13 ADVICE)
-      .replaceAll(", \\d+\\](?=(, \\[|\\]))", ", _]")
-    def matching(s: String, open: Int): Int = {
-      val (o, c) = (s.charAt(open),
-        if (s.charAt(open) == '[') ']' else ')')
-      var depth = 0
-      var i = open
-      while (i < s.length) {
-        val ch = s.charAt(i)
-        if (ch == o) depth += 1
-        else if (ch == c) { depth -= 1; if (depth == 0) return i }
-        else if (ch == '[' || ch == '(') depth += 1 // mixed nesting
-        else if (ch == ']' || ch == ')') depth -= 1
-        i += 1
-      }
-      -1
-    }
-    // rebuild, sorting each group's top-level comma elements. Every
-    // walk runs over PAIRED strings of equal length: `m` (masked) is
-    // what bracket pairing and the sort ORDER trust; `o` (original,
-    // gid-blanked) supplies the EMITTED characters — so literal
-    // content survives canonicalization intact. Round 15 emitted the
-    // masked text itself, which collapsed two genuinely different
-    // plans whose literals differ only in structural characters
-    // (rlike '[ab]' vs '(ab)' both emitted as '_ab_') — the exact
-    // false identity the round-13 bail-out existed to prevent
-    // (round-15 ADVICE). Returns (canonMasked, canonOriginal); ties
-    // on the masked sort key break by the original text, so the
-    // output is still deterministic.
-    def canonElem(m: String, o: String): (String, String) = {
-      val sbM = new StringBuilder
-      val sbO = new StringBuilder
-      var i = 0
-      while (i < m.length) {
-        val ch = m.charAt(i)
-        if (ch == '[' || ch == '(') {
-          val close = matching(m, i)
-          if (close < 0) {
-            sbM.append(m.substring(i)); sbO.append(o.substring(i))
-            i = m.length
-          } else {
-            val (cm, co) =
-              canonSeg(m.substring(i + 1, close), o.substring(i + 1, close))
-            val cl = if (ch == '[') ']' else ')'
-            sbM.append(ch).append(cm).append(cl)
-            sbO.append(o.charAt(i)).append(co).append(cl)
-            i = close + 1
-          }
-        } else { sbM.append(ch); sbO.append(o.charAt(i)); i += 1 }
-      }
-      (sbM.result(), sbO.result())
-    }
-    def canonSeg(m: String, o: String): (String, String) = {
-      val cuts = scala.collection.mutable.ArrayBuffer[Int]()
-      var depth = 0
-      var i = 0
-      while (i < m.length) {
-        val ch = m.charAt(i)
-        if (ch == '[' || ch == '(') depth += 1
-        else if (ch == ']' || ch == ')') depth -= 1
-        else if (ch == ',' && depth == 0) cuts += i
-        i += 1
-      }
-      val bounds = (Seq(-1) ++ cuts ++ Seq(m.length)).sliding(2).toSeq
-      val parts = bounds.map { b =>
-        // trim by m's whitespace — masking never touches whitespace,
-        // so m and o share every whitespace position
-        var s = b.head + 1
-        var e = b.last
-        while (s < e && m.charAt(s).isWhitespace) s += 1
-        while (e > s && m.charAt(e - 1).isWhitespace) e -= 1
-        canonElem(m.substring(s, e), o.substring(s, e))
-      }
-      val sorted = if (parts.size > 1) parts.sorted else parts
-      (sorted.map(_._1).mkString(", "), sorted.map(_._2).mkString(", "))
-    }
-    // sorting trusts bracket pairing, and bracket chars may hide
-    // inside string literals (e.g. a regexp pattern in a FILTER).
-    // Round 13 bailed out of canonicalization for ANY quoted line —
-    // which left the exprId-dependent reorder the function exists to
-    // suppress live on every gid line embedding a string literal
-    // (round-14 ADVICE). Instead, mask only the STRUCTURAL characters
-    // inside quoted spans (brackets/commas → '_'), so the pairing
-    // walk sees the real structure while literal content still
-    // distinguishes plans; an unterminated quote or a line still
-    // unbalanced after masking keeps the bail-out (two DIFFERENT
-    // plans must never canonicalize to the same text).
-    val masked = maskQuotedStructure(blanked)
-    val unsortable = masked.isEmpty ||
-      masked.count(_ == '[') != masked.count(_ == ']') ||
-      masked.count(_ == '(') != masked.count(_ == ')')
-    if (unsortable) blanked
-    else try canonElem(masked, blanked)._2
-    catch { case _: Throwable => blanked }
-  }
-
-  /** Replace brackets/parens/commas INSIDE quoted spans with '_',
-    * honoring backslash escapes; returns "" when a quote never
-    * terminates (the caller then skips sorting entirely). */
-  private[graft] def maskQuotedStructure(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var q: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q == 0) {
-        if (c == '"' || c == '\'') q = c
-        sb.append(c)
-      } else if (c == '\\' && i + 1 < s.length) {
-        sb.append(c).append(
-          if ("[](),".contains(s.charAt(i + 1))) '_' else s.charAt(i + 1))
-        i += 1
-      } else {
-        if (c == q) q = 0
-        sb.append(if ("[](),".contains(c)) '_' else c)
-      }
-      i += 1
-    }
-    if (q != 0) "" else sb.result()
-  }
-
-  /** Plan fingerprint: md5 of the formatted physical plan with the
-    * volatile tokens stripped — stable across JVMs of the same code,
-    * changed by any real plan-shape change. Recorded per query in the
-    * detail file so a future bench can separate "same plan, slower
-    * host" from "plan regressed" without re-reading source.
-    * Volatile tokens (all proven run-varying): expr ids `#123`,
-    * exchange markers `[id=#n]`, `[plan_id=n]` (a GLOBAL JVM counter
-    * that AQE's racy stage re-planning advances nondeterministically —
-    * unnormalized it made every fingerprint unique per run and the
-    * drift check vacuously green, the round-12 finding), RDD ids in
-    * checkpoint scans, the data path, and the element order of
-    * `gid#`-carrying distinct-aggregate lines ([[canonGidLine]]). */
+  /** Plan fingerprint: md5 of [[planText]] over the query's executed
+    * plan, recorded per query so a bench can tell "same plan, slower
+    * host" from "plan changed"; `err:<exception class>` when the plan
+    * cannot be built. `SPARK_GRAFT_FP_DUMP=<dir>` writes each walk text
+    * to `<dir>/<name>.txt`, so two fingerprints diff to the node. */
   def planFp(spark: SparkSession, name: String, sfDir: String): String =
+    tryPlanFp(spark, name, sfDir).fold(errFp, identity)
+
+  private[graft] def errFp(e: Throwable): String = "err:" + e.getClass.getSimpleName
+
+  private[graft] def tryPlanFp(spark: SparkSession, name: String,
+      sfDir: String): Either[Throwable, String] =
     try {
-      val p = SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-        .replaceAll("#\\d+L?", "#")
-        .replaceAll("\\[id=#?\\d+\\]", "")
-        .replaceAll("\\[plan_id=\\d+\\]", "")
-        .replaceAll("RDD\\[\\d+\\]", "RDD")
-        .replaceAll("RDD at [A-Za-z.]+:\\d+", "RDD")
-        // checkpoint-scan RDD callsites carry a SOURCE LINE NUMBER
-        // ("MapPartitionsRDD at localCheckpoint at Dedup.scala:868"):
-        // un-normalized, ANY edit that shifts lines in an operator
-        // file flips the fingerprint of every memo-scan plan built
-        // from it — a round-14 finding (t36/t37/x33 flipped on a
-        // TextAnalysis edit nowhere near their code)
-        .replaceAll("at [A-Za-z0-9_$.]+\\.scala:\\d+", "at <src>")
-        // a checkpoint scan's outputPartitioning prints the RDD's
-        // PARTITION COUNT (UnknownPartitioning(N)) — a runtime
-        // artifact: AQE coalescing and input timing pick how many
-        // partitions the checkpointed frame materialized with, so the
-        // same code can print 0, 1, or 4 across sessions (round-15
-        // finding: i14's radix checkpoints split the sf1 bench
-        // repeats' fingerprints and bench_merge refused the merge).
-        // Shuffle widths stay significant — hashpartitioning(col, 32)
-        // is untouched; only the Unknown form is runtime-derived.
-        .replaceAll("UnknownPartitioning\\(\\d+\\)",
-          "UnknownPartitioning(_)")
-        // JVM-assigned lambda identities in MapPartitions/object nodes
-        // (the multimodal codec boundary): Foo$$Lambda$1397/0x7f...
-        .replaceAll("\\$\\$Lambda[$/0-9a-fx@.]*", "\\$\\$Lambda")
-        .replaceAll(java.util.regex.Pattern.quote(sfDir), "<sf>")
-        .linesIterator
-        .map {
-          // canonicalize only in distinct-aggregate context — the
-          // nodes RewriteDistinctAggregates actually reorders (Expand
-          // projections, HashAggregate keys/functions, the gid-keyed
-          // Exchange) plus explicit `gid# = N` filters — so a future
-          // USER column named gid can't get unrelated lines order-
-          // normalized (round-13 ADVICE). Node context = the last
-          // formatted-detail header seen.
-          var node = ""
-          val hdr = raw"^\((\d+)\) (\w+)".r
-          val gidNodes = Set("Expand", "HashAggregate", "Exchange")
-          l: String => {
-            hdr.findFirstMatchIn(l).foreach(m => node = m.group(2))
-            if (l.contains("gid#") &&
-                (l.contains("gid# = ") || gidNodes(node))) canonGidLine(l)
-            else l
-          }
-        }
-        .mkString("\n")
-      // SPARK_GRAFT_FP_DUMP=<dir>: write the NORMALIZED plan text per
-      // query, so a cross-run fingerprint flip can be diffed to its
-      // varying token instead of reverse-engineered from two hashes
-      // (dev-only; the driver never sets it)
+      val p = planText(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
+        .getBytes("UTF-8")
       sys.env.get("SPARK_GRAFT_FP_DUMP").foreach { d =>
         new java.io.File(d).mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$d/$name.txt"), p.getBytes("UTF-8"))
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/$name.txt"), p)
       }
-      java.security.MessageDigest.getInstance("MD5").digest(
-        p.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    } catch { case _: Throwable => "err" }
+      Right(java.security.MessageDigest.getInstance("MD5").digest(p)
+        .take(6).map("%02x".format(_)).mkString)
+    } catch { case e: Throwable => Left(e) }
+
+  /** The fingerprinted text: one indented line per physical node, depth
+    * first over children, subquery plans and the cached plan under an
+    * `InMemoryRelation`, holding the node's class name and constructor
+    * arguments. Structure is node classes, expressions (text without
+    * exprIds), partitionings, numbers, booleans, strings, data types and
+    * case objects (join type, build side, shuffle origin). Any other value
+    * (RDDs, relations, file indexes, functions) is only its class name, so
+    * paths, RDD ids, call sites and lambda ids stay out, as does what AQE
+    * and codegen decide per run: query-stage and codegen-stage ids, AQE
+    * shuffle-read specs and `UnknownPartitioning`'s count. A node whose
+    * expressions carry a distinct aggregate's `gid` column renders its
+    * comma tokens as a sorted multiset with the gid literals blanked, as
+    * which group gets which gid can follow allocation history. */
+  private[graft] def planText(plan: SparkPlan): String = {
+    val out = new StringBuilder
+    def arg(a: Any): String = a match {
+      case _: UnknownPartitioning => "UnknownPartitioning"
+      case v @ (_: Expression | _: Partitioning | _: Number | _: Boolean |
+          _: String | _: DataType | _: StructField) => v.toString
+      case o: Option[_] => o.map(arg).toString
+      case s: Iterable[_] => s.map(arg).mkString("[", ", ", "]")
+      case p: Product if p.productArity == 0 => p.toString
+      case null => "null"
+      case o => o.getClass.getName.split("\\$\\$Lambda")(0)
+    }
+    def isPlan(a: Any): Boolean = a match { // walked, not rendered
+      case _: SparkPlan => true
+      case s: Iterable[_] => s.nonEmpty && s.forall(isPlan)
+      case _ => false
+    }
+    def walk(p: SparkPlan, depth: Int): Unit = {
+      val args = p match {
+        case _: AdaptiveSparkPlanExec | _: QueryStageExec | _: AQEShuffleReadExec => ""
+        case _ => p.productIterator.filterNot(isPlan).map(arg).mkString(", ")
+          .replaceAll("#\\d+L?", "#")
+      }
+      val gid = p.expressions.exists(_.exists {
+        case a: Attribute => a.name == "gid"
+        case _ => false
+      })
+      out ++= "  " * depth ++= p.getClass.getSimpleName ++= " " ++= (if (!gid) args
+        else args.replaceAll("(?<=gid# = )\\d+", "_").split(", ").sorted.mkString(", ")) += '\n'
+      (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case m: InMemoryTableScanExec => m.relation.cachedPlan +: m.subqueries
+        case _ => p.children ++ p.subqueries
+      }).foreach(walk(_, depth + 1))
+    }
+    walk(plan, 0)
+    out.result()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -480,8 +344,6 @@ object Bench {
       .filter { case (_, (mn, mx)) => mx > 1.5 * mn && mx - mn > 1.0 }
       .sortBy { case (_, (mn, mx)) => -(mx - mn) }
       .take(8)
-    def planFp(name: String): String = Bench.planFp(spark, name, sfDir)
-
     // The driver keeps only the last ~2000 chars of stdout and parses
     // the JSON line out of that window (BENCH_r{1,2,4}.json all show
     // "parsed": null because the full-name line outgrew it). So the
@@ -504,7 +366,7 @@ object Bench {
         .sortBy(_._1).map { case (n, b) =>
           n -> (math.round(b / 104857.6) / 10.0) })(_.toString)
       val spreadDetail = jsonObj(spread) { case (mn, mx) => s"[$mn,$mx]" }
-      val fpDetail = jsonObj(names.map(n => n -> planFp(n)))("\"" + _ + "\"")
+      val fpDetail = jsonObj(names.map(n => n -> planFp(spark, n, sfDir)))("\"" + _ + "\"")
       val memoDetail = jsonObj(memoBuild)(_.toString)
       val detailLine =
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$detail,"runs":$runs,"stat":"median","failed_runs":$errDetail,"resampled":$resDetail,"storage_mb":$stoDetail,"spread":$spreadDetail,"memo_build_sec":$memoDetail,"plan_fp":$fpDetail,"sf":"$sfDir"}"""

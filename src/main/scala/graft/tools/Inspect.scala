@@ -13,12 +13,13 @@ import graft.engine.Sessions
   *
   *  - `plan <sfDir> <cpus> <query…>`: each query's FORMATTED physical
   *    plan, raw (PlanSpec, not this tool, pins plan properties).
-  *  - `fp <sfDir> <outFile>`: every query's normalized plan
-  *    fingerprint ([[Bench.planFp]], the function the bench records)
-  *    as one JSON object on `local[32]`, for checking that a change
-  *    does not replan (dump in two fresh JVMs, compare). A query whose
-  *    plan cannot be built fingerprints as `err`; those are named on
-  *    stderr and make the exit status non-zero. Building some plans
+  *  - `fp <sfDir> <outFile>`: every query's plan fingerprint
+  *    ([[Bench.planFp]], the function the bench records) as one JSON
+  *    object on `local[32]`, for checking that a change does not
+  *    replan (dump in two fresh JVMs, compare). A query whose plan
+  *    cannot be built fingerprints as `err:<exception class>`; those
+  *    are named on stderr with the exception's message and make the
+  *    exit status non-zero. Building some plans
   *    runs eager memo builds, so expect corpus-scale jobs.
   *  - `profile <sfDir> <cpus> <query…>`: runs each query through the
   *    bench's `noop` sink cold, then twice warm, and prints the jobs,
@@ -73,16 +74,18 @@ object Inspect {
   }
 
   /** Writes `{"name":"fp",…}` for `names` to `out`; non-zero if any
-    * fingerprint is `err`. */
+    * plan cannot be built. */
   private[tools] def fp(spark: SparkSession, dir: String, out: String,
       names: Seq[String]): Int = {
-    val fps = names.map(n => n -> Bench.planFp(spark, n, dir))
+    val fps = names.map(n => n -> Bench.tryPlanFp(spark, n, dir))
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      fps.map { case (n, f) => s""""$n":"$f"""" }
+      fps.map { case (n, f) => s""""$n":"${f.fold(Bench.errFp, identity)}"""" }
         .mkString("{", ",", "}").getBytes("UTF-8"))
     println(s"wrote $out (${fps.size} fingerprints)")
-    val failed = fps.collect { case (n, "err") => n }
-    failed.foreach(n => Console.err.println(s"[inspect] $n: plan failed (fp err)"))
+    val failed = fps.collect { case (n, Left(e)) => n -> e }
+    failed.foreach { case (n, e) =>
+      Console.err.println(s"[inspect] $n: plan failed (${Bench.errFp(e)}): ${e.getMessage}")
+    }
     if (failed.isEmpty) 0 else 1
   }
 

@@ -22,70 +22,6 @@ class ContractSpec extends AnyFunSuite {
       "duplicate id prefix would force the bench line back to full names")
   }
 
-  test("gid-carrying plan lines canonicalize order-free (fp stability)") {
-    // The two real orderings RewriteDistinctAggregates emitted for
-    // q14 across same-code bench runs (the gid flip: which distinct
-    // group gets gid 1 vs 2 follows the JVM's expression-allocation
-    // history). Both must canonicalize identically, else bench_merge
-    // refuses same-code repeats.
-    val expandA = "Arguments: [[l_returnflag#, null, null, 0], " +
-      "[l_returnflag#, l_suppkey#, null, 1], " +
-      "[l_returnflag#, null, l_partkey#, 2]], " +
-      "[l_returnflag#, lineitem.l_suppkey#, lineitem.l_partkey#, gid#]"
-    val expandB = "Arguments: [[l_returnflag#, null, null, 0], " +
-      "[l_returnflag#, null, l_partkey#, 1], " +
-      "[l_returnflag#, l_suppkey#, null, 2]], " +
-      "[l_returnflag#, lineitem.l_partkey#, lineitem.l_suppkey#, gid#]"
-    assert(Bench.canonGidLine(expandA) == Bench.canonGidLine(expandB))
-    val fnA = "Functions [3]: [partial_count(lineitem.l_partkey#) " +
-      "FILTER (WHERE (gid# = 2)), partial_count(lineitem.l_suppkey#) " +
-      "FILTER (WHERE (gid# = 1)), partial_first(count(1)#, true) " +
-      "FILTER (WHERE (gid# = 0))]"
-    val fnB = "Functions [3]: [partial_count(lineitem.l_suppkey#) " +
-      "FILTER (WHERE (gid# = 2)), partial_count(lineitem.l_partkey#) " +
-      "FILTER (WHERE (gid# = 1)), partial_first(count(1)#, true) " +
-      "FILTER (WHERE (gid# = 0))]"
-    assert(Bench.canonGidLine(fnA) == Bench.canonGidLine(fnB))
-    val hpA = "Arguments: hashpartitioning(l_returnflag#, " +
-      "lineitem.l_suppkey#, lineitem.l_partkey#, gid#, 32), " +
-      "ENSURE_REQUIREMENTS, "
-    val hpB = "Arguments: hashpartitioning(l_returnflag#, " +
-      "lineitem.l_partkey#, lineitem.l_suppkey#, gid#, 32), " +
-      "ENSURE_REQUIREMENTS, "
-    assert(Bench.canonGidLine(hpA) == Bench.canonGidLine(hpB))
-    // a REAL structural difference must still separate
-    assert(Bench.canonGidLine(fnA) !=
-      Bench.canonGidLine(fnA.replace("partial_first", "partial_max")))
-    // round-14 ADVICE: a gid line EMBEDDING A STRING LITERAL (with a
-    // bracket hiding inside) must still order-canonicalize — the
-    // round-13 quote bail-out left the exprId reorder live there
-    val litA = "Functions [2]: [partial_count(a#) FILTER (WHERE " +
-      "((gid# = 1) AND rlike(s#, \"x[0-9]+\"))), partial_count(b#) " +
-      "FILTER (WHERE (gid# = 2))]"
-    val litB = "Functions [2]: [partial_count(b#) FILTER (WHERE " +
-      "(gid# = 2)), partial_count(a#) FILTER (WHERE ((gid# = 1) " +
-      "AND rlike(s#, \"x[0-9]+\")))]"
-    assert(Bench.canonGidLine(litA) == Bench.canonGidLine(litB),
-      "quoted-literal gid lines no longer order-canonicalize")
-    // ...while literal CONTENT still separates plans (non-structural
-    // characters inside the quotes are preserved, not blanked)
-    assert(Bench.canonGidLine(litA) !=
-      Bench.canonGidLine(litA.replace("x[0-9]+", "y[0-9]+")))
-    // round-15 ADVICE: literals differing ONLY in STRUCTURAL
-    // characters must also separate — the canonical output must emit
-    // the ORIGINAL characters (the mask may drive pairing and sort
-    // order only), else rlike '[ab]' and rlike '(ab)' collapse to
-    // one fingerprint
-    assert(Bench.canonGidLine(litA) !=
-      Bench.canonGidLine(litA.replace("x[0-9]+", "x(0-9)+")))
-    assert(Bench.canonGidLine(litA).contains("x[0-9]+"),
-      "canonical text lost the literal's own brackets")
-    // an unterminated quote keeps the bail-out: returns the line
-    // blanked but unsorted, never a wrong pairing walk
-    val broken = "Keys [2]: [gid# = 1, rlike(s#, \"x[(])]"
-    assert(Bench.canonGidLine(broken).contains("gid# = _"))
-  }
-
   test("bench line never outgrows the driver tail window (self-truncating)") {
     // Bench.compactLine measures the REAL string and folds the
     // cheapest queries into other_n/other_sec until it fits — so the
@@ -176,12 +112,13 @@ class ContractSpec extends AnyFunSuite {
     val ratios = shared.map { case (_, c, b) => c / b }.sorted
     val censusRatio = ratios(ratios.size / 2)
     if (censusRatio < 1.2) { // not a uniform host shift
+      // a plan that could not be fingerprinted cannot acquit its move
       val suspects = shared.filter { case (n, c, b) =>
         c > 1.5 * b && c - b > 1.0 &&
-          cf.get(n).exists(fp => bf.get(n).contains(fp) && fp != "\"err\"")
+          cf.get(n).exists(fp => bf.get(n).contains(fp) || fp.startsWith("\"err"))
       }
       assert(suspects.isEmpty,
-        "median moved >1.5x with an UNCHANGED plan fingerprint while " +
+        "median moved >1.5x with an UNCHANGED (or err) plan fingerprint while " +
           s"the census held (median ratio $censusRatio): " +
           suspects.map { case (n, c, b) => s"$n $b->$c" }.mkString(", "))
     }

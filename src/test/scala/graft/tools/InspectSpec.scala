@@ -12,7 +12,7 @@ import graft.Bench
 /** The `Inspect` dev main: argument checking before any session is
   * built, the plan printout, and the fingerprint dump, which must
   * agree with the bench's own fingerprints and must not pass when a
-  * plan fails. */
+  * plan fails, naming the exception. */
 class InspectSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = graft.engine.Sessions.local(4)
@@ -73,7 +73,7 @@ class InspectSpec extends AnyFunSuite {
       assert(json.size == names.size)
       names.foreach { n =>
         val fp = json.get(n).asText
-        assert(fp != "err" && fp == Bench.planFp(spark, n, dir), n)
+        assert(!fp.startsWith("err") && fp == Bench.planFp(spark, n, dir), n)
       }
     }
   }
@@ -83,10 +83,11 @@ class InspectSpec extends AnyFunSuite {
       val (code, _, err) = captured(Inspect.fp(spark, dir, f.toString,
         Seq("q02_filter_project", "zz_planted_failure")))
       assert(code != 0)
-      assert(err.contains("zz_planted_failure"), err)
+      assert(err.contains("zz_planted_failure") &&
+        err.contains("err:NoSuchElementException"), err)
       val json = new ObjectMapper().readTree(f.toFile)
-      assert(json.get("zz_planted_failure").asText == "err")
-      assert(json.get("q02_filter_project").asText != "err")
+      assert(json.get("zz_planted_failure").asText == "err:NoSuchElementException")
+      assert(!json.get("q02_filter_project").asText.startsWith("err"))
     }
   }
 }
