@@ -72,8 +72,12 @@ object Bench {
       runs: Int, failedRuns: Seq[(String, Int)], resampledTotal: Int,
       sfDir: String, maxChars: Int = MaxLineChars,
       noisy: Seq[(String, (Double, Double))] = Nil,
-      memoBuild: Seq[(String, Double)] = Nil): String = {
+      memoBuild: Seq[(String, Double)] = Nil, fpErr: Int = 0): String = {
     def short(n: String): String = n.takeWhile(_ != '_')
+    // queries whose plan could not be fingerprinted: a count, never
+    // folded, so a plan failure shows in the line even when its run
+    // times look normal
+    val fpErrField = if (fpErr > 0) s""","fp_err":$fpErr""" else ""
     val ambiguous = results.map(_._1).groupBy(short).exists(_._2.size > 1)
     def key(n: String): String = if (ambiguous) n else short(n)
     // fold order: cheapest first (ties by name for determinism);
@@ -93,6 +97,7 @@ object Bench {
           failedRuns.map { case (k, n) => key(k) -> n })(_.toString)
       if (resampledTotal > 0)
         extras ++= s""","resampled":$resampledTotal"""
+      extras ++= fpErrField
       // per-query [min,max] spread for the queries whose samples
       // disagree most (capped upstream): the in-line evidence that a
       // median move is host noise (wide spread) vs a plan change
@@ -123,7 +128,7 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""queries":{},"other_n":${ok.size},"other_sec":${fmt(
             ok.map(_._2).sum)},"failed_n":$nRed,""" +
-        s""""failed_run_total":${failedRuns.map(_._2).sum},""" +
+        s""""failed_run_total":${failedRuns.map(_._2).sum}$fpErrField,""" +
         s""""runs":$runs,"stat":"median","sf":"$sfDir"}"""
     }
     (0 to foldOrder.size).iterator.map(build)
@@ -353,9 +358,11 @@ object Bench {
     // precision record goes to BENCH_DETAIL.json next to the build.
     val memoBuild = graft.operators.Memos.buildSecFor(sfDir)
       .toSeq.sortBy(_._1)
+    val fps = names.map(n => n -> planFp(spark, n, sfDir))
     val line = compactLine(results, total, runs,
       failedRuns.toSeq.sortBy(_._1), resampled.values.sum, sfDir,
-      noisy = noisy, memoBuild = memoBuild)
+      noisy = noisy, memoBuild = memoBuild,
+      fpErr = fps.count(_._2.startsWith("err:")))
     try {
       val detail = jsonObj(results)(_.toString)
       val errDetail = jsonObj(failedRuns.toSeq.sortBy(_._1))(_.toString)
@@ -366,7 +373,7 @@ object Bench {
         .sortBy(_._1).map { case (n, b) =>
           n -> (math.round(b / 104857.6) / 10.0) })(_.toString)
       val spreadDetail = jsonObj(spread) { case (mn, mx) => s"[$mn,$mx]" }
-      val fpDetail = jsonObj(names.map(n => n -> planFp(spark, n, sfDir)))("\"" + _ + "\"")
+      val fpDetail = jsonObj(fps)("\"" + _ + "\"")
       val memoDetail = jsonObj(memoBuild)(_.toString)
       val detailLine =
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$detail,"runs":$runs,"stat":"median","failed_runs":$errDetail,"resampled":$resDetail,"storage_mb":$stoDetail,"spread":$spreadDetail,"memo_build_sec":$memoDetail,"plan_fp":$fpDetail,"sf":"$sfDir"}"""

@@ -1,6 +1,10 @@
 package graft.engine
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Registers the driver-generated parquet tables (TESTDATA.md) as temp
   * views so both the DataFrame API and `spark.sql` paths can use them.
@@ -10,6 +14,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (LogicalRelation with full pushdown support), so every query below
   * is scale-transparent: swap the view registration for
   * `spark.table("db.t")` and nothing else changes.
+  *
+  * Like a catalog, it stores each table's schema once: a JVM-wide map
+  * from a file's identity (qualified path, length, modification time)
+  * to the `StructType` Spark inferred for it. Spark's parquet inference
+  * runs one job per file, so only the first session in a JVM pays it;
+  * every later session, on any SparkContext, reads with the stored
+  * schema and registers its views without a job. Inference runs once
+  * rather than never (no declared schemas, no footer reader of our
+  * own) because `events.ts` has changed footer type between data
+  * refreshes (see [[ensure]]) and only inference follows that; a
+  * rewritten file has a new length or modification time and is
+  * inferred again. What inference returns also depends on two confs,
+  * `nanosAsLong` and `inferTimestampNTZ`, which `ensure` pins before
+  * any read, so they cannot differ between the sessions sharing the
+  * map.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,6 +36,19 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   private val confKey = "graft.tables.dir"
+
+  /** Inferred schema per (qualified path, length, modification time);
+    * guarded by the object's lock, which `ensure` holds. */
+  private val schemas = mutable.Map.empty[(String, Long, Long), StructType]
+
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(p)
+    val key = (fs.makeQualified(p).toString, st.getLen, st.getModificationTime)
+    spark.read.schema(schemas.getOrElseUpdate(key, spark.read.parquet(path).schema))
+      .parquet(path)
+  }
 
   /** Idempotent per (session, dir): registers each parquet file as a
     * same-named temp view.
@@ -41,7 +73,7 @@ object Tables {
     // session timezone.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     names.foreach { n =>
-      var df = spark.read.parquet(s"$dir/$n.parquet")
+      var df = read(spark, s"$dir/$n.parquet")
       df.schema.fields.foreach { f =>
         if (f.dataType == org.apache.spark.sql.types.LongType &&
             f.name == "ts") {

@@ -190,24 +190,10 @@ object Pipeline {
     // driver) and only the actions run in the pool. Results are the
     // same branch frames, materialized — the card's joins below are
     // unchanged.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(7)
-    val (ckEp, ckDr, ckEd, ckOv, ckDm, ckQ, ckNv) = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      def mat(tag: String, df: DataFrame) = scala.concurrent.Future {
-        s.sparkContext.setJobDescription(s"x26 branch: $tag")
-        val out = df.localCheckpoint()
-        s.sparkContext.setJobDescription(null)
-        out
-      }
-      val fs = Seq(mat("epoch_alloc", ep), mat("drift", dr),
-        mat("emb_drift", ed), mat("overlap", ov), mat("dup_matrix", dm0),
-        mat("quality_keep", q0), mat("novelty_median", nv0))
-      val r = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs),
-        scala.concurrent.duration.Duration.Inf)
-      (r(0), r(1), r(2), r(3), r(4), r(5), r(6))
-    } finally pool.shutdown()
+    val Seq(ckEp, ckDr, ckEd, ckOv, ckDm, ckQ, ckNv) = checkpointAll(s, "x26",
+      Seq("epoch_alloc" -> ep, "drift" -> dr, "emb_drift" -> ed,
+        "overlap" -> ov, "dup_matrix" -> dm0, "quality_keep" -> q0,
+        "novelty_median" -> nv0))
     val intra = ckDm.filter(col("source_a") === col("source_b"))
       .select(col("source_a").as("source"),
         col("n_pairs").as("intra_dup_pairs"))
@@ -232,6 +218,45 @@ object Pipeline {
         "intra_dup_pairs", "cross_dup_pairs", "keep_rate_e6",
         "med_novelty_e6")
       .orderBy("source")
+  }
+
+  /** `localCheckpoint`s each `(tag, frame)` branch on its own pool
+    * thread, in its own job group, and returns the checkpoints in
+    * branch order. On the first branch failure it cancels every
+    * branch's jobs (running and yet to start, interrupting their
+    * tasks), interrupts the pool threads and rethrows that failure, so
+    * no sibling branch keeps the executors busy after the caller has
+    * failed. There is no timeout: a correct branch may run long at a
+    * larger scale. */
+  private[graft] def checkpointAll(s: SparkSession, name: String,
+      branches: Seq[(String, DataFrame)]): Seq[DataFrame] = {
+    val sc = s.sparkContext
+    // fresh group ids per call: Spark keeps a group cancelled with its
+    // future jobs cancelled for the life of the context
+    val run = java.util.UUID.randomUUID()
+    val groups = branches.map { case (tag, _) => s"$name:$tag:$run" }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(branches.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[(Int, DataFrame)](pool)
+    try {
+      branches.zip(groups).zipWithIndex.foreach { case (((tag, df), group), i) =>
+        done.submit { () =>
+          sc.setJobGroup(group, s"$name branch: $tag", interruptOnCancel = true)
+          try i -> df.localCheckpoint() finally sc.clearJobGroup()
+        }
+      }
+      val out = new Array[DataFrame](branches.size)
+      for (_ <- branches) {
+        val (i, df) =
+          try done.take().get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        out(i) = df
+      }
+      out.toSeq
+    } catch { case e: Throwable =>
+      groups.foreach(sc.cancelJobGroupAndFutureJobs(_, s"$name: a sibling branch failed"))
+      pool.shutdownNow()
+      throw e
+    } finally pool.shutdown()
   }
 
   /** x27 repetition cut: documents whose 3-gram duplicate share (t06's

@@ -28,9 +28,8 @@ class ContractSpec extends AnyFunSuite {
     // invariant to pin is the builder's guarantee, at the current
     // query census and far past it.
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val now = Bench.compactLine(
-      names.zipWithIndex.map { case (n, i) => n -> (0.1 + i * 0.07) },
-      42.0, 3, Nil, 0, "/root/testdata/sf0.1")
+    val timings = names.zipWithIndex.map { case (n, i) => n -> (0.1 + i * 0.07) }
+    val now = Bench.compactLine(timings, 42.0, 3, Nil, 0, "/root/testdata/sf0.1")
     assert(now.length <= Bench.MaxLineChars, s"line ${now.length} chars")
     // at the current census the heaviest queries must still be
     // in-line by name (folding, if any, eats from the cheap end)
@@ -56,11 +55,23 @@ class ContractSpec extends AnyFunSuite {
     // still parse (failed_n carries the count)
     val massRed = (1 to 300).map(i => f"w$i%03d_red" -> -1.0) ++
       (1 to 100).map(i => f"v$i%03d_ok" -> (i * 0.01))
-    val massLine = Bench.compactLine(massRed, 1.0, 3,
-      (1 to 300).map(i => f"w$i%03d_red" -> 3), 0, "/tmp/x")
+    val redRuns = (1 to 300).map(i => f"w$i%03d_red" -> 3)
+    val massLine = Bench.compactLine(massRed, 1.0, 3, redRuns, 0, "/tmp/x")
     assert(massLine.length <= Bench.MaxLineChars,
       s"mass-failure line ${massLine.length} chars")
     assert(massLine.contains("\"failed_n\":300"))
+    // fp_err counts unfingerprintable plans: absent at 0, present and
+    // still inside the window at the census, past it, and when collapsed
+    assert(!now.contains("fp_err"))
+    for ((line, what) <- Seq(
+        Bench.compactLine(timings, 42.0, 3, Nil, 0, "/root/testdata/sf0.1",
+          fpErr = 201) -> "census",
+        Bench.compactLine(big, 800.0, 3, Nil, 0, "/tmp/x", fpErr = 400) -> "400 queries",
+        Bench.compactLine(massRed, 1.0, 3, redRuns, 0, "/tmp/x", fpErr = 400)
+          -> "mass failure")) {
+      assert(line.contains("\"fp_err\":"), s"$what line lost fp_err")
+      assert(line.length <= Bench.MaxLineChars, s"$what line with fp_err ${line.length} chars")
+    }
   }
 
   /** Minimal flat-JSON object extractor for the bench detail files:
