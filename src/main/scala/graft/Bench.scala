@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSpar
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.types.{DataType, StructField}
 
+import graft.engine.Caches
+
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -137,9 +139,10 @@ object Bench {
   }
 
   /** Plan fingerprint: md5 of [[planText]] over the query's executed
-    * plan, recorded per query so a bench can tell "same plan, slower
-    * host" from "plan changed"; `err:<exception class>` when the plan
-    * cannot be built. `SPARK_GRAFT_FP_DUMP=<dir>` writes each walk text
+    * plan, built in the query's own cache scope as the timed runs are,
+    * recorded per query so a bench can tell "same plan, slower host"
+    * from "plan changed"; `err:<exception class>` when the plan cannot
+    * be built. `SPARK_GRAFT_FP_DUMP=<dir>` writes each walk text
     * to `<dir>/<name>.txt`, so two fingerprints diff to the node. */
   def planFp(spark: SparkSession, name: String, sfDir: String): String =
     tryPlanFp(spark, name, sfDir).fold(errFp, identity)
@@ -149,8 +152,8 @@ object Bench {
   private[graft] def tryPlanFp(spark: SparkSession, name: String,
       sfDir: String): Either[Throwable, String] =
     try {
-      val p = planText(SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan)
-        .getBytes("UTF-8")
+      val p = Caches.scoped(planText(SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.executedPlan)).getBytes("UTF-8")
       sys.env.get("SPARK_GRAFT_FP_DUMP").foreach { d =>
         new java.io.File(d).mkdirs()
         java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/$name.txt"), p)
@@ -242,19 +245,18 @@ object Bench {
 
     System.err.println(s"[bench] warm-up dir: $warmDir")
     names.foreach { name =>
-      try materialize(name, warmDir)
+      try Caches.scoped(materialize(name, warmDir))
       catch { case e: Throwable =>
         System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
       }
     }
-    spark.catalog.clearCache()
     // Storage-memory accounting: several operators persist() shared
     // frames for the duration of the query (norms, band tables, kNN
-    // graphs — documented clearCache lifetimes). This measures what
-    // that costs instead of assuming it: cached bytes still resident
-    // when the query finishes, max over runs, recorded per query in
-    // BENCH_DETAIL.json ("storage_mb") so a frame that would not fit
-    // executor storage at the target scale is a number, not a guess.
+    // graphs). This measures what that costs instead of assuming it:
+    // cached bytes still resident when the query finishes, max over
+    // runs, recorded per query in BENCH_DETAIL.json ("storage_mb") so
+    // a frame that would not fit executor storage at the target scale
+    // is a number, not a guess.
     @annotation.nowarn("cat=deprecation")
     def storageBytes(): Long =
       spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
@@ -262,22 +264,23 @@ object Bench {
       .withDefaultValue(0L)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    for (_ <- 1 to runs; name <- names) {
+    // One run in the query's own cache scope: its seconds, or None if
+    // it threw. Elapsed time and storage are read before the scope
+    // frees the query's caches, which is not part of the measured query.
+    def timedRun(name: String, tag: String): Option[Double] = Caches.scoped {
       val t0 = System.nanoTime()
       val ok =
         try { materialize(name); true }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          System.err.println(s"[bench] $tag$name failed: ${e.getMessage}")
           false
         }
-      // elapsed captured BEFORE the cache drop: unpersisting the
-      // operator's signature tables is inter-query hygiene, not part
-      // of the measured query
       val dt = (System.nanoTime() - t0) / 1e9
       storagePeak(name) = math.max(storagePeak(name), storageBytes())
-      spark.catalog.clearCache()
-      if (ok) samples(name) = dt :: samples(name)
+      Option.when(ok)(dt)
     }
+    for (_ <- 1 to runs; name <- names)
+      timedRun(name, "").foreach(dt => samples(name) = dt :: samples(name))
     def median(ts: List[Double]): Double = ts.sorted.apply(ts.size / 2)
 
     // Outlier re-sampling: interleaving spreads one query's samples
@@ -305,20 +308,7 @@ object Bench {
       rounds += 1
       for (name <- outliers if extraBudget > 0) {
         extraBudget -= 1
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialize(name); true }
-          catch { case e: Throwable =>
-            // log like the other two failure paths — a silent resample
-            // failure would burn the shared budget invisibly and leave
-            // the stall-contaminated median it was meant to repair
-            System.err.println(s"[bench] resample $name failed: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        storagePeak(name) = math.max(storagePeak(name), storageBytes())
-        spark.catalog.clearCache()
-        if (ok) {
+        timedRun(name, "resample ").foreach { dt =>
           samples(name) = dt :: samples(name)
           resampled += name -> (resampled(name) + 1)
         }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 import graft.operators.TextHash._
 
 /** Corpus-curation operators — the remaining stages of a pre-training
@@ -154,7 +154,7 @@ object Curation {
         expr(shingleExpr("tk")).as("shs"))
       .select(col("doc_id"), col("h_mod"),
         explode(expr(hashArrayExpr("shs", P))).as("h"))
-      .persist()
+      .transform(Caches.persist)
     val testHashes = ex.filter(col("h_mod") >= 90).select("h").distinct()
     ex.filter(col("h_mod") < 80)
       .join(testHashes, "h")
@@ -460,7 +460,7 @@ object Curation {
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      .persist() // feeds df count + the scored join (clearCache)
+      .transform(Caches.persist) // feeds df count + the scored join
     val dfq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct(col("doc_id")).as("n_docs"))
     val rankW = Window.partitionBy("doc_id")
@@ -595,7 +595,8 @@ object Curation {
     val v0 = words.groupBy("w").agg(count(lit(1)).as("c"))
       .withColumn("syms",
         expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-    val v1 = bpeApply(v0, bpeMine(v0)).persist() // round-2 mine + apply share it
+    // round-2 mine + apply share it
+    val v1 = bpeApply(v0, bpeMine(v0)).transform(Caches.persist)
     val v2 = bpeApply(v1, bpeMine(v1))
     v2.select(col("w"), size(col("syms")).cast("long").as("n_sym"))
   }
@@ -609,7 +610,8 @@ object Curation {
 
   def bpeTokenize(s: SparkSession, dir: String): DataFrame = {
     val words = bpeWords(s, dir)
-      .persist() // feeds the vocab build AND the per-doc re-aggregate
+      // feeds the vocab build AND the per-doc re-aggregate
+      .transform(Caches.persist)
     val nsym = bpeNSym(words)
     words.join(nsym, "w")
       .groupBy("doc_id")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 import graft.operators.TextHash._
 
 /** Deduplication operators over the `documents` table — the core of an
@@ -86,13 +86,8 @@ object Dedup {
         // broadcasts it while small (it is, at every gate SF) and
         // degrades to a shuffle anti-join on a boilerplate-heavy
         // corpus instead of failing the driver.
-        // Lifetime caveat (all persists in these builders): the frame
-        // is returned lazily, so there is no in-function action to
-        // unpersist after — blocks live until spark.catalog.clearCache()
-        // (Verify clears between queries) or session end; long-lived
-        // sessions calling operators repeatedly should clearCache.
         val exAll = sh.select(col("doc_id"), explode(col("hv")).as("h"))
-          .distinct().persist()
+          .distinct().transform(Caches.persist)
         val stop = exAll.groupBy("h").agg(count(lit(1)).as("df"))
           .filter(col("df") > cap).select("h")
         exAll.join(stop, Seq("h"), "left_anti")
@@ -161,8 +156,7 @@ object Dedup {
     * rarest-k terms generate candidates; the full dot still scores
     * them) on this exact plan to pull the candidate volume back to
     * near-linear. */
-  /** The df-capped term-count vectors shared by d15/d16 (persisted;
-    * clearCache lifetime — see the shinglePostings note). */
+  /** The df-capped term-count vectors shared by d15/d16 (persisted). */
   private def termVectors(s: SparkSession, dir: String,
       maxTermDfPermille: Option[Long]): DataFrame =
     termVectorsFrom(docs(s, dir), maxTermDfPermille)
@@ -173,7 +167,7 @@ object Dedup {
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 1)
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
-      .persist() // feeds the df count + the capped frame (clearCache)
+      .transform(Caches.persist) // feeds the df count + the capped frame
     (maxTermDfPermille match {
       case None => tc0
       case Some(permille) =>
@@ -183,7 +177,7 @@ object Dedup {
           .filter(col("df") * 1000L > lit(permille) * col("n_docs"))
           .select("w")
         tc0.join(broadcast(stop), Seq("w"), "left_anti")
-    }).persist() // feeds norms + postings-join sides (clearCache)
+    }).transform(Caches.persist) // feeds norms + postings-join sides
   }
 
   /** Norm-join + fixed float expression tree + threshold, shared by
@@ -372,14 +366,10 @@ object Dedup {
     * signature/band/rerank pipeline. */
   private[operators] val minhashLshPairsMemo =
     Memo("minhash_pairs") { (s, dir) =>
-      // persisted only for the build: feeds band explosion + both
-      // signature-compare sides; dropped once the (tiny) pair list is
-      // checkpoint-materialized
-      val sigs = minhashSignatures(s, dir).persist()
-      val g = minhashPairsFrom(sigs)
+      // persisted for the build: feeds band explosion + both
+      // signature-compare sides
+      minhashPairsFrom(minhashSignatures(s, dir).transform(Caches.persist))
         .localCheckpoint() // eager: materializes the pair list NOW
-      sigs.unpersist(true)
-      g
     }
 
   /** MinHash(k=32) + LSH(8 bands × 4 rows): candidate pairs from band
@@ -445,7 +435,7 @@ object Dedup {
     val sigs = shingleHashesMemo(s, dir)
       .filter(col("n_sh") > 0)
       .select(col("doc_id"), expr(minhashExpr("hv", MinhashK)).as("sig"))
-      .persist()
+      .transform(Caches.persist)
     def bandsOf(df: DataFrame): DataFrame = df.select(col("doc_id"),
         posexplode(expr(s"transform(sequence(0, ${MinhashBands - 1}), " +
           "b -> array_join(slice(sig, b * 4 + 1, 4), '-'))")))
@@ -503,8 +493,7 @@ object Dedup {
   def blockDedup(s: SparkSession, dir: String,
       blockToks: Int = BlockToks): DataFrame = {
     // persisted: feeds the df count and the mark join (re-splitting
-    // the corpus per branch would double the dominant narrow stage);
-    // lifetime: clearCache — see TextHash's cache note
+    // the corpus per branch would double the dominant narrow stage)
     val bl = fanOut(docs(s, dir))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), posexplode(expr(
@@ -512,7 +501,7 @@ object Dedup {
           s"i -> array_join(slice(tk, i * $blockToks + 1, $blockToks), ' '))"))
         .as(Seq("bi", "b")))
       .withColumn("h", expr(rollingHashExpr("b", P)))
-      .persist()
+      .transform(Caches.persist)
     val boiler = bl.select(col("doc_id"), col("h")).distinct()
       .groupBy("h").agg(count(lit(1)).as("bdf"))
       .filter(col("bdf") >= 2)
@@ -557,7 +546,7 @@ object Dedup {
       .withColumn("bucket_n", count(lit(1)).over(w))
       .filter(col("bucket_n") <= SimhashBucketCap)
       .drop("bucket_n")
-      .persist()
+      .transform(Caches.persist)
     bands.as("a")
       .join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -594,7 +583,8 @@ object Dedup {
     val grams = fanOut(docs(s, dir))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), expr(ngramsExpr("tk", HotNgramToks)).as("gs"))
-      .persist() // gram arrays feed the stats pass and the recovery pass
+      // gram arrays feed the stats pass and the recovery pass
+      .transform(Caches.persist)
     val top = grams
       .select(col("doc_id"), explode(expr(hashArrayExpr("gs", P))).as("h"))
       .groupBy("h")
@@ -629,7 +619,7 @@ object Dedup {
     val sigs = shingleHashesMemo(s, dir)
       .filter(col("n_sh") > 0)
       .select(col("doc_id"), expr(minhashExpr("hv", MinhashK)).as("sig"))
-      .persist()
+      .transform(Caches.persist)
     // the t07 split rule verbatim (TextAnalysis.hashSplit): P-hash of
     // lowered text mod 100, <80 train / <90 val / else test
     val split = fanOut(docs(s, dir))
@@ -831,14 +821,10 @@ object Dedup {
     * rewrite and the x32 final assembly so the span definition cannot
     * drift between the report and the rewrites that consume it. */
   private def substringSpansCore(s: SparkSession, dir: String): DataFrame = {
-    // persisted only for the build: the df pass and the match join
-    // share the window stream; dropped once the (small) span table is
-    // checkpoint-materialized
-    val wins = substringWins(s, dir).persist()
-    val g = substringSpansFrom(wins)
+    // persisted for the build: the df pass and the match join share
+    // the window stream
+    substringSpansFrom(substringWins(s, dir).transform(Caches.persist))
       .localCheckpoint() // eager: materializes the span table NOW
-    wins.unpersist(true)
-    g
   }
 
   /** d20: exact-substring REWRITE — d19's detection applied, the d13
@@ -863,7 +849,7 @@ object Dedup {
         explode(expr("sequence(span_start, span_end)")).as("pos"))
     val toks = fanOut(docs(s, dir))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .persist() // n_toks projection + the kept reassembly share it
+      .transform(Caches.persist) // n_toks projection + the kept reassembly share it
     val tp = toks
       .select(col("doc_id"), posexplode(col("tk")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),

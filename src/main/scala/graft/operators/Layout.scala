@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 
 /** Data-layout operators: Z-order (Morton) clustering keys.
   *
@@ -87,14 +87,14 @@ object Layout {
       max(col("tb")).as("mt"), max(col("vb")).as("mv"),
       max(col("zkey")).as("mz"))
     // persisted: the four per-layout file aggregations share one
-    // scan+zkey pass (README persist-lifetime caveat applies)
+    // scan+zkey pass
     val rows = zorderKeys(s, dir).crossJoin(broadcast(mx))
       .select(col("tb"), col("vb"),
         expr(s"event_id * $PruneFiles div (me + 1L)").as("f_natural"),
         expr(s"tb * $PruneFiles div (mt + 1L)").as("f_time"),
         expr(s"vb * $PruneFiles div (mv + 1L)").as("f_value"),
         expr(s"zkey * $PruneFiles div (mz + 1L)").as("f_zorder"))
-      .persist()
+      .transform(Caches.persist)
     val inBox = col("tb").between(PruneTbLo, PruneTbHi) &&
       col("vb").between(PruneVbLo, PruneVbHi)
     val fileHit = col("tb_max") >= PruneTbLo && col("tb_min") <= PruneTbHi &&
@@ -152,7 +152,7 @@ object Layout {
         expr(s"tb * $PruneFiles div (mt + 1L)").as("f_time"),
         expr(s"vb * $PruneFiles div (mv + 1L)").as("f_value"),
         expr(s"zkey * $PruneFiles div (mz + 1L)").as("f_zorder"))
-      .persist() // four per-layout file aggregations share one pass
+      .transform(Caches.persist) // four per-layout file aggregations share one pass
     val probes = s.range(DepthProbes)
       .select((col("id") * DepthProbeStride + DepthProbeStride / 2).as("p"))
     def layer(name: String, f: String): DataFrame = {
@@ -274,14 +274,14 @@ object Layout {
     * map-side. */
   def bloomReport(s: SparkSession, dir: String): DataFrame = {
     val members = Tables.t(s, dir, "orders")
-      .select(col("o_custkey").as("x")).distinct().persist()
+      .select(col("o_custkey").as("x")).distinct().transform(Caches.persist)
     val lanes = members
       .select(explode(expr(
         s"transform(sequence(0, ${BloomK - 1}), " +
           s"i -> struct(i AS i, ${laneHashSpark("i", "x")} AS h))")).as("l"))
       .select(col("l.i").as("i"), col("l.h").as("h"))
       .distinct() // the set bits; ≤ k·M rows no matter the corpus
-      .persist()
+      .transform(Caches.persist)
     val probes = Tables.t(s, dir, "customer")
       .select(col("c_custkey").as("ck"))
       .crossJoin(broadcast(members.agg(max(col("x")).as("mx"))))

@@ -28,7 +28,7 @@ final class Memo[K, V] private (val name: String,
   }
 
   def refresh(s: SparkSession, dir: String, key: K): V = {
-    val v = build(s, dir, key)
+    val v = graft.engine.Caches.scoped(build(s, dir, key))
     held = Some((s, dir, key, v))
     v
   }
@@ -82,8 +82,10 @@ object Memo {
   *    ≤30 s stale window after an executor loss, in which the
   *    consumer's own action throws and the next access rebuilds.
   *
-  * Memo frames deliberately survive `spark.catalog.clearCache()`: their
-  * checkpoint blocks are CacheSpec's allowed residue, reclaimed by the
+  * Every build (`refresh`, and so every miss) runs inside its own
+  * [[graft.engine.Caches]] scope: what it persists is unpersisted as it
+  * returns, so a held frame must not read such a frame lazily. Its
+  * checkpoint blocks are the one residue, reclaimed by the
   * ContextCleaner once [[invalidate]] drops the last reference.
   *
   * A consumer-side build is timed under the frame's name into

@@ -251,7 +251,7 @@ object Multimodal {
       .withColumn("bucket_n", count(lit(1)).over(w))
       .filter(col("bucket_n") <= Dedup.SimhashBucketCap)
       .drop("bucket_n")
-      .persist()
+      .transform(graft.engine.Caches.persist)
     bands.as("a")
       .join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 import graft.operators.TextHash._
 
 /** The end-to-end pre-training data pipeline as ONE declarative DAG:
@@ -39,7 +39,8 @@ object Pipeline {
           < TextAnalysis.QualityMaxPunctE6 &&
         floor(col("n_types") / col("n_toks") * 1000000)
           > TextAnalysis.QualityMinTtrE6)
-      .persist() // winner election + attribute re-join share this pass
+      // winner election + attribute re-join share this pass
+      .transform(Caches.persist)
     val winners = kept
       .groupBy(md5(col("t")).as("m")).agg(min(col("doc_id")).as("doc_id"))
     winners
@@ -81,7 +82,7 @@ object Pipeline {
         (expr(rollingHashExpr("t", P)) % 100).as("h_mod"),
         (expr(rollingHashExpr("t", P2)) % 1000).as("h2"))
       .withColumn("split", splitOf(col("h_mod")))
-      .persist()
+      .transform(Caches.persist)
     val ex = base
       .select(col("doc_id"), col("split"), expr(shingleExpr("tkn")).as("shs"))
       .select(col("doc_id"), col("split"),
@@ -347,16 +348,7 @@ object Pipeline {
     * not x04's per-source global prefix sum.
     * EAGER ON CONSTRUCTION: first call per (session, dir) runs the
     * span build via Dedup.substringSpansMemo (localCheckpoint) — see
-    * Dedup.substringSpans.
-    *
-    * CACHE LIFETIME (library callers): each call persists a
-    * kept-doc-scale skinny counts frame (doc_id, source, n_bpe) that
-    * the returned plan reads twice; Spark has no plan-completion
-    * unpersist hook, so the cache lives until
-    * `spark.catalog.clearCache()` or session end. A long-lived
-    * session calls clearCache between operator invocations (the
-    * Verify/Bench hygiene) — repeated calls WITHOUT it accumulate one
-    * such frame per call. Applies equally to [[finalAssemblyTrained]]. */
+    * Dedup.substringSpans. */
   def finalAssembly(s: SparkSession, dir: String): DataFrame =
     assembleUnder(s, dir,
       TextAnalysis.classifierScore(s, dir)
@@ -406,9 +398,8 @@ object Pipeline {
       // operator's most expensive chain (classifier keep join, span
       // anti-join, nsym join, per-doc aggregate) executes twice.
       // Kept-doc-scale skinny rows (doc_id, source, n_bpe) — inside
-      // the CacheSpec per-query budget; cleared by the inter-query
-      // clearCache hygiene.
-      .persist()
+      // the CacheSpec per-query budget.
+      .transform(Caches.persist)
     val tot = counts.agg(sum(col("n_bpe")).as("total_toks"))
     val w = Window.partitionBy("shard").orderBy("key", "doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

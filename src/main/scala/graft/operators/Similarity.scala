@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 import graft.functions.FloatVecDot
 
 /** Similarity search over the `embeddings` table (64-dim float
@@ -90,7 +90,7 @@ object Similarity {
         s"$maxVectors vectors (corpus has $n); use " +
         "embeddingNearDupsBucketed / annLshTopK / annIvfTopK at scale")
     // persisted: both pair sides share one norm-computation pass
-    val e = withNorm(corpus).persist()
+    val e = withNorm(corpus).transform(Caches.persist)
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"),
         (expr(dotExpr("a.embedding", "b.embedding")) /
@@ -167,11 +167,8 @@ object Similarity {
     * refreshes it; [[DupCluster]]'s d09 fixpoint consumes it. */
   private[operators] val embeddingNearDupsBucketedMemo =
     Memo("neardup_bucketed") { (s, dir) =>
-      val (scored, handles) = bucketedScoredPairsTracked(s, dir)
-      val g = thresholdedPairs(scored)
+      thresholdedPairs(bucketedScoredPairs(s, dir))
         .localCheckpoint() // eager: the thresholded pair list is tiny
-      handles.foreach(_.unpersist(true))
-      g
     }
 
   private def thresholdedPairs(scored: DataFrame): DataFrame =
@@ -193,22 +190,12 @@ object Similarity {
     * candidate pairs (ida < idb, un-thresholded). ONE definition of
     * the band-width rule + dense-bucket cap + rerank, so the two
     * consumers cannot drift. */
-  private def bucketedScoredPairs(s: SparkSession, dir: String): DataFrame =
-    bucketedScoredPairsTracked(s, dir)._1
-
-  /** [[bucketedScoredPairs]] plus handles to the frames it persisted
-    * (norm/signature table, band table), so a caller that MATERIALIZES
-    * the result — [[knnGraph]]'s localCheckpoint — can drop the
-    * intermediate caches immediately instead of leaving them to the
-    * session-level clearCache (the ADVICE-flagged accumulation). */
-  private def bucketedScoredPairsTracked(
-      s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
+  private def bucketedScoredPairs(s: SparkSession, dir: String): DataFrame = {
     val corpus = emb(s, dir)
     val nbits = lshBandBits(corpus.count()) // parquet metadata count
     // persisted: band explosion + both rerank sides share one
-    // norm+signature pass (lifetime: until clearCache/session end —
-    // see the caveat in Dedup.jaccardPairs)
-    val e = withNorm(corpus).persist()
+    // norm+signature pass
+    val e = withNorm(corpus).transform(Caches.persist)
     val bands = e.select(col("vec_id"),
         posexplode(expr(s"lsh_bands(embedding, $nbits)")))
       .toDF("vec_id", "band_idx", "band_key")
@@ -217,8 +204,8 @@ object Similarity {
       .filter(col("bucket_n") <= LshBucketCap)
       .drop("bucket_n")
       // persisted: the self-join would otherwise pay the bucket-count
-      // window shuffle twice (same idiom + lifetime as d04's bands)
-      .persist()
+      // window shuffle twice (same idiom as d04's bands)
+      .transform(Caches.persist)
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -226,13 +213,12 @@ object Similarity {
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"))
       .distinct()
-    val scored = cand
+    cand
       .join(e.as("sa"), col("ida") === col("sa.vec_id"))
       .join(e.as("sb"), col("idb") === col("sb.vec_id"))
       .select(col("ida"), col("idb"),
         (expr(dotExpr("sa.embedding", "sb.embedding")) /
           (col("sa.nrm") * col("sb.nrm"))).as("cs"))
-    (scored, Seq(e, bands))
   }
 
   /** s09: k-NN graph construction — every corpus vector's top-k
@@ -262,28 +248,18 @@ object Similarity {
     * storage. Round-8 telemetry: the seven graph-family queries each
     * rebuilt the same ~90 MB of band/score intermediates — 26.4 s of
     * the 184.7 s sf0.1 bench — for an identical n·k result. The result
-    * is localCheckpoint-materialized (n·k rows — tiny), which also
-    * lets the build drop its intermediate signature/band/scored
-    * caches eagerly instead of leaking them to session clearCache. */
+    * is localCheckpoint-materialized (n·k rows — tiny), so the
+    * build's scope frees its signature/band/scored caches as it
+    * returns. */
   def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame =
     knnGraphMemo.refresh(s, dir, k)
 
   private[operators] val knnGraphMemo =
     Memo.keyed[Int, DataFrame]("knn_graph") { (s, dir, k) =>
-      // persisted only for the duration of the build: the symmetrizing
-      // union reads the scored pairs twice; once the ranked graph is
-      // checkpoint-materialized the scored/signature/band frames are
-      // dead weight and are unpersisted before returning
-      val (scored0, handles) = bucketedScoredPairsTracked(s, dir)
-      val scored = scored0.persist()
-      val g = rankedGraph(scored, k)
+      // persisted for the build: the symmetrizing union reads the
+      // scored pairs twice
+      rankedGraph(bucketedScoredPairs(s, dir).transform(Caches.persist), k)
         .localCheckpoint() // eager: materializes the n·k graph NOW
-      // blocking: the spec that pins "the build leaves only the n·k
-      // checkpoint resident" must not race an async block drop, and the
-      // frames being freed were just materialized (cheap to remove)
-      scored.unpersist(true)
-      handles.foreach(_.unpersist(true))
-      g
     }
 
   private def rankedGraph(scored: DataFrame, k: Int): DataFrame = {
@@ -443,7 +419,7 @@ object Similarity {
     val m = mutualKnn(s, dir).select(col("ida"), col("idb"))
     val edges = m.select(col("ida").as("src"), col("idb").as("dst"))
       .union(m.select(col("idb").as("src"), col("ida").as("dst")))
-      .persist() // one materialization feeds all LpaIters rounds
+      .transform(Caches.persist) // one materialization feeds all LpaIters rounds
     // symmetric list ⇒ distinct src IS the edge-bearing vertex set
     var labels = edges.select(col("src").as("vec_id")).distinct()
       .withColumn("lab", col("vec_id"))
@@ -469,7 +445,7 @@ object Similarity {
     * through one narrow stage; ranking shuffles only (q, k) rows. */
   def annTopK(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     // persisted: query side and corpus side share one norm pass
-    val e = withNorm(emb(s, dir)).persist()
+    val e = withNorm(emb(s, dir)).transform(Caches.persist)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"))
@@ -498,7 +474,7 @@ object Similarity {
       nprobe: Int = 4): DataFrame = {
     val e = withNorm(emb(s, dir))
       .withColumn("bucket", expr("ivf_assign(embedding, 1)[0]"))
-      .persist() // corpus + query branches share one assignment pass
+      .transform(Caches.persist) // corpus + query branches share one assignment pass
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"),
@@ -594,17 +570,18 @@ object Similarity {
     * shape minus its driver-side collect per round.) Centroid state
     * lives in the plan (K·dims rows), never on the driver. */
   /** The Lloyd loop state shared by s26 (centroid output) and s27
-    * (assignment-quality output): returns the final per-(bucket, dim)
-    * stats, the final-round assignment (vec_id, bucket, d2), and the
-    * persisted component frame (so a materializing caller can drop
-    * the cache — the bucketedScoredPairsTracked convention). */
-  private def lloydStateTracked(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+    * (assignment-quality output): the final per-(bucket, dim) stats
+    * and the final-round assignment (vec_id, bucket, d2). Lazy (un-
+    * checkpointed): the gated entries ride [[lloydStateMemo]], whose
+    * eager localCheckpoint hides the loop's shape behind an RDD scan;
+    * PlanSpec pins the no-window map-side-argmin assignment here. */
+  private[graft] def lloydStateLazy(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val x = graft.operators.TextHash.fanOut(emb(s, dir))
       .select(col("vec_id"), expr(
         "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))")
         .as("x"))
-      .persist() // both assignment rounds scan the e6 components
+      .transform(Caches.persist) // both assignment rounds scan the e6 components
     // data-derived K (see the KmeansK scaladoc): a 1-row scalar —
     // x30's idiom — so K never touches the driver; first-K init
     // (vec_id < K, ids dense 0-based by fixture convention) keeps the
@@ -648,17 +625,7 @@ object Similarity {
           coalesce(floor(col("sm") / col("n")).cast("long"), col("prev"))
             .as("mean_e6"))
     }
-    (stats, lastAssigned.select(col("vec_id"), col("bucket"), col("d2")), x)
-  }
-
-  /** Lazy (un-checkpointed) Lloyd state for plan inspection — the
-    * gated entries ride [[lloydStateMemo]], whose eager
-    * localCheckpoint hides the loop's shape behind an RDD scan;
-    * PlanSpec pins the no-window map-side-argmin assignment here. */
-  private[graft] def lloydStateLazy(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (stats, asg, _) = lloydStateTracked(s, dir)
-    (stats, asg)
+    (stats, lastAssigned.select(col("vec_id"), col("bucket"), col("d2")))
   }
 
   /** Build-once Lloyd state — the 2-round EM loop that s26, s27 AND
@@ -671,10 +638,8 @@ object Similarity {
     * the honest rebuild through `refresh`; the derived consumers
     * (s27's quality report, d21's semantic dedup) read the memo. */
   private[operators] val lloydStateMemo = Memo("lloyd_state") { (s, dir) =>
-    val (stats, asg, xs) = lloydStateTracked(s, dir)
-    val g = (stats.localCheckpoint(), asg.localCheckpoint())
-    xs.unpersist() // both checkpoints are materialized; cache done
-    g
+    val (stats, asg) = lloydStateLazy(s, dir)
+    (stats.localCheckpoint(), asg.localCheckpoint())
   }
 
   def kmeansLloyd(s: SparkSession, dir: String): DataFrame = {
@@ -859,7 +824,8 @@ object Similarity {
     val (_, assigned) = lloydStateMemo(s, dir)
     val e = withNorm(emb(s, dir))
       .join(assigned.select(col("vec_id"), col("bucket")), "vec_id")
-      .persist() // both pair sides + sizes share one norm+assignment pass
+      // both pair sides + sizes share one norm+assignment pass
+      .transform(Caches.persist)
     // bounded pair space: ceil(bn / ChunkTarget) hash-assigned chunks
     // per cluster — the sizes side is K rows (AQE broadcasts it), the
     // chunk key is an LCG on vec_id (engine-portable: same integer
@@ -913,7 +879,7 @@ object Similarity {
         posexplode(expr(
           "transform(sequence(0, 3), b -> shiftright(sig, b * 4) & 15)")))
       .toDF("vec_id", "embedding", "nrm", "band_idx", "band_key")
-      .persist() // query + corpus branches share one signature pass
+      .transform(Caches.persist) // query + corpus branches share one signature pass
     val q = bands.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("band_idx"), col("band_key"))
@@ -951,7 +917,8 @@ object Similarity {
   def annRecall(s: SparkSession, dir: String, k: Int = RecallK): DataFrame = {
     require(1000000 % k == 0, s"recall_e6 exactness needs k | 1e6, got $k")
     val exact = annTopK(s, dir, k).select(col("query_id"), col("neighbor_id"))
-      .persist() // ground truth feeds both overlap joins + the query list
+      // ground truth feeds both overlap joins + the query list
+      .transform(Caches.persist)
     def hitsOf(approx: DataFrame, out: String): DataFrame =
       exact.join(approx.select(col("query_id"), col("neighbor_id")),
           Seq("query_id", "neighbor_id"))
@@ -1027,7 +994,8 @@ object Similarity {
     val e = graft.operators.TextHash.fanOut(emb(s, dir))
       .select(col("vec_id"), col("embedding"),
         expr("ivf_assign(embedding, 1)[0]").as("bucket"))
-      .persist() // assignment feeds the centroid build AND the encode
+      // assignment feeds the centroid build AND the encode
+      .transform(Caches.persist)
     val cent = e.select(col("bucket"), posexplode(col("embedding")))
       .toDF("bucket", "dim", "v")
       .groupBy("bucket", "dim")
@@ -1137,14 +1105,15 @@ object Similarity {
       .select(col("vec_id"),
         expr("ivf_assign(embedding, 1)[0]").as("bucket"),
         expr("pq_encode(embedding)").as("pq"))
-      .persist() // encoded once; every operating point probes this frame
+      // encoded once; every operating point probes this frame
+      .transform(Caches.persist)
     val qProbes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         posexplode(expr(s"ivf_assign(embedding, ${nprobes.max})")))
       .toDF("query_id", "qv", "probe_rank", "bucket") // probe_rank 0-based
     val exact = annTopK(s, dir, k)
       .select(col("query_id"), col("neighbor_id"))
-      .persist() // feeds every operating point's overlap join
+      .transform(Caches.persist) // feeds every operating point's overlap join
     val qs = exact.select("query_id").distinct()
     nprobes.map { np =>
       val q = qProbes.filter(col("probe_rank") < np)
@@ -1260,7 +1229,7 @@ object Similarity {
           .as("s_e6"))
       .select(col("label"), col("dim"), col("n"),
         floor(col("s_e6") / col("n")).cast("long").as("m_e6"))
-      .persist() // feeds norms + both dot sides (clearCache lifetime)
+      .transform(Caches.persist) // feeds norms + both dot sides
     val norms = cent.groupBy("label")
       .agg(max(col("n")).as("n_vecs"),
         sum(col("m_e6") * col("m_e6")).as("n2"))
@@ -1293,7 +1262,8 @@ object Similarity {
     * Reference capability: README.md:648–659 (join family) composed
     * with top-k windows (SURVEY §2.5). */
   def filteredAnnTopK(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val e = withNorm(emb(s, dir)).persist() // one norm pass, two roles
+    // one norm pass, two roles
+    val e = withNorm(emb(s, dir)).transform(Caches.persist)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("label"),
         col("embedding").as("qv"), col("nrm").as("qnrm"))
@@ -1386,7 +1356,7 @@ object Similarity {
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id")
     val exact = annTopK(s, dir, k).select("query_id", "neighbor_id")
-      .persist() // ground truth: overlap join + the query roster
+      .transform(Caches.persist) // ground truth: overlap join + the query roster
     val hits = exact.join(topk, Seq("query_id", "neighbor_id"))
       .groupBy("query_id").agg(count(lit(1)).as("sq8_hits"))
     exact.select("query_id").distinct()
@@ -1437,7 +1407,7 @@ object Similarity {
     require(1000000 % k == 0, s"recall_e6 exactness needs k | 1e6, got $k")
     val e = emb(s, dir)
     val exact = annTopK(s, dir, k).select("query_id", "neighbor_id")
-      .persist() // shared ground truth: overlap join + query roster
+      .transform(Caches.persist) // shared ground truth: overlap join + query roster
     val qs = exact.select("query_id").distinct()
     dims.map { m =>
       val sliced = graft.operators.TextHash.fanOut(e)
@@ -1536,10 +1506,9 @@ object Similarity {
     * every iteration. */
   def pageRank(s: SparkSession, dir: String): DataFrame = {
     // the memoized graph is checkpoint-materialized, so the per-
-    // iteration reads replay no lineage and nothing extra is persisted
-    // (the round-8 persists here leaked to session clearCache — the
-    // ADVICE-flagged accumulation); outDeg is a tiny groupBy over the
-    // checkpointed n·k rows, cheap to recompute per iteration
+    // iteration reads replay no lineage and nothing extra is
+    // persisted; outDeg is a tiny groupBy over the checkpointed n·k
+    // rows, cheap to recompute per iteration
     val g = knnGraphMemo(s, dir, 3)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     val outDeg = g.groupBy("src").agg(count(lit(1)).as("out_deg"))
@@ -1596,7 +1565,8 @@ object Similarity {
     * bounded frame — the Lloyd/LPA fixed-unroll discipline, no
     * driver-side selection state. */
   def mmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val e = withNorm(emb(s, dir)).persist() // query + corpus share norms
+    // query + corpus share norms
+    val e = withNorm(emb(s, dir)).transform(Caches.persist)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"))
@@ -1611,7 +1581,7 @@ object Similarity {
       .filter(col("rk") <= MmrShortlist)
       .select("query_id", "neighbor_id", "nv", "nnrm", "rel")
       .withColumn("maxsim", lit(MmrEmptySim))
-      .persist() // the MmrK greedy rounds re-scan this bounded frame
+      .transform(Caches.persist) // the MmrK greedy rounds re-scan this bounded frame
     var selected: DataFrame = null
     for (pick <- 1 to MmrK) {
       val wPick = Window.partitionBy(col("query_id"))
@@ -1703,7 +1673,8 @@ object Similarity {
     val cent = moments
       .select(col("source"), col("dim"), col("n"), col("ss"), col("s_e6"),
         floor(col("s_e6") / col("n")).cast("long").as("m_e6"))
-      .persist() // |sources|·dims rows; feeds norms, cos, pairs, disp
+      // |sources|·dims rows; feeds norms, cos, pairs, disp
+      .transform(Caches.persist)
     val corpus = cent.groupBy("dim")
       .agg(floor(sum("s_e6") / sum("n")).cast("long").as("g_e6"))
     val srcNorm = cent.groupBy("source")

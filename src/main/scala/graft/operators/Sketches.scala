@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 import graft.operators.TextHash._
 
 /** Approximate-analytics sketches with *deterministic, engine-portable*
@@ -31,7 +31,7 @@ object Sketches {
     * driver gate pins both the sketch AND its ground truth. */
   def kmvDistinctShingles(s: SparkSession, dir: String): DataFrame = {
     val hv = shingleHashesMemo(s, dir)
-      .select(explode(col("hv")).as("h")).distinct().persist()
+      .select(explode(col("hv")).as("h")).distinct().transform(Caches.persist)
     val topk = hv.orderBy("h").limit(KmvK)
       .agg(max(col("h")).as("kth_hash"), count(lit(1)).as("k_actual"))
     val exact = hv.agg(count(lit(1)).as("exact_distinct"))
@@ -145,7 +145,8 @@ object Sketches {
     val toks = fanOut(Tables.t(s, dir, "documents"))
       .select(explode(tokens(col("text"))).as("term"))
       .select(col("term"), expr(rollingHashExpr("term", P)).as("h"))
-      .persist() // exact counts + sketch fill share one tokenize pass
+      // exact counts + sketch fill share one tokenize pass
+      .transform(Caches.persist)
     // exact counts (the ground truth the sketch is gated against).
     // orderBy + limit compiles to TakeOrdered (per-partition top-10,
     // driver merge) — never a single-partition sort of the whole

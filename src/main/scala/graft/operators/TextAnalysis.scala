@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 import graft.operators.TextHash._
 
 /** Text-analysis operators over `documents`: language ID, quality
@@ -236,12 +236,12 @@ object TextAnalysis {
     * sketch branch instead of paying it per diagnostic. */
   def noveltyFrom(sh: DataFrame): DataFrame = {
     // persisted: feeds the corpus-wide df count and the per-doc join
-    // back (lifetime: clearCache — see TextHash's cache note)
+    // back
     val ex = sh
       .filter(col("n_sh") > 0)
       .select(col("doc_id"), explode(col("hv")).as("h"))
       .distinct()
-      .persist()
+      .transform(Caches.persist)
     val dfreq = ex.groupBy("h").agg(count(lit(1)).as("df"))
     ex.join(dfreq, "h")
       .groupBy("doc_id")
@@ -284,7 +284,7 @@ object TextAnalysis {
       .select(col("doc_id"), posexplode(tokens(col("text"))))
       .toDF("doc_id", "pos", "term")
       .crossJoin(broadcast(top))
-      .persist()
+      .transform(Caches.persist)
     val pa = pos.filter(col("term") === col("w1"))
       .select(col("doc_id"), col("pos"), col("w1"), col("w2"))
     val pb = pos.filter(col("term") === col("w2"))
@@ -317,7 +317,7 @@ object TextAnalysis {
       .select(explode(expr(bigramsExpr("tk"))).as("b"))
       .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .agg(count(lit(1)).as("c12"))
-      .persist() // vocab²-bound; feeds the marginals AND the output
+      .transform(Caches.persist) // vocab²-bound; feeds the marginals AND the output
     val first = pair.groupBy("w1").agg(sum("c12").as("c1x"))
     val second = pair.groupBy("w2").agg(sum("c12").as("cx2"))
     val tot = pair.agg(sum("c12").as("tt"))
@@ -394,7 +394,7 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
         expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
-      .persist() // feeds the corpus stats AND the per-doc tf counts
+      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
     val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf = base.filter(size(col("qtk")) > 0)
       .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
@@ -448,12 +448,12 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
         expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
-      .persist() // feeds the corpus stats AND the per-doc tf counts
+      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
     val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf = base.filter(size(col("qtk")) > 0)
       .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .persist() // matches-bound, skinny; feeds df, scores, truth
+      .transform(Caches.persist) // matches-bound, skinny; feeds df, scores, truth
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val psc = tf.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(stats))
@@ -536,7 +536,7 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
         expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
-      .persist() // feeds the corpus stats AND the per-doc tf counts
+      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
     val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf = base.filter(size(col("qtk")) > 0)
       .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
@@ -757,7 +757,8 @@ object TextAnalysis {
 
   def indexPruning(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val postings = indexPruningPostings(s, dir)
-      .persist() // the full and pruned rankings share one postings pass
+      // the full and pruned rankings share one postings pass
+      .transform(Caches.persist)
     val pruned = prunedPostings(postings)
     def topK(c: DataFrame): DataFrame = c.groupBy("doc_id")
       .agg(sum("contrib_e6").as("score_e6"))
@@ -789,7 +790,8 @@ object TextAnalysis {
     val toks = docs(s, dir)
       .select(col("doc_id"),
         explode(array_distinct(tokens(col("text")))).as("term"))
-      .persist() // feeds both the df count and the postings-head rank
+      // feeds both the df count and the postings-head rank
+      .transform(Caches.persist)
     val dfreq = toks.groupBy("term").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("term").orderBy("doc_id")
@@ -843,11 +845,11 @@ object TextAnalysis {
       .map(t => s"'$t'").mkString("(", ", ", ")")
     val toks = docs(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .persist() // feeds hit extraction + the final snippet slice
+      .transform(Caches.persist) // feeds hit extraction + the final snippet slice
     val hits = toks.select(col("doc_id"), posexplode(col("tk")))
       .toDF("doc_id", "pos", "term")
       .filter(expr(s"term IN $termsIn"))
-      .persist() // both window-join sides (clearCache lifetime)
+      .transform(Caches.persist) // both window-join sides
     val windows = hits.as("a")
       .join(hits.as("b"),
         col("a.doc_id") === col("b.doc_id") &&
@@ -883,7 +885,7 @@ object TextAnalysis {
       .select(col("doc_id"), posexplode(tokens(col("text"))))
       .toDF("doc_id", "pos", "term")
       .crossJoin(broadcast(top))
-      .persist()
+      .transform(Caches.persist)
     val pa = pos.filter(col("term") === col("w1"))
       .select(col("doc_id"), col("pos").as("pa"), col("w1"), col("w2"))
     val pb = pos.filter(col("term") === col("w2"))
@@ -914,10 +916,10 @@ object TextAnalysis {
     * on doc_id, carrying a 1-bit flag, not term text. */
   def vocabCoverage(s: SparkSession, dir: String): DataFrame = {
     // persisted: the count pass and the coverage pass share one
-    // tokenize+explode (README persist-lifetime caveat)
+    // tokenize+explode
     val toks = docs(s, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .persist()
+      .transform(Caches.persist)
     val vocab = toks.groupBy("term").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("term"))
       .limit(VocabSize)
@@ -991,7 +993,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         explode(array_distinct(split(lower(col("text")), "\\s+"))).as("term"))
       .filter(length(col("term")) > 0)
-      .persist() // postings reused by df, query slice, and join
+      .transform(Caches.persist) // postings reused by df, query slice, and join
     val n = dt.agg(countDistinct(col("doc_id")).as("n_docs"))
     val df = dt.groupBy("term").agg(count(lit(1)).as("df"))
     val qdocs = dt.filter(col("term").isin(Similarity.HybridQueryTerms: _*))
@@ -1126,7 +1128,7 @@ object TextAnalysis {
     * proven by the interval-intersection identity above. */
   def zipfOctaves(s: SparkSession, dir: String): DataFrame = {
     val fg = zipfFreqGroups(s, dir)
-      .persist() // feeds the in-bucket scan AND the bucket totals
+      .transform(Caches.persist) // feeds the in-bucket scan AND the bucket totals
     // exclusive running term-count above each freq, inside its bucket
     val wIn = Window.partitionBy("pid").orderBy(col("freq").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1254,7 +1256,8 @@ object TextAnalysis {
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("score_e3").desc, col("neighbor_id"))
     val sel = moreLikeThisSelection(s, dir)
-      .persist() // feeds the term-roster broadcast AND the scoring join
+      // feeds the term-roster broadcast AND the scoring join
+      .transform(Caches.persist)
     // candidate postings restricted to the PRUNED term roster
     // (≤ |probes|·8 terms — the broadcast is now query-budget-bounded,
     // not corpus-proportional), then per-(doc, term) tf
@@ -1341,7 +1344,8 @@ object TextAnalysis {
         expr(graft.operators.TextHash.rollingHashExpr(
           "t", graft.operators.TextHash.P)) % 100)
       .withColumn("split", graft.operators.TextHash.splitOf(col("h_mod")))
-      .persist() // train-vocab build + eval-token probe share the pass
+      // train-vocab build + eval-token probe share the pass
+      .transform(Caches.persist)
     val trainVocab = d.filter(col("split") === "train")
       .select(explode(col("tk")).as("term"))
       .filter(length(col("term")) > 0)
@@ -1537,7 +1541,7 @@ object TextAnalysis {
       .join(d.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), explode(col("hv")).as("h"))
       .distinct()
-      .persist() // sizes + both intersection sides share one pass
+      .transform(Caches.persist) // sizes + both intersection sides share one pass
     val sizes = sp.groupBy("source").agg(count(lit(1)).as("n"))
     sp.as("a")
       .join(sp.as("b"),
@@ -1588,7 +1592,7 @@ object TextAnalysis {
       .select(col("source"),
         posexplode(expr(minhashExpr("hv", Dedup.MinhashK))).as(Seq("i", "v")))
       .groupBy("source", "i").agg(min("v").as("v"))
-      .persist() // both sides of the pair join share one reduce
+      .transform(Caches.persist) // both sides of the pair join share one reduce
     merged.as("a")
       .join(merged.as("b"),
         col("a.i") === col("b.i") && col("a.source") < col("b.source"))
@@ -1632,7 +1636,7 @@ object TextAnalysis {
     val perSrcAll = docs(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("term"))
       .groupBy("source", "term").agg(count(lit(1)).as("scnt"))
-      .persist() // corpus counts, totals, and the top-V cut share it
+      .transform(Caches.persist) // corpus counts, totals, and the top-V cut share it
     val corpus = perSrcAll.groupBy("term").agg(sum("scnt").as("cnt"))
     val tot = corpus.agg(sum("cnt").as("tot"))
     val topV = corpus.orderBy(col("cnt").desc, col("term")).limit(DriftTopV)
@@ -1697,7 +1701,7 @@ object TextAnalysis {
     val qbase = base
       .select(col("doc_id"), col("dl"),
         expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
-      .persist() // round-1 stats + tf share it (i03's persist)
+      .transform(Caches.persist) // round-1 stats + tf share it (i03's persist)
     val stats = qbase.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf1 = qbase.filter(size(col("qtk")) > 0)
       .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
@@ -1737,7 +1741,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("dl"), explode(col("tk")).as("term"))
       .join(broadcast(rtf.select("term")), "term")
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .persist()
+      .transform(Caches.persist)
     val dfCand = candTf.groupBy("term").agg(count(lit(1)).as("df"))
     val expTerms = rtf.join(dfCand, "term").crossJoin(broadcast(stats))
       .select(col("term"), col("df"),
@@ -2012,7 +2016,8 @@ object TextAnalysis {
     // carries UnknownPartitioning (a checkpoint scan forgets its
     // layout — the round-15 fingerprint finding), so every round's
     // margin groupBy(doc_id, y) re-shuffled the stream. Repartition by
-    // doc_id and cache for the loop's lifetime: HashPartitioning
+    // doc_id and cache it for the training loop (its own cache scope
+    // frees it before the caller scores anything): HashPartitioning
     // (doc_id) satisfies the margin aggregate's (doc_id, y) clustering
     // (and the broadcast weight join preserves it), so all
     // [[PerceptronRounds]] margin passes run exchange-free over the
@@ -2030,37 +2035,38 @@ object TextAnalysis {
     // count).
     val ftRows = ft.count()
     val ftParts = math.max(1L, (ftRows + 1999999L) / 2000000L).toInt
-    val ftp = ft.select("doc_id", "y", "bucket", "tf")
-      .repartition(ftParts, col("doc_id")).persist()
-    for (_ <- 1 to PerceptronRounds) {
-      // the per-class hard-example cut as ONE rank-window subtree
-      // (row_number ≤ K over partitionBy(y) — identical rows to the
-      // old two orderBy.limit(K) cuts: same total order (ym, doc_id),
-      // disjoint classes, doc_id unique so no ties). The rank filter
-      // gets the Partial WindowGroupLimit below its exchange (the
-      // PlanSpec-pinned map-side top-k), so no task ever holds more
-      // than K misclassified rows per class — and the round needs no
-      // union, no intermediate persist, one driver roundtrip.
-      val wCut = Window.partitionBy(col("y"))
-        .orderBy(col("ym").asc, col("doc_id").asc)
-      val selIds = ftp.join(broadcast(wDf), "bucket")
-        .groupBy("doc_id", "y")
-        .agg(sum(col("tf") * col("w")).as("m"))
-        .withColumn("ym", col("y") * col("m"))
-        .filter(col("ym") <= 0L) // misclassified only
-        .withColumn("rk", row_number().over(wCut))
-        .filter(col("rk") <= ClsHardK)
-        .select("doc_id")
-        .collect().map(_.getLong(0)).toSeq // ≤2·ClsHardK ids, one job
-      // empty cut (every doc classified correctly) ⇒ the delta is
-      // empty by construction — skip the pass instead of running it
-      if (selIds.nonEmpty)
-        ftp.filter(col("doc_id").isin(selIds: _*))
-          .groupBy("bucket").agg(sum(col("y") * col("tf")).as("dw"))
-          .collect() // ≤ClsBuckets+1 rows, one job
-          .foreach(r => w(r.getLong(0).toInt) += r.getLong(1))
+    Caches.scoped {
+      val ftp = ft.select("doc_id", "y", "bucket", "tf")
+        .repartition(ftParts, col("doc_id")).transform(Caches.persist)
+      for (_ <- 1 to PerceptronRounds) {
+        // the per-class hard-example cut as ONE rank-window subtree
+        // (row_number ≤ K over partitionBy(y) — identical rows to the
+        // old two orderBy.limit(K) cuts: same total order (ym, doc_id),
+        // disjoint classes, doc_id unique so no ties). The rank filter
+        // gets the Partial WindowGroupLimit below its exchange (the
+        // PlanSpec-pinned map-side top-k), so no task ever holds more
+        // than K misclassified rows per class — and the round needs no
+        // union, no intermediate persist, one driver roundtrip.
+        val wCut = Window.partitionBy(col("y"))
+          .orderBy(col("ym").asc, col("doc_id").asc)
+        val selIds = ftp.join(broadcast(wDf), "bucket")
+          .groupBy("doc_id", "y")
+          .agg(sum(col("tf") * col("w")).as("m"))
+          .withColumn("ym", col("y") * col("m"))
+          .filter(col("ym") <= 0L) // misclassified only
+          .withColumn("rk", row_number().over(wCut))
+          .filter(col("rk") <= ClsHardK)
+          .select("doc_id")
+          .collect().map(_.getLong(0)).toSeq // ≤2·ClsHardK ids, one job
+        // empty cut (every doc classified correctly) ⇒ the delta is
+        // empty by construction — skip the pass instead of running it
+        if (selIds.nonEmpty)
+          ftp.filter(col("doc_id").isin(selIds: _*))
+            .groupBy("bucket").agg(sum(col("y") * col("tf")).as("dw"))
+            .collect() // ≤ClsBuckets+1 rows, one job
+            .foreach(r => w(r.getLong(0).toInt) += r.getLong(1))
+      }
     }
-    ftp.unpersist()
     wDf
   }
 
@@ -2127,10 +2133,11 @@ object TextAnalysis {
     *
     * Scale shape: t36's — the labeled feature stream persists once
     * and serves both the training rounds (train fold) and the
-    * final scoring pass (all docs), then unpersists (the ~40-row
-    * card is checkpoint-materialized); every weight join is the
-    * ≤[[ClsBuckets]]+1-row broadcast class; the confusion rollup is a
-    * partial-agg'd groupBy on the ~20-row (source, holdout) key.
+    * final scoring pass (all docs), and the build's cache scope
+    * frees it (the ~40-row card is checkpoint-materialized); every
+    * weight join is the ≤[[ClsBuckets]]+1-row broadcast class; the
+    * confusion rollup is a partial-agg'd groupBy on the ~20-row
+    * (source, holdout) key.
     * Memoized per (session, dir) — [[clsEvalMemo]], EAGER ON
     * CONSTRUCTION: the split model trains once per corpus, like the
     * offline acceptance run it models. */

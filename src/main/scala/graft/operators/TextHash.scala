@@ -18,14 +18,6 @@ import org.apache.spark.sql.functions._
   * embarrassingly; the only shuffles downstream are the groupBy/join
   * on the hashed keys, which are longs — far cheaper to shuffle than
   * raw document text at 100 TB.
-  *
-  * Cache lifecycle: several operators `persist()` a signature frame
-  * that feeds multiple plan branches of ONE returned query. Because
-  * the result is lazy, the operator cannot unpersist before the
-  * caller materializes it — cache ownership is the CALLER's:
-  * `spark.catalog.clearCache()` between independent queries (exactly
-  * what Verify and Bench do per query). A long-lived session running
-  * many operators without it will accumulate cached corpora.
   */
 object TextHash {
 

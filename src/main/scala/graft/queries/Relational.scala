@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.engine.Tables
+import graft.engine.{Caches, Tables}
 
 /** Execution surface of SURVEY.md §2, re-expressed Spark-first.
   *
@@ -846,7 +846,7 @@ object Relational {
         row_number() OVER
           (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
       FROM orders""")
-      .persist().createOrReplaceTempView("q51_edges")
+      .transform(Caches.persist).createOrReplaceTempView("q51_edges")
     s.sql("""
       WITH RECURSIVE
       chain AS (

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{Bench, SparkEntry}
-import graft.engine.Sessions
+import graft.engine.{Caches, Sessions}
 
 /** Dev-only view into the gated queries; Bench and Verify never run it.
   *
@@ -24,6 +24,9 @@ import graft.engine.Sessions
   *  - `profile <sfDir> <cpus> <query…>`: runs each query through the
   *    bench's `noop` sink cold, then twice warm, and prints the jobs,
   *    stages, tasks and driver gaps between jobs of each run.
+  *
+  * Each query is built, and in `profile` each run runs, in its own
+  * [[Caches]] scope, as in Bench.
   *
   * Usage: runMain graft.tools.Inspect <subcommand> <args…>
   */
@@ -67,8 +70,8 @@ object Inspect {
   private def plan(spark: SparkSession, dir: String, names: Seq[String]): Int = {
     names.foreach { n =>
       println(s"########## $n ##########")
-      println(SparkEntry.queries(n)(spark, dir)
-        .queryExecution.explainString(FormattedMode))
+      println(Caches.scoped(SparkEntry.queries(n)(spark, dir)
+        .queryExecution.explainString(FormattedMode)))
     }
     0
   }
@@ -111,7 +114,7 @@ object Inspect {
         }
     }
 
-    def runOnce(tag: String, name: String): Unit = {
+    def runOnce(tag: String, name: String): Unit = Caches.scoped {
       jobs.clear(); stageTasks.clear()
       val t0 = System.nanoTime()
       spark.sparkContext.addSparkListener(listener)
@@ -143,10 +146,7 @@ object Inspect {
     }
 
     names.foreach { name =>
-      Seq("cold", "warm1", "warm2").foreach { tag =>
-        runOnce(tag, name)
-        spark.catalog.clearCache()
-      }
+      Seq("cold", "warm1", "warm2").foreach(runOnce(_, name))
     }
     0
   }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Sessions, Tables}
+import graft.engine.{Caches, Sessions, Tables}
 import graft.operators.{Dedup, DupCluster, TextHash}
 
 /** Dev tool: scale telemetry for the dedup/cluster family — the
@@ -38,6 +38,11 @@ object ScaleStress {
     /** Σ C(n,2) over a frame of bucket sizes `n`. */
     def pairSum(buckets: DataFrame): Long =
       buckets.agg(sum(expr("n * (n - 1) / 2")).cast("long")).head.getLong(0)
+
+    /** Row count of an operator's frame, built and counted in its own
+      * cache scope: each telemetry stage frees what it cached before
+      * the next one runs. */
+    def rows(df: => DataFrame): Long = Caches.scoped(df.count())
 
     // d02: distinct postings per shingle hash, stop-shingles (df > cap)
     // removed — mirrors Dedup.jaccardPairs(maxShingleDf = Some(64))
@@ -92,101 +97,104 @@ object ScaleStress {
     // d13: boilerplate blocks (cross-doc df >= 2) and the (doc, block)
     // hits they strip — the broadcast-set size and the rewrite
     // workload; both must grow ~linearly (mirrors Dedup.blockDedup)
-    val blBoiler = TextHash.fanOut(docs)
-      .select(col("doc_id"), TextHash.tokens(col("text")).as("tk"))
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, (size(tk) - 1) div ${Dedup.BlockToks}), " +
-          s"i -> array_join(slice(tk, i * ${Dedup.BlockToks} + 1, " +
-          s"${Dedup.BlockToks}), ' '))")).as("b"))
-      .select(col("doc_id"),
-        expr(TextHash.rollingHashExpr("b", TextHash.P)).as("h"))
-      .distinct()
-      .groupBy("h").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 2)
-      .persist()
-    val d13Boiler = blBoiler.count()
-    val d13Hits = blBoiler.agg(sum("n").cast("long")).head.getLong(0)
-    blBoiler.unpersist(true)
+    val (d13Boiler, d13Hits) = Caches.scoped {
+      val blBoiler = TextHash.fanOut(docs)
+        .select(col("doc_id"), TextHash.tokens(col("text")).as("tk"))
+        .select(col("doc_id"), explode(expr(
+          s"transform(sequence(0, (size(tk) - 1) div ${Dedup.BlockToks}), " +
+            s"i -> array_join(slice(tk, i * ${Dedup.BlockToks} + 1, " +
+            s"${Dedup.BlockToks}), ' '))")).as("b"))
+        .select(col("doc_id"),
+          expr(TextHash.rollingHashExpr("b", TextHash.P)).as("h"))
+        .distinct()
+        .groupBy("h").agg(count(lit(1)).as("n"))
+        .filter(col("n") >= 2)
+        .transform(Caches.persist)
+      (blBoiler.count(), blBoiler.agg(sum("n").cast("long")).head.getLong(0))
+    }
 
     // d19: the stride-1 window universe, the duplicated-hash set (the
     // join side that must NOT be broadcast-hinted), and the matched
     // rows the island merge shuffles — all must grow ~linearly for
     // the exact-substring chain to hold (mirrors Dedup.substringSpans)
-    val winTbl = TextHash.fanOut(docs)
-      .select(col("doc_id"), TextHash.tokens(col("text")).as("tk"))
-      .select(col("doc_id"),
-        expr(TextHash.hashArrayExpr("tk", TextHash.P)).as("hv"))
-      .select(col("doc_id"), explode(expr(
-        s"CASE WHEN size(hv) >= ${Dedup.SubstrToks} THEN " +
-          s"transform(sequence(1, size(hv) - ${Dedup.SubstrToks - 1}), " +
-          s"i -> aggregate(slice(hv, i, ${Dedup.SubstrToks}), 7L, " +
-          s"(a, x) -> (a * 31 + x) % ${TextHash.P}L)) " +
-          "ELSE cast(array() as array<bigint>) END")).as("h"))
-    val hstats = winTbl
-      .groupBy("h").agg(count(lit(1)).as("rows"),
-        countDistinct(col("doc_id")).as("wdf"))
-      .filter(col("wdf") >= 2).persist()
-    val d19Windows = winTbl.count()
-    val d19DupHashes = hstats.count()
-    val d19Matched = hstats.agg(sum("rows").cast("long")).head.getLong(0)
-    hstats.unpersist(true)
-    val d19Spans = Dedup.substringSpans(spark, dir).count()
+    val (d19Windows, d19DupHashes, d19Matched) = Caches.scoped {
+      val winTbl = TextHash.fanOut(docs)
+        .select(col("doc_id"), TextHash.tokens(col("text")).as("tk"))
+        .select(col("doc_id"),
+          expr(TextHash.hashArrayExpr("tk", TextHash.P)).as("hv"))
+        .select(col("doc_id"), explode(expr(
+          s"CASE WHEN size(hv) >= ${Dedup.SubstrToks} THEN " +
+            s"transform(sequence(1, size(hv) - ${Dedup.SubstrToks - 1}), " +
+            s"i -> aggregate(slice(hv, i, ${Dedup.SubstrToks}), 7L, " +
+            s"(a, x) -> (a * 31 + x) % ${TextHash.P}L)) " +
+            "ELSE cast(array() as array<bigint>) END")).as("h"))
+      val hstats = winTbl
+        .groupBy("h").agg(count(lit(1)).as("rows"),
+          countDistinct(col("doc_id")).as("wdf"))
+        .filter(col("wdf") >= 2).transform(Caches.persist)
+      (winTbl.count(), hstats.count(),
+        hstats.agg(sum("rows").cast("long")).head.getLong(0))
+    }
+    val d19Spans = rows(Dedup.substringSpans(spark, dir))
 
     // x29: the benchmark gram universe (the join side that must NOT
     // carry a broadcast hint — it is corpus-proportional under the
     // 10% split rule), the train-side posting rows probing it, the
     // join's output rows, and the contaminated-doc census — all must
     // grow ~linearly for the decontamination join to hold
-    val x29Base = TextHash.fanOut(docs)
-      .select(col("doc_id"), lower(col("text")).as("t"),
-        TextHash.tokens(col("text")).as("tk"))
-      .select(col("doc_id"),
-        TextHash.splitOf(expr(
-          TextHash.rollingHashExpr("t", TextHash.P)) % 100).as("split"),
-        expr(s"array_distinct(${TextHash.hashArrayExpr(
-          TextHash.ngramsExpr("tk", Dedup.DecontamN), TextHash.P)})")
-          .as("gs"))
-      .filter(size(col("gs")) > 0).persist()
-    val x29Bench = x29Base.filter(col("split") === "test")
-      .select(explode(col("gs")).as("g")).distinct().persist()
-    val x29BenchGrams = x29Bench.count()
-    val x29TrainRows = x29Base.filter(col("split") === "train")
-      .agg(sum(size(col("gs"))).cast("long")).head.getLong(0)
-    val x29HitRows = x29Base.filter(col("split") === "train")
-      .select(col("doc_id"), explode(col("gs")).as("g"))
-      .join(x29Bench, "g").count()
-    val x29Docs = Dedup.decontaminate(spark, dir).count()
-    // drop the corpus-scale gram frames before the later stages (t34
-    // vocab, output counts) so cached 8-gram arrays don't accumulate
-    x29Bench.unpersist(true)
-    x29Base.unpersist(true)
+    // the scope drops the corpus-scale gram frames before the later
+    // stages (t34 vocab, output counts), so cached 8-gram arrays don't
+    // accumulate
+    val (x29BenchGrams, x29TrainRows, x29HitRows, x29Docs) = Caches.scoped {
+      val x29Base = TextHash.fanOut(docs)
+        .select(col("doc_id"), lower(col("text")).as("t"),
+          TextHash.tokens(col("text")).as("tk"))
+        .select(col("doc_id"),
+          TextHash.splitOf(expr(
+            TextHash.rollingHashExpr("t", TextHash.P)) % 100).as("split"),
+          expr(s"array_distinct(${TextHash.hashArrayExpr(
+            TextHash.ngramsExpr("tk", Dedup.DecontamN), TextHash.P)})")
+            .as("gs"))
+        .filter(size(col("gs")) > 0).transform(Caches.persist)
+      val x29Bench = x29Base.filter(col("split") === "test")
+        .select(explode(col("gs")).as("g")).distinct().transform(Caches.persist)
+      (x29Bench.count(),
+        x29Base.filter(col("split") === "train")
+          .agg(sum(size(col("gs"))).cast("long")).head.getLong(0),
+        x29Base.filter(col("split") === "train")
+          .select(col("doc_id"), explode(col("gs")).as("g"))
+          .join(x29Bench, "g").count(),
+        Dedup.decontaminate(spark, dir).count())
+    }
 
     // d21: the CHUNKED pair budget Σ C(cn, 2) over (bucket, chunk) —
     // with the chunk layer this must grow ~LINEARLY (~n·ChunkTarget/2
     // worst case); the unchunked per-cluster budget is reported next
     // to it so the telemetry shows what the chunk layer saves
-    val d21Cand = pairSum(
-      graft.operators.Similarity.semanticDedupChunks(spark, dir)
-        .select(col("cn").as("n")))
-    val d21Unchunked = pairSum(
-      graft.operators.Similarity.semanticDedupAssignment(spark, dir)
-        .groupBy("bucket").agg(count(lit(1)).as("n")))
-    val d21Rows = graft.operators.Similarity.semanticDedup(spark, dir).count()
-    // Lloyd shared state (s26/s27/d21): the assignment stage must emit
-    // exactly ONE row per vector — the round-13 map-side argmin over
-    // the 1-row centroid array. Round 12 shuffled an n·K frame per
-    // round here (n²/256 under the data-derived K — the verdict's one
-    // 100-TB killer); assign_rows == n_vectors is the proof it's gone.
-    val lloydAsgRows = graft.operators.Similarity
-      .semanticDedupAssignment(spark, dir).count()
-    val lloydK = graft.operators.Similarity.kmeansQuality(spark, dir).count()
+    // (one scope for the d21/Lloyd family, whose operators share frames)
+    val (d21Cand, d21Unchunked, d21Rows, lloydAsgRows, lloydK, d21Rec) =
+      Caches.scoped {
+        val sim = graft.operators.Similarity
+        (pairSum(sim.semanticDedupChunks(spark, dir).select(col("cn").as("n"))),
+          pairSum(sim.semanticDedupAssignment(spark, dir)
+            .groupBy("bucket").agg(count(lit(1)).as("n"))),
+          sim.semanticDedup(spark, dir).count(),
+          // Lloyd shared state (s26/s27/d21): the assignment stage must
+          // emit exactly ONE row per vector — the round-13 map-side
+          // argmin over the 1-row centroid array. Round 12 shuffled an
+          // n·K frame per round here (n²/256 under the data-derived K —
+          // the verdict's one 100-TB killer); assign_rows == n_vectors
+          // is the proof it's gone.
+          sim.semanticDedupAssignment(spark, dir).count(),
+          sim.kmeansQuality(spark, dir).count(),
+          // d21 semantic recall of the chunk layer: of all co-cluster
+          // pairs clearing tau (the unchunked truth), how many stay
+          // co-chunked — the round-12 reason K is data-derived (fixed K
+          // would decay this toward chance as clusters outgrow the
+          // chunk width)
+          sim.semanticDedupRecall(spark, dir).head())
+      }
     val nVectors = embT.count()
-    // d21 semantic recall of the chunk layer: of all co-cluster pairs
-    // clearing tau (the unchunked truth), how many stay co-chunked —
-    // the round-12 reason K is data-derived (fixed K would decay this
-    // toward chance as clusters outgrow the chunk width)
-    val d21Rec = graft.operators.Similarity.semanticDedupRecall(spark, dir)
-      .head()
     val (d21True, d21CoChunk) = (d21Rec.getLong(0), d21Rec.getLong(1))
 
     // t34: the Heaps-bounded vocabulary every expensive stage runs on
@@ -204,13 +212,14 @@ object ScaleStress {
     // or shingle-free corpus dir sum/max are NULL, and getLong would
     // crash the whole stress sweep instead of reporting zeros
     // (round-14 ADVICE).
-    val t29Fg = graft.operators.TextAnalysis
-      .zipfFreqGroups(spark, dir).persist()
-    val t29Vocab = t29Fg.agg(coalesce(sum("cnt"), lit(0L))).head.getLong(0)
-    val t29D = t29Fg.count()
-    val t29MaxBucket = t29Fg.groupBy("pid").agg(count(lit(1)).as("n"))
-      .agg(coalesce(max("n"), lit(0L))).head.getLong(0)
-    t29Fg.unpersist(true)
+    val (t29Vocab, t29D, t29MaxBucket) = Caches.scoped {
+      val t29Fg = graft.operators.TextAnalysis
+        .zipfFreqGroups(spark, dir).transform(Caches.persist)
+      (t29Fg.agg(coalesce(sum("cnt"), lit(0L))).head.getLong(0),
+        t29Fg.count(),
+        t29Fg.groupBy("pid").agg(count(lit(1)).as("n"))
+          .agg(coalesce(max("n"), lit(0L))).head.getLong(0))
+    }
 
     // x11/x04/x28: the BucketedWindow construction bound, MEASURED
     // (round-15 verdict item 4). The mechanism's scale law is
@@ -220,8 +229,8 @@ object ScaleStress {
     // plans. max_task must stay ~corpus/buckets as sources grow;
     // groups is the histogram cardinality (≤ sources × 4096).
     import graft.operators.{BucketedWindow, Curation}
-    def bwStats(fb: (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.Column)): (Long, Long) = {
+    def bwStats(fb: => (org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.Column)): (Long, Long) = Caches.scoped {
       val g = BucketedWindow.groupSizes(fb._1, Seq("source"), fb._2)
         .agg(coalesce(max("n"), lit(0L)), count(lit(1))).head
       (g.getLong(0), g.getLong(1))
@@ -272,16 +281,16 @@ object ScaleStress {
     // exact contribution value. max_tie (the largest tie group
     // anywhere, an upper bound on any threshold tie set) is what must
     // stay far under PruneMaxRankedDf as the corpus grows.
-    val i14P = graft.operators.TextAnalysis
-      .indexPruningPostings(spark, dir).persist()
-    val i14MaxDf = i14P
-      .groupBy("term").agg(count(lit(1)).as("n"))
-      .agg(coalesce(max("n"), lit(0L)), coalesce(sum("n"), lit(0L))).head
+    val (i14MaxDf, i14MaxTie) = Caches.scoped {
+      val i14P = graft.operators.TextAnalysis
+        .indexPruningPostings(spark, dir).transform(Caches.persist)
+      (i14P.groupBy("term").agg(count(lit(1)).as("n"))
+        .agg(coalesce(max("n"), lit(0L)), coalesce(sum("n"), lit(0L))).head,
+        i14P.groupBy("term", "contrib_e6")
+          .agg(count(lit(1)).as("n"))
+          .agg(coalesce(max("n"), lit(0L))).head.getLong(0))
+    }
     val (i14Max, i14Rows) = (i14MaxDf.getLong(0), i14MaxDf.getLong(1))
-    val i14MaxTie = i14P.groupBy("term", "contrib_e6")
-      .agg(count(lit(1)).as("n"))
-      .agg(coalesce(max("n"), lit(0L))).head.getLong(0)
-    i14P.unpersist(true)
 
     // x32: the kept-token stream the final assembly explodes and
     // probes the nsym vocabulary with — its single corpus-scale
@@ -289,16 +298,17 @@ object ScaleStress {
     // stages' own outputs (t35's keep set ⨝ d20's per-doc
     // n_toks/n_covered), so the telemetry measures exactly the row
     // count the operator's anti-join emits into the vocab probe.
-    val x32KeptToks = graft.operators.TextAnalysis
-      .classifierScore(spark, dir)
-      .filter(col("keep_cls") === 1).select("doc_id")
-      .join(Dedup.substringRewrite(spark, dir), "doc_id")
-      .agg(sum(col("n_toks") - col("n_covered")).cast("long"))
-      .head.getLong(0)
-    val x32F = graft.operators.Pipeline.finalAssembly(spark, dir).persist()
-    val x32Rows = x32F.count()
-    val x32Shards = x32F.select("shard").distinct().count()
-    x32F.unpersist(true)
+    val (x32KeptToks, x32Rows, x32Shards) = Caches.scoped {
+      val kept = graft.operators.TextAnalysis
+        .classifierScore(spark, dir)
+        .filter(col("keep_cls") === 1).select("doc_id")
+        .join(Dedup.substringRewrite(spark, dir), "doc_id")
+        .agg(sum(col("n_toks") - col("n_covered")).cast("long"))
+        .head.getLong(0)
+      val x32F = graft.operators.Pipeline.finalAssembly(spark, dir)
+        .transform(Caches.persist)
+      (kept, x32F.count(), x32F.select("shard").distinct().count())
+    }
 
     // t36: the labeled feature stream each training round scans
     // (corpus-linear — it must be) and the trained weight vector's
@@ -314,32 +324,32 @@ object ScaleStress {
       .select(col("doc_id"),
         (col("h") % TextAnalysis.ClsBuckets).as("bucket"))
       .distinct().count()
-    val t36W = TextAnalysis.classifierTrain(spark, dir)
-      .filter(col("w") =!= 0L).count()
+    val t36W = rows(TextAnalysis.classifierTrain(spark, dir)
+      .filter(col("w") =!= 0L))
 
     // CC rounds + output cardinalities (clusters runs the fixpoint)
-    val d06Rows = DupCluster.clusters(spark, dir).count()
+    val d06Rows = rows(DupCluster.clusters(spark, dir))
     val d06Rounds = DupCluster.lastFixpointRounds
-    val d09Rows = DupCluster.embeddingClusters(spark, dir).count()
+    val d09Rows = rows(DupCluster.embeddingClusters(spark, dir))
     val d09Rounds = DupCluster.lastFixpointRounds
     // s11: CC over the mutual-kNN graph — edge set is ≤ n·k/2 by
     // construction, so rounds AND edges must stay tame as n grows
-    val s11Edges = graft.operators.Similarity.mutualKnn(spark, dir).count()
-    val s11Rows = DupCluster.knnComponents(spark, dir).count()
+    val s11Edges = rows(graft.operators.Similarity.mutualKnn(spark, dir))
+    val s11Rows = rows(DupCluster.knnComponents(spark, dir))
     val s11Rounds = DupCluster.lastFixpointRounds
 
-    val d02Rows = Dedup.jaccardPairs(spark, dir,
-      maxShingleDf = Some(Dedup.JaccardDfCap)).count()
-    val d03Rows = Dedup.minhashLshPairs(spark, dir).count()
+    val d02Rows = rows(Dedup.jaccardPairs(spark, dir,
+      maxShingleDf = Some(Dedup.JaccardDfCap)))
+    val d03Rows = rows(Dedup.minhashLshPairs(spark, dir))
     val d08Rows =
-      graft.operators.Similarity.embeddingNearDupsBucketed(spark, dir).count()
+      rows(graft.operators.Similarity.embeddingNearDupsBucketed(spark, dir))
 
     // With "exact": also run the O(n²) brute-force baseline (works up
     // to its 20k-vector guard) — d08 ⊆ exact (the rerank keeps only
     // cs ≥ 0.4), so recall = d08_rows / exact_rows.
     val exactRows =
       if (args.contains("exact"))
-        Some(graft.operators.Similarity.embeddingNearDups(spark, dir).count())
+        Some(rows(graft.operators.Similarity.embeddingNearDups(spark, dir)))
       else None
     val exactJson = exactRows.map(n => s""","exact_rows":$n""").getOrElse("")
 

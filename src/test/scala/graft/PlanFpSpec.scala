@@ -67,6 +67,16 @@ class PlanFpSpec extends AnyFunSuite {
     }
   }
 
+  test("a query fingerprints the same after another query as it does alone") {
+    // i05 persists the split(lower(text)) token frame that t06 reads
+    // uncached; start from an empty cache manager, as a fresh JVM does
+    spark.catalog.clearCache()
+    val alone = Bench.planFp(spark, "t06_repetition", dir)
+    Bench.planFp(spark, "i05_snippets", dir)
+    assert(Bench.planFp(spark, "t06_repetition", dir) == alone,
+      "t06's fingerprint borrowed a frame i05 cached")
+  }
+
   test("repartition width, join strategy, literals, aggregates and caching separate") {
     val li = graft.engine.Tables.t(spark, dir, "lineitem")
     def differ(what: String, a: DataFrame, b: DataFrame): Unit =

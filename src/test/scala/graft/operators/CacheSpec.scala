@@ -1,23 +1,28 @@
 package graft.operators
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Storage-accounting specs (VERDICT r8 item 5): the round-8 bench
-  * added per-query peak-cache telemetry (`storage_mb` in
-  * BENCH_DETAIL.json — heaviest at sf1: d14 160.6 MB, s11 105.7 MB,
-  * the kNN family ~90 MB each); these tests turn the two governance
-  * rules that telemetry motivated into executable pins:
+import graft.engine.Caches
+
+/** Storage-accounting specs over the query cache scope
+  * ([[graft.engine.Caches]]), on the block-manager storage that
+  * Bench's per-query `storage_mb` reads:
   *
-  *  1. a MATERIALIZED build (knnGraph's localCheckpoint) must drop
-  *     its intermediate caches eagerly — only the checkpointed n·k
+  *  1. a MATERIALIZED build (knnGraph's localCheckpoint) frees its
+  *     intermediates as its scope closes — only the checkpointed n·k
   *     result may stay resident;
   *  2. every documented-heavy query's peak cache stays inside a
-  *     stated per-query budget, and the session-level
-  *     `spark.catalog.clearCache()` hygiene (what Verify/Bench run
-  *     between queries) actually returns storage to its pre-query
-  *     floor — a persist that bypasses the catalog (raw RDD cache)
-  *     would escape it and fail here.
+  *     stated per-query budget, and closing the query's scope (what
+  *     Bench and Verify run each query in) returns storage to its
+  *     pre-query floor — a persist that bypasses the scope (raw RDD
+  *     cache, a bare `persist()`) would escape it and fail here;
+  *  3. a scope frees only what it cached: a frame cached before a
+  *     scoped query, as another tenant of a shared session would,
+  *     survives it, and so does a query's own entry when a memo build
+  *     inside it persists the same plan.
   */
 class CacheSpec extends AnyFunSuite {
 
@@ -70,6 +75,10 @@ class CacheSpec extends AnyFunSuite {
   val gateDir = "/root/testdata/sf0.01"
 
   test("knnGraph build drops its intermediates — only the n·k checkpoint stays") {
+    // start from an empty cache manager: when the build's scope
+    // unpersists a plan, Spark re-plans any partly loaded cache that
+    // reads it, and an earlier suite's dropped blocks would read as a
+    // shrink of this build's storage
     spark.catalog.clearCache()
     val before = settledStorageBytes()
     Similarity.knnGraph(spark, gateDir) // eager: checkpoints the graph
@@ -80,13 +89,7 @@ class CacheSpec extends AnyFunSuite {
     assert(delta >= 0, "storage shrank during a build — measurement broken")
     assert(delta <= 8L * 1024 * 1024,
       s"knnGraph left ${delta / 1024 / 1024} MB resident after its " +
-        "checkpoint — an intermediate cache escaped the blocking unpersist")
-    // nothing the build left depends on the catalog cache manager:
-    // clearCache must be a no-op on the build's residue
-    val after = storageBytes()
-    spark.catalog.clearCache()
-    assert(storageBytes() == after,
-      "the build leaked a catalog-managed cache past its return")
+        "checkpoint — an intermediate cache escaped the build's scope")
   }
 
   test("documented heavies stay inside the per-query peak cache budget") {
@@ -114,25 +117,70 @@ class CacheSpec extends AnyFunSuite {
                               // round checkpoints are allowed residue
       "t37_classifier_eval",  // same stream persisted for split
                               // training + the final scoring pass
-      "x33_assembly_trained") // x32's persists + the weight-memo
+      "x33_assembly_trained", // x32's persists + the weight-memo
                               // checkpoint (4097 rows, allowed residue)
+      "i12_rocchio_feedback") // persists the query-term base and the
+                              // round-2 candidate tf frame
     heavies.foreach { name =>
+      // setup, as in the knnGraph test: a plan an earlier suite left
+      // cached would make the query's persist a no-op, so its bytes
+      // would count in the floor instead of the peak; and a partly
+      // loaded leftover can lose its blocks mid-query and hide the peak
       spark.catalog.clearCache()
       val floor = settledStorageBytes()
-      graft.SparkEntry.queries(name)(spark, gateDir)
-        .write.format("noop").mode("overwrite").save()
-      val peakMb = (storageBytes() - floor) / 1024 / 1024
+      val peakMb = Caches.scoped {
+        graft.SparkEntry.queries(name)(spark, gateDir)
+          .write.format("noop").mode("overwrite").save()
+        (storageBytes() - floor) / 1024 / 1024
+      }
       assert(peakMb <= PerQueryBudgetMb,
         s"$name peaked at $peakMb MB cached (budget $PerQueryBudgetMb MB " +
           "at sf0.01) — document why or stop persisting a corpus-scale frame")
-      // the inter-query hygiene Verify/Bench rely on must reclaim
-      // everything the query pinned through the catalog (checkpoint
-      // blocks from memoized builds are the one allowed residue)
-      spark.catalog.clearCache()
+      // closing the query's scope must reclaim everything the query
+      // cached (checkpoint blocks from memoized builds are the one
+      // allowed residue)
       val residueMb = (storageBytes() - floor) / 1024 / 1024
       assert(residueMb <= 8L,
-        s"$name left $residueMb MB that clearCache cannot reclaim — " +
-          "a persist is bypassing the catalog cache manager")
+        s"$name left $residueMb MB after its scope closed — " +
+          "a persist is bypassing the query scope")
     }
+  }
+
+  /** The token frame i05's snippets persist (TextAnalysis.docs + tokens),
+    * built afresh: the same plan each call. */
+  private def tokenFrame() =
+    TextHash.fanOut(graft.engine.Tables.t(spark, gateDir, "documents"))
+      .select(col("doc_id"), TextHash.tokens(col("text")).as("tk"))
+
+  /** Drops an entry for the token plan that an earlier suite's unscoped
+    * operator call left, so each law below starts uncached. */
+  private def uncachedTokenFrame() = tokenFrame().unpersist(blocking = true)
+
+  private def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.storageLevel != StorageLevel.NONE
+
+  test("a frame cached before a scoped query survives the query") {
+    // another tenant's cache of the very plan i05 persists: the query's
+    // persist is a no-op, and closing its scope must not evict it
+    val tenant = uncachedTokenFrame().persist()
+    try {
+      tenant.count()
+      Caches.scoped(graft.SparkEntry.queries("i05_snippets")(spark, gateDir)
+        .write.format("noop").mode("overwrite").save())
+      assert(cached(tenant), "the query's scope evicted a frame it did not cache")
+    } finally tenant.unpersist(blocking = true)
+  }
+
+  test("a memo build inside a query leaves the query's own cache entry") {
+    val build = Memo("spec_cache_borrowing_build") { (s, _) =>
+      Caches.persist(tokenFrame()).count()
+      s.range(1).toDF().localCheckpoint()
+    }
+    Caches.scoped {
+      val mine = Caches.persist(uncachedTokenFrame())
+      build.refresh(spark, gateDir)
+      assert(cached(mine), "the memo build evicted its query's cache entry")
+    }
+    assert(!cached(tokenFrame()), "the query's scope kept its own entry")
   }
 }

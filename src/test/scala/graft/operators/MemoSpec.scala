@@ -11,8 +11,9 @@ import graft.SparkJobs
   * For every frame: a second access hands out the same frame; after
   * [[Memos.invalidate]] the next access builds a new frame with its
   * own probe key; a frame whose checkpoint blocks were lost is
-  * rebuilt, not handed out dead; and a gated producer's rebuild is
-  * what later consumers see. The probe key and rate limit, the
+  * rebuilt, not handed out dead; a build leaves nothing it persisted
+  * in the cache manager (its scope frees it); and a gated producer's
+  * rebuild is what later consumers see. The probe key and rate limit, the
   * self-time timer and the memo-vs-direct row identity are pinned
   * once below the table.
   *
@@ -107,6 +108,13 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       Memos.lastProbeNs.clear()
       r.read().foreach(_.count())
+    }
+
+    test(s"${r.name}: a build leaves nothing it persisted in the cache manager") {
+      spark.catalog.clearCache() // start from an empty cache manager
+      r.refresh()
+      assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager.isEmpty, "the build's persists outlived it")
     }
 
     r.producer.foreach { q =>
