@@ -229,8 +229,8 @@ object LshSig16 {
   * reproduces its four 4-bit bands exactly). The point of the width
   * parameter: candidate generation over band buckets costs
   * Θ(n²/2^nbits) per band, so `nbits` must grow with log₂(n) for the
-  * bucket join to stay linear — see
-  * [[graft.operators.Similarity.lshBandBits]] for the sizing rule. */
+  * bucket join to stay linear — see `Similarity.lshBandBits` for the
+  * sizing rule. */
 case class LshBands(child: Expression, nbitsExpr: Expression)
     extends BinaryExpression {
   override def left: Expression = child

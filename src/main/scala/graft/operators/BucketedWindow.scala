@@ -29,7 +29,9 @@ import org.apache.spark.sql.functions._
   *     back as per-bucket offsets;
   *  4. the original window re-partitioned by (part, bucket): the
   *     largest single task is ONE bucket — corpus_size/buckets — and
-  *     adding the offset restores the exact global semantics.
+  *     adding the offset restores the exact global semantics. (The
+  *     bound measured at sf0.1/×10/×30 for the three call sites is
+  *     BASELINE.md's round-15 "BucketedWindow task bound" row.)
   *
   * Both entry points are row-identical to the single-task window
   * they replace (Round15Spec pins the identity on skewed synthetic
@@ -98,18 +100,6 @@ object BucketedWindow {
         partB.map(c => col(c) <=> col(s"__o_$c")).reduce(_ && _))
       .drop(partB.map(c => s"__o_$c"): _*)
   }
-
-  /** Telemetry frame for a call site: the (part..., __bkt, n) group
-    * sizes of exactly the frame the in-bucket window runs over. The
-    * construction's scale law — "the largest single task is ONE
-    * bucket" — is max(n) here; ScaleStress records it at
-    * sf0.1/×10/×30 for every call site so the bound is measured,
-    * not asserted (round-15 verdict item 4). */
-  def groupSizes(df: DataFrame, part: Seq[String],
-      bucket: Column): DataFrame =
-    df.withColumn("__bkt", bucket)
-      .groupBy((part :+ "__bkt").map(col): _*)
-      .agg(count(lit(1)).as("n"))
 
   /** Exclusive per-part prefix of `sumCol` over the bucket histogram,
     * ordered by bucket — a window over the construction-bounded

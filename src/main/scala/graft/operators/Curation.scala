@@ -224,25 +224,15 @@ object Curation {
     * ~n_source/4096 rows — and the rank is exactly the old window's.
     * The report's rk column stays INT (the oracle's width); the
     * mechanism computes it as a long. */
-  /** x11's bucketed frame + bucket expression — factored so
-    * ScaleStress measures the "largest task = one bucket" bound on
-    * exactly the frame the operator windows over (round-15 verdict
-    * item 4). */
-  private[graft] def mixtureBucketed(
-      s: SparkSession, dir: String): (DataFrame, Column) = {
+  def mixtureSample(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
       .select(col("doc_id"), col("source"), lower(col("text")).as("t"))
       .select(col("doc_id"), col("source"),
         expr(rollingHashExpr("t", P2)).as("h2"))
-    (d, shiftright(col("h2"), 18))
-  }
-
-  def mixtureSample(s: SparkSession, dir: String): DataFrame = {
-    val (d, bucket) = mixtureBucketed(s, dir)
     val quota = d.agg(count(lit(1)).as("n_total"),
         countDistinct(col("source")).as("n_src"))
       .select(expr("(n_total div 2L) div n_src").as("quota"))
-    BucketedWindow.rank(d, Seq("source"), bucket,
+    BucketedWindow.rank(d, Seq("source"), shiftright(col("h2"), 18),
         Seq(col("h2"), col("doc_id")), "rk")
       .crossJoin(broadcast(quota))
       .filter(col("rk") <= col("quota"))
@@ -373,22 +363,14 @@ object Curation {
     * ranges under a data-derived width (the 1-row scalar crossJoin
     * idiom), so the largest task is one source's one range and the
     * spans are bit-identical to the old window's. */
-  /** x04's bucketed frame + bucket expression ([[mixtureBucketed]]'s
-    * telemetry contract). */
-  private[graft] def packingBucketed(
-      s: SparkSession, dir: String): (DataFrame, Column) = {
+  def packing(s: SparkSession, dir: String, budget: Long = 256L): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_toks"))
     val wTab = base.agg(
       expr("(coalesce(max(doc_id), 0L) + 4096L) div 4096L").as("__wd"))
-    (base.crossJoin(broadcast(wTab)), expr("doc_id div __wd"))
-  }
-
-  def packing(s: SparkSession, dir: String, budget: Long = 256L): DataFrame = {
-    val (based, bucket) = packingBucketed(s, dir)
-    BucketedWindow.runningSum(based,
-        Seq("source"), bucket, Seq(col("doc_id")),
+    BucketedWindow.runningSum(base.crossJoin(broadcast(wTab)),
+        Seq("source"), expr("doc_id div __wd"), Seq(col("doc_id")),
         col("n_toks"), "end_tok")
       .withColumn("start_tok", col("end_tok") - col("n_toks"))
       .select(col("doc_id"), col("source"), col("n_toks"), col("start_tok"),
@@ -565,24 +547,6 @@ object Curation {
       .select("w", "c", "syms")
   }
 
-  /** t34: BPE tokenization — APPLY the mined merges to the corpus,
-    * the step t26 stops short of and the step a token-budget pipeline
-    * (x04 packing, x25 allocation) actually consumes. Two rounds of
-    * (mine top-32 → greedy one-pass apply): round 1 uses t26's merge
-    * table verbatim (shared [[bpeMine]]), round 2 re-mines over the
-    * merged symbol sequences — the fixed-depth prefix of full BPE
-    * training, deterministic and oracle-gated end to end. Output per
-    * document: whitespace-token count, character mass, and the BPE
-    * token count after both rounds — the n_bpe/n_chars ratio is the
-    * compression a tokenizer owner tracks.
-    *
-    * Scale shape: everything expensive happens on the DISTINCT-word
-    * vocabulary (Heaps-bounded — t25 measures it): two minings (t26's
-    * plan) + two narrow fold rewrites. The corpus is touched exactly
-    * twice — once to count words (partial-agg'd groupBy), once to
-    * explode doc tokens and join the |vocab| n_sym map (no broadcast
-    * hint: vocab grows sublinearly but unboundedly, AQE decides) and
-    * re-aggregate per doc_id. */
   /** The trained tokenizer's word → BPE-symbol-count map over a
     * (…, w) word-occurrence frame: two rounds of (mine top-32 →
     * greedy one-pass apply) on the distinct-word vocabulary, then the
@@ -608,6 +572,24 @@ object Curation {
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 1)
 
+  /** t34: BPE tokenization — APPLY the mined merges to the corpus,
+    * the step t26 stops short of and the step a token-budget pipeline
+    * (x04 packing, x25 allocation) actually consumes. Two rounds of
+    * (mine top-32 → greedy one-pass apply): round 1 uses t26's merge
+    * table verbatim (shared [[bpeMine]]), round 2 re-mines over the
+    * merged symbol sequences — the fixed-depth prefix of full BPE
+    * training, deterministic and oracle-gated end to end. Output per
+    * document: whitespace-token count, character mass, and the BPE
+    * token count after both rounds — the n_bpe/n_chars ratio is the
+    * compression a tokenizer owner tracks.
+    *
+    * Scale shape: everything expensive happens on the DISTINCT-word
+    * vocabulary (Heaps-bounded — t25 measures it): two minings (t26's
+    * plan) + two narrow fold rewrites. The corpus is touched exactly
+    * twice — once to count words (partial-agg'd groupBy), once to
+    * explode doc tokens and join the |vocab| n_sym map (no broadcast
+    * hint: vocab grows sublinearly but unboundedly, AQE decides) and
+    * re-aggregate per doc_id. */
   def bpeTokenize(s: SparkSession, dir: String): DataFrame = {
     val words = bpeWords(s, dir)
       // feeds the vocab build AND the per-doc re-aggregate
@@ -642,22 +624,14 @@ object Curation {
     * over ≤4096 data-derived doc_id ranges, so no task ever holds a
     * whole source (the old per-source window serialized Θ(corpus)
     * rows into one task — the t29/i14 single-reducer class). */
-  /** x28's bucketed frame + bucket expression ([[mixtureBucketed]]'s
-    * telemetry contract). */
-  private[graft] def bpePackingBucketed(
-      s: SparkSession, dir: String): (DataFrame, Column) = {
+  def bpePacking(s: SparkSession, dir: String): DataFrame = {
     val counts = bpeTokenize(s, dir).select(col("doc_id"), col("n_bpe"))
     val base = docs(s, dir).select(col("doc_id"), col("source"))
       .join(counts, "doc_id")
     val wTab = base.agg(
       expr("(coalesce(max(doc_id), 0L) + 4096L) div 4096L").as("__wd"))
-    (base.crossJoin(broadcast(wTab)), expr("doc_id div __wd"))
-  }
-
-  def bpePacking(s: SparkSession, dir: String): DataFrame = {
-    val (based, bucket) = bpePackingBucketed(s, dir)
-    BucketedWindow.runningSum(based,
-        Seq("source"), bucket, Seq(col("doc_id")),
+    BucketedWindow.runningSum(base.crossJoin(broadcast(wTab)),
+        Seq("source"), expr("doc_id div __wd"), Seq(col("doc_id")),
         col("n_bpe"), "end_tok")
       .withColumn("start_tok", col("end_tok") - col("n_bpe"))
       .select(col("doc_id"), col("source"), col("n_bpe"), col("start_tok"),

@@ -131,31 +131,6 @@ object Dedup {
   val CosineDfPermille = 100L
   val CosineThresholdE6 = 800000L
 
-  /** d15: sparse bag-of-words cosine near-dup — the TF-vector
-    * similarity between d02's set-overlap (ignores counts entirely)
-    * and d05/d08's dense-embedding cosine (needs an embedder): two
-    * documents are near-dups when their pruned term-count vectors
-    * point the same way. cos = Σ cₐc_b / (‖a‖·‖b‖) with integer dot
-    * and sum-of-squares; the only floating math is two
-    * correctly-rounded sqrts, one multiply, one divide — the same
-    * fixed expression tree both engines evaluate, so the e6 floor is
-    * engine-exact.
-    *
-    * Scale shape: identical to d02 — signatures (term counts) built
-    * once and persisted, a broadcast anti-join applies the df cap,
-    * and the single corpus-scale shuffle is the postings equi-join on
-    * the term, whose fanout the cap bounds by df² per term. The
-    * corpus size enters the cap as a 1-row broadcast scalar.
-    *
-    * Fanout honesty: a RELATIVE cap admits postings up to 0.1·N, so
-    * worst-case join fanout grows with N² on a corpus whose
-    * mid-frequency band thickens (measured growth here is ×100 pairs
-    * for ×10 docs at the 0.8 threshold — the extra pairs are real
-    * near-dups the tighter absolute cap was missing, not noise). A
-    * production deployment layers prefix filtering (only a vector's
-    * rarest-k terms generate candidates; the full dot still scores
-    * them) on this exact plan to pull the candidate volume back to
-    * near-linear. */
   /** The df-capped term-count vectors shared by d15/d16 (persisted). */
   private def termVectors(s: SparkSession, dir: String,
       maxTermDfPermille: Option[Long]): DataFrame =
@@ -205,6 +180,31 @@ object Dedup {
     * [[cosinePairsPrefix]] is the same-contract scale path. */
   val MaxExhaustiveCosineDocs = 10000L
 
+  /** d15: sparse bag-of-words cosine near-dup — the TF-vector
+    * similarity between d02's set-overlap (ignores counts entirely)
+    * and d05/d08's dense-embedding cosine (needs an embedder): two
+    * documents are near-dups when their pruned term-count vectors
+    * point the same way. cos = Σ cₐc_b / (‖a‖·‖b‖) with integer dot
+    * and sum-of-squares; the only floating math is two
+    * correctly-rounded sqrts, one multiply, one divide — the same
+    * fixed expression tree both engines evaluate, so the e6 floor is
+    * engine-exact.
+    *
+    * Scale shape: identical to d02 — signatures (term counts) built
+    * once and persisted, a broadcast anti-join applies the df cap,
+    * and the single corpus-scale shuffle is the postings equi-join on
+    * the term, whose fanout the cap bounds by df² per term. The
+    * corpus size enters the cap as a 1-row broadcast scalar.
+    *
+    * Fanout honesty: a RELATIVE cap admits postings up to 0.1·N, so
+    * worst-case join fanout grows with N² on a corpus whose
+    * mid-frequency band thickens (measured growth here is ×100 pairs
+    * for ×10 docs at the 0.8 threshold — the extra pairs are real
+    * near-dups the tighter absolute cap was missing, not noise). A
+    * production deployment layers prefix filtering (only a vector's
+    * rarest-k terms generate candidates; the full dot still scores
+    * them) on this exact plan to pull the candidate volume back to
+    * near-linear. */
   def cosinePairs(s: SparkSession, dir: String,
       maxTermDfPermille: Option[Long] = Some(CosineDfPermille),
       maxDocs: Long = MaxExhaustiveCosineDocs): DataFrame = {
@@ -380,16 +380,39 @@ object Dedup {
   def minhashLshPairs(s: SparkSession, dir: String): DataFrame =
     minhashLshPairsMemo.refresh(s, dir)
 
+  /** (doc_id, sig): the MinHash signature of every document with at
+    * least one shingle — the input of d03, d11 and x15. */
   private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     shingleHashesMemo(s, dir)
       .filter(col("n_sh") > 0)
       .select(col("doc_id"), expr(minhashExpr("hv", MinhashK)).as("sig"))
 
-  private def minhashPairsFrom(sigs: DataFrame): DataFrame = {
-    val bands = sigs.select(col("doc_id"),
+  /** The LSH band rule over any (doc_id, sig, …) frame: one
+    * (doc_id, band_idx, band_key) row per band of
+    * [[MinhashBands]] × 4 signature slots. */
+  private def minhashBands(sigs: DataFrame): DataFrame =
+    sigs.select(col("doc_id"),
         posexplode(expr(s"transform(sequence(0, ${MinhashBands - 1}), " +
           "b -> array_join(slice(sig, b * 4 + 1, 4), '-'))")))
       .toDF("doc_id", "band_idx", "band_key")
+
+  /** The signature re-check over a candidate frame whose id columns
+    * are `a` and `b`: keeps the pairs whose signatures agree on at
+    * least half of their [[MinhashK]] slots, as (a, b, n_match)
+    * ordered by the pair. */
+  private def signatureAgreement(cand: DataFrame, sigs: DataFrame,
+      a: String, b: String): DataFrame =
+    cand
+      .join(sigs.as("sa"), col(a) === col("sa.doc_id"))
+      .join(sigs.as("sb"), col(b) === col("sb.doc_id"))
+      .select(col(a), col(b),
+        expr("size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y), v -> v))")
+          .as("n_match"))
+      .filter(col("n_match") * 2 >= MinhashK)
+      .orderBy(a, b)
+
+  private def minhashPairsFrom(sigs: DataFrame): DataFrame = {
+    val bands = minhashBands(sigs)
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
@@ -397,14 +420,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
       .distinct()
-    cand
-      .join(sigs.as("sa"), col("ida") === col("sa.doc_id"))
-      .join(sigs.as("sb"), col("idb") === col("sb.doc_id"))
-      .select(col("ida"), col("idb"),
-        expr("size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y), v -> v))")
-          .as("n_match"))
-      .filter(col("n_match") * 2 >= MinhashK)
-      .orderBy("ida", "idb")
+    signatureAgreement(cand, sigs, "ida", "idb")
   }
 
   /** Lazy (un-checkpointed) d03 frame for plan inspection — the gated
@@ -432,29 +448,15 @@ object Dedup {
     * Output: (new_id, index_id, n_match) — which index doc each new
     * doc duplicates. */
   def incrementalNearDups(s: SparkSession, dir: String): DataFrame = {
-    val sigs = shingleHashesMemo(s, dir)
-      .filter(col("n_sh") > 0)
-      .select(col("doc_id"), expr(minhashExpr("hv", MinhashK)).as("sig"))
-      .transform(Caches.persist)
-    def bandsOf(df: DataFrame): DataFrame = df.select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(0, ${MinhashBands - 1}), " +
-          "b -> array_join(slice(sig, b * 4 + 1, 4), '-'))")))
-      .toDF("doc_id", "band_idx", "band_key")
+    val sigs = minhashSignatures(s, dir).transform(Caches.persist)
     val isBatch = pmod(col("doc_id"), lit(5)) === 0
-    val cand = broadcast(bandsOf(sigs.filter(isBatch))).as("a")
-      .join(bandsOf(sigs.filter(!isBatch)).as("b"),
+    val cand = broadcast(minhashBands(sigs.filter(isBatch))).as("a")
+      .join(minhashBands(sigs.filter(!isBatch)).as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_key") === col("b.band_key"))
       .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("index_id"))
       .distinct()
-    cand
-      .join(sigs.as("sa"), col("new_id") === col("sa.doc_id"))
-      .join(sigs.as("sb"), col("index_id") === col("sb.doc_id"))
-      .select(col("new_id"), col("index_id"),
-        expr("size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y), v -> v))")
-          .as("n_match"))
-      .filter(col("n_match") * 2 >= MinhashK)
-      .orderBy("new_id", "index_id")
+    signatureAgreement(cand, sigs, "new_id", "index_id")
   }
 
   /** d13 block width: 8 whitespace tokens per block. */
@@ -616,36 +618,22 @@ object Dedup {
     * genuinely bounded by the increment. Output: which train doc
     * leaks into which test doc, with signature-agreement strength. */
   def splitLeakage(s: SparkSession, dir: String): DataFrame = {
-    val sigs = shingleHashesMemo(s, dir)
-      .filter(col("n_sh") > 0)
-      .select(col("doc_id"), expr(minhashExpr("hv", MinhashK)).as("sig"))
-      .transform(Caches.persist)
+    val sigs = minhashSignatures(s, dir).transform(Caches.persist)
     // the t07 split rule verbatim (TextAnalysis.hashSplit): P-hash of
     // lowered text mod 100, <80 train / <90 val / else test
     val split = fanOut(docs(s, dir))
       .select(col("doc_id"), lower(col("text")).as("t"))
       .select(col("doc_id"),
         splitOf(expr(rollingHashExpr("t", P)) % 100).as("split"))
-    def bandsOf(df: DataFrame): DataFrame = df.select(col("doc_id"),
-        posexplode(expr(s"transform(sequence(0, ${MinhashBands - 1}), " +
-          "b -> array_join(slice(sig, b * 4 + 1, 4), '-'))")))
-      .toDF("doc_id", "band_idx", "band_key")
     val withSplit = sigs.join(split, "doc_id")
-    val cand = bandsOf(withSplit.filter(col("split") === "test"))
+    val cand = minhashBands(withSplit.filter(col("split") === "test"))
       .as("a")
-      .join(bandsOf(withSplit.filter(col("split") === "train")).as("b"),
+      .join(minhashBands(withSplit.filter(col("split") === "train")).as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_key") === col("b.band_key"))
       .select(col("a.doc_id").as("test_id"), col("b.doc_id").as("train_id"))
       .distinct()
-    cand
-      .join(sigs.as("sa"), col("test_id") === col("sa.doc_id"))
-      .join(sigs.as("sb"), col("train_id") === col("sb.doc_id"))
-      .select(col("test_id"), col("train_id"),
-        expr("size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y), v -> v))")
-          .as("n_match"))
-      .filter(col("n_match") * 2 >= MinhashK)
-      .orderBy("test_id", "train_id")
+    signatureAgreement(cand, sigs, "test_id", "train_id")
   }
 
   /** d18: LSH banding recall/precision report — the s14-style

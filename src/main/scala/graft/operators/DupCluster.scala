@@ -32,17 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object DupCluster {
 
-  /** Hash-Min fixpoint over an arbitrary (ida, idb) pair graph:
-    * (id, cluster_id) with cluster_id = min id reachable through
-    * pairs. Shared by the text (d06, MinHash pairs) and embedding
-    * (d09, LSH-bucketed cosine pairs) cluster operators. */
-  /** Rounds (large-star + small-star passes) the most recent
-    * [[fixpointLabels]] call took to converge, including the final
-    * no-change round — scale telemetry: star contraction makes this
-    * O(log n), so BASELINE.md's sf1 section records the count to
-    * prove convergence stays flat as the corpus grows. */
-  @volatile var lastFixpointRounds: Int = 0
-
   /** One large-star pass: every node u hooks its LARGER neighbors to
     * m(u) = min(N(u) ∪ {u}). Edges to smaller neighbors are carried
     * by the smaller endpoint's own pass (the edge frame is kept
@@ -74,6 +63,12 @@ object DupCluster {
       .distinct()
   }
 
+  /** Connected components of an arbitrary (ida, idb) pair graph by
+    * star contraction (large-star then small-star passes until the
+    * edge set stops changing): (id, cluster_id) with cluster_id = the
+    * min id reachable through pairs. Shared by the text (d06, MinHash
+    * pairs), embedding (d09, LSH-bucketed cosine pairs), m07 and s11
+    * cluster operators. */
   private[graft] def fixpointLabels(pairs0: DataFrame): DataFrame = {
     val pairs = pairs0.select(col("ida"), col("idb"))
       .filter(col("ida") =!= col("idb"))
@@ -87,7 +82,6 @@ object DupCluster {
       .toDF("src", "dst").distinct().localCheckpoint(false)
     var edgeCount = edges.count() // materializes the checkpoint
     var changed = true
-    var rounds = 0
     while (changed) {
       val next = smallStar(largeStar(edges)).localCheckpoint(false)
       val nextCount = next.count() // materializes the checkpoint
@@ -98,9 +92,7 @@ object DupCluster {
       changed = nextCount != edgeCount || next.except(edges).count() > 0
       edges = next
       edgeCount = nextCount
-      rounds += 1
     }
-    lastFixpointRounds = rounds
     // converged: disjoint stars with the component-minimum id at the
     // center. A member's only neighbor is its center; a center's
     // neighbors are all larger, so least(src, min(dst)) labels both.

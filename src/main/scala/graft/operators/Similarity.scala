@@ -43,9 +43,6 @@ object Similarity {
   private def dotExpr(a: String, b: String): String =
     s"float_dot($a, $b)"
 
-  private def cosExpr(a: String, b: String): String =
-    s"${dotExpr(a, b)} / (sqrt(${dotExpr(a, a)}) * sqrt(${dotExpr(b, b)}))"
-
   /** Public corpus-with-norm frame + dot kernel for cross-module
     * composition (i11 scores a BM25 shortlist in embedding space). */
   def vecsWithNorm(s: SparkSession, dir: String): DataFrame =
@@ -119,7 +116,7 @@ object Similarity {
     * is the information-theoretic price of sub-quadratic candidate
     * generation at low thresholds (Indyk–Motwani ρ exponent); true
     * near-dup regimes (cs ≥ 0.9, p ≥ 0.86) hold recall far longer. */
-  def lshBandBits(n: Long): Int = {
+  private def lshBandBits(n: Long): Int = {
     val m = (n + LshTargetBucket - 1) / LshTargetBucket
     math.max(4,
       math.ceil(math.log(m.toDouble) / math.log(2.0) - 1e-9).toInt)
@@ -142,7 +139,7 @@ object Similarity {
     * whose pairs are recoverable via their other bands; pairing
     * inside it is quadratic. Never binds at the correctness-gate
     * scales (max bucket ≈ 117 at sf0.1). */
-  val LshBucketCap = 500
+  private val LshBucketCap = 500
 
   /** d08: LSH-bucketed embedding near-dup pairs — the 100 TB route
     * that replaces [[embeddingNearDups]]'s all-pairs baseline.
@@ -523,7 +520,7 @@ object Similarity {
     * 5B embeddings ≈ 100k-wide clusters); aligning the width with the
     * d21 chunk target means clusters sit AT the chunk size on
     * average, so the chunk layer rarely splits one (semantic recall
-    * stays near 1 — measured by ScaleStress) and remains purely the
+    * stays near 1 — BASELINE.md §sf1 scale-stress) and remains purely the
     * skew backstop. At the graded gate and bench dirs the clamp floor
     * applies (n ≤ 2048 → K = 8); at the ×10/×30 scale dirs K is
     * genuinely data-derived (79 / 235). */
@@ -537,38 +534,6 @@ object Similarity {
     * the d21 chunk layer keeps the pair budget linear either way. */
   val KmeansKMax = 16384L
 
-  /** s26: full Lloyd k-means — [[KmeansRounds]] complete EM rounds
-    * (assignment + M-step), where s04/[[ivfCentroids]] is the M-step
-    * alone. First-K init (centroids = the e6-floored embeddings of
-    * vec_id 0..K−1 — deterministic and SQL-expressible, unlike a
-    * seeded k-means++); per round every vector joins the broadcast
-    * K-row centroid table, takes the argmin squared distance (ties →
-    * smallest bucket), and the M-step reduces (bucket, dim, x_e6)
-    * triples with partial aggregation. An empty cluster keeps its
-    * previous centroid (n_vectors = 0 in the output).
-    *
-    * Exact-integer discipline: components are floored at e6 ONCE
-    * (x_e6 = floor(v·1e6)), distances are Σ(x−c)² in BIGINT (≤ 64 ·
-    * (2e6)² ≈ 2.6e14), means are floor(sum/n) — identical arithmetic
-    * in DuckDB, so a 2-round fixed point crosses the hash gate.
-    *
-    * Scale shape: the canonical distributed EM loop — per round ONE
-    * narrow MAP-SIDE assignment pass over the corpus and ONE
-    * partial-agg'd shuffle of (bucket, dim) keys. The K centroids ride
-    * a SINGLE broadcast row as a bucket-sorted array-of-arrays (the
-    * x30/StreamLeak scalar idiom — ≤ [[KmeansKMax]]·dims longs ≈ 8 MB)
-    * and each vector takes its argmin over that array in place via
-    * the codegen'd [[graft.functions.LloydArgmin]] expression —
-    * exactly ONE (bucket, d2) per vector, no n·K row explosion, no
-    * window, no exchange, and no per-pair boxing (the interpreted
-    * `aggregate(transform(…zip_with…))` fold this replaced allocated
-    * a boxed 64-long array per (vector, centroid) pair — 1.6× slower
-    * at the ×10 dir). (Round 12 shipped a crossJoin + `row_number`
-    * argmin that shuffled n·K rows per round — n²/256 under the
-    * data-derived K — the one 100-TB killer the round-12 verdict
-    * named; this is the fix, and the MLlib KMeans broadcast-centroids
-    * shape minus its driver-side collect per round.) Centroid state
-    * lives in the plan (K·dims rows), never on the driver. */
   /** The Lloyd loop state shared by s26 (centroid output) and s27
     * (assignment-quality output): the final per-(bucket, dim) stats
     * and the final-round assignment (vec_id, bucket, d2). Lazy (un-
@@ -642,6 +607,38 @@ object Similarity {
     (stats.localCheckpoint(), asg.localCheckpoint())
   }
 
+  /** s26: full Lloyd k-means — [[KmeansRounds]] complete EM rounds
+    * (assignment + M-step), where s04/[[ivfCentroids]] is the M-step
+    * alone. First-K init (centroids = the e6-floored embeddings of
+    * vec_id 0..K−1 — deterministic and SQL-expressible, unlike a
+    * seeded k-means++); per round every vector joins the broadcast
+    * K-row centroid table, takes the argmin squared distance (ties →
+    * smallest bucket), and the M-step reduces (bucket, dim, x_e6)
+    * triples with partial aggregation. An empty cluster keeps its
+    * previous centroid (n_vectors = 0 in the output).
+    *
+    * Exact-integer discipline: components are floored at e6 ONCE
+    * (x_e6 = floor(v·1e6)), distances are Σ(x−c)² in BIGINT (≤ 64 ·
+    * (2e6)² ≈ 2.6e14), means are floor(sum/n) — identical arithmetic
+    * in DuckDB, so a 2-round fixed point crosses the hash gate.
+    *
+    * Scale shape: the canonical distributed EM loop — per round ONE
+    * narrow MAP-SIDE assignment pass over the corpus and ONE
+    * partial-agg'd shuffle of (bucket, dim) keys. The K centroids ride
+    * a SINGLE broadcast row as a bucket-sorted array-of-arrays (the
+    * x30/StreamLeak scalar idiom — ≤ [[KmeansKMax]]·dims longs ≈ 8 MB)
+    * and each vector takes its argmin over that array in place via
+    * the codegen'd [[graft.functions.LloydArgmin]] expression —
+    * exactly ONE (bucket, d2) per vector, no n·K row explosion, no
+    * window, no exchange, and no per-pair boxing (the interpreted
+    * `aggregate(transform(…zip_with…))` fold this replaced allocated
+    * a boxed 64-long array per (vector, centroid) pair — 1.6× slower
+    * at the ×10 dir). (Round 12 shipped a crossJoin + `row_number`
+    * argmin that shuffled n·K rows per round — n²/256 under the
+    * data-derived K — the one 100-TB killer the round-12 verdict
+    * named; this is the fix, and the MLlib KMeans broadcast-centroids
+    * shape minus its driver-side collect per round.) Centroid state
+    * lives in the plan (K·dims rows), never on the driver. */
   def kmeansLloyd(s: SparkSession, dir: String): DataFrame = {
     val (stats, _) = lloydStateMemo.refresh(s, dir)
     stats.select(col("bucket"), col("dim").cast("int").as("dim"),
@@ -690,8 +687,8 @@ object Similarity {
     * ceil(n_members / this) hash-assigned sub-chunks before the pair
     * self-join, so the pair budget is ~n·[[SemDedupChunkTarget]]/2 —
     * LINEAR in the corpus — instead of Σ(n_k²)/2, which at fixed K is
-    * (n/K)²·K/2 (ScaleStress measured ×100 pair growth on ×10 data
-    * before this bound existed). This is the paper's own cluster-
+    * (n/K)²·K/2 (×100 pair growth on ×10 data before this bound
+    * existed — BASELINE.md §sf1 scale-stress). This is the paper's own cluster-
     * chunking mitigation (Abbas et al. 2023 §3 run the within-cluster
     * search on bounded blocks); the recall trade is the standard one
     * — a dup pair split across chunks is missed — and is uniform
@@ -724,6 +721,38 @@ object Similarity {
       .select(assert_true(coalesce(col("mx"), lit(0L)) <= SemDedupMaxChunk,
         concat(lit(s"semanticDedup chunk over the $SemDedupMaxChunk hard " +
           "cap (LCG skew): "), col("mx"))).as("chunk_ok"))
+
+  /** The final Lloyd assignment (vec_id, bucket) d21 buckets on —
+    * exposed so specs can pin d21's clusters and pair budget. */
+  private[graft] def semanticDedupAssignment(
+      s: SparkSession, dir: String): DataFrame =
+    lloydStateMemo(s, dir)._2.select(col("vec_id"), col("bucket"))
+
+  /** The d21 chunk rule on any (vec_id, bucket, …) frame: append a
+    * `chunk` id so each bucket splits into ceil(bn /
+    * [[SemDedupChunkTarget]]) hash-assigned sub-chunks. Factored out
+    * so the gated query and the Round11Spec pair-budget pin apply
+    * LITERALLY the same rule. The sizes side is
+    * |buckets| rows (K for d21) — AQE broadcasts it. */
+  private[graft] def withSemDedupChunk(a: DataFrame): DataFrame = {
+    val sizes = a.groupBy("bucket").agg(count(lit(1)).as("bn"))
+    a.join(sizes, "bucket")
+      .withColumn("n_chunks", expr(
+        s"(bn + ${SemDedupChunkTarget - 1}L) div ${SemDedupChunkTarget}L"))
+      .withColumn("chunk", expr(
+        s"((vec_id % ${TextHash.P}L) * 2654435761L) % ${TextHash.P}L % n_chunks"))
+      .drop("bn", "n_chunks")
+  }
+
+  /** d21's chunked pair space: per (bucket, chunk) the member count —
+    * exposed so Round11Spec can pin the pair budget
+    * Σ cn·(cn−1)/2 ≤ n·[[SemDedupChunkTarget]] (the linear bound the
+    * chunk layer guarantees) without re-deriving the chunk rule. */
+  private[graft] def semanticDedupChunks(
+      s: SparkSession, dir: String): DataFrame =
+    withSemDedupChunk(semanticDedupAssignment(s, dir))
+      .groupBy("bucket", "chunk")
+      .agg(count(lit(1)).as("cn"))
 
   /** d21: SemDeDup — Abbas et al. (2023) "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication": partition
@@ -760,66 +789,6 @@ object Similarity {
     * scheduled). The Lloyd pass itself is s26's: per round
     * one K-row-broadcast assignment scan + one partial-agg'd (bucket,
     * dim) shuffle — centroid state never touches the driver. */
-  /** The final Lloyd assignment (vec_id, bucket) d21 buckets on —
-    * exposed for ScaleStress's SemDeDup pair-budget telemetry. */
-  private[graft] def semanticDedupAssignment(
-      s: SparkSession, dir: String): DataFrame =
-    lloydStateMemo(s, dir)._2.select(col("vec_id"), col("bucket"))
-
-  /** The d21 chunk rule on any (vec_id, bucket, …) frame: append a
-    * `chunk` id so each bucket splits into ceil(bn /
-    * [[SemDedupChunkTarget]]) hash-assigned sub-chunks. Factored out
-    * so the gated query, the telemetry, and the Round11Spec pair-
-    * budget pin all apply LITERALLY the same rule. The sizes side is
-    * |buckets| rows (K for d21) — AQE broadcasts it. */
-  private[graft] def withSemDedupChunk(a: DataFrame): DataFrame = {
-    val sizes = a.groupBy("bucket").agg(count(lit(1)).as("bn"))
-    a.join(sizes, "bucket")
-      .withColumn("n_chunks", expr(
-        s"(bn + ${SemDedupChunkTarget - 1}L) div ${SemDedupChunkTarget}L"))
-      .withColumn("chunk", expr(
-        s"((vec_id % ${TextHash.P}L) * 2654435761L) % ${TextHash.P}L % n_chunks"))
-      .drop("bn", "n_chunks")
-  }
-
-  /** d21's chunked pair space: per (bucket, chunk) the member count —
-    * exposed so Round11Spec and ScaleStress can pin the pair budget
-    * Σ cn·(cn−1)/2 ≤ n·[[SemDedupChunkTarget]] (the linear bound the
-    * chunk layer guarantees) without re-deriving the chunk rule. */
-  private[graft] def semanticDedupChunks(
-      s: SparkSession, dir: String): DataFrame =
-    withSemDedupChunk(semanticDedupAssignment(s, dir))
-      .groupBy("bucket", "chunk")
-      .agg(count(lit(1)).as("cn"))
-
-  /** d21 recall telemetry (ScaleStress-only, never gated — its pair
-    * space is the UNCHUNKED Σ n_k²/2 within-cluster search the gated
-    * operator exists to avoid): over all co-CLUSTER pairs clearing
-    * [[SemDedupTau]] (the truth the paper's full within-cluster
-    * search would report), how many the chunk layer keeps co-chunked.
-    * With K data-derived at the chunk width, clusters average one
-    * chunk and recall sits near 1; at a FIXED K the hash chunks
-    * approach random partitions of giant clusters and recall decays
-    * toward chance (ChunkTarget / cluster width) — the round-12
-    * reason K now grows. Returns one row (true_pairs, cochunk_pairs). */
-  private[graft] def semanticDedupRecall(
-      s: SparkSession, dir: String): DataFrame = {
-    val (_, assigned) = lloydStateMemo(s, dir)
-    val ec = withSemDedupChunk(withNorm(emb(s, dir))
-        .join(assigned.select(col("vec_id"), col("bucket")), "vec_id"))
-      .select(col("vec_id"), col("bucket"), col("chunk"),
-        col("embedding"), col("nrm"))
-    ec.as("a").join(ec.as("b"),
-        col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select((expr(dotExpr("a.embedding", "b.embedding")) /
-          (col("a.nrm") * col("b.nrm"))).as("cs"),
-        (col("a.chunk") === col("b.chunk")).cast("long").as("same"))
-      .filter(col("cs") >= SemDedupTau)
-      .agg(count(lit(1)).as("true_pairs"),
-        coalesce(sum(col("same")), lit(0L)).as("cochunk_pairs"))
-  }
-
   def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     val (_, assigned) = lloydStateMemo(s, dir)
     val e = withNorm(emb(s, dir))

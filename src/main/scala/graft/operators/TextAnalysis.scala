@@ -196,23 +196,6 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** i01: inverted index — per term the document frequency and the
-    * first five postings (smallest doc_ids), the artifact a
-    * contamination checker or corpus search probes.
-    *
-    * df comes from a partial-aggregated count (never materializes a
-    * posting list); the head-of-postings comes from a per-term window
-    * rank that keeps ≤5 rows BEFORE collect_list, so no aggregation
-    * buffer ever holds a full posting list. At 100 TB, where a
-    * stop-word's full postings dwarf one task, the same two outputs
-    * would come from posting shards ((term, doc-block) groups) merged
-    * by per-shard top-k — the per-term sort here is the small-corpus
-    * shortcut, not the contract.
-    *
-    * The postings head is emitted as a comma-joined STRING, not an
-    * array: gated outputs must be scalar-only (the driver's pandas
-    * compare cannot sort/hash array cells). Sort happens on the
-    * numeric array BEFORE the string cast so '10' sorts after '2'. */
   /** t19: shingle-novelty scoring — the dedup-aware quality signal:
     * what fraction of a document's word-5-gram shingles appear in NO
     * other document. Boilerplate-heavy and template-generated docs
@@ -333,33 +316,6 @@ object TextAnalysis {
       .orderBy("w1", "w2")
   }
 
-  /** i03: BM25 ranked retrieval for the standing query-term set
-    * ([[Similarity.HybridQueryTerms]]) — the scoring function every
-    * lexical retrieval stack uses, in a log-free exact-integer form
-    * so the gate compares bit-for-bit with no transcendental-libm
-    * drift between engines. With k1 = 1.2, b = 0.75 the classic
-    * tf-saturation term clears to integers (multiply through by
-    * 10·L, with avgdl = L/N):
-    *
-    *   tfpart = tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
-    *          = 22·tf·L / (10·tf·L + 3·L + 9·dl·N)
-    *
-    * and the idf uses the Robertson–Sparck-Jones *ratio*
-    * (2(N−df)+1)/(2df+1) instead of its log — per-term this is a
-    * monotone transform of the log idf, so weighting still rises as
-    * df falls; the additive-combination semantics differ from the
-    * log form (documented trade for exact-integer gating — swapping
-    * in `ln` is a one-expression change the plan shape is agnostic
-    * to). Intermediates ride DECIMAL(38,0) (Spark) / HUGEINT (DuckDB)
-    * so the scaled products are exact far past sf1000 (q48's lesson).
-    *
-    * Scale shape: one token fan-out feeds both the corpus-stat
-    * aggregate (1-row broadcast) and the (doc, term) tf groupBy over
-    * QUERY-TERM hits only (the filter lands before the explode, so
-    * the shuffled volume is matches, not the corpus token stream);
-    * df is a broadcast-sized aggregate over the matched set; the
-    * top-100 is TakeOrderedAndProject — per-partition local top-k,
-    * never a full sort. */
   /** i03's exact-integer BM25 fragments, factored so i12's
     * second-round scorer is the SAME expression text — a drifted copy
     * would desynchronize the feedback rescoring from the gated
@@ -387,6 +343,33 @@ object TextAnalysis {
         expr("""cast((cast(tfpart_e6 as decimal(38,0)) * idf_e6)
              div 1000000 as long)""").as("contrib_e6"))
 
+  /** i03: BM25 ranked retrieval for the standing query-term set
+    * ([[Similarity.HybridQueryTerms]]) — the scoring function every
+    * lexical retrieval stack uses, in a log-free exact-integer form
+    * so the gate compares bit-for-bit with no transcendental-libm
+    * drift between engines. With k1 = 1.2, b = 0.75 the classic
+    * tf-saturation term clears to integers (multiply through by
+    * 10·L, with avgdl = L/N):
+    *
+    *   tfpart = tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
+    *          = 22·tf·L / (10·tf·L + 3·L + 9·dl·N)
+    *
+    * and the idf uses the Robertson–Sparck-Jones *ratio*
+    * (2(N−df)+1)/(2df+1) instead of its log — per-term this is a
+    * monotone transform of the log idf, so weighting still rises as
+    * df falls; the additive-combination semantics differ from the
+    * log form (documented trade for exact-integer gating — swapping
+    * in `ln` is a one-expression change the plan shape is agnostic
+    * to). Intermediates ride DECIMAL(38,0) (Spark) / HUGEINT (DuckDB)
+    * so the scaled products are exact far past sf1000 (q48's lesson).
+    *
+    * Scale shape: one token fan-out feeds both the corpus-stat
+    * aggregate (1-row broadcast) and the (doc, term) tf groupBy over
+    * QUERY-TERM hits only (the filter lands before the explode, so
+    * the shuffled volume is matches, not the corpus token stream);
+    * df is a broadcast-sized aggregate over the matched set; the
+    * top-100 is TakeOrderedAndProject — per-partition local top-k,
+    * never a full sort. */
   def bm25(s: SparkSession, dir: String, shortlist: Int = 100): DataFrame = {
     val termsIn = Similarity.HybridQueryTerms
       .map(t => s"'$t'").mkString("(", ", ", ")")
@@ -494,40 +477,10 @@ object TextAnalysis {
     * sf0.1 it measured exactly that). Interpolated into the oracle. */
   val PruneKeepPermille = 250L
 
-  /** i14: static index-pruning report — Carmel et al. (2001) "Static
-    * index pruning for information retrieval systems": shrink the
-    * inverted index by keeping only the top [[PruneKeepPermille]]‰
-    * of each term's postings BY IMPACT (the term's exact-integer BM25
-    * contribution, i03's fragments verbatim), then measure what the
-    * cut does to the
-    * multi-term query's top-10 — the size/quality trade every
-    * planet-scale search deployment prices before shipping an index
-    * tier. The lexical complement of the s16/s18 quantization-error
-    * reports: those price PQ compression of the vector index, this
-    * prices posting-list truncation of the text index.
-    *
-    * Output: rank 1..10 of the FULL index ranking side-by-side with
-    * the PRUNED index ranking — each full doc's score, the doc the
-    * pruned index puts at that rank, its (possibly degraded) score,
-    * and whether the full doc survived anywhere in the pruned top-10.
-    *
-    * Scale shape (rounds 15–16): the per-term top-P cut is the
-    * distributed top-fraction selection in [[prunedPostings]] — a
-    * 7-level radix walk over per-term contribution histograms (each
-    * level one partial-agg pass over the persisted postings; the
-    * ≤ terms×512-row histogram walks on the DRIVER since round 16)
-    * that finds the exact threshold value, then a broadcast-join
-    * filter; no task ever sorts a posting list, so a stop term's
-    * Θ(corpus) df meets no single-task work (the old refusal guard
-    * now pins only the threshold TIE set, at frame build). Both
-    * rankings are partial-agg'd sums over
-    * matches-bound frames; the side-by-side join is k rows against k
-    * rows. Corpus-scale work is i03's token fan-out, paid once and
-    * shared by both branches through one persisted postings frame. */
   /** i14's scored postings frame (term, doc_id, df, contrib_e6) —
-    * extracted so ScaleStress can measure the per-term pruning
-    * window's skew (max df = the largest single-term sort) on exactly
-    * the frame the operator windows over. */
+    * extracted so Round15Spec checks the threshold cut against the
+    * rank-window cut on exactly the frame the operator prunes (its df
+    * skew at scale: BASELINE.md §sf1 scale-stress). */
   private[graft] def indexPruningPostings(
       s: SparkSession, dir: String): DataFrame = {
     val termsIn = Similarity.HybridQueryTerms
@@ -579,6 +532,15 @@ object TextAnalysis {
     * representable corpus, so seven levels always reach exactness. */
   private val PruneRadixShifts = Seq(54, 45, 36, 27, 18, 9, 0)
 
+  /** Early-exit bound for the radix walk (round 16): once a term's
+    * crossing bucket holds at most this many postings, the remaining
+    * levels are replaced by ONE driver collect of that bucket's
+    * contribution values — the exact threshold falls out of a local
+    * walk over ≤512 longs instead of up-to-four more corpus-scale
+    * rescans + histogram collects. 512 = one radix fan-out, the same
+    * per-term bound the round-15 rework budgeted per level. */
+  private val PruneTieCollectCap = 512L
+
   /** i14's distributed top-fraction selection: per term, keep the
     * top ceil(df·[[PruneKeepPermille]]/1000) postings by
     * (contrib_e6 desc, doc_id asc) — the identical cut the old
@@ -625,15 +587,6 @@ object TextAnalysis {
     * At 100 TB each level is one rescan of the persisted roster
     * postings plus a ≤ terms×512-row driver collect; no task ever
     * holds more than one histogram bucket or the (capped) tie set. */
-  /** Early-exit bound for the radix walk (round 16): once a term's
-    * crossing bucket holds at most this many postings, the remaining
-    * levels are replaced by ONE driver collect of that bucket's
-    * contribution values — the exact threshold falls out of a local
-    * walk over ≤512 longs instead of up-to-four more corpus-scale
-    * rescans + histogram collects. 512 = one radix fan-out, the same
-    * per-term bound the round-15 rework budgeted per level. */
-  private val PruneTieCollectCap = 512L
-
   private[graft] def prunedPostings(postings: DataFrame): DataFrame = {
     val s = postings.sparkSession
     import s.implicits._
@@ -755,6 +708,36 @@ object TextAnalysis {
       .select(col("term"), col("doc_id"), col("df"), col("contrib_e6"))
   }
 
+  /** i14: static index-pruning report — Carmel et al. (2001) "Static
+    * index pruning for information retrieval systems": shrink the
+    * inverted index by keeping only the top [[PruneKeepPermille]]‰
+    * of each term's postings BY IMPACT (the term's exact-integer BM25
+    * contribution, i03's fragments verbatim), then measure what the
+    * cut does to the
+    * multi-term query's top-10 — the size/quality trade every
+    * planet-scale search deployment prices before shipping an index
+    * tier. The lexical complement of the s16/s18 quantization-error
+    * reports: those price PQ compression of the vector index, this
+    * prices posting-list truncation of the text index.
+    *
+    * Output: rank 1..10 of the FULL index ranking side-by-side with
+    * the PRUNED index ranking — each full doc's score, the doc the
+    * pruned index puts at that rank, its (possibly degraded) score,
+    * and whether the full doc survived anywhere in the pruned top-10.
+    *
+    * Scale shape (rounds 15–16): the per-term top-P cut is the
+    * distributed top-fraction selection in [[prunedPostings]] — a
+    * 7-level radix walk over per-term contribution histograms (each
+    * level one partial-agg pass over the persisted postings; the
+    * ≤ terms×512-row histogram walks on the DRIVER since round 16)
+    * that finds the exact threshold value, then a broadcast-join
+    * filter; no task ever sorts a posting list, so a stop term's
+    * Θ(corpus) df meets no single-task work (the old refusal guard
+    * now pins only the threshold TIE set, at frame build). Both
+    * rankings are partial-agg'd sums over
+    * matches-bound frames; the side-by-side join is k rows against k
+    * rows. Corpus-scale work is i03's token fan-out, paid once and
+    * shared by both branches through one persisted postings frame. */
   def indexPruning(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val postings = indexPruningPostings(s, dir)
       // the full and pruned rankings share one postings pass
@@ -786,6 +769,23 @@ object TextAnalysis {
       .orderBy("rank")
   }
 
+  /** i01: inverted index — per term the document frequency and the
+    * first five postings (smallest doc_ids), the artifact a
+    * contamination checker or corpus search probes.
+    *
+    * df comes from a partial-aggregated count (never materializes a
+    * posting list); the head-of-postings comes from a per-term window
+    * rank that keeps ≤5 rows BEFORE collect_list, so no aggregation
+    * buffer ever holds a full posting list. At 100 TB, where a
+    * stop-word's full postings dwarf one task, the same two outputs
+    * would come from posting shards ((term, doc-block) groups) merged
+    * by per-shard top-k — the per-term sort here is the small-corpus
+    * shortcut, not the contract.
+    *
+    * The postings head is emitted as a comma-joined STRING, not an
+    * array: gated outputs must be scalar-only (the driver's pandas
+    * compare cannot sort/hash array cells). Sort happens on the
+    * numeric array BEFORE the string cast so '10' sorts after '2'. */
   def invertedIndex(s: SparkSession, dir: String): DataFrame = {
     val toks = docs(s, dir)
       .select(col("doc_id"),
@@ -810,20 +810,6 @@ object TextAnalysis {
     * first within 3 positions (1 = adjacent, i02's case). */
   val ProximitySlop = 3
 
-  /** i04: proximity (sloppy-phrase) search — occurrences of the
-    * corpus's top bigram where the terms appear in order within
-    * [[ProximitySlop]] positions, per document with the tightest gap.
-    * The retrieval primitive between exact phrase match (i02, gap=1)
-    * and bag-of-words AND: "new … york" with an adjective between
-    * still hits. Query selection (the top bigram) is i02's rule
-    * verbatim, so the two operators answer the same query at two
-    * strictnesses.
-    *
-    * Scale shape: identical to i02 — only the TWO query terms'
-    * positional postings leave the scan (broadcast 1-row query), the
-    * window test is an equi-join on doc_id + a range filter on the
-    * position delta, cost bounded by the query terms' frequency,
-    * never the corpus. */
   /** i05's snippet window width, in tokens. */
   val SnippetWindow = 16
 
@@ -871,6 +857,20 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** i04: proximity (sloppy-phrase) search — occurrences of the
+    * corpus's top bigram where the terms appear in order within
+    * [[ProximitySlop]] positions, per document with the tightest gap.
+    * The retrieval primitive between exact phrase match (i02, gap=1)
+    * and bag-of-words AND: "new … york" with an adjective between
+    * still hits. Query selection (the top bigram) is i02's rule
+    * verbatim, so the two operators answer the same query at two
+    * strictnesses.
+    *
+    * Scale shape: identical to i02 — only the TWO query terms'
+    * positional postings leave the scan (broadcast 1-row query), the
+    * window test is an equi-join on doc_id + a range filter on the
+    * position delta, cost bounded by the query terms' frequency,
+    * never the corpus. */
   def proximitySearch(s: SparkSession, dir: String): DataFrame = {
     val top = docs(s, dir)
       .select(tokens(col("text")).as("tk"))
@@ -1076,8 +1076,8 @@ object TextAnalysis {
     * spark_partition_id — so re-evaluating the frame in two plan
     * branches can never disagree on bucket membership. Per-bucket
     * row bound: min(⌈2^o/S⌉, corpus/2^o) ≤ √(corpus_tokens/S) —
-    * ~560k rows at 2·10¹³ tokens with S = 64. Exposed for
-    * ScaleStress's max-sort-bucket telemetry. */
+    * ~560k rows at 2·10¹³ tokens with S = 64 (the max sort bucket
+    * measured at scale: BASELINE.md §sf1 scale-stress). */
   private[graft] def zipfFreqGroups(
       s: SparkSession, dir: String): DataFrame = {
     val sb = ZipfRankSubBuckets
@@ -1920,24 +1920,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"),
         when(qualityKeepCond, 1L).otherwise(-1L).as("y"))
 
-  /** The labeled per-doc feature stream (doc_id, source, y, bucket,
-    * tf) shared by t36 (full-corpus training), t37 (split training +
-    * held-out eval) and, through [[clsWeightsMemo]], x33 (serving) —
-    * one labeling + featurization, so no consumer can disagree on it.
-    * Rows: the tf-grouped hashed token features UNION one always-on
-    * [[ClsBiasBucket]] row per labeled document (tf = 1) — the bias
-    * lets a linear model express the quality rule's length
-    * thresholds, and guarantees even a token-less document is
-    * represented (it scores sign(w_bias)).
-    *
-    * In-plan label-space GUARD (the d21 assert_true idiom): a
-    * testdata refresh that degenerates the quality rule (every doc
-    * passes, or none does) would otherwise silently train a
-    * single-class model. A 1-row crossJoin'd assert_true fails the
-    * query loudly unless BOTH classes are non-empty (an empty corpus
-    * also fails — training on nothing is an error, unlike d21's
-    * report-0-rows case). The guard aggregates the label frame — one
-    * narrow pass, not a second corpus tokenize. */
   /** t36's label-space refusal as a 1-row guard frame over any
     * labeled frame with a ±1 `y` column — factored so the guard-sweep
     * spec can fire it on a synthetic single-class input. */
@@ -1957,6 +1939,24 @@ object TextAnalysis {
           coalesce(col("nn"), lit(0L)), lit(" — did a testdata refresh " +
             "break the quality rule?"))).as("label_ok"))
 
+  /** The labeled per-doc feature stream (doc_id, source, y, bucket,
+    * tf) shared by t36 (full-corpus training), t37 (split training +
+    * held-out eval) and, through [[clsWeightsMemo]], x33 (serving) —
+    * one labeling + featurization, so no consumer can disagree on it.
+    * Rows: the tf-grouped hashed token features UNION one always-on
+    * [[ClsBiasBucket]] row per labeled document (tf = 1) — the bias
+    * lets a linear model express the quality rule's length
+    * thresholds, and guarantees even a token-less document is
+    * represented (it scores sign(w_bias)).
+    *
+    * In-plan label-space GUARD (the d21 assert_true idiom): a
+    * testdata refresh that degenerates the quality rule (every doc
+    * passes, or none does) would otherwise silently train a
+    * single-class model. A 1-row crossJoin'd assert_true fails the
+    * query loudly unless BOTH classes are non-empty (an empty corpus
+    * also fails — training on nothing is an error, unlike d21's
+    * report-0-rows case). The guard aggregates the label frame — one
+    * narrow pass, not a second corpus tokenize. */
   private[operators] def labeledFeatures(
       s: SparkSession, dir: String): DataFrame = {
     val lab = qualityLabels(s, dir)

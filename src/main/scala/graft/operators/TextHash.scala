@@ -145,8 +145,8 @@ object TextHash {
     * signature table once and every dedup/text stage reads it from
     * storage. The frame is (doc_id, hv, n_sh) — ~8 B per corpus
     * shingle, two orders of magnitude smaller than the text it
-    * summarizes. Direct [[shingleHashes]] callers (ScaleStress
-    * telemetry, ad-hoc frames) always rebuild. */
+    * summarizes. Direct [[shingleHashes]] callers (ad-hoc frames)
+    * always rebuild. */
   private[operators] val shingleHashesMemo =
     Memo("shingle_hashes") { (s, dir) =>
       shingleHashes(graft.engine.Tables.t(s, dir, "documents"))

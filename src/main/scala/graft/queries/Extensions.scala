@@ -364,9 +364,6 @@ object Extensions {
   private def cosM(a: String, b: String, m: Int): String =
     s"${dotM(a, b, m)} / (sqrt(${dotM(a, a, m)}) * sqrt(${dotM(b, b, m)}))"
 
-  /** PQ codebook (8 subspaces × 16 centroids × 8 dims, LCG addend
-    * 77777 — graft.functions.Pq) + per-(vector, subspace, centroid)
-    * squared distances + the argmin code assignment. */
   /** IVF coarse assignment: LCG(54321) hyperplane centroids, argmax
     * dot (ties → smallest k) — ends in `assigned(vec_id, bucket)`.
     * Shared by the s04 oracle and s30's residual chain. */
@@ -384,6 +381,9 @@ object Extensions {
                   (PARTITION BY vec_id ORDER BY dot DESC, k) AS crnk FROM dots) r
           WHERE crnk = 1)"""
 
+  /** PQ codebook (8 subspaces × 16 centroids × 8 dims, LCG addend
+    * 77777 — graft.functions.Pq) + per-(vector, subspace, centroid)
+    * squared distances + the argmin code assignment. */
   private val pqCodeCtes = """
       cb AS (SELECT s, k,
           [((1103515245::BIGINT * ((s*16 + k)*8 + d) + 77777) % 2147483648)
@@ -511,9 +511,6 @@ object Extensions {
                 array_to_string(sig[b*4+1 : b*4+4], '-') AS band_key
                 FROM sigs, generate_series(0, 7) t(b))"""
 
-  /** CTE chain ending in `pairs(ida, idb, n_match)` — the MinHash-LSH
-    * near-dup pairs of d03, shared by the d06 connected-components
-    * oracle. */
   /** The s26 unrolled-Lloyd CTE chain ending in `st<R>` (per-round
     * centroid state) and `a<R>` (final assignment with its winning
     * d2), shared by s26 and the s27 quality report so the loop
@@ -548,6 +545,9 @@ object Extensions {
                FROM st${r - 1} p LEFT JOIN m$r m USING (bucket, dim))"""
       }.mkString(",\n      ")}"""
 
+  /** CTE chain ending in `pairs(ida, idb, n_match)` — the MinHash-LSH
+    * near-dup pairs of d03, shared by the d06 connected-components
+    * oracle. */
   private val minhashPairCtes = s"""$minhashBandCtes,
       cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
                FROM bands a JOIN bands b ON a.band_idx = b.band_idx
@@ -619,10 +619,6 @@ object Extensions {
           CAST((c12 * 1000000) // c1 AS BIGINT) AS p_e6
         FROM pair JOIN uni USING (w1))"""
 
-  /** `minhashPairCtes` extended with the connected-components chain
-    * ending in `lab(id, cluster_id)` — shared by d06 and d07 so the
-    * cluster definition cannot drift between label assignment and
-    * canonical selection. Callers must open with WITH RECURSIVE. */
   /** Recursive connected-components over a `pairs(ida, idb)` CTE that
     * must already be in scope — ends in lab(id, cluster_id). */
   private def ccOverPairs(pairsName: String): String = s"""
@@ -635,6 +631,10 @@ object Extensions {
       lab AS (SELECT src AS id, least(src, min(dst)) AS cluster_id
               FROM reach GROUP BY src)"""
 
+  /** `minhashPairCtes` extended with the connected-components chain
+    * ending in `lab(id, cluster_id)` — shared by d06 and d07 so the
+    * cluster definition cannot drift between label assignment and
+    * canonical selection. Callers must open with WITH RECURSIVE. */
   private val ccCtes = s"""$minhashPairCtes,${ccOverPairs("pairs")}"""
 
   /** CTE chain ending in `escored(ida, idb, cs)` — the LSH-banded
@@ -858,18 +858,6 @@ object Extensions {
       FROM e JOIN w USING (bucket)
       GROUP BY e.doc_id ORDER BY doc_id"""
 
-  /** t36's batch perceptron unrolled to [[TextAnalysis
-    * .PerceptronRounds]] rounds — generated (not hand-copied) so the
-    * round count, seed-label rule, bucket space, and the rate-free
-    * integer update all interpolate from the Spark-side constants.
-    * Every round is the same two joins the Spark loop runs: margins
-    * from the labeled feature stream against the previous weights,
-    * then the misclassified documents' y·tf summed per bucket.
-    * `ft` and each `w_r` are MATERIALIZED: each round references the
-    * previous weights twice, so DuckDB's default CTE inlining would
-    * re-expand the corpus-scale feature chain ~2^rounds times (it
-    * exhausted the spill disk at the ×30 scale dir before this) —
-    * the SQL analog of the Spark loop's per-round localCheckpoint. */
   /** The hard-example perceptron round CTEs (m_r margins, s_r the
     * per-class [[TextAnalysis.ClsHardK]] most-misclassified cut, d_r
     * deltas, w_r MATERIALIZED — see the t36 note) over a labeled
@@ -924,6 +912,18 @@ object Extensions {
              FROM generate_series(0, ${TextAnalysis.ClsBuckets}) t(i)),
       ${perceptronRoundsOver("ft")}"""
 
+  /** t36's batch perceptron unrolled to [[TextAnalysis
+    * .PerceptronRounds]] rounds — generated (not hand-copied) so the
+    * round count, seed-label rule, bucket space, and the rate-free
+    * integer update all interpolate from the Spark-side constants.
+    * Every round is the same two joins the Spark loop runs: margins
+    * from the labeled feature stream against the previous weights,
+    * then the misclassified documents' y·tf summed per bucket.
+    * `ft` and each `w_r` are MATERIALIZED: each round references the
+    * previous weights twice, so DuckDB's default CTE inlining would
+    * re-expand the corpus-scale feature chain ~2^rounds times (it
+    * exhausted the spill disk at the ×30 scale dir before this) —
+    * the SQL analog of the Spark loop's per-round localCheckpoint. */
   private lazy val t36Oracle: String = s"""
       WITH $clsTrainChainCtes
       SELECT CAST(bucket AS BIGINT) AS bucket, CAST(w AS BIGINT) AS w

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract invariants that don't need a SparkSession — the
@@ -237,5 +241,43 @@ class ContractSpec extends AnyFunSuite {
             "so flat readers see the median")
       }
     }
+  }
+
+  /** Every `src/main` Scala source with its lines. */
+  private lazy val mainSources: Seq[(Path, IndexedSeq[String])] = {
+    val files = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sorted
+    assert(files.nonEmpty, "no sources under src/main")
+    files.map(p => p -> Files.readAllLines(p).asScala.toIndexedSeq)
+  }
+
+  test("every src/main doc comment sits on the definition it documents") {
+    // a doc comment followed directly by another one is dropped by
+    // scaladoc: the second attaches to the definition, the first to
+    // nothing — the shape a factored-out helper's doc leaves behind
+    // when it is pasted between a definition and that definition's doc
+    val orphans = for {
+      (p, lines) <- mainSources
+      i <- 1 until lines.size
+      if lines(i - 1).matches(""".*\*/\s*""") && lines(i).matches("""\s*/\*\*.*""")
+    } yield s"$p:${i + 1}"
+    assert(orphans.isEmpty, "doc comments followed by another doc comment")
+  }
+
+  test("no src/main object declares a non-private var") {
+    // an object is one instance per JVM, shared by every session in it:
+    // a var there is global mutable state that any caller can write
+    val header = """(\s*)(?:(?:private|protected)(?:\[\w+\])?\s+|case\s+)*object\s+(\w+).*\{\s*""".r
+    val member = """\s*((?:@\w+\s+|(?:private|protected|override|final|lazy|implicit)(?:\[\w+\])?\s+)*)var\s+(\w+).*""".r
+    val privately = """(?:^|\s)private(?:\[this\])?\s""".r
+    val public = for {
+      (p, lines) <- mainSources
+      (header(indent, obj), at) <- lines.zipWithIndex
+      body = lines.drop(at + 1).takeWhile(l => !l.startsWith(s"$indent}"))
+      (member(mods, name), i) <- body.zipWithIndex
+      if body(i).takeWhile(_ == ' ').length == indent.length + 2
+      if privately.findFirstIn(s" $mods").isEmpty
+    } yield s"$obj.$name ($p:${at + i + 2})"
+    assert(public.isEmpty, "objects with non-private vars")
   }
 }

@@ -19,8 +19,8 @@ class Round11Spec extends AnyFunSuite {
   test("d21: chunk rule bounds the pair budget linearly on a " +
       "pathological one-hot cluster") {
     // 10k members in ONE bucket — the exact shape that made the
-    // unchunked stage quadratic (ScaleStress measured x100 pair
-    // growth on x10 data at fixed K before the chunk layer). The rule
+    // unchunked stage quadratic (x100 pair growth on x10 data at fixed
+    // K before the chunk layer, BASELINE.md §sf1 scale-stress). The rule
     // must split it so Sum C(cn,2) <= n * ChunkTarget (linear bound)
     // and no chunk exceeds the hard cap the in-plan guard enforces.
     val n = 10000L
