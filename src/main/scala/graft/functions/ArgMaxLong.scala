@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.AnalysisException
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, Expression, GreaterThan, If, IsNotNull, IsNull, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
@@ -34,19 +32,15 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   *    ((us, event_id) is unique per event).
   */
 case class ArgMaxLong(valueExpr: Expression, ord1: Expression,
-    ord2: Expression) extends DeclarativeAggregate {
+    ord2: Expression) extends DeclarativeAggregate with NativeFunction {
+
+  def sqlName: String = "argmax_long"
+  def inputTypes: Seq[DataType] = Seq(LongType, LongType, LongType)
 
   override def children: Seq[Expression] = Seq(valueExpr, ord1, ord2)
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "argmax_long"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType == LongType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"${ArgMaxLong.Signature} got " +
-        children.map(_.dataType.sql.toLowerCase).mkString("(", ", ", ")"))
 
   private lazy val bv = AttributeReference("bv", LongType)()
   private lazy val b1 = AttributeReference("b1", LongType)()
@@ -100,17 +94,4 @@ case class ArgMaxLong(valueExpr: Expression, ord1: Expression,
       newChildren: IndexedSeq[Expression]): ArgMaxLong =
     copy(valueExpr = newChildren(0), ord1 = newChildren(1),
       ord2 = newChildren(2))
-}
-
-object ArgMaxLong {
-  val Signature = "argmax_long(bigint, bigint, bigint)"
-
-  /** The SQL builder: a wrong arity fails analysis naming [[Signature]]
-    * (argument types are checked by `checkInputDataTypes`). */
-  def build(exprs: Seq[Expression]): ArgMaxLong =
-    if (exprs.length == 3) ArgMaxLong(exprs(0), exprs(1), exprs(2))
-    else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      Map("functionName" -> s"`$Signature`", "expectedNum" -> "3",
-        "actualNum" -> exprs.length.toString,
-        "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
 }

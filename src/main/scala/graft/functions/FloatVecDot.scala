@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product of two array<float> columns, accumulated in
   * double in index order.
@@ -18,7 +18,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * in whole-stage codegen via doGenCode).
   */
 case class FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+
+  def sqlName: String = "float_dot"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
 
   override def dataType: DataType = DoubleType
 

@@ -111,7 +111,11 @@ object Pq {
 }
 
 /** `pq_encode(array<float>)` → array<struct<code:int, err_e6:long>>. */
-case class PqEncode(child: Expression) extends UnaryExpression {
+case class PqEncode(child: Expression)
+    extends UnaryExpression with NativeFunction {
+  def sqlName: String = "pq_encode"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
+
   override def dataType: DataType =
     ArrayType(Pq.codeType, containsNull = false)
 
@@ -128,7 +132,11 @@ case class PqEncode(child: Expression) extends UnaryExpression {
 
 /** `pq_adc_e6(array<float>, array<struct>)` → long ADC distance. */
 case class PqAdcE6(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "pq_adc_e6"
+  def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), ArrayType(Pq.codeType))
+
   override def dataType: DataType = LongType
 
   override def nullSafeEval(q: Any, codes: Any): Any =

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -23,6 +24,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreter per row, splitting the hot dedup pipelines' stages.
   */
 
+/** A native SQL function's name and argument types: analysis rejects
+  * other argument types (it adds no casts), naming [[signature]]. */
+trait NativeFunction extends ExpectsInputTypes {
+  def sqlName: String
+  override def inputTypes: Seq[DataType]
+
+  def signature: String =
+    inputTypes.map(_.simpleString).mkString(s"$sqlName(", ", ", ")")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (super.checkInputDataTypes().isSuccess) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$signature got " +
+      children.map(_.dataType.simpleString).mkString("(", ", ", ")"))
+}
+
 /** The deterministic pseudo-random "plane" value shared by the LSH
   * hyperplanes, IVF centroids and PQ codebook — ONE definition of the
   * multiplier/modulus/scale formula all three DuckDB oracles
@@ -36,7 +52,9 @@ private[functions] object Lcg {
   * element of an array<string>; empty string → seed; a null element
   * hashes to a null element (as the `transform` HOF form would). */
 case class RollingHashArray(child: Expression, modExpr: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "rolling_hash_arr"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(StringType), LongType)
   override def left: Expression = child
   override def right: Expression = modExpr
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
@@ -78,7 +96,9 @@ object RollingHashArray {
 
 /** Rolling hash of a single string column. */
 case class RollingHashStr(child: Expression, modExpr: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "rolling_hash_str"
+  def inputTypes: Seq[DataType] = Seq(StringType, LongType)
   override def left: Expression = child
   override def right: Expression = modExpr
   override def dataType: DataType = LongType
@@ -102,7 +122,9 @@ case class RollingHashStr(child: Expression, modExpr: Expression)
   * pipeline filters n_sh > 0 before signing; this guards direct SQL
   * callers of `affine_minhash`.) */
 case class AffineMinHash(child: Expression, kExpr: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "affine_minhash"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), IntegerType)
   override def left: Expression = child
   override def right: Expression = kExpr
   override def nullable: Boolean = true
@@ -148,7 +170,10 @@ object AffineMinHash {
 
 /** 32-bit SimHash of an array of token hashes (already mod 2^32):
   * bit b set iff sum over h of ±1 (per bit b of h) is positive. */
-case class SimHash32(child: Expression) extends UnaryExpression {
+case class SimHash32(child: Expression)
+    extends UnaryExpression with NativeFunction {
+  def sqlName: String = "simhash32"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
   override def dataType: DataType = LongType
 
   override def nullSafeEval(arr: Any): Any =
@@ -184,7 +209,10 @@ object SimHash32 {
   * bit j = sign of dot(v, r_j) with r_j[d] = LCG(j*64+d)/2^31 - 0.5 —
   * identical math (and fold order) to the SQL/DuckDB formula; the
   * hyperplanes are precomputed once per JVM instead of per row. */
-case class LshSig16(child: Expression) extends UnaryExpression {
+case class LshSig16(child: Expression)
+    extends UnaryExpression with NativeFunction {
+  def sqlName: String = "lsh_sig16"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = LongType
 
   override def nullSafeEval(arr: Any): Any =
@@ -232,7 +260,9 @@ object LshSig16 {
   * bucket join to stay linear — see `Similarity.lshBandBits` for the
   * sizing rule. */
 case class LshBands(child: Expression, nbitsExpr: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "lsh_bands"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), IntegerType)
   override def left: Expression = child
   override def right: Expression = nbitsExpr
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -294,7 +324,9 @@ object LshBands {
   * would load k-means centroids trained offline; assignment, bucketing,
   * and probing keep exactly this shape. */
 case class IvfAssign(child: Expression, nprobeExpr: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "ivf_assign"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), IntegerType)
   override def left: Expression = child
   override def right: Expression = nprobeExpr
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -353,7 +385,10 @@ object IvfAssign {
   * primitive loop reads both ArrayDatas in place and allocates only
   * the 2-field result row. */
 case class LloydArgmin(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with NativeFunction {
+  def sqlName: String = "lloyd_argmin"
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(StructType(Seq(
+    StructField("bucket", IntegerType), StructField("c", ArrayType(LongType))))))
   override def dataType: DataType = LloydArgmin.outType
 
   override def nullSafeEval(x: Any, cents: Any): Any =
@@ -405,29 +440,41 @@ object LloydArgmin {
 }
 
 object TextHashExprs {
-  /** Every native SQL function, by name. */
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "lloyd_argmin" -> (es => LloydArgmin(es(0), es(1))),
-    "ivf_assign" -> (es => IvfAssign(es(0), es(1))),
-    "rolling_hash_arr" -> (es => RollingHashArray(es(0), es(1))),
-    "rolling_hash_str" -> (es => RollingHashStr(es(0), es(1))),
-    "affine_minhash" -> (es => AffineMinHash(es(0), es(1))),
-    "simhash32" -> (es => SimHash32(es(0))),
-    "lsh_sig16" -> (es => LshSig16(es(0))),
-    "lsh_bands" -> (es => LshBands(es(0), es(1))),
-    "pq_encode" -> (es => PqEncode(es(0))),
-    "pq_adc_e6" -> (es => PqAdcE6(es(0), es(1))),
-    "float_dot" -> (es => FloatVecDot(es(0), es(1))),
-    "argmax_long" -> ArgMaxLong.build)
+  /** Every native SQL function, as an instance over null literals that
+    * names it, and its SQL builder, which fails a wrong argument count
+    * naming the function's signature. */
+  private[graft] lazy val builders: Seq[(NativeFunction, Seq[Expression] => Expression)] =
+    Seq[(Int, Seq[Expression] => NativeFunction)](
+      2 -> (es => LloydArgmin(es(0), es(1))),
+      2 -> (es => IvfAssign(es(0), es(1))),
+      2 -> (es => RollingHashArray(es(0), es(1))),
+      2 -> (es => RollingHashStr(es(0), es(1))),
+      2 -> (es => AffineMinHash(es(0), es(1))),
+      1 -> (es => SimHash32(es(0))),
+      1 -> (es => LshSig16(es(0))),
+      2 -> (es => LshBands(es(0), es(1))),
+      1 -> (es => PqEncode(es(0))),
+      2 -> (es => PqAdcE6(es(0), es(1))),
+      2 -> (es => FloatVecDot(es(0), es(1))),
+      3 -> (es => ArgMaxLong(es(0), es(1), es(2)))
+    ).map { case (arity, make) =>
+      val fn = make(Seq.fill(arity)(Literal(null)))
+      fn -> ((es: Seq[Expression]) =>
+        if (es.length == arity) make(es)
+        else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+          Map("functionName" -> s"`${fn.signature}`",
+            "expectedNum" -> arity.toString, "actualNum" -> es.length.toString,
+            "docroot" -> org.apache.spark.SPARK_DOC_ROOT)))
+    }
 
   /** Install every native SQL function into the session's registry,
     * skipping names it already holds: repeated calls (one per
     * `Tables.t`) neither rebuild an entry nor log a replacement. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, build) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, build, "built-in")
+    builders.foreach { case (fn, build) =>
+      if (!reg.functionExists(FunctionIdentifier(fn.sqlName)))
+        reg.createOrReplaceTempFunction(fn.sqlName, build, "built-in")
     }
   }
 }

@@ -364,12 +364,11 @@ object Dedup {
     * bench cost stays honest) and refreshes it; [[DupCluster]]'s d06
     * fixpoint consumes it instead of re-deriving the identical
     * signature/band/rerank pipeline. */
-  private[operators] val minhashLshPairsMemo =
+  private[graft] val minhashLshPairsMemo =
     Memo("minhash_pairs") { (s, dir) =>
       // persisted for the build: feeds band explosion + both
       // signature-compare sides
       minhashPairsFrom(minhashSignatures(s, dir).transform(Caches.persist))
-        .localCheckpoint() // eager: materializes the pair list NOW
     }
 
   /** MinHash(k=32) + LSH(8 bands × 4 rows): candidate pairs from band
@@ -422,13 +421,6 @@ object Dedup {
       .distinct()
     signatureAgreement(cand, sigs, "ida", "idb")
   }
-
-  /** Lazy (un-checkpointed) d03 frame for plan inspection — the gated
-    * entry materializes eagerly, which hides the band equi-join from
-    * plan specs behind a checkpoint scan. Never memoized. */
-  private[graft] def minhashLshPairsLazy(
-      s: SparkSession, dir: String): DataFrame =
-    minhashPairsFrom(minhashSignatures(s, dir))
 
   /** d11: incremental ingest dedup — the steady-state production shape
     * at 100 TB, where a small new batch arrives against a large
@@ -741,22 +733,27 @@ object Dedup {
     *
     * EAGER ON CONSTRUCTION: the first call per (session, dir) — like
     * d20/x32, which share [[substringSpansMemo]] — runs the
-    * corpus-scale span build at CONSTRUCTION time (localCheckpoint),
-    * not at the first action; merely building this frame for an
-    * EXPLAIN or a plan census pays the build (plan specs use
-    * [[substringSpansLazy]] instead). */
+    * corpus-scale span build at CONSTRUCTION time (the memo's
+    * checkpoint), not at the first action; merely building this frame
+    * for an EXPLAIN or a plan census pays the build (plan specs read
+    * the memo's `lazyBuild` instead). */
   def substringSpans(s: SparkSession, dir: String): DataFrame =
     substringSpansMemo(s, dir).orderBy("doc_id", "span_start")
 
-  /** Build-once span table — [[substringSpansCore]] materialized per
-    * (session, dir): the chain that d19 (report), d20 (rewrite) and
-    * x32 (final assembly) each consume — exactly as a production
-    * pipeline materializes the span table once and every rewrite
-    * stage reads it from storage. The span frame is 4 integers per
-    * maximal duplicated span — orders of magnitude smaller than the
-    * window stream that derives it. */
-  private[operators] val substringSpansMemo =
-    Memo("substring_spans")(substringSpansCore)
+  /** Build-once span table — the d19 chain without the presentation
+    * sort, materialized per (session, dir): the chain that d19
+    * (report), d20 (rewrite) and x32 (final assembly) each consume, so
+    * the span definition cannot drift between the report and the
+    * rewrites — exactly as a production pipeline materializes the span
+    * table once and every rewrite stage reads it from storage. The
+    * span frame is 4 integers per maximal duplicated span — orders of
+    * magnitude smaller than the window stream that derives it. */
+  private[graft] val substringSpansMemo =
+    Memo("substring_spans") { (s, dir) =>
+      // persisted for the build: the df pass and the match join share
+      // the window stream
+      substringSpansFrom(substringWins(s, dir).transform(Caches.persist))
+    }
 
   /** The stride-1 window-hash stream: token hashes once per token
     * (narrow), then the O(16) fold per position — (doc_id, pos, h)
@@ -794,25 +791,6 @@ object Dedup {
         (max(col("pos")) + lit(SubstrToks - 1).cast("long")).as("span_end"),
         count(lit(1)).as("n_windows"))
       .select("doc_id", "span_start", "span_end", "n_windows")
-  }
-
-  /** Lazy (un-checkpointed) d19 frame for plan inspection — the gated
-    * entry materializes eagerly (build-once memo convention), which
-    * hides the hash-keyed chain from plan specs behind a checkpoint
-    * scan. Never memoized. */
-  private[graft] def substringSpansLazy(
-      s: SparkSession, dir: String): DataFrame =
-    substringSpansFrom(substringWins(s, dir))
-
-  /** The d19 chain without the presentation sort — built once per
-    * (session, dir) via [[substringSpansMemo]], shared with the d20
-    * rewrite and the x32 final assembly so the span definition cannot
-    * drift between the report and the rewrites that consume it. */
-  private def substringSpansCore(s: SparkSession, dir: String): DataFrame = {
-    // persisted for the build: the df pass and the match join share
-    // the window stream
-    substringSpansFrom(substringWins(s, dir).transform(Caches.persist))
-      .localCheckpoint() // eager: materializes the span table NOW
   }
 
   /** d20: exact-substring REWRITE — d19's detection applied, the d13
@@ -895,8 +873,8 @@ object Dedup {
     * when someone decontaminates against a second corpus). Nothing is
     * pairwise: a gram shared by d train docs costs d rows, not d·|test|.
     * EAGER ON CONSTRUCTION: first call per (session, dir) runs the
-    * tokenize+hash base build via [[decontamBaseMemo]]
-    * (localCheckpoint) — shared with x31. */
+    * tokenize+hash base build via [[decontamBaseMemo]] — shared with
+    * x31. */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
     val (train, hits) = decontamFrames(s, dir)
     train
@@ -922,7 +900,6 @@ object Dedup {
           expr(s"array_distinct(${hashArrayExpr(ngramsExpr("tk", DecontamN), P)})")
             .as("gs"))
         .filter(size(col("gs")) > 0)
-        .localCheckpoint() // eager: one tokenize+hash pass, shared
     }
 
   /** The x29 chain up to (train docs with gram counts, per-doc hit

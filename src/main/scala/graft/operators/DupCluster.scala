@@ -99,7 +99,6 @@ object DupCluster {
     edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("cluster_id"))
-      .localCheckpoint()
   }
 
   /** Cluster labels are a materialized pipeline stage with several

@@ -28,10 +28,13 @@ final class Memo[K, V] private (val name: String,
   }
 
   def refresh(s: SparkSession, dir: String, key: K): V = {
-    val v = graft.engine.Caches.scoped(build(s, dir, key))
+    val v = graft.engine.Caches.scoped(frames.checkpoint(build(s, dir, key)))
     held = Some((s, dir, key, v))
     v
   }
+
+  /** The build's result before its checkpoint (see [[Memos]]). */
+  def lazyBuild(s: SparkSession, dir: String, key: K): V = build(s, dir, key)
 
   def apply(s: SparkSession, dir: String)(implicit u: Unit =:= K): V =
     apply(s, dir, u(()))
@@ -39,15 +42,20 @@ final class Memo[K, V] private (val name: String,
   def refresh(s: SparkSession, dir: String)(implicit u: Unit =:= K): V =
     refresh(s, dir, u(()))
 
+  def lazyBuild(s: SparkSession, dir: String)(implicit u: Unit =:= K): V =
+    lazyBuild(s, dir, u(()))
+
   private[operators] def clear(): Unit = held = None
 }
 
 object Memo {
-  /** The frames a memo value holds: what the liveness probe checks. */
-  trait Frames[V] { def of(v: V): Seq[DataFrame] }
+  /** The frames a memo value holds (what the liveness probe checks),
+    * and how a build's result is checkpointed. */
+  final class Frames[V](val of: V => Seq[DataFrame], val checkpoint: V => V)
   object Frames {
-    implicit val one: Frames[DataFrame] = Seq(_)
-    implicit val two: Frames[(DataFrame, DataFrame)] = p => Seq(p._1, p._2)
+    implicit val one: Frames[DataFrame] = new Frames(Seq(_), _.localCheckpoint())
+    implicit val two: Frames[(DataFrame, DataFrame)] = new Frames(
+      p => Seq(p._1, p._2), p => (p._1.localCheckpoint(), p._2.localCheckpoint()))
   }
 
   def apply[V: Frames](name: String)(
@@ -61,9 +69,17 @@ object Memo {
 
 /** The memo contract — the one place it is stated.
   *
-  * A [[Memo]] holds the last frame it built (localCheckpoint-
-  * materialized, so reuse replays no lineage) and hands it out again
-  * only when all of these hold:
+  * Materialization: a build returns its frame (or pair) lazily, and
+  * [[Memo]] `localCheckpoint`s it (a pair first, then second) inside
+  * the build's cache scope, so the checkpoint job still reads the
+  * build's persisted intermediates. A held frame is always a checkpoint
+  * scan, and reuse replays no lineage; no build checkpoints its own
+  * result. `lazyBuild` hands out what the build returns before the
+  * checkpoint, for plan inspection: it is never held or timed, and
+  * its caller opens the scope its persists land in.
+  *
+  * A memo holds the last frame it built and hands it out again only
+  * when all of these hold:
   *  - Key: the same session (by reference), the same dir and the same
   *    extra key. The parquet under a dir is assumed immutable for the
   *    session; a long-lived session that rewrites a corpus dir calls
@@ -84,9 +100,9 @@ object Memo {
   *
   * Every build (`refresh`, and so every miss) runs inside its own
   * [[graft.engine.Caches]] scope: what it persists is unpersisted as it
-  * returns, so a held frame must not read such a frame lazily. Its
-  * checkpoint blocks are the one residue, reclaimed by the
-  * ContextCleaner once [[invalidate]] drops the last reference.
+  * returns, after the checkpoint. Its checkpoint blocks are the one
+  * residue, reclaimed by the ContextCleaner once [[invalidate]] drops
+  * the last reference.
   *
   * A consumer-side build is timed under the frame's name into
   * [[buildSec]], which Bench and perfbench report as the cold-start
@@ -143,26 +159,22 @@ object Memos {
     * sorted, so a frame composed over two checkpointed frames never
     * shares freshness with the frame owning just one of them. RDD ids
     * come from a SparkContext-global counter that is never recycled,
-    * so a rebuilt frame cannot inherit a dropped frame's freshness. A
-    * frame with no LogicalRDD gets no key and probes every time. */
-  private[graft] def probeKey(g: DataFrame): Option[Seq[Long]] = {
-    val ids = g.queryExecution.logical.collect {
+    * so a rebuilt frame cannot inherit a dropped frame's freshness. */
+  private[graft] def probeKey(g: DataFrame): Seq[Long] =
+    g.queryExecution.logical.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id.toLong
     }.sorted
-    if (ids.isEmpty) None else Some(ids)
-  }
 
   private[operators] def alive(g: DataFrame): Boolean = {
     val key = probeKey(g)
     val now = System.nanoTime()
-    val last = key.flatMap(k => Option(lastProbeNs.get(k)))
-    if (last.exists(now - _ < ProbeIntervalNs)) true
+    if (Option(lastProbeNs.get(key)).exists(now - _ < ProbeIntervalNs)) true
     else
       try {
         g.limit(1).count()
-        key.foreach(lastProbeNs.put(_, now))
+        lastProbeNs.put(key, now)
         true
       } catch { case scala.util.control.NonFatal(_) =>
-        key.foreach(lastProbeNs.remove(_)); false }
+        lastProbeNs.remove(key); false }
   }
 }

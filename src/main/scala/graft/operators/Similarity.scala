@@ -162,26 +162,14 @@ object Similarity {
 
   /** The d08 pair frame: the gated d08 entry always rebuilds and
     * refreshes it; [[DupCluster]]'s d09 fixpoint consumes it. */
-  private[operators] val embeddingNearDupsBucketedMemo =
+  private[graft] val embeddingNearDupsBucketedMemo =
     Memo("neardup_bucketed") { (s, dir) =>
-      thresholdedPairs(bucketedScoredPairs(s, dir))
-        .localCheckpoint() // eager: the thresholded pair list is tiny
+      bucketedScoredPairs(s, dir)
+        .filter(col("cs") >= 0.4)
+        .select(col("ida"), col("idb"),
+          floor(col("cs") * 1000000).cast("long").as("cs_e6"))
+        .orderBy("ida", "idb")
     }
-
-  private def thresholdedPairs(scored: DataFrame): DataFrame =
-    scored
-      .filter(col("cs") >= 0.4)
-      .select(col("ida"), col("idb"),
-        floor(col("cs") * 1000000).cast("long").as("cs_e6"))
-      .orderBy("ida", "idb")
-
-  /** Lazy (un-checkpointed) d08 frame: the gated entry materializes
-    * eagerly, which would hide the candidate equi-join from the plan
-    * specs behind a checkpoint scan — PlanSpec pins the physical
-    * shape through THIS. Never registered in the memo. */
-  private[graft] def embeddingNearDupsBucketedLazy(
-      s: SparkSession, dir: String): DataFrame =
-    thresholdedPairs(bucketedScoredPairs(s, dir))
 
   /** Shared core of d08 and s09: exact cosine over the LSH-band
     * candidate pairs (ida < idb, un-thresholded). ONE definition of
@@ -251,33 +239,23 @@ object Similarity {
   def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame =
     knnGraphMemo.refresh(s, dir, k)
 
-  private[operators] val knnGraphMemo =
+  private[graft] val knnGraphMemo =
     Memo.keyed[Int, DataFrame]("knn_graph") { (s, dir, k) =>
       // persisted for the build: the symmetrizing union reads the
       // scored pairs twice
-      rankedGraph(bucketedScoredPairs(s, dir).transform(Caches.persist), k)
-        .localCheckpoint() // eager: materializes the n·k graph NOW
+      val scored = bucketedScoredPairs(s, dir).transform(Caches.persist)
+      val edges = scored.select(
+          col("ida").as("vec_id"), col("idb").as("neighbor_id"), col("cs"))
+        .union(scored.select(
+          col("idb").as("vec_id"), col("ida").as("neighbor_id"), col("cs")))
+      val w = Window.partitionBy(col("vec_id"))
+        .orderBy(col("cs").desc, col("neighbor_id"))
+      edges.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("vec_id"), col("neighbor_id"), col("rank"),
+          floor(col("cs") * 1000000).cast("long").as("cs_e6"))
+        .orderBy("vec_id", "rank")
     }
-
-  private def rankedGraph(scored: DataFrame, k: Int): DataFrame = {
-    val edges = scored.select(
-        col("ida").as("vec_id"), col("idb").as("neighbor_id"), col("cs"))
-      .union(scored.select(
-        col("idb").as("vec_id"), col("ida").as("neighbor_id"), col("cs")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cs").desc, col("neighbor_id"))
-    edges.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("vec_id"), col("neighbor_id"), col("rank"),
-        floor(col("cs") * 1000000).cast("long").as("cs_e6"))
-      .orderBy("vec_id", "rank")
-  }
-
-  /** Lazy (un-checkpointed) s09 frame for plan inspection — same role
-    * as [[embeddingNearDupsBucketedLazy]]. */
-  private[graft] def knnGraphLazy(
-      s: SparkSession, dir: String, k: Int = 3): DataFrame =
-    rankedGraph(bucketedScoredPairs(s, dir), k)
 
   /** s10: mutual-k-NN filter — the symmetrization step every
     * kNN-graph consumer (agglomerative/community clustering, UMAP
@@ -534,14 +512,17 @@ object Similarity {
     * the d21 chunk layer keeps the pair budget linear either way. */
   val KmeansKMax = 16384L
 
-  /** The Lloyd loop state shared by s26 (centroid output) and s27
-    * (assignment-quality output): the final per-(bucket, dim) stats
-    * and the final-round assignment (vec_id, bucket, d2). Lazy (un-
-    * checkpointed): the gated entries ride [[lloydStateMemo]], whose
-    * eager localCheckpoint hides the loop's shape behind an RDD scan;
-    * PlanSpec pins the no-window map-side-argmin assignment here. */
-  private[graft] def lloydStateLazy(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
+  /** Build-once Lloyd state — the 2-round EM loop that s26, s27 AND
+    * d21 each rebuilt (~2 s each at sf0.1, ~5 s at sf1): exactly as a
+    * production pipeline trains the clustering once and every
+    * downstream stage reads the assignment from storage. Holds the
+    * final per-(bucket, dim) stats and the final-round assignment
+    * (vec_id, bucket, d2) — the checkpointed assignment drops the
+    * 64-long component array, so the blocks are 3 longs per vector.
+    * The gated s26 entry pays the honest rebuild through `refresh`;
+    * the derived consumers (s27's quality report, d21's semantic
+    * dedup) read the memo. */
+  private[graft] val lloydStateMemo = Memo("lloyd_state") { (s, dir) =>
     val x = graft.operators.TextHash.fanOut(emb(s, dir))
       .select(col("vec_id"), expr(
         "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))")
@@ -591,20 +572,6 @@ object Similarity {
             .as("mean_e6"))
     }
     (stats, lastAssigned.select(col("vec_id"), col("bucket"), col("d2")))
-  }
-
-  /** Build-once Lloyd state — the 2-round EM loop that s26, s27 AND
-    * d21 each rebuilt (~2 s each at sf0.1, ~5 s at sf1): exactly as a
-    * production pipeline trains the clustering once and every
-    * downstream stage reads the assignment from storage. Holds
-    * (per-(bucket,dim) stats, slim (vec_id, bucket, d2) assignment) —
-    * the checkpointed assignment drops the 64-long component array,
-    * so the blocks are 3 longs per vector. The gated s26 entry pays
-    * the honest rebuild through `refresh`; the derived consumers
-    * (s27's quality report, d21's semantic dedup) read the memo. */
-  private[operators] val lloydStateMemo = Memo("lloyd_state") { (s, dir) =>
-    val (stats, asg) = lloydStateLazy(s, dir)
-    (stats.localCheckpoint(), asg.localCheckpoint())
   }
 
   /** s26: full Lloyd k-means — [[KmeansRounds]] complete EM rounds

@@ -1982,7 +1982,7 @@ object TextAnalysis {
     * Production analog: featurize once, train N model variants from
     * the artifact. */
   private[operators] val labeledFeaturesMemo =
-    Memo("labeled_features")(labeledFeatures(_, _).localCheckpoint())
+    Memo("labeled_features")(labeledFeatures)
 
   /** The hard-example batch-perceptron loop over a labeled feature
     * stream — the t36 scaladoc's recurrence, factored out so t36
@@ -2075,10 +2075,10 @@ object TextAnalysis {
     * (serving it in the final assembly), exactly as a production
     * pipeline trains once and every downstream filter reads the weight
     * artifact from storage. EAGER ON CONSTRUCTION: the first call per
-    * (session, dir) runs the 4-round training loop. The driver-built
-    * table is localCheckpointed so it is probed like every memo. */
+    * (session, dir) runs the 4-round training loop; the memo's
+    * checkpoint of the driver-built table is probed like every memo. */
   private[operators] val clsWeightsMemo = Memo("cls_weights")((s, dir) =>
-    trainWeights(s, labeledFeaturesMemo(s, dir)).localCheckpoint())
+    trainWeights(s, labeledFeaturesMemo(s, dir)))
 
   /** Keep set under the TRAINED model (x33's filter): documents whose
     * perceptron margin under [[clsWeightsMemo]]'s weights is > 0 —
@@ -2161,7 +2161,7 @@ object TextAnalysis {
         (expr(s"((doc_id % ${P}L) * 2654435761L) % ${P}L") % EvalFolds === 0L)
           .cast("int"))
     val w = trainWeights(s, ft.filter(col("holdout") === 0))
-    val out = ft.join(broadcast(w), "bucket")
+    ft.join(broadcast(w), "bucket")
       .groupBy("doc_id", "source", "y", "holdout")
       .agg(sum(col("tf") * col("w")).as("m"))
       .withColumn("pred", when(col("m") > 0L, 1L).otherwise(-1L))
@@ -2176,7 +2176,5 @@ object TextAnalysis {
           .as("fn"),
         sum(when(col("y") === -1L && col("pred") === -1L, 1L).otherwise(0L))
           .as("tn"))
-      .localCheckpoint() // eager ~40-row card; the memo hands it out
-    out
   }
 }

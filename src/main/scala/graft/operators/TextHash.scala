@@ -148,8 +148,6 @@ object TextHash {
     * summarizes. Direct [[shingleHashes]] callers (ad-hoc frames)
     * always rebuild. */
   private[operators] val shingleHashesMemo =
-    Memo("shingle_hashes") { (s, dir) =>
-      shingleHashes(graft.engine.Tables.t(s, dir, "documents"))
-        .localCheckpoint()
-    }
+    Memo("shingle_hashes")((s, dir) =>
+      shingleHashes(graft.engine.Tables.t(s, dir, "documents")))
 }

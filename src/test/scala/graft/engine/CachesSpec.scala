@@ -27,6 +27,25 @@ class CachesSpec extends AnyFunSuite {
     assert(outer.storageLevel == StorageLevel.NONE, "a failed query kept its cache")
   }
 
+  test("a partly loaded cache over a frame a scope frees stays registered and exact") {
+    // the one exception the Caches scaladoc states: Spark re-plans a
+    // not-fully-loaded cache whose plan reads the unpersisted frame,
+    // so the other owner keeps its entry and recomputes on next use
+    val x = spark.range(0, 4000, 1, 8).toDF("x")
+    def tenantPlan = x.selectExpr("x", "x * 3 AS y").filter("x % 7 <> 0")
+    val expected = tenantPlan.collect().toSet
+    val tenant = tenantPlan.persist()
+    try {
+      tenant.limit(1).collect() // loads the first partition only
+      Caches.scoped(Caches.persist(x).count())
+      assert(x.storageLevel == StorageLevel.NONE, "the scope kept its frame")
+      assert(tenant.storageLevel != StorageLevel.NONE,
+        "the scope evicted another owner's partly loaded cache")
+      assert(tenant.collect().toSet == expected,
+        "the re-planned cache returns other rows than its plan")
+    } finally tenant.unpersist(blocking = true)
+  }
+
   test("src/main caches only through Caches and never clears the session cache") {
     val main = Paths.get("src/main")
     val sources = Files.walk(main).iterator.asScala

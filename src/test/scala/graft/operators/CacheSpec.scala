@@ -11,7 +11,7 @@ import graft.engine.Caches
   * ([[graft.engine.Caches]]), on the block-manager storage that
   * Bench's per-query `storage_mb` reads:
   *
-  *  1. a MATERIALIZED build (knnGraph's localCheckpoint) frees its
+  *  1. a MATERIALIZED build (the knn_graph memo's checkpoint) frees its
   *     intermediates as its scope closes — only the checkpointed n·k
   *     result may stay resident;
   *  2. every documented-heavy query's peak cache stays inside a
@@ -174,7 +174,7 @@ class CacheSpec extends AnyFunSuite {
   test("a memo build inside a query leaves the query's own cache entry") {
     val build = Memo("spec_cache_borrowing_build") { (s, _) =>
       Caches.persist(tokenFrame()).count()
-      s.range(1).toDF().localCheckpoint()
+      s.range(1).toDF()
     }
     Caches.scoped {
       val mine = Caches.persist(uncachedTokenFrame())

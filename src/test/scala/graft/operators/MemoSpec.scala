@@ -8,7 +8,8 @@ import graft.SparkJobs
 
 /** The memo laws, table-driven over all 14 build-once frames.
   *
-  * For every frame: a second access hands out the same frame; after
+  * For every frame: the held frame is a checkpoint of what the build
+  * returns; a second access hands out the same frame; after
   * [[Memos.invalidate]] the next access builds a new frame with its
   * own probe key; a frame whose checkpoint blocks were lost is
   * rebuilt, not handed out dead; a build leaves nothing it persisted
@@ -25,15 +26,17 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  /** One memo: a consumer read of its frames, and the gated query
-    * that refreshes it, if any. */
+  /** One memo: a consumer read of its frames, its build before the
+    * checkpoint, and the gated query that refreshes it, if any. */
   case class Row(name: String, read: () => Seq[DataFrame],
-      refresh: () => Seq[DataFrame], producer: Option[String])
+      refresh: () => Seq[DataFrame], lazyBuild: () => Seq[DataFrame],
+      producer: Option[String])
 
   private def row[K, V](m: Memo[K, V], key: K, producer: Option[String] = None)(
       implicit f: Memo.Frames[V]): Row =
     Row(m.name, () => f.of(m(spark, dir, key)),
-      () => f.of(m.refresh(spark, dir, key)), producer)
+      () => f.of(m.refresh(spark, dir, key)),
+      () => f.of(m.lazyBuild(spark, dir, key)), producer)
 
   lazy val rows: Seq[Row] = Seq(
     row(TextHash.shingleHashesMemo, ()),
@@ -85,7 +88,21 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.map(_.name).toSet == registered && rows.size == 14)
   }
 
+  private def isCheckpointScan(g: DataFrame): Boolean =
+    g.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
   rows.foreach { r =>
+    test(s"${r.name}: the memo checkpoints what its build returns") {
+      val held = r.read()
+      assert(held.forall(isCheckpointScan), "a held frame is not a checkpoint scan:\n" +
+        held.map(_.queryExecution.logical).mkString("\n"))
+      graft.engine.Caches.scoped {
+        val built = r.lazyBuild()
+        assert(built.size == held.size && !built.exists(isCheckpointScan),
+          "the build checkpoints its own result; the memo does that")
+      }
+    }
+
     test(s"${r.name}: a second access returns the same frame") {
       val a = r.read()
       assert(same(r.read(), a), "second access rebuilt the frame")
@@ -162,7 +179,7 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val g = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
     // the key IS the checkpoint scan's RDD id — not an object hash
     val key = Memos.probeKey(g)
-    assert(key.contains(rddIds(g).map(_.toLong).sorted),
+    assert(key == rddIds(g).map(_.toLong).sorted,
       s"probe key $key != checkpoint RDD ids ${rddIds(g)}")
 
     // first access probes (one job); a fresh access inside the rate
@@ -192,7 +209,7 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     // checkpoint leaves, so its freshness is distinct from both
     // components'
     val both = Memos.probeKey(g.union(g2))
-    assert(both.exists(_.size == 2) && both != key && both != Memos.probeKey(g2),
+    assert(both.size == 2 && both != key && both != Memos.probeKey(g2),
       s"composed frame must key on all checkpoint leaves, got $both")
     Memos.invalidate()
   }

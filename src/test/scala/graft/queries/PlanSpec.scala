@@ -141,16 +141,20 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "capped jaccard must keep equi-join candidate generation")
   }
 
+  /** The plan of a memo's build before its checkpoint: the gated
+    * entries hand out the memo's checkpoint scan, so a memo frame's
+    * shape is pinned on `lazyBuild`, explained inside the scope that
+    * frees the build's persists. */
+  private def memoPlan[K, V](m: graft.operators.Memo[K, V], key: K)(
+      frame: V => DataFrame): String =
+    graft.engine.Caches.scoped(plan(frame(m.lazyBuild(spark, dir, key))))
+
   test("bucketed near-dup candidates come from an equi-join, not a cross join") {
-    // through the LAZY variants: the gated d03/d08/s09 entries
-    // checkpoint-materialize (build-once memo convention), so their
-    // returned plans are checkpoint scans — the join shapes must be
-    // pinned on the un-checkpointed builds or this spec sees nothing
-    for (q <- Seq(
-        graft.operators.Similarity.embeddingNearDupsBucketedLazy(spark, dir),
-        graft.operators.Similarity.knnGraphLazy(spark, dir),
-        graft.operators.Dedup.minhashLshPairsLazy(spark, dir))) {
-      val p = plan(q)
+    import graft.operators.{Dedup, Similarity}
+    for (p <- Seq(
+        memoPlan(Similarity.embeddingNearDupsBucketedMemo, ())(identity),
+        memoPlan(Similarity.knnGraphMemo, 3)(identity),
+        memoPlan(Dedup.minhashLshPairsMemo, ())(identity))) {
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
         p.contains("BroadcastHashJoin"),
         s"banded candidate generation lost its equi-join:\n$p")
@@ -405,8 +409,8 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
                           // + 1-row corpus-total scalar — both bounded
       "s26_kmeans_lloyd", // 1-row centroid-ARRAY scalar per round (the
                           // round-13 map-side argmin; the gated plan is
-                          // a checkpoint scan — shape pinned on
-                          // lloydStateLazy below)
+                          // a checkpoint scan — shape pinned on the
+                          // lloyd_state memo's lazyBuild below)
       "s27_kmeans_quality", // same 1-row centroid array (shared memo)
       "d21_semantic_dedup", // same 1-row Lloyd centroid array + the
                             // 1-row chunk-cap guard scalar; the pair
@@ -590,11 +594,9 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // reduces to (doc_id, pos, h) longs BEFORE any exchange; a text
     // column in a shuffle would be corpus-bandwidth-bound, and any
     // pair join would make duplication density quadratic
-    // the LAZY variant: the gated d19 entry checkpoint-materializes
-    // (build-once memo convention), so its returned plan is a
-    // checkpoint scan — the shuffle contract must be pinned on the
-    // un-checkpointed build or this spec sees nothing
-    val p = plan(graft.operators.Dedup.substringSpansLazy(spark, dir))
+    // the gated d19 entry reads the span memo's checkpoint scan, so
+    // the shuffle contract is pinned on the memo's lazyBuild
+    val p = memoPlan(graft.operators.Dedup.substringSpansMemo, ())(identity)
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"),
       s"d19 must stay hash-keyed:\n$p")
     val cols = hashExchangeCols(p)
@@ -612,9 +614,8 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // sorted centroid ARRAY: one output row per vector, no Window,
     // no vec_id exchange. The gated s26/s27/d21 entries ride the
     // build-once memo (checkpoint scan), so the shape is pinned on
-    // the LAZY state — the d19/substringSpansLazy convention.
-    val (_, asg) = graft.operators.Similarity.lloydStateLazy(spark, dir)
-    val p = plan(asg)
+    // the memo's lazyBuild, as for d19.
+    val p = memoPlan(graft.operators.Similarity.lloydStateMemo, ())(_._2)
     assert(!raw"\(\d+\) Window".r.findFirstIn(p).isDefined,
       s"Lloyd assignment regressed to a window argmin:\n$p")
     // the only exchanges the loop may plan are the (bucket, dim)

@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -719,5 +721,72 @@ class StreamingSpec extends AnyFunSuite {
       .sourceEmbeddingDrift(spark, dir).collect().map(key).toSet
     assert(streamedCard == batchCard,
       "streamed centroid card diverges from the gated s29")
+  }
+
+  /** Feeds `batches` one micro-batch each through `op` into a
+    * foreachBatch sink with a file checkpoint. Before each batch index
+    * in `restartAt` the query stops and a new one starts on the same
+    * checkpoint and source. Returns every row the sink received, in
+    * batch order. */
+  private def runRestarting[A](mem: MemoryStream[A], batches: Seq[Seq[A]],
+      restartAt: Set[Int], mode: String)(op: DataFrame => DataFrame): Seq[Row] = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart").toFile
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    def start() = op(mem.toDF()).writeStream
+      .option("checkpointLocation", ckpt.getPath)
+      .outputMode(mode)
+      .foreachBatch((df: DataFrame, _: Long) => df.collect().foreach(seen.add))
+      .start()
+    try {
+      var q = start()
+      batches.zipWithIndex.foreach { case (b, i) =>
+        if (restartAt(i)) { q.stop(); q = start() }
+        mem.addData(b: _*)
+        q.processAllAvailable()
+      }
+      q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
+    seen.asScala.toSeq
+  }
+
+  test("streaming dedup restarted from its checkpoint keeps its digest state") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val batches = Seq(
+      Seq((1L, ts("2024-01-01 10:00:00"), "Hello World"),
+        (2L, ts("2024-01-01 10:01:00"), "something else")),
+      Seq((3L, ts("2024-01-01 10:02:00"), "hello world")), // dup of 1
+      Seq((4L, ts("2024-01-01 10:03:00"), "new text"),
+        (5L, ts("2024-01-01 10:04:00"), "SOMETHING ELSE"))) // dup of 2
+    def ids(restartAt: Set[Int]): Set[Long] =
+      runRestarting(MemoryStream[(Long, Timestamp, String)], batches,
+          restartAt, "append")(df =>
+        StreamDedup.dedupStream(df.toDF("doc_id", "ts", "text")))
+        .map(_.getLong(0)).toSet
+    val uninterrupted = ids(Set.empty)
+    assert(uninterrupted == Set(1L, 2L, 4L))
+    assert(ids(Set(1, 2)) == uninterrupted,
+      "a restarted dedup forgot the digests seen before the restart")
+  }
+
+  test("streaming upsert restarted from its checkpoint keeps its per-key state") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // (user_id, us, event_id, v_e6); each later batch carries a value
+    // OLDER than the key's state, which only the kept state can reject
+    val batches = Seq(
+      Seq((1L, 100L, 1L, 10L), (2L, 100L, 2L, 20L)),
+      Seq((1L, 50L, 3L, 11L), (2L, 200L, 4L, 21L)),
+      Seq((2L, 150L, 5L, 22L), (3L, 10L, 6L, 30L)))
+    // the change-feed consumer: each batch's touched keys overwrite
+    def served(restartAt: Set[Int]): Map[Long, Long] =
+      runRestarting(MemoryStream[(Long, Long, Long, Long)], batches,
+          restartAt, "update")(df =>
+        StreamUpsert.latestValueStream(df.toDF("user_id", "us", "event_id", "v_e6")))
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val uninterrupted = served(Set.empty)
+    assert(uninterrupted == Map(1L -> 10L, 2L -> 21L, 3L -> 30L))
+    assert(served(Set(1, 2)) == uninterrupted,
+      "a restarted upsert lost the per-key state kept before the restart")
   }
 }
