@@ -96,25 +96,28 @@ object Curation {
       .orderBy("src", "entity_id")
   }
 
+  /** The k of t21's k-anonymity bar. */
+  val KAnonymityK = 5
+
   /** t21: k-anonymity audit — group every customer by its
     * quasi-identifier tuple (nation, market segment, account-balance
     * decile) and report each equivalence class's size plus whether it
-    * meets k=5; rows in sub-k classes are re-identifiable and a
-    * release pipeline must suppress or generalize them. The decile is
-    * a fixed-width bucket (floor(bal/1000)), not a rank — rank-based
-    * deciles would make every class size data-dependent on the whole
-    * corpus and the audit non-reproducible across shards.
+    * meets [[KAnonymityK]]; rows in sub-k classes are re-identifiable
+    * and a release pipeline must suppress or generalize them. The
+    * decile is a fixed-width bucket (floor(bal/1000)), not a rank —
+    * rank-based deciles would make every class size data-dependent on
+    * the whole corpus and the audit non-reproducible across shards.
     *
     * Scale shape: one partial-agg groupBy on the quasi-identifier key
     * (map-side combine collapses each partition to its distinct
     * tuples); the flag is a projection over the aggregate. */
-  def kAnonymity(s: SparkSession, dir: String, k: Int = 5): DataFrame =
+  def kAnonymity(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "customer")
       .select(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / 1000).cast("long").as("bal_bucket"))
       .groupBy("c_nationkey", "c_mktsegment", "bal_bucket")
       .agg(count(lit(1)).as("class_sz"))
-      .withColumn("k_anonymous", (col("class_sz") >= k).cast("int"))
+      .withColumn("k_anonymous", (col("class_sz") >= KAnonymityK).cast("int"))
       .orderBy("c_nationkey", "c_mktsegment", "bal_bucket")
 
   /** t10: domain-mix report — per source (the stand-in for a crawl
@@ -349,9 +352,12 @@ object Curation {
         md5(array_join(col("ck"), " ")).as("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")
 
+  /** x04 packing budget: whitespace tokens per training sequence. */
+  val PackBudget = 256L
+
   /** x04: sequence packing — GPT-style concat-and-cut: within each
     * source shard, documents are concatenated in doc_id order and cut
-    * every `budget` tokens; a document owns the token span
+    * every [[PackBudget]] tokens; a document owns the token span
     * [start_tok, start_tok + n_toks) and so lands in context bins
     * [bin_first, bin_last].
     *
@@ -363,7 +369,7 @@ object Curation {
     * ranges under a data-derived width (the 1-row scalar crossJoin
     * idiom), so the largest task is one source's one range and the
     * spans are bit-identical to the old window's. */
-  def packing(s: SparkSession, dir: String, budget: Long = 256L): DataFrame = {
+  def packing(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_toks"))
@@ -374,14 +380,17 @@ object Curation {
         col("n_toks"), "end_tok")
       .withColumn("start_tok", col("end_tok") - col("n_toks"))
       .select(col("doc_id"), col("source"), col("n_toks"), col("start_tok"),
-        expr(s"start_tok div ${budget}L").as("bin_first"),
-        expr(s"(end_tok - 1) div ${budget}L").as("bin_last"))
+        expr(s"start_tok div ${PackBudget}L").as("bin_first"),
+        expr(s"(end_tok - 1) div ${PackBudget}L").as("bin_last"))
       .orderBy("doc_id")
   }
 
   /** x30 shard token budget — the target token mass per output shard.
     * Interpolated into the oracle. */
   val ShardBudget = 20000L
+
+  /** The epoch x30 (and its streaming twin) folds into the shard key. */
+  val ShardEpoch = 1
 
   /** x30: shuffled shard manifest — the WRITE step of a training-data
     * pipeline: assign every document to an output shard by a
@@ -396,20 +405,19 @@ object Curation {
     * dataloader reads this to know its per-shard variance). The
     * shuffle key hashes the doc_id STRING (metadata-only — the text
     * never enters the key, so re-sharding an epoch never re-reads
-    * payload columns), with the epoch folded in so epoch 2 is a
-    * different deterministic permutation of the same corpus.
+    * payload columns), with [[ShardEpoch]] folded in so another epoch
+    * is a different deterministic permutation of the same corpus.
     *
     * Scale shape: one narrow scan computing (doc_id, n_toks, key),
     * a 1-row total-tokens scalar crossJoin (the x25 idiom) to derive
     * S, one partial-agg'd groupBy on the shard id. Output is S rows.
     * Nothing global-ordered, nothing driver-side. */
-  def shardManifest(s: SparkSession, dir: String, epoch: Int = 1)
-      : DataFrame = {
+  def shardManifest(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("n_toks"),
         expr(rollingHashExpr(
-          s"concat(cast(doc_id as string), ':$epoch')", P)).as("key"))
+          s"concat(cast(doc_id as string), ':$ShardEpoch')", P)).as("key"))
     val tot = base.agg(sum("n_toks").as("total_toks"))
     base.crossJoin(broadcast(tot))
       .withColumn("n_shards",

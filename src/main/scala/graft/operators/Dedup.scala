@@ -117,7 +117,7 @@ object Dedup {
       .orderBy("ida", "idb")
   }
 
-  /** d15's vector-space knobs: terms appearing in more than
+  /** d15's vector-space constants: terms appearing in more than
     * [[CosineDfPermille]]‰ of the corpus are pruned from the
     * bag-of-words space (the sparse analogue of d02's stop-shingle
     * cap — it bounds posting-list fanout AND removes the function
@@ -131,28 +131,21 @@ object Dedup {
   val CosineDfPermille = 100L
   val CosineThresholdE6 = 800000L
 
-  /** The df-capped term-count vectors shared by d15/d16 (persisted). */
-  private def termVectors(s: SparkSession, dir: String,
-      maxTermDfPermille: Option[Long]): DataFrame =
-    termVectorsFrom(docs(s, dir), maxTermDfPermille)
-
-  private def termVectorsFrom(base: DataFrame,
-      maxTermDfPermille: Option[Long]): DataFrame = {
+  /** The df-capped term-count vectors of `base` documents, shared by
+    * d15/d16 (persisted). */
+  private def termVectors(base: DataFrame): DataFrame = {
     val tc0 = base
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 1)
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
       .transform(Caches.persist) // feeds the df count + the capped frame
-    (maxTermDfPermille match {
-      case None => tc0
-      case Some(permille) =>
-        val nd = tc0.agg(countDistinct(col("doc_id")).as("n_docs"))
-        val stop = tc0.groupBy("w").agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(nd))
-          .filter(col("df") * 1000L > lit(permille) * col("n_docs"))
-          .select("w")
-        tc0.join(broadcast(stop), Seq("w"), "left_anti")
-    }).transform(Caches.persist) // feeds norms + postings-join sides
+    val nd = tc0.agg(countDistinct(col("doc_id")).as("n_docs"))
+    val stop = tc0.groupBy("w").agg(count(lit(1)).as("df"))
+      .crossJoin(broadcast(nd))
+      .filter(col("df") * 1000L > lit(CosineDfPermille) * col("n_docs"))
+      .select("w")
+    tc0.join(broadcast(stop), Seq("w"), "left_anti")
+      .transform(Caches.persist) // feeds norms + postings-join sides
   }
 
   /** Norm-join + fixed float expression tree + threshold, shared by
@@ -206,14 +199,13 @@ object Dedup {
     * them) on this exact plan to pull the candidate volume back to
     * near-linear. */
   def cosinePairs(s: SparkSession, dir: String,
-      maxTermDfPermille: Option[Long] = Some(CosineDfPermille),
       maxDocs: Long = MaxExhaustiveCosineDocs): DataFrame = {
     val n = Tables.t(s, dir, "documents").count() // parquet metadata count
     require(n <= maxDocs,
       s"cosinePairs is the exhaustive all-pairs baseline and is capped " +
         s"at $maxDocs documents (corpus has $n); use cosinePairsPrefix " +
         "at scale")
-    val tc = termVectors(s, dir, maxTermDfPermille)
+    val tc = termVectors(docs(s, dir))
     val dots = tc.as("a")
       .join(tc.as("b"),
         col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
@@ -239,7 +231,6 @@ object Dedup {
     * One 1-row stride scalar broadcasts back over the scan (the
     * allowlisted idiom); the sample filter is a narrow predicate. */
   def cosinePairsSampled(s: SparkSession, dir: String,
-      maxTermDfPermille: Option[Long] = Some(CosineDfPermille),
       bound: Long = MaxExhaustiveCosineDocs): DataFrame = {
     val base = docs(s, dir)
     val k = base.agg(
@@ -247,7 +238,7 @@ object Dedup {
     val sampled = base.crossJoin(broadcast(k))
       .filter(pmod(col("doc_id"), col("k")) === 0)
       .drop("k")
-    val tc = termVectorsFrom(sampled, maxTermDfPermille)
+    val tc = termVectors(sampled)
     val dots = tc.as("a")
       .join(tc.as("b"),
         col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
@@ -293,9 +284,8 @@ object Dedup {
     * volume to near-linear where d15's full postings join is the
     * measured ×100-per-×10 quadratic. The rerank is two doc-keyed
     * equi-joins re-assembling only candidate pairs' vectors. */
-  def cosinePairsPrefix(s: SparkSession, dir: String,
-      maxTermDfPermille: Option[Long] = Some(CosineDfPermille)): DataFrame = {
-    val tc = termVectors(s, dir, maxTermDfPermille)
+  def cosinePairsPrefix(s: SparkSession, dir: String): DataFrame = {
+    val tc = termVectors(docs(s, dir))
     val dfq = tc.groupBy("w").agg(count(lit(1)).as("df"))
     val prefixW = Window.partitionBy("doc_id").orderBy(col("df"), col("w"))
     val prefix0 = tc.join(dfq, Seq("w"))
@@ -484,15 +474,14 @@ object Dedup {
     * Output per doc: block counts and the md5 of the kept
     * (boilerplate-stripped, order-preserved) text — integers + a
     * 32-char hex string, so the oracle compares bit-for-bit. */
-  def blockDedup(s: SparkSession, dir: String,
-      blockToks: Int = BlockToks): DataFrame = {
+  def blockDedup(s: SparkSession, dir: String): DataFrame = {
     // persisted: feeds the df count and the mark join (re-splitting
     // the corpus per branch would double the dominant narrow stage)
     val bl = fanOut(docs(s, dir))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, (size(tk) - 1) div $blockToks), " +
-          s"i -> array_join(slice(tk, i * $blockToks + 1, $blockToks), ' '))"))
+        s"transform(sequence(0, (size(tk) - 1) div $BlockToks), " +
+          s"i -> array_join(slice(tk, i * $BlockToks + 1, $BlockToks), ' '))"))
         .as(Seq("bi", "b")))
       .withColumn("h", expr(rollingHashExpr("b", P)))
       .transform(Caches.persist)

@@ -108,7 +108,7 @@ object DupCluster {
     * reuse the frame — a production job would write labels to a
     * table and read it many times. */
   private def labelsMemo(name: String)(
-      pairs: (SparkSession, String) => DataFrame): Memo[Unit, DataFrame] =
+      pairs: (SparkSession, String) => DataFrame): Memo[DataFrame] =
     Memo(name)((s, dir) =>
       fixpointLabels(pairs(s, dir).select("ida", "idb")))
 
@@ -376,7 +376,7 @@ object DupCluster {
   def clusterQuality(s: SparkSession, dir: String): DataFrame = {
     val cl = clustersOf(knnLabels(s, dir), "vec_id")
     val lab = cl.select(col("vec_id"), col("cluster_id"))
-    val g = Similarity.knnGraphMemo(s, dir, 3)
+    val g = Similarity.knnGraphMemo(s, dir)
       .select(col("vec_id"), col("neighbor_id"))
     val e = g.join(lab, "vec_id") // source must be labeled
       .join(lab.select(col("vec_id").as("neighbor_id"),

@@ -8,42 +8,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Consumers call `apply` (get-or-build); the gated producer of a
   * frame calls `refresh`, which always rebuilds and holds the result,
   * so the producer's bench cost stays honest and every later consumer
-  * sees what it built. `K` is an extra key beyond (session, dir) —
-  * `Unit` for all frames but the kNN graph, which keys on `k`.
+  * sees what it built. A frame is keyed on (session, dir) alone.
   *
   * Not synchronized: memos assume a single-threaded driver, like every
   * query builder in this repo. Frames are built, looked up and
   * invalidated on the driver thread; only actions on them may run from
   * other threads. */
-final class Memo[K, V] private (val name: String,
-    build: (SparkSession, String, K) => V)(implicit frames: Memo.Frames[V]) {
+final class Memo[V] private (val name: String,
+    build: (SparkSession, String) => V)(implicit frames: Memo.Frames[V]) {
 
-  @volatile private var held: Option[(SparkSession, String, K, V)] = None
+  @volatile private var held: Option[(SparkSession, String, V)] = None
   Memos.registry.add(this)
 
-  def apply(s: SparkSession, dir: String, key: K): V = held match {
-    case Some((ms, mdir, mk, v)) if (ms eq s) && mdir == dir && mk == key &&
+  def apply(s: SparkSession, dir: String): V = held match {
+    case Some((ms, mdir, v)) if (ms eq s) && mdir == dir &&
         frames.of(v).forall(Memos.alive) => v
-    case _ => Memos.timed(name, dir)(refresh(s, dir, key))
+    case _ => Memos.timed(name, dir)(refresh(s, dir))
   }
 
-  def refresh(s: SparkSession, dir: String, key: K): V = {
-    val v = graft.engine.Caches.scoped(frames.checkpoint(build(s, dir, key)))
-    held = Some((s, dir, key, v))
+  def refresh(s: SparkSession, dir: String): V = {
+    val v = graft.engine.Caches.scoped(frames.checkpoint(build(s, dir)))
+    held = Some((s, dir, v))
     v
   }
 
   /** The build's result before its checkpoint (see [[Memos]]). */
-  def lazyBuild(s: SparkSession, dir: String, key: K): V = build(s, dir, key)
-
-  def apply(s: SparkSession, dir: String)(implicit u: Unit =:= K): V =
-    apply(s, dir, u(()))
-
-  def refresh(s: SparkSession, dir: String)(implicit u: Unit =:= K): V =
-    refresh(s, dir, u(()))
-
-  def lazyBuild(s: SparkSession, dir: String)(implicit u: Unit =:= K): V =
-    lazyBuild(s, dir, u(()))
+  def lazyBuild(s: SparkSession, dir: String): V = build(s, dir)
 
   private[operators] def clear(): Unit = held = None
 }
@@ -58,12 +48,7 @@ object Memo {
       p => Seq(p._1, p._2), p => (p._1.localCheckpoint(), p._2.localCheckpoint()))
   }
 
-  def apply[V: Frames](name: String)(
-      build: (SparkSession, String) => V): Memo[Unit, V] =
-    new Memo[Unit, V](name, (s, dir, _) => build(s, dir))
-
-  def keyed[K, V: Frames](name: String)(
-      build: (SparkSession, String, K) => V): Memo[K, V] =
+  def apply[V: Frames](name: String)(build: (SparkSession, String) => V): Memo[V] =
     new Memo(name, build)
 }
 
@@ -80,9 +65,9 @@ object Memo {
   *
   * A memo holds the last frame it built and hands it out again only
   * when all of these hold:
-  *  - Key: the same session (by reference), the same dir and the same
-  *    extra key. The parquet under a dir is assumed immutable for the
-  *    session; a long-lived session that rewrites a corpus dir calls
+  *  - Key: the same session (by reference) and the same dir. The
+  *    parquet under a dir is assumed immutable for the session; a
+  *    long-lived session that rewrites a corpus dir calls
   *    [[invalidate]], and the next access rebuilds from the files.
   *  - Liveness: [[alive]] passes on every frame the memo holds.
   *    localCheckpoint blocks are UNREPLICATED: on a real cluster an
@@ -112,7 +97,7 @@ object Memo {
   * A producer `refresh` is the query's own work and is not recorded. */
 object Memos {
   private[operators] val registry =
-    new java.util.concurrent.ConcurrentLinkedQueue[Memo[_, _]]()
+    new java.util.concurrent.ConcurrentLinkedQueue[Memo[_]]()
 
   /** Drop every memo (each registers itself at construction) and the
     * probe freshness: an entry surviving its frame could vouch for a

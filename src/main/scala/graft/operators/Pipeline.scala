@@ -95,7 +95,8 @@ object Pipeline {
       .filter(col("h2") < col("rate_permille"))
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("tokens_total"))
-      .withColumn("n_bins", expr("(tokens_total + 255) div 256L"))
+      .withColumn("n_bins", expr(s"(tokens_total + ${Curation.PackBudget - 1}) " +
+        s"div ${Curation.PackBudget}L"))
       .orderBy("split", "lang")
   }
 
@@ -408,7 +409,7 @@ object Pipeline {
         expr(s"(total_toks + ${Curation.ShardBudget - 1}L) div " +
           s"${Curation.ShardBudget}L")))
       .withColumn("key", expr(rollingHashExpr(
-        "concat(cast(doc_id as string), ':1')", P)))
+        s"concat(cast(doc_id as string), ':${Curation.ShardEpoch}')", P)))
       .withColumn("shard", col("key") % col("n_shards"))
       .withColumn("end_tok", sum(col("n_bpe")).over(w))
       .withColumn("start_tok", col("end_tok") - col("n_bpe"))

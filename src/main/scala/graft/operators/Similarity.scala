@@ -125,13 +125,34 @@ object Similarity {
   /** Target expected bucket width for [[lshBandBits]]. */
   val LshTargetBucket = 64L
 
-  /** Shared top-k for the recall-eval family (s14/s18/s20/s21) — the
-    * single operating-point knob. The DuckDB oracles interpolate BOTH
-    * the rank cutoff and the exact recall multiplier (1e6 div k) from
-    * this constant, so changing it cannot desynchronize engine and
-    * oracle (the ADVICE r8 finding: the oracles hardcoded 200000
-    * while the Spark side computed 1000000/k from the parameter). */
+  /** Shared top-k of the two approximate paths (s02 LSH, s03 IVF)
+    * and the recall-eval family (s14/s18/s20/s21) that scores them.
+    * The DuckDB oracles interpolate BOTH the rank cutoff and the exact
+    * recall multiplier (1e6 div k) from this constant, so changing it
+    * cannot desynchronize engine and oracle (the ADVICE r8 finding:
+    * the oracles hardcoded 200000 while the Spark side computed
+    * 1000000/k from a parameter). recall_e6 = hits · (1e6 div k) is
+    * exact only while k divides 1e6. */
   val RecallK = 5
+  require(1000000 % RecallK == 0,
+    s"recall_e6 exactness needs k | 1e6, got $RecallK")
+
+  /** The recall family's ground truth: s01's exact top-[[RecallK]]
+    * pairs, persisted for each consumer's overlap joins and roster. */
+  private def recallTruth(s: SparkSession, dir: String): DataFrame =
+    annTopK(s, dir, RecallK).select("query_id", "neighbor_id")
+      .transform(Caches.persist)
+
+  /** The other fixed operating points, each interpolated into its
+    * oracle: the coarse cells an IVF query probes (s03, s07 and s14's
+    * IVF column), the neighbors per vector of the s09 kNN graph (so
+    * the degree bound of its consumers), and the top-k of the PQ-ADC
+    * searches (s06, s07), of s08's fused ranking and of s19. */
+  val IvfNprobe = 4
+  val KnnK = 3
+  val PqTopK = 5
+  val HybridK = 20
+  val FilteredAnnK = 5
 
   /** Dense-band-bucket cap for d08 — same production rule (and same
     * oracle QUALIFY mirror) as d04's SimHash cap: a bucket holding
@@ -228,7 +249,7 @@ object Similarity {
     * entry always rebuilds — the gated s09 query is the graph build,
     * so its bench cost stays honest — and refreshes [[knnGraphMemo]],
     * through which the six derived consumers (s10/s11-via-mutual/s13/
-    * s15/s22/s23) reuse a same-(session, dir, k) frame, exactly as a
+    * s15/s22/s23) reuse a same-(session, dir) frame, exactly as a
     * production pipeline writes the graph stage once and reads it from
     * storage. Round-8 telemetry: the seven graph-family queries each
     * rebuilt the same ~90 MB of band/score intermediates — 26.4 s of
@@ -236,11 +257,11 @@ object Similarity {
     * is localCheckpoint-materialized (n·k rows — tiny), so the
     * build's scope frees its signature/band/scored caches as it
     * returns. */
-  def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame =
-    knnGraphMemo.refresh(s, dir, k)
+  def knnGraph(s: SparkSession, dir: String): DataFrame =
+    knnGraphMemo.refresh(s, dir)
 
   private[graft] val knnGraphMemo =
-    Memo.keyed[Int, DataFrame]("knn_graph") { (s, dir, k) =>
+    Memo[DataFrame]("knn_graph") { (s, dir) =>
       // persisted for the build: the symmetrizing union reads the
       // scored pairs twice
       val scored = bucketedScoredPairs(s, dir).transform(Caches.persist)
@@ -251,7 +272,7 @@ object Similarity {
       val w = Window.partitionBy(col("vec_id"))
         .orderBy(col("cs").desc, col("neighbor_id"))
       edges.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+        .filter(col("rank") <= KnnK)
         .select(col("vec_id"), col("neighbor_id"), col("rank"),
           floor(col("cs") * 1000000).cast("long").as("cs_e6"))
         .orderBy("vec_id", "rank")
@@ -272,10 +293,10 @@ object Similarity {
     * rows per side, never corpus-quadratic. Output is one row per
     * undirected mutual edge (ida < idb) carrying both directions'
     * ranks, so downstream consumers keep the asymmetry information. */
-  def mutualKnn(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def mutualKnn(s: SparkSession, dir: String): DataFrame = {
     // both sides of the reciprocity join read the memoized graph —
     // already checkpoint-materialized, so no extra persist is needed
-    val g = knnGraphMemo(s, dir, k)
+    val g = knnGraphMemo(s, dir)
     g.as("f").join(g.as("r"),
         col("f.vec_id") === col("r.neighbor_id") &&
           col("f.neighbor_id") === col("r.vec_id"))
@@ -299,8 +320,8 @@ object Similarity {
     * Scale shape: every aggregate groups the n·k edge frame by an id
     * key (one shuffle each over n·k rows); the reciprocity join is
     * the same n·k equi-self-join as s10. Nothing corpus-quadratic. */
-  def knnDegrees(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val g = knnGraphMemo(s, dir, k) // checkpoint-materialized
+  def knnDegrees(s: SparkSession, dir: String): DataFrame = {
+    val g = knnGraphMemo(s, dir) // checkpoint-materialized
 
     val outd = g.groupBy("vec_id").agg(count(lit(1)).as("out_deg"))
     val ind = g.groupBy(col("neighbor_id").as("vec_id"))
@@ -315,7 +336,7 @@ object Similarity {
       .select(col("vec_id"), col("out_deg"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"),
         coalesce(col("mutual_deg"), lit(0L)).as("mutual_deg"),
-        (coalesce(col("in_deg"), lit(0L)) > 2 * k).cast("int").as("is_hub"))
+        (coalesce(col("in_deg"), lit(0L)) > 2 * KnnK).cast("int").as("is_hub"))
       .orderBy("vec_id")
   }
 
@@ -439,21 +460,20 @@ object Similarity {
 
   /** IVF-bucketed ANN — the billion-vector scale path. The corpus is
     * partitioned once by nearest coarse centroid (`ivf_assign(e, 1)`),
-    * a query probes its `nprobe` nearest centroid buckets, and exact
+    * a query probes its [[IvfNprobe]] nearest centroid buckets, and exact
     * cosine re-ranks only those buckets' vectors: candidate generation
     * is an equi-join on the centroid id, cost ≈ nprobe/K of brute
     * force. Centroids here are deterministic pseudo-random (oracle-
     * checkable); production swaps in offline-trained k-means centroids
     * with the identical plan shape. */
-  def annIvfTopK(s: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
+  def annIvfTopK(s: SparkSession, dir: String): DataFrame = {
     val e = withNorm(emb(s, dir))
       .withColumn("bucket", expr("ivf_assign(embedding, 1)[0]"))
       .transform(Caches.persist) // corpus + query branches share one assignment pass
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"),
-        explode(expr(s"ivf_assign(embedding, $nprobe)")).as("bucket"))
+        explode(expr(s"ivf_assign(embedding, $IvfNprobe)")).as("bucket"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cs").desc, col("neighbor_id"))
     e.join(q, Seq("bucket")) // equi-join on the coarse-quantizer cell
@@ -462,7 +482,7 @@ object Similarity {
         (expr(dotExpr("qv", "embedding")) /
           (col("qnrm") * col("nrm"))).as("cs"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= RecallK)
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         floor(col("cs") * 1000000).cast("long").as("cs_e6"))
       .orderBy("query_id", "rank")
@@ -807,7 +827,7 @@ object Similarity {
   /** LSH-bucketed ANN (the scale path): candidates = corpus vectors
     * sharing ≥ 1 of four 4-bit signature bands with the query, exact
     * cosine re-rank within candidates only. */
-  def annLshTopK(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def annLshTopK(s: SparkSession, dir: String): DataFrame = {
     val sigs = withNorm(emb(s, dir))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         expr(sigExpr("embedding")).as("sig"))
@@ -831,7 +851,7 @@ object Similarity {
         (expr(dotExpr("qv", "embedding")) /
           (col("qnrm") * col("nrm"))).as("cs"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= RecallK)
       .select(col("query_id"), col("neighbor_id"), col("rank"))
       .orderBy("query_id", "rank")
   }
@@ -850,23 +870,20 @@ object Similarity {
     * Ground truth is the brute-force pass — at production scale it
     * runs on a sampled query set, which is exactly what the vec_id<10
     * query side is. recall_e6 is exact (hits · 1e6/k with k | 1e6). */
-  def annRecall(s: SparkSession, dir: String, k: Int = RecallK): DataFrame = {
-    require(1000000 % k == 0, s"recall_e6 exactness needs k | 1e6, got $k")
-    val exact = annTopK(s, dir, k).select(col("query_id"), col("neighbor_id"))
-      // ground truth feeds both overlap joins + the query list
-      .transform(Caches.persist)
+  def annRecall(s: SparkSession, dir: String): DataFrame = {
+    val exact = recallTruth(s, dir)
     def hitsOf(approx: DataFrame, out: String): DataFrame =
       exact.join(approx.select(col("query_id"), col("neighbor_id")),
           Seq("query_id", "neighbor_id"))
         .groupBy("query_id").agg(count(lit(1)).as(out))
     val q = exact.select("query_id").distinct()
-    q.join(hitsOf(annLshTopK(s, dir, k), "lsh_hits"), Seq("query_id"), "left")
-      .join(hitsOf(annIvfTopK(s, dir, k), "ivf_hits"), Seq("query_id"), "left")
+    q.join(hitsOf(annLshTopK(s, dir), "lsh_hits"), Seq("query_id"), "left")
+      .join(hitsOf(annIvfTopK(s, dir), "ivf_hits"), Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("lsh_hits"), lit(0L)).as("lsh_hits"),
         coalesce(col("ivf_hits"), lit(0L)).as("ivf_hits"))
-      .withColumn("lsh_recall_e6", col("lsh_hits") * lit(1000000L / k))
-      .withColumn("ivf_recall_e6", col("ivf_hits") * lit(1000000L / k))
+      .withColumn("lsh_recall_e6", col("lsh_hits") * lit(1000000L / RecallK))
+      .withColumn("ivf_recall_e6", col("ivf_hits") * lit(1000000L / RecallK))
       .orderBy("query_id")
   }
 
@@ -961,7 +978,7 @@ object Similarity {
     * vec_id + 8 codes through the scan; the tiny query side
     * broadcasts; ranking shuffles (q, k) rows. This is the in-cell
     * scoring kernel of an IVF-PQ index (IVF routing = s03). */
-  def annPqTopK(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def annPqTopK(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val corpus = graft.operators.TextHash.fanOut(e)
       .select(col("vec_id"), expr("pq_encode(embedding)").as("pq"))
@@ -973,20 +990,19 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         expr("pq_adc_e6(qv, pq)").as("adc_e6"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= PqTopK)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("adc_e6"))
       .orderBy("query_id", "rank")
   }
 
   /** s07: IVF-PQ search — the composed production index. IVF routing
-    * prunes the corpus to the query's `nprobe` coarse cells (equi-join
+    * prunes the corpus to the query's [[IvfNprobe]] coarse cells (equi-join
     * on bucket id, as s03) and PQ-ADC scores only those candidates
     * against their 8-byte codes (as s06), so cost is
     * (nprobe/K) · corpus · O(code) with no vector decompressed and no
     * full-corpus scan. This is the billion-vector serving shape; s01
     * remains its exactness baseline. */
-  def annIvfPqTopK(s: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = 4): DataFrame = {
+  def annIvfPqTopK(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val corpus = graft.operators.TextHash.fanOut(e)
       .select(col("vec_id"),
@@ -994,7 +1010,7 @@ object Similarity {
         expr("pq_encode(embedding)").as("pq"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        explode(expr(s"ivf_assign(embedding, $nprobe)")).as("bucket"))
+        explode(expr(s"ivf_assign(embedding, $IvfNprobe)")).as("bucket"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_e6"), col("neighbor_id"))
     corpus.join(broadcast(q), Seq("bucket")) // route: coarse-cell equi-join
@@ -1002,14 +1018,15 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         expr("pq_adc_e6(qv, pq)").as("adc_e6"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= PqTopK)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("adc_e6"))
       .orderBy("query_id", "rank")
   }
 
-  /** The nprobe operating points s18 sweeps — the knob a deployment
-    * tunes before trusting an IVF-PQ index. Interpolated into the
-    * DuckDB oracle so the sweep can't desynchronize. */
+  /** The nprobe operating points s18 sweeps — the curve a deployment
+    * reads to choose its serving nprobe before trusting an IVF-PQ
+    * index. Interpolated into the DuckDB oracle so the sweep can't
+    * desynchronize. */
   val RecallSweepNprobes: Seq[Int] = Seq(1, 2, 4)
 
   /** s18: recall@k operating curve for the composed IVF-PQ index
@@ -1033,9 +1050,7 @@ object Similarity {
     * codebook, ADC quantization error (s16's report) dominates the
     * ranking, which is precisely the decision this eval exists to
     * surface: train the codebook (s04's M-step) or raise nprobe. */
-  def ivfPqRecallSweep(s: SparkSession, dir: String, k: Int = RecallK,
-      nprobes: Seq[Int] = RecallSweepNprobes): DataFrame = {
-    require(1000000 % k == 0, s"recall_e6 exactness needs k | 1e6, got $k")
+  def ivfPqRecallSweep(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val corpus = graft.operators.TextHash.fanOut(e)
       .select(col("vec_id"),
@@ -1045,13 +1060,11 @@ object Similarity {
       .transform(Caches.persist)
     val qProbes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        posexplode(expr(s"ivf_assign(embedding, ${nprobes.max})")))
+        posexplode(expr(s"ivf_assign(embedding, ${RecallSweepNprobes.max})")))
       .toDF("query_id", "qv", "probe_rank", "bucket") // probe_rank 0-based
-    val exact = annTopK(s, dir, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .transform(Caches.persist) // feeds every operating point's overlap join
+    val exact = recallTruth(s, dir)
     val qs = exact.select("query_id").distinct()
-    nprobes.map { np =>
+    RecallSweepNprobes.map { np =>
       val q = qProbes.filter(col("probe_rank") < np)
         .select("query_id", "qv", "bucket")
       val w = Window.partitionBy(col("query_id"))
@@ -1061,7 +1074,7 @@ object Similarity {
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           expr("pq_adc_e6(qv, pq)").as("adc_e6"))
         .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+        .filter(col("rank") <= RecallK)
         .select("query_id", "neighbor_id")
       val hits = exact.join(topk, Seq("query_id", "neighbor_id"))
         .groupBy("query_id").agg(count(lit(1)).as("hits"))
@@ -1069,7 +1082,7 @@ object Similarity {
         .select(lit(np).as("nprobe"), col("query_id"),
           coalesce(col("hits"), lit(0L)).as("hits"))
     }.reduce(_.unionByName(_))
-      .withColumn("recall_e6", col("hits") * lit(1000000L / k))
+      .withColumn("recall_e6", col("hits") * lit(1000000L / RecallK))
       .orderBy("nprobe", "query_id")
   }
 
@@ -1079,8 +1092,11 @@ object Similarity {
   val EmbeddingDims = 64
 
   /** Keyword side of the s08 hybrid query (terms present in the
-    * synthetic vocabulary, standing in for a tokenized user query). */
+    * synthetic vocabulary, standing in for a tokenized user query),
+    * and the same terms as an SQL `IN` list. */
   val HybridQueryTerms: Seq[String] = Seq("hash", "join", "table", "scan")
+  val HybridTermsIn: String =
+    HybridQueryTerms.map(t => s"'$t'").mkString("(", ", ", ")")
 
   /** Shortlist length per retrieval side for s08. */
   val HybridShortlist = 100
@@ -1102,15 +1118,14 @@ object Similarity {
     * shortlist semantics). The keyword score is exact integer
     * (distinct query terms matched, then query-term occurrences as
     * tiebreak); the vector side is the s01 broadcast-query cosine. */
-  def hybridTopK(s: SparkSession, dir: String, k: Int = 20): DataFrame = {
+  def hybridTopK(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextHash.{fanOut, tokens}
-    val terms = HybridQueryTerms.map(t => s"'$t'").mkString("(", ", ", ")")
     val txt = fanOut(Tables.t(s, dir, "documents"))
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"),
-        expr(s"size(array_distinct(filter(tk, x -> x IN $terms)))")
+        expr(s"size(array_distinct(filter(tk, x -> x IN $HybridTermsIn)))")
           .as("n_matched"),
-        expr(s"size(filter(tk, x -> x IN $terms))").as("tf_q"))
+        expr(s"size(filter(tk, x -> x IN $HybridTermsIn))").as("tf_q"))
     val topText = txt
       .orderBy(col("n_matched").desc, col("tf_q").desc, col("doc_id"))
       .limit(HybridShortlist) // TakeOrderedAndProject: distributed top-N
@@ -1137,7 +1152,7 @@ object Similarity {
         expr("CASE WHEN rank_text > 0 THEN 1000000 div (60 + rank_text) ELSE 0 END") +
           expr("CASE WHEN rank_vec > 0 THEN 1000000 div (60 + rank_vec) ELSE 0 END"))
       .orderBy(col("rrf_e6").desc, col("doc_id"))
-      .limit(k)
+      .limit(HybridK)
       .orderBy(col("rrf_e6").desc, col("doc_id"))
   }
 
@@ -1197,7 +1212,7 @@ object Similarity {
     * 100 TB is AQE's skew-join case, or salt via [[Skew.saltedJoin]].
     * Reference capability: README.md:648–659 (join family) composed
     * with top-k windows (SURVEY §2.5). */
-  def filteredAnnTopK(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def filteredAnnTopK(s: SparkSession, dir: String): DataFrame = {
     // one norm pass, two roles
     val e = withNorm(emb(s, dir)).transform(Caches.persist)
     val q = e.filter(col("vec_id") < 10)
@@ -1212,7 +1227,7 @@ object Similarity {
         (expr(dotExpr("qv", "c.embedding")) /
           (col("qnrm") * col("c.nrm"))).as("cs"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= FilteredAnnK)
       .select(col("query_id"), col("label"), col("neighbor_id"),
         col("rank"), floor(col("cs") * 1000000).cast("long").as("cs_e6"))
       .orderBy("query_id", "rank")
@@ -1261,8 +1276,7 @@ object Similarity {
     * per-query top-k window (TakeOrdered shape, queries broadcast).
     * At 100 TB the decoded corpus is never materialized — the decode
     * expression fuses into the scoring projection. */
-  def sq8Recall(s: SparkSession, dir: String, k: Int = RecallK): DataFrame = {
-    require(1000000 % k == 0, s"recall_e6 exactness needs k | 1e6, got $k")
+  def sq8Recall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     // per-dim corpus min/max, gathered into two 64-slot arrays
     val mm = e.select(posexplode(col("embedding")))
@@ -1289,17 +1303,16 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         (expr(ddotExpr("qv", "dec")) / (col("qnrm") * col("dnrm"))).as("cs"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= RecallK)
       .select("query_id", "neighbor_id")
-    val exact = annTopK(s, dir, k).select("query_id", "neighbor_id")
-      .transform(Caches.persist) // ground truth: overlap join + the query roster
+    val exact = recallTruth(s, dir)
     val hits = exact.join(topk, Seq("query_id", "neighbor_id"))
       .groupBy("query_id").agg(count(lit(1)).as("sq8_hits"))
     exact.select("query_id").distinct()
       .join(hits, Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("sq8_hits"), lit(0L)).as("sq8_hits"))
-      .withColumn("sq8_recall_e6", col("sq8_hits") * lit(1000000L / k))
+      .withColumn("sq8_recall_e6", col("sq8_hits") * lit(1000000L / RecallK))
       .orderBy("query_id")
   }
 
@@ -1338,14 +1351,11 @@ object Similarity {
     * operating points share the s01 ground-truth pass (persisted).
     * At 100 TB the m-dim prefix frame is the thing a deployment would
     * materialize as its serving index — 4m bytes/vector. */
-  def matryoshkaRecall(s: SparkSession, dir: String, k: Int = RecallK,
-      dims: Seq[Int] = MatryoshkaDims): DataFrame = {
-    require(1000000 % k == 0, s"recall_e6 exactness needs k | 1e6, got $k")
+  def matryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val exact = annTopK(s, dir, k).select("query_id", "neighbor_id")
-      .transform(Caches.persist) // shared ground truth: overlap join + query roster
+    val exact = recallTruth(s, dir)
     val qs = exact.select("query_id").distinct()
-    dims.map { m =>
+    MatryoshkaDims.map { m =>
       val sliced = graft.operators.TextHash.fanOut(e)
         .select(col("vec_id"), expr(s"slice(embedding, 1, $m)").as("pv"))
         .withColumn("pnrm", expr(s"sqrt(${dotExpr("pv", "pv")})"))
@@ -1359,7 +1369,7 @@ object Similarity {
           (expr(dotExpr("qpv", "pv")) / (col("qpnrm") * col("pnrm")))
             .as("cs"))
         .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+        .filter(col("rank") <= RecallK)
         .select("query_id", "neighbor_id")
       val hits = exact.join(topk, Seq("query_id", "neighbor_id"))
         .groupBy("query_id").agg(count(lit(1)).as("hits"))
@@ -1367,7 +1377,7 @@ object Similarity {
         .select(lit(m).as("dims"), col("query_id"),
           coalesce(col("hits"), lit(0L)).as("hits"))
     }.reduce(_.unionByName(_))
-      .withColumn("recall_e6", col("hits") * lit(1000000L / k))
+      .withColumn("recall_e6", col("hits") * lit(1000000L / RecallK))
       .orderBy("dims", "query_id")
   }
 
@@ -1391,7 +1401,7 @@ object Similarity {
     * measured-linear path. kth cosine = min(cs) of the ranked list
     * (ranks are cs-descending), so no second window is needed. */
   def knnOutliers(s: SparkSession, dir: String): DataFrame = {
-    val agg = knnGraphMemo(s, dir, 3)
+    val agg = knnGraphMemo(s, dir)
       .groupBy("vec_id")
       .agg(count(lit(1)).cast("long").as("n_neighbors"),
         max(col("cs_e6")).as("best_cs_e6"),
@@ -1445,7 +1455,7 @@ object Similarity {
     // iteration reads replay no lineage and nothing extra is
     // persisted; outDeg is a tiny groupBy over the checkpointed n·k
     // rows, cheap to recompute per iteration
-    val g = knnGraphMemo(s, dir, 3)
+    val g = knnGraphMemo(s, dir)
       .select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
     val outDeg = g.groupBy("src").agg(count(lit(1)).as("out_deg"))
     val nodes = emb(s, dir).select("vec_id")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Caches, Tables}
+import graft.operators.Similarity.HybridTermsIn
 import graft.operators.TextHash._
 
 /** Text-analysis operators over `documents`: language ID, quality
@@ -285,16 +286,15 @@ object TextAnalysis {
     * is the exp of PMI, so ranking by it IS ranking by PMI — with the
     * log dropped the gate needs no transcendentals (same trade as
     * i03's idf; a consumer wanting the PMI value applies log2 to
-    * lift_e6/1e6 client-side). A min-support floor (c12 ≥ 5) drops
-    * the noise pairs every collocation extractor filters.
+    * lift_e6/1e6 client-side). A [[CollocMinSupport]] floor on c12
+    * drops the noise pairs every collocation extractor filters.
     *
     * Scale shape: one bigram explosion into a vocab²-bound partial
     * agg; the marginals and total derive from the AGGREGATE (vocab-
     * bound, broadcast back), never from the token stream — so however
     * large the corpus, everything after the first groupBy is
     * dictionary-sized. Output is vocab²-bound, not corpus-bound. */
-  def collocations(s: SparkSession, dir: String, minSupport: Long = 5)
-      : DataFrame = {
+  def collocations(s: SparkSession, dir: String): DataFrame = {
     val pair = docs(s, dir)
       .select(tokens(col("text")).as("tk"))
       .select(explode(expr(bigramsExpr("tk"))).as("b"))
@@ -304,7 +304,7 @@ object TextAnalysis {
     val first = pair.groupBy("w1").agg(sum("c12").as("c1x"))
     val second = pair.groupBy("w2").agg(sum("c12").as("cx2"))
     val tot = pair.agg(sum("c12").as("tt"))
-    pair.filter(col("c12") >= minSupport)
+    pair.filter(col("c12") >= CollocMinSupport)
       .join(broadcast(first), "w1")
       .join(broadcast(second), "w2")
       .crossJoin(broadcast(tot))
@@ -343,6 +343,15 @@ object TextAnalysis {
         expr("""cast((cast(tfpart_e6 as decimal(38,0)) * idf_e6)
              div 1000000 as long)""").as("contrib_e6"))
 
+  /** Fixed sizes and floors, each interpolated into its oracle: the
+    * length of the i03 ranking (and so of every BM25 shortlist), the
+    * ranks of i14's report, i06's expansions per query term, and t22's
+    * min-support (a bigram seen fewer times is noise). */
+  val Bm25Shortlist = 100
+  val PruneTopK = 10
+  val ExpansionTopPer = 2
+  val CollocMinSupport = 5L
+
   /** i03: BM25 ranked retrieval for the standing query-term set
     * ([[Similarity.HybridQueryTerms]]) — the scoring function every
     * lexical retrieval stack uses, in a log-free exact-integer form
@@ -368,15 +377,13 @@ object TextAnalysis {
     * QUERY-TERM hits only (the filter lands before the explode, so
     * the shuffled volume is matches, not the corpus token stream);
     * df is a broadcast-sized aggregate over the matched set; the
-    * top-100 is TakeOrderedAndProject — per-partition local top-k,
-    * never a full sort. */
-  def bm25(s: SparkSession, dir: String, shortlist: Int = 100): DataFrame = {
-    val termsIn = Similarity.HybridQueryTerms
-      .map(t => s"'$t'").mkString("(", ", ", ")")
+    * top-[[Bm25Shortlist]] is TakeOrderedAndProject — per-partition
+    * local top-k, never a full sort. */
+  def bm25(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
+        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
       .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
     val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf = base.filter(size(col("qtk")) > 0)
@@ -388,7 +395,7 @@ object TextAnalysis {
       .agg(count(lit(1)).cast("int").as("n_matched"),
         sum("contrib_e6").as("score_e6"))
       .orderBy(col("score_e6").desc, col("doc_id"))
-      .limit(shortlist)
+      .limit(Bm25Shortlist)
     sc.withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("score_e6").desc, col("doc_id"))))
@@ -483,12 +490,10 @@ object TextAnalysis {
     * skew at scale: BASELINE.md §sf1 scale-stress). */
   private[graft] def indexPruningPostings(
       s: SparkSession, dir: String): DataFrame = {
-    val termsIn = Similarity.HybridQueryTerms
-      .map(t => s"'$t'").mkString("(", ", ", ")")
     val base = docs(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
+        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
       .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
     val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf = base.filter(size(col("qtk")) > 0)
@@ -738,14 +743,14 @@ object TextAnalysis {
     * matches-bound frames; the side-by-side join is k rows against k
     * rows. Corpus-scale work is i03's token fan-out, paid once and
     * shared by both branches through one persisted postings frame. */
-  def indexPruning(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+  def indexPruning(s: SparkSession, dir: String): DataFrame = {
     val postings = indexPruningPostings(s, dir)
       // the full and pruned rankings share one postings pass
       .transform(Caches.persist)
     val pruned = prunedPostings(postings)
     def topK(c: DataFrame): DataFrame = c.groupBy("doc_id")
       .agg(sum("contrib_e6").as("score_e6"))
-      .orderBy(col("score_e6").desc, col("doc_id")).limit(k)
+      .orderBy(col("score_e6").desc, col("doc_id")).limit(PruneTopK)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("score_e6").desc, col("doc_id"))))
     val full = topK(postings).select(col("rank"),
@@ -753,8 +758,8 @@ object TextAnalysis {
     val pk = topK(pruned).select(col("rank"),
       col("doc_id").as("doc_pruned"), col("score_e6").as("score_pruned_e6"))
     // LEFT join from the full ranking: a proportional cut can leave
-    // the pruned index scoring fewer than k docs (a doc may lose all
-    // its postings), and an inner join would silently truncate the
+    // the pruned index scoring fewer than PruneTopK docs (a doc may
+    // lose all its postings), and an inner join would silently truncate the
     // report. Missing pruned ranks show the -1 sentinel (not NULL —
     // a nullable long turns into float64 in the driver's pandas
     // compare and breaks the hash gate on dtype alone).
@@ -827,14 +832,12 @@ object TextAnalysis {
     * re-joins the token arrays by doc key. Window scoring never
     * touches non-matching documents. */
   def snippets(s: SparkSession, dir: String): DataFrame = {
-    val termsIn = Similarity.HybridQueryTerms
-      .map(t => s"'$t'").mkString("(", ", ", ")")
     val toks = docs(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .transform(Caches.persist) // feeds hit extraction + the final snippet slice
     val hits = toks.select(col("doc_id"), posexplode(col("tk")))
       .toDF("doc_id", "pos", "term")
-      .filter(expr(s"term IN $termsIn"))
+      .filter(expr(s"term IN $HybridTermsIn"))
       .transform(Caches.persist) // both window-join sides
     val windows = hits.as("a")
       .join(hits.as("b"),
@@ -973,12 +976,13 @@ object TextAnalysis {
 
   /** i06: co-occurrence query expansion — for each retrieval query
     * term ([[Similarity.HybridQueryTerms]], the same list i03/s08/i05
-    * interpolate), the top-2 expansion candidates by document-level
-    * lift `P(t | docs containing q) / P(t)` in exact-integer e6 form
-    * (`df_joint·N·1e6 div (n_q·df_t)`), support-filtered at
-    * df_joint ≥ [[ExpansionMinJoint]]. This is the offline side of a
-    * query-expansion pipeline: the emitted (q_term → exp_term) table
-    * is what a retrieval layer unions into the match set.
+    * interpolate), the top-[[ExpansionTopPer]] expansion candidates
+    * by document-level lift `P(t | docs containing q) / P(t)` in
+    * exact-integer e6 form (`df_joint·N·1e6 div (n_q·df_t)`),
+    * support-filtered at df_joint ≥ [[ExpansionMinJoint]]. This is the
+    * offline side of a query-expansion pipeline: the emitted
+    * (q_term → exp_term) table is what a retrieval layer unions into
+    * the match set.
     *
     * Scale shape: inverted-index algebra like i01–i05 — the corpus
     * collapses to distinct (doc_id, term) postings once; only the
@@ -988,7 +992,7 @@ object TextAnalysis {
     * lift product `df_joint·N` needs headroom: at ≥ ~3·10⁶ docs move
     * the 1e6 scale inside the division (documented, not hit at any
     * tested SF). */
-  def queryExpansion(s: SparkSession, dir: String, topPer: Int = 2): DataFrame = {
+  def queryExpansion(s: SparkSession, dir: String): DataFrame = {
     val dt = docs(s, dir)
       .select(col("doc_id"),
         explode(array_distinct(split(lower(col("text")), "\\s+"))).as("term"))
@@ -1012,7 +1016,7 @@ object TextAnalysis {
       .withColumn("lift_e6",
         expr("df_joint * n_docs * 1000000L div (n_q * df_exp)"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topPer)
+      .filter(col("rank") <= ExpansionTopPer)
       .select(col("q_term"), col("exp_term"), col("rank"),
         col("df_joint"), col("df_exp"), col("lift_e6"))
       .orderBy("q_term", "rank")
@@ -1300,13 +1304,11 @@ object TextAnalysis {
     * space; the share denominator is a term-level window over those
     * few facet rows, not data-scale work. */
   def facets(s: SparkSession, dir: String): DataFrame = {
-    val termsIn = Similarity.HybridQueryTerms
-      .map(t => s"'$t'").mkString("(", ", ", ")")
     val hits = docs(s, dir)
       .select(col("doc_id"), col("source"), col("lang"),
         tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("source"), col("lang"),
-        expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
+        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
       .filter(size(col("qtk")) > 0)
       .select(col("doc_id"), col("source"), col("lang"),
         explode(col("qtk")).as("q_term"))
@@ -1665,11 +1667,13 @@ object TextAnalysis {
   }
 
   /** i12 geometry, shared with the oracle: R pseudo-relevant docs, E
-    * expansion terms, and the Rocchio β as an integer divisor (the
-    * expansion half-weights into the final score). */
+    * expansion terms, the Rocchio β as an integer divisor (the
+    * expansion half-weights into the final score), and the length of
+    * the final ranking. */
   val RocchioTopR = 3
   val RocchioExpTerms = 5
   val RocchioBetaDen = 2
+  val RocchioShortlist = 10
 
   /** i12: Rocchio pseudo-relevance feedback — the classic two-round
     * retrieval loop (Rocchio 1971, the PRF baseline every IR stack
@@ -1690,17 +1694,14 @@ object TextAnalysis {
     * probing a broadcast hash side — O(1) per token, matched rows
     * only in the shuffle. No stage depends on corpus² or on an
     * uncapped broadcast. */
-  def rocchioFeedback(s: SparkSession, dir: String,
-      shortlist: Int = 10): DataFrame = {
-    val termsIn = Similarity.HybridQueryTerms
-      .map(t => s"'$t'").mkString("(", ", ", ")")
+  def rocchioFeedback(s: SparkSession, dir: String): DataFrame = {
     val base = docs(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
         col("tk"))
     val qbase = base
       .select(col("doc_id"), col("dl"),
-        expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
+        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
       .transform(Caches.persist) // round-1 stats + tf share it (i03's persist)
     val stats = qbase.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
     val tf1 = qbase.filter(size(col("qtk")) > 0)
@@ -1763,7 +1764,7 @@ object TextAnalysis {
       .na.fill(0, Seq("n_orig", "n_exp"))
       .withColumn("score_e6",
         col("orig_e6") + expr(s"exp_e6 div $RocchioBetaDen"))
-      .orderBy(col("score_e6").desc, col("doc_id")).limit(shortlist)
+      .orderBy(col("score_e6").desc, col("doc_id")).limit(RocchioShortlist)
       .withColumn("rank", row_number().over(w))
       .select(col("rank"), col("doc_id"), col("n_orig"), col("n_exp"),
         col("orig_e6"), col("exp_e6"), col("score_e6"))

@@ -30,8 +30,7 @@ object Extensions {
     "d12_dedup_containment" -> ((s: SparkSession, d: String) =>
       Dedup.containmentPairs(s, d, maxShingleDf = Some(Dedup.JaccardDfCap))),
     // span-granular rewrite: strip blocks repeated across documents
-    "d13_block_dedup" -> ((s: SparkSession, d: String) =>
-      Dedup.blockDedup(s, d)),
+    "d13_block_dedup" -> (Dedup.blockDedup _),
     // the most-duplicated 8-grams across the corpus (what d13 strips)
     "d14_hot_ngrams" -> (Dedup.hotNgrams _),
     // Lee-et-al exact-substring spans: maximal cross-doc verbatim
@@ -50,8 +49,7 @@ object Extensions {
     "d15_cosine_pairs" -> ((s: SparkSession, d: String) =>
       Dedup.cosinePairsSampled(s, d)),
     // d15's scale path: rarest-k prefix candidates, exact rerank
-    "d16_cosine_prefix" -> ((s: SparkSession, d: String) =>
-      Dedup.cosinePairsPrefix(s, d)),
+    "d16_cosine_prefix" -> (Dedup.cosinePairsPrefix _),
     // near-dup pairs straddling the t07 split (self-decontamination)
     "x15_split_leakage" -> (Dedup.splitLeakage _),
     // exact 8-gram benchmark decontamination (GPT-3 appendix C):
@@ -73,14 +71,13 @@ object Extensions {
     "d07_keep_best" -> (DupCluster.keepBest _),
     "i01_inverted_index" -> (TextAnalysis.invertedIndex _),
     "i02_phrase_search" -> (TextAnalysis.phraseSearch _),
-    "i03_bm25" -> ((s: SparkSession, d: String) => TextAnalysis.bm25(s, d)),
+    "i03_bm25" -> (TextAnalysis.bm25 _),
     // i02's phrase at slop 3: in-order window hits + tightest gap
     "i04_proximity_search" -> (TextAnalysis.proximitySearch _),
     // best query-term window per matching doc + its preview text
     "i05_snippets" -> (TextAnalysis.snippets _),
     // per-query-term top-2 co-occurrence expansions by document lift
-    "i06_query_expansion" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.queryExpansion(s, d)),
+    "i06_query_expansion" -> (TextAnalysis.queryExpansion _),
     // query-by-document: tf·idf top-5 related docs per probe doc
     "i07_more_like_this" -> (TextAnalysis.moreLikeThis _),
     // per-(term, source, lang) facet cells with exact result-set share
@@ -96,38 +93,33 @@ object Extensions {
     // Rocchio pseudo-relevance feedback: BM25 round 1 → top-R docs'
     // best non-query terms → half-weighted BM25 round 2; every
     // feedback pass probes a broadcast term set, matched rows only
-    "i12_rocchio_feedback" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.rocchioFeedback(s, d)),
+    "i12_rocchio_feedback" -> (TextAnalysis.rocchioFeedback _),
     // known-item MRR/hit@k over the exact-integer BM25 scorer: the
     // known item's rank is 1 + count(better docs) — one partial agg
     // per probe term, never a per-term global sort/window
     "i13_retrieval_eval" -> (TextAnalysis.retrievalEval _),
     // static index pruning: per-term top-P impact cut vs the full
     // index, side-by-side top-10 damage report
-    "i14_index_pruning" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.indexPruning(s, d)),
+    "i14_index_pruning" -> (TextAnalysis.indexPruning _),
     "s01_ann_topk" -> ((s: SparkSession, d: String) => Similarity.annTopK(s, d)),
     // greedy MMR diversification of the s01 shortlist (λ = 0.5)
     "s28_mmr_rerank" -> (Similarity.mmrRerank _),
-    "s02_ann_lsh" -> ((s: SparkSession, d: String) => Similarity.annLshTopK(s, d)),
-    "s03_ann_ivf" -> ((s: SparkSession, d: String) => Similarity.annIvfTopK(s, d)),
+    "s02_ann_lsh" -> (Similarity.annLshTopK _),
+    "s03_ann_ivf" -> (Similarity.annIvfTopK _),
     "s04_ivf_centroids" -> (Similarity.ivfCentroids _),
     "s05_pq_codes" -> (Similarity.pqCodes _),
-    "s06_pq_adc" -> ((s: SparkSession, d: String) => Similarity.annPqTopK(s, d)),
-    "s07_ivf_pq" -> ((s: SparkSession, d: String) => Similarity.annIvfPqTopK(s, d)),
-    "s08_hybrid_rrf" -> ((s: SparkSession, d: String) => Similarity.hybridTopK(s, d)),
-    "s09_knn_graph" -> ((s: SparkSession, d: String) => Similarity.knnGraph(s, d)),
-    "s10_mutual_knn" -> ((s: SparkSession, d: String) => Similarity.mutualKnn(s, d)),
+    "s06_pq_adc" -> (Similarity.annPqTopK _),
+    "s07_ivf_pq" -> (Similarity.annIvfPqTopK _),
+    "s08_hybrid_rrf" -> (Similarity.hybridTopK _),
+    "s09_knn_graph" -> (Similarity.knnGraph _),
+    "s10_mutual_knn" -> (Similarity.mutualKnn _),
     "s11_knn_components" -> (DupCluster.knnComponents _),
     "s12_semantic_reps" -> (DupCluster.semanticReps _),
-    "s13_knn_degrees" -> ((s: SparkSession, d: String) =>
-      Similarity.knnDegrees(s, d)),
+    "s13_knn_degrees" -> (Similarity.knnDegrees _),
     // recall@5 of the s02/s03 approximate paths vs s01 ground truth
-    "s14_ann_recall" -> ((s: SparkSession, d: String) =>
-      Similarity.annRecall(s, d)),
+    "s14_ann_recall" -> (Similarity.annRecall _),
     // recall@5 operating curve of s07 (IVF-PQ) across nprobe 1/2/4
-    "s18_ivf_pq_recall" -> ((s: SparkSession, d: String) =>
-      Similarity.ivfPqRecallSweep(s, d)),
+    "s18_ivf_pq_recall" -> (Similarity.ivfPqRecallSweep _),
     // per-topic cohesion: internal vs escaping directed kNN edges
     "s15_cluster_quality" -> (DupCluster.clusterQuality _),
     // per-subspace PQ reconstruction error (index-health card)
@@ -139,17 +131,13 @@ object Extensions {
     "s17_label_centroids" -> (Similarity.labelCentroids _),
     // metadata-filtered exact top-k: same-label cosine search as an
     // equi-join on the filter key (pre-filter, not post-filter)
-    "s19_filtered_ann" -> ((s: SparkSession, d: String) =>
-      Similarity.filteredAnnTopK(s, d)),
+    "s19_filtered_ann" -> (Similarity.filteredAnnTopK _),
     // int8 scalar-quantization (SQ8) recall@5 vs the exact top-k
-    "s20_sq8_recall" -> ((s: SparkSession, d: String) =>
-      Similarity.sq8Recall(s, d)),
+    "s20_sq8_recall" -> (Similarity.sq8Recall _),
     // Matryoshka prefix-dim (8/16/32) recall@5 vs the exact top-k
-    "s21_matryoshka_recall" -> ((s: SparkSession, d: String) =>
-      Similarity.matryoshkaRecall(s, d)),
+    "s21_matryoshka_recall" -> (Similarity.matryoshkaRecall _),
     // 3-iteration e9 integer PageRank over the s09 kNN graph
-    "s22_pagerank" -> ((s: SparkSession, d: String) =>
-      Similarity.pageRank(s, d)),
+    "s22_pagerank" -> (Similarity.pageRank _),
     // kNN-distance outliers: isolated or kth-neighbor cs < 0.4
     "s23_knn_outliers" -> (Similarity.knnOutliers _),
     // mutual-graph triangles + local clustering coefficient (ordered
@@ -206,8 +194,7 @@ object Extensions {
     "t18_lm_score" -> (TextAnalysis.lmScore _),
     "t19_novelty" -> (TextAnalysis.novelty _),
     "t20_pii_scrub" -> (Curation.piiScrub _),
-    "t22_collocations" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.collocations(s, d)),
+    "t22_collocations" -> (TextAnalysis.collocations _),
     "t23_char_diversity" -> (TextAnalysis.charDiversity _),
     // exact-integer Flesch reading-ease card (regex censuses only)
     "t28_readability" -> (TextAnalysis.readability _),
@@ -238,8 +225,7 @@ object Extensions {
     // holdout) keep counts + seed-label confusion — the acceptance
     // check that closes the train→serve loop
     "t37_classifier_eval" -> (TextAnalysis.classifierEval _),
-    "t21_k_anonymity" -> ((s: SparkSession, d: String) =>
-      Curation.kAnonymity(s, d)),
+    "t21_k_anonymity" -> (Curation.kAnonymity _),
     "m01_multimodal_features" -> (Multimodal.features _),
     "m02_multimodal_resize" -> (Multimodal.resized _),
     // perceptual (average-hash) signature extraction over payloads
@@ -261,11 +247,10 @@ object Extensions {
     // per-type stream freshness: volume, span, max/mean arrival gap
     "x17_freshness" -> (TimeSeries.freshness _),
     "x03_pipeline" -> (Pipeline.datasetCard _),
-    "x04_packing" -> ((s: SparkSession, d: String) => Curation.packing(s, d)),
+    "x04_packing" -> (Curation.packing _),
     // shuffled shard manifest: data-derived shard count, metadata-only
     // hash shuffle key, per-shard balance audit
-    "x30_shard_manifest" -> ((s: SparkSession, d: String) =>
-      Curation.shardManifest(s, d)),
+    "x30_shard_manifest" -> (Curation.shardManifest _),
     "x05_curation_card" -> (Pipeline.curationCard _),
     // per-source pretraining data card: x25 mixture + t33 drift + t32
     // overlap + d17 dup provenance + t02 keep rate + t19 novelty median
@@ -676,7 +661,7 @@ object Extensions {
       g AS (SELECT vec_id, neighbor_id, cs,
               row_number() OVER
                 (PARTITION BY vec_id ORDER BY cs DESC, neighbor_id) AS rank
-            FROM kedges QUALIFY rank <= 3),
+            FROM kedges QUALIFY rank <= ${Similarity.KnnK}),
       mpairs AS (SELECT f.vec_id AS ida, f.neighbor_id AS idb,
                    f.rank AS rank_ab, r.rank AS rank_ba, f.cs
                  FROM g f JOIN g r
@@ -1007,7 +992,7 @@ object Extensions {
       kb AS (SELECT k.doc_id, CAST(sum(n.n_sym) AS BIGINT) AS n_bpe
              FROM keptx k JOIN nsym n ON k.tok = n.w GROUP BY k.doc_id),
       kbs AS (SELECT kb.doc_id, d.source, kb.n_bpe,
-                ${rh("concat(kb.doc_id::VARCHAR, ':1')", 1000000007L)} AS key
+                ${rh(s"concat(kb.doc_id::VARCHAR, ':${Curation.ShardEpoch}')", 1000000007L)} AS key
               FROM kb JOIN documents d ON kb.doc_id = d.doc_id),
       ttx AS (SELECT CAST(sum(n_bpe) AS BIGINT) AS total_toks FROM kbs),
       aax AS (SELECT kbs.*, greatest(1,
@@ -1528,7 +1513,7 @@ object Extensions {
       SELECT doc_id, n_matched, score_e6,
         CAST(row_number() OVER (ORDER BY score_e6 DESC, doc_id) AS INTEGER)
           AS rank
-      FROM sc QUALIFY rank <= 100 ORDER BY rank""",
+      FROM sc QUALIFY rank <= ${TextAnalysis.Bm25Shortlist} ORDER BY rank""",
     // static index pruning: term-retained contribution postings, the
     // per-term top-P QUALIFY cut, both rankings from the same frame
     "i14_index_pruning" -> s"""
@@ -1548,12 +1533,12 @@ object Extensions {
               FROM ctm GROUP BY 1),
       fk AS (SELECT doc_id, score_e6, CAST(row_number() OVER
                (ORDER BY score_e6 DESC, doc_id) AS INTEGER) AS rank
-             FROM fsc QUALIFY rank <= 10),
+             FROM fsc QUALIFY rank <= ${TextAnalysis.PruneTopK}),
       pscp AS (SELECT doc_id, sum(contrib_e6) AS score_e6
                FROM prx GROUP BY 1),
       pkk AS (SELECT doc_id, score_e6, CAST(row_number() OVER
                 (ORDER BY score_e6 DESC, doc_id) AS INTEGER) AS rank
-              FROM pscp QUALIFY rank <= 10)
+              FROM pscp QUALIFY rank <= ${TextAnalysis.PruneTopK})
       SELECT f.rank, f.doc_id AS doc_full,
         CAST(f.score_e6 AS BIGINT) AS score_full_e6,
         CAST(coalesce(p.doc_id, -1) AS BIGINT) AS doc_pruned,
@@ -1619,7 +1604,7 @@ object Extensions {
         CAST(exp_e6 AS BIGINT) AS exp_e6,
         CAST(orig_e6 + exp_e6 // ${TextAnalysis.RocchioBetaDen} AS BIGINT)
           AS score_e6
-      FROM f ORDER BY rank LIMIT 10""",
+      FROM f ORDER BY rank LIMIT ${TextAnalysis.RocchioShortlist}""",
     // known-item eval: per probe term the highest-raw-tf doc's rank
     // under the single-term integer BM25 score, rank = 1 + count of
     // strictly-better (score, doc_id) rows — no window over postings
@@ -1668,7 +1653,7 @@ object Extensions {
       WITH $bm25Ctes,
       short AS (SELECT doc_id, n_matched, score_e6,
                   row_number() OVER (ORDER BY score_e6 DESC, doc_id) AS r
-                FROM sc QUALIFY r <= 100),
+                FROM sc QUALIFY r <= ${TextAnalysis.Bm25Shortlist}),
       j AS (SELECT s.doc_id, d.source, s.n_matched, s.score_e6,
               row_number() OVER (PARTITION BY d.source
                 ORDER BY s.score_e6 DESC, s.doc_id) AS src_rank
@@ -1723,10 +1708,10 @@ object Extensions {
           AS rank,
         CAST(floor(cs * 1000000) AS BIGINT) AS cs_e6
       FROM edges
-      QUALIFY rank <= 3
+      QUALIFY rank <= ${Similarity.KnnK}
       ORDER BY vec_id, rank""",
     // symmetrization of the s09 graph: keep (a,b) only when both
-    // directions survive the per-vector top-3 rank window
+    // directions survive the per-vector top-KnnK rank window
     "s10_mutual_knn" -> s"""
       WITH $mutualKnnCtes
       SELECT ida, idb,
@@ -1794,7 +1779,7 @@ object Extensions {
       SELECT o.vec_id, o.out_deg,
         COALESCE(i.in_deg, 0) AS in_deg,
         COALESCE(m.mutual_deg, 0) AS mutual_deg,
-        CAST(CASE WHEN COALESCE(i.in_deg, 0) > 6 THEN 1 ELSE 0 END
+        CAST(CASE WHEN COALESCE(i.in_deg, 0) > ${2 * Similarity.KnnK} THEN 1 ELSE 0 END
           AS INTEGER) AS is_hub
       FROM outd o LEFT JOIN ind i USING (vec_id)
         LEFT JOIN md m USING (vec_id)
@@ -1857,7 +1842,7 @@ object Extensions {
       FROM (SELECT query_id, neighbor_id, row_number() OVER
               (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
             FROM scored) t
-      WHERE rnk <= 5 ORDER BY query_id, rnk""",
+      WHERE rnk <= ${Similarity.RecallK} ORDER BY query_id, rnk""",
     // IVF: centroid c(k,d) = LCG(k*64+d, addend 54321)/2^31 - 0.5 (16
     // cells); corpus keeps its argmax cell (crnk=1), queries probe 4.
     "s03_ann_ivf" -> s"""
@@ -1875,7 +1860,7 @@ object Extensions {
           FROM ranked r JOIN embeddings e USING (vec_id) WHERE crnk = 1),
       probes AS (SELECT r.vec_id AS query_id, e.embedding AS qv, r.k AS bucket
           FROM ranked r JOIN embeddings e USING (vec_id)
-          WHERE r.vec_id < 10 AND crnk <= 4),
+          WHERE r.vec_id < 10 AND crnk <= ${Similarity.IvfNprobe}),
       cand AS (SELECT query_id, qv, c.vec_id AS neighbor_id, c.embedding AS emb
           FROM corpus c JOIN probes USING (bucket) WHERE query_id <> c.vec_id),
       scored AS (SELECT query_id, neighbor_id, ${cos("qv", "emb")} AS cs FROM cand)
@@ -1883,7 +1868,7 @@ object Extensions {
         CAST(floor(cs * 1000000) AS BIGINT) AS cs_e6
       FROM (SELECT query_id, neighbor_id, cs, row_number() OVER
             (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk FROM scored) t
-      WHERE rnk <= 5 ORDER BY query_id, rnk""",
+      WHERE rnk <= ${Similarity.RecallK} ORDER BY query_id, rnk""",
     // same centroid/assignment math as s03 (crnk = 1); coordinate
     // sums in floor(x*1e6) longs; mean via double division + floor
     // (an integer `div` would floor in DuckDB but truncate in Spark
@@ -1943,7 +1928,7 @@ object Extensions {
           FROM irk r JOIN embeddings e USING (vec_id) WHERE crnk = 1),
       ipr AS (SELECT r.vec_id AS query_id, e.embedding AS qv, r.k AS bucket
           FROM irk r JOIN embeddings e USING (vec_id)
-          WHERE r.vec_id < 10 AND crnk <= 4),
+          WHERE r.vec_id < 10 AND crnk <= ${Similarity.IvfNprobe}),
       icd AS (SELECT query_id, qv, c.vec_id AS neighbor_id, c.embedding AS emb
           FROM icp c JOIN ipr USING (bucket) WHERE query_id <> c.vec_id),
       isc AS (SELECT query_id, neighbor_id, ${cos("qv", "emb")} AS cs FROM icd),
@@ -2045,7 +2030,7 @@ object Extensions {
       FROM (SELECT *, row_number() OVER
               (PARTITION BY query_id ORDER BY adc_e6, neighbor_id) AS rnk
             FROM adc) z
-      WHERE rnk <= 5 ORDER BY query_id, rnk""",
+      WHERE rnk <= ${Similarity.PqTopK} ORDER BY query_id, rnk""",
     // same centroid/routing math as s03 (addend 54321, crnk) + the
     // same per-subspace e6-floored ADC sums as s06, composed: only
     // candidates in a probed coarse cell are scored
@@ -2064,7 +2049,7 @@ object Extensions {
       corpus AS (SELECT vec_id, k AS bucket FROM ranked WHERE crnk = 1),
       probes AS (SELECT r.vec_id AS query_id, e.embedding AS qv, r.k AS bucket
           FROM ranked r JOIN embeddings e USING (vec_id)
-          WHERE r.vec_id < 10 AND crnk <= 4),
+          WHERE r.vec_id < 10 AND crnk <= ${Similarity.IvfNprobe}),
       cand AS (SELECT p.query_id, p.qv, c.vec_id AS neighbor_id
           FROM corpus c JOIN probes p USING (bucket)
           WHERE p.query_id <> c.vec_id),
@@ -2082,7 +2067,7 @@ object Extensions {
       FROM (SELECT *, row_number() OVER
               (PARTITION BY query_id ORDER BY adc_e6, neighbor_id) AS rnk
             FROM adc) z
-      WHERE rnk <= 5 ORDER BY query_id, rnk""",
+      WHERE rnk <= ${Similarity.PqTopK} ORDER BY query_id, rnk""",
     // s07's routed+ADC pipeline re-run per nprobe operating point
     // (bucket assignment and PQ codes shared across the sweep), each
     // point's top-5 overlapped with the s01 exact top-5
@@ -2156,14 +2141,14 @@ object Extensions {
             if list_contains($qTermsList, x)]) AS tf_q
         FROM tk),
       tt AS (SELECT * FROM txt
-             ORDER BY n_matched DESC, tf_q DESC, doc_id LIMIT 100),
+             ORDER BY n_matched DESC, tf_q DESC, doc_id LIMIT ${Similarity.HybridShortlist}),
       rt AS (SELECT doc_id, row_number() OVER
               (ORDER BY n_matched DESC, tf_q DESC, doc_id) AS rank_text FROM tt),
       vs AS (SELECT e.vec_id, ${cos("e.embedding", "q.embedding")} AS cs
              FROM embeddings e,
                   (SELECT embedding FROM embeddings WHERE vec_id = 0) q
              WHERE e.vec_id <> 0),
-      tv AS (SELECT * FROM vs ORDER BY cs DESC, vec_id LIMIT 100),
+      tv AS (SELECT * FROM vs ORDER BY cs DESC, vec_id LIMIT ${Similarity.HybridShortlist}),
       rv AS (SELECT vec_id, row_number() OVER
               (ORDER BY cs DESC, vec_id) AS rank_vec FROM tv),
       f AS (SELECT coalesce(rt.doc_id, rv.vec_id) AS doc_id,
@@ -2176,7 +2161,7 @@ object Extensions {
                 THEN 1000000 // (60 + rank_text) ELSE 0 END) +
              (CASE WHEN rank_vec > 0
                 THEN 1000000 // (60 + rank_vec) ELSE 0 END) AS BIGINT) AS rrf_e6
-      FROM f ORDER BY rrf_e6 DESC, doc_id LIMIT 20""",
+      FROM f ORDER BY rrf_e6 DESC, doc_id LIMIT ${Similarity.HybridK}""",
     "t01_langid" -> raw"""
       WITH f AS (SELECT doc_id, lang AS lang_label, lower(text) AS t FROM documents),
       g AS (SELECT doc_id, lang_label, length(t) AS n_chars_seen,
@@ -2452,7 +2437,7 @@ object Extensions {
             SELECT 'supplier', s_suppkey, s_name FROM supplier)
       ORDER BY src, entity_id""",
     // exact-integer lift (exp of PMI) over the t17 bigram aggregate;
-    // positional marginals and total from the aggregate, support ≥ 5
+    // positional marginals and total from the aggregate, min support
     "t22_collocations" -> s"""
       WITH $bigramCtes,
       fst AS (SELECT w1, sum(c12) AS c1x FROM pair GROUP BY 1),
@@ -2462,15 +2447,15 @@ object Extensions {
         CAST((c12::HUGEINT * tt * 1000000) // (c1x::HUGEINT * cx2)
           AS BIGINT) AS lift_e6
       FROM pair JOIN fst USING (w1) JOIN snd USING (w2), tot
-      WHERE c12 >= 5
+      WHERE c12 >= ${TextAnalysis.CollocMinSupport}
       ORDER BY w1, w2""",
     // fixed-width balance buckets (not rank deciles) so class sizes
-    // are shard-reproducible; k = 5 mirrors Curation.kAnonymity
-    "t21_k_anonymity" -> """
+    // are shard-reproducible; k is Curation.KAnonymityK
+    "t21_k_anonymity" -> s"""
       SELECT c_nationkey, c_mktsegment,
         CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_bucket,
         count(*) AS class_sz,
-        CAST(CASE WHEN count(*) >= 5 THEN 1 ELSE 0 END AS INTEGER)
+        CAST(CASE WHEN count(*) >= ${Curation.KAnonymityK} THEN 1 ELSE 0 END AS INTEGER)
           AS k_anonymous
       FROM customer
       GROUP BY c_nationkey, c_mktsegment, bal_bucket
@@ -2727,7 +2712,6 @@ object Extensions {
                   WHEN h_mod < 90 THEN 'val' ELSE 'test' END AS split,
         count(*) AS n_docs, CAST(sum(n_toks) AS BIGINT) AS tokens_total
       FROM en GROUP BY 1 ORDER BY split""",
-    // concat-and-cut packing: per-source running token sum, bins of 256
     // positional hits of the s08/i03 query terms; window scoring via
     // a per-doc positional range join; leftmost-best tiebreak; the
     // snippet text re-sliced from the token array
@@ -2799,7 +2783,7 @@ object Extensions {
       FROM (SELECT query_id, label, neighbor_id, cs, row_number() OVER
               (PARTITION BY query_id ORDER BY cs DESC, neighbor_id) AS rnk
             FROM scored) t
-      WHERE rnk <= 5 ORDER BY query_id, rnk""",
+      WHERE rnk <= ${Similarity.FilteredAnnK} ORDER BY query_id, rnk""",
     // SQ8: per-dim [min,max] grid learned corpus-wide, reconstruction
     // arithmetic interpolated from Similarity.sq8DecSql (one
     // definition both engines), exact ground truth = s01's cosine
@@ -3341,7 +3325,7 @@ object Extensions {
         df_joint, df_exp, lift_e6
       FROM (SELECT *, row_number() OVER (PARTITION BY q_term
               ORDER BY lift_e6 DESC, exp_term) AS rnk FROM sc) z
-      WHERE rnk <= 2 ORDER BY q_term, rnk""",
+      WHERE rnk <= ${TextAnalysis.ExpansionTopPer} ORDER BY q_term, rnk""",
     // query-by-document tf·idf: probe terms' postings only, i03's
     // exact-integer idf, per-(probe, cand, term) contribution floored
     // at the same div-1000 point as the Spark side
@@ -3413,7 +3397,7 @@ object Extensions {
       WITH $bm25Ctes,
       short AS (SELECT doc_id, n_matched, score_e6,
                   row_number() OVER (ORDER BY score_e6 DESC, doc_id) AS r
-                FROM sc QUALIFY r <= 100),
+                FROM sc QUALIFY r <= ${TextAnalysis.Bm25Shortlist}),
       q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
       scored AS (SELECT s.doc_id, s.n_matched, s.score_e6,
                    CAST(floor(${cos("qv", "e.embedding")} * 1000000)
@@ -3500,6 +3484,7 @@ object Extensions {
         CAST((end_tok - 1) // ${Curation.BpePackBudget} AS BIGINT)
           AS bin_last
       FROM c ORDER BY doc_id""",
+    // concat-and-cut packing: per-source running token sum, fixed bins
     "x04_packing" -> s"""
       WITH $tkCte,
       n AS (SELECT d.doc_id, d.source, len(tk.tk)::BIGINT AS n_toks
@@ -3510,15 +3495,15 @@ object Extensions {
             FROM n)
       SELECT doc_id, source, n_toks,
         CAST(end_tok - n_toks AS BIGINT) AS start_tok,
-        CAST((end_tok - n_toks) // 256 AS BIGINT) AS bin_first,
-        CAST((end_tok - 1) // 256 AS BIGINT) AS bin_last
+        CAST((end_tok - n_toks) // ${Curation.PackBudget} AS BIGINT) AS bin_first,
+        CAST((end_tok - 1) // ${Curation.PackBudget} AS BIGINT) AS bin_last
       FROM c ORDER BY doc_id""",
-    // hash-shuffle sharding: metadata-only key (doc_id string + epoch
-    // 1), data-derived shard count, per-shard balance vs the ideal
+    // hash-shuffle sharding: metadata-only key (doc_id string + epoch),
+    // data-derived shard count, per-shard balance vs the ideal
     "x30_shard_manifest" -> s"""
       WITH $tkCte,
       b AS (SELECT doc_id, len(tk)::BIGINT AS n_toks,
-              ${rh("concat(doc_id::VARCHAR, ':1')", 1000000007L)} AS key
+              ${rh(s"concat(doc_id::VARCHAR, ':${Curation.ShardEpoch}')", 1000000007L)} AS key
             FROM tk),
       tt AS (SELECT CAST(sum(n_toks) AS BIGINT) AS total_toks FROM b),
       a AS (SELECT b.*, total_toks,
@@ -3666,7 +3651,7 @@ object Extensions {
                  WHEN 'zh' THEN 900 ELSE 50 END)
       SELECT split, lang, count(*) AS n_docs,
         CAST(sum(n) AS BIGINT) AS tokens_total,
-        CAST((sum(n) + 255) // 256 AS BIGINT) AS n_bins
+        CAST((sum(n) + ${Curation.PackBudget - 1}) // ${Curation.PackBudget} AS BIGINT) AS n_bins
       FROM samp GROUP BY 1, 2 ORDER BY split, lang""",
     // hourly resample + forward fill: last event per (user, hour) by
     // (us, event_id) desc; per-user grid from first to last hour

@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions.broadcast
   */
 object Enrich {
 
-  def enrichStream(events: DataFrame, dim: DataFrame,
-      key: String = "event_type"): DataFrame =
-    events.join(broadcast(dim), Seq(key))
+  /** The column events and dimension join on. */
+  val JoinKey = "event_type"
+
+  def enrichStream(events: DataFrame, dim: DataFrame): DataFrame =
+    events.join(broadcast(dim), Seq(JoinKey))
 }

@@ -15,11 +15,14 @@ import org.apache.spark.sql.functions._
   */
 object StreamDedup {
 
+  /** The watermark horizon dedup state covers. */
+  val Horizon = "1 hour"
+
   /** Input: streaming (doc_id, ts, text); output: first-seen rows per
-    * digest within the watermark horizon. */
-  def dedupStream(docs: DataFrame, horizon: String = "1 hour"): DataFrame =
+    * digest within the watermark [[Horizon]]. */
+  def dedupStream(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("ts"), md5(lower(col("text"))).as("text_md5"))
-      .withWatermark("ts", horizon)
+      .withWatermark("ts", Horizon)
       .dropDuplicatesWithinWatermark("text_md5")
 }

@@ -32,18 +32,18 @@ object StreamShard {
   /** Input: streaming (doc_id, text) plus the 1-row planned-shards
     * static frame; output: appended per-doc shard assignments
     * (doc_id, n_toks, key, shard) under the planned shard count and
-    * the given epoch — x30's assignment rule verbatim. The shard
-    * count rides as a stream-static crossJoin of the 1-row planning
-    * frame (the idiom every gated scalar uses), so nothing is read at
-    * the driver at plan-build time. */
-  def shardStream(docs: DataFrame, planned: DataFrame, epoch: Int = 1)
-      : DataFrame = {
+    * [[Curation.ShardEpoch]] — x30's assignment rule verbatim.
+    * The shard count rides as a stream-static crossJoin of the 1-row
+    * planning frame (the idiom every gated scalar uses), so nothing is
+    * read at the driver at plan-build time. */
+  def shardStream(docs: DataFrame, planned: DataFrame): DataFrame = {
     graft.functions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         size(TextHash.tokens(col("text"))).cast("long").as("n_toks"),
         expr(TextHash.rollingHashExpr(
-          s"concat(cast(doc_id as string), ':$epoch')", TextHash.P))
+          s"concat(cast(doc_id as string), ':${Curation.ShardEpoch}')",
+          TextHash.P))
           .as("key"))
       .crossJoin(planned) // 1-row static side per micro-batch
       .withColumn("shard", col("key") % col("n_shards"))

@@ -2,6 +2,7 @@ package graft.tools
 
 import scala.collection.mutable
 
+import org.apache.spark.graft.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -115,17 +116,16 @@ object Inspect {
     }
 
     def runOnce(tag: String, name: String): Unit = Caches.scoped {
+      val sc = spark.sparkContext
       jobs.clear(); stageTasks.clear()
+      BusDrain(sc) // earlier actions' events reach no listener added now
       val t0 = System.nanoTime()
-      spark.sparkContext.addSparkListener(listener)
+      sc.addSparkListener(listener)
       SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      // the listener bus is async and its waitUntilEmpty is
-      // private[spark]; a 1 s drain (300 ms under-counted jobs on a
-      // loaded host) can at worst LOWER a job count, never invent one
-      Thread.sleep(1000)
+      BusDrain(sc) // every event of this run has reached the listener
+      sc.removeSparkListener(listener)
       println(f"== $tag $name wall=$wall%.3f s, ${jobs.size} jobs, " +
         s"${stageTasks.size} stages, ${stageTasks.values.sum} tasks")
       val jseq = jobs.values.toSeq.sortBy(_.t0)

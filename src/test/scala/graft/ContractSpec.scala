@@ -280,4 +280,92 @@ class ContractSpec extends AnyFunSuite {
     } yield s"$obj.$name ($p:${at + i + 2})"
     assert(public.isEmpty, "objects with non-private vars")
   }
+
+  test("no Scala source carries a control character other than newline") {
+    // a raw control byte makes grep and rg treat the whole file as
+    // binary, so every repo-wide search silently skips it; a literal
+    // that needs one spells it as a Unicode escape instead
+    val hits = for {
+      p <- Files.walk(Paths.get("src")).iterator.asScala.toSeq.sorted
+      if p.toString.endsWith(".scala")
+      (b, i) <- Files.readAllBytes(p).zipWithIndex
+      if (b >= 0 && b < 0x20 && b != '\n') || b == 0x7f
+    } yield f"$p: byte $i = 0x$b%02x"
+    assert(hits.isEmpty, "control characters in sources")
+  }
+
+  /** `def.param` for each default-valued parameter of a non-private,
+    * non-protected def in `src` (implicit lists excluded). A light
+    * scan, not a parser: parameter lists are the balanced `(...)`
+    * groups after the name, split at top-level commas. */
+  private def defaultParams(src: String): Seq[String] = {
+    val defRe = """(?m)^[ \t]*((?:[\w\[\]@]+\s+)*)def\s+(\w+)\s*(?:\[[^\]]*\])?\s*\(""".r
+    val bare = """(?<![=<>!:])=(?![=>:])""".r
+    def close(i: Int): Int = { // index just past the group opening at i
+      var depth = 0; var j = i
+      while ({
+        src(j) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case _ =>
+        }
+        j += 1
+        depth > 0
+      }) ()
+      j
+    }
+    def topLevel(l: String): Seq[String] = {
+      var depth = 0
+      val cuts = l.indices.filter { i =>
+        l(i) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case _ =>
+        }
+        l(i) == ',' && depth == 0
+      }
+      (-1 +: cuts :+ l.length).sliding(2).map { case Seq(a, b) =>
+        l.substring(a + 1, b) }.toSeq
+    }
+    for {
+      m <- defRe.findAllMatchIn(src).toSeq
+      if !m.group(1).contains("private") && !m.group(1).contains("protected")
+      lists = Iterator.iterate(m.end - 1) { i =>
+          var j = close(i)
+          while (j < src.length && src(j).isWhitespace) j += 1
+          j
+        }.takeWhile(i => i < src.length && src(i) == '(')
+        .map(i => src.substring(i + 1, close(i) - 1)).toSeq
+      l <- lists if !l.trim.startsWith("implicit")
+      p <- topLevel(l) if bare.findFirstIn(p).nonEmpty
+    } yield m.group(2) + "." + p.trim.takeWhile(c => c != ':' && !c.isWhitespace)
+  }
+
+  test("operators and streaming twins add no default-valued parameter") {
+    // a default no caller varies is a knob whose oracle hard-codes its
+    // value, so any other value gives output the gate cannot check: it
+    // is a named constant in its operator object instead. A parameter
+    // stays only while a caller really passes a second value.
+    val kept = Set(
+      "Similarity.annTopK.k", // s01 uses 10, the recall family RecallK
+      // refusal guards that specs lower to make them fire
+      "Similarity.embeddingNearDups.maxVectors",
+      "Dedup.cosinePairs.maxDocs",
+      "Dedup.cosinePairsSampled.bound",
+      // the uncapped result is the specs' reference for the capped one
+      "Dedup.jaccardPairs.maxShingleDf",
+      "Dedup.containmentPairs.maxShingleDf",
+      // specs decode real images with ImageCodec
+      "Multimodal.extractFeatures.codec")
+    val found = for {
+      pkg <- Seq("operators", "streaming")
+      p <- Files.walk(Paths.get(s"src/main/scala/graft/$pkg")).iterator.asScala
+        .toSeq.sorted
+      if p.toString.endsWith(".scala")
+      d <- defaultParams(new String(Files.readAllBytes(p), "UTF-8"))
+    } yield p.getFileName.toString.stripSuffix(".scala") + "." + d
+    assert(found.toSet == kept && found.size == kept.size,
+      s"default-valued parameters: added ${found.toSet -- kept}, " +
+        s"removed ${kept -- found.toSet}")
+  }
 }

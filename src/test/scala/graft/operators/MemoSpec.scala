@@ -32,28 +32,27 @@ class MemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       refresh: () => Seq[DataFrame], lazyBuild: () => Seq[DataFrame],
       producer: Option[String])
 
-  private def row[K, V](m: Memo[K, V], key: K, producer: Option[String] = None)(
+  private def row[V](m: Memo[V], producer: Option[String] = None)(
       implicit f: Memo.Frames[V]): Row =
-    Row(m.name, () => f.of(m(spark, dir, key)),
-      () => f.of(m.refresh(spark, dir, key)),
-      () => f.of(m.lazyBuild(spark, dir, key)), producer)
+    Row(m.name, () => f.of(m(spark, dir)), () => f.of(m.refresh(spark, dir)),
+      () => f.of(m.lazyBuild(spark, dir)), producer)
 
   lazy val rows: Seq[Row] = Seq(
-    row(TextHash.shingleHashesMemo, ()),
-    row(Dedup.minhashLshPairsMemo, (), Some("d03_dedup_minhash_lsh")),
-    row(Dedup.substringSpansMemo, ()),
-    row(Dedup.decontamBaseMemo, ()),
-    row(Similarity.embeddingNearDupsBucketedMemo, (),
+    row(TextHash.shingleHashesMemo),
+    row(Dedup.minhashLshPairsMemo, Some("d03_dedup_minhash_lsh")),
+    row(Dedup.substringSpansMemo),
+    row(Dedup.decontamBaseMemo),
+    row(Similarity.embeddingNearDupsBucketedMemo,
       Some("d08_neardup_bucketed")),
-    row(Similarity.knnGraphMemo, 3, Some("s09_knn_graph")),
-    row(Similarity.lloydStateMemo, (), Some("s26_kmeans_lloyd")),
-    row(TextAnalysis.labeledFeaturesMemo, ()),
-    row(TextAnalysis.clsWeightsMemo, ()),
-    row(TextAnalysis.clsEvalMemo, ()),
-    row(DupCluster.minhashLabels, (), Some("d06_dup_clusters")),
-    row(DupCluster.embLabels, (), Some("d09_embedding_clusters")),
-    row(DupCluster.ahashLabels, (), Some("m07_ahash_clusters")),
-    row(DupCluster.knnLabels, (), Some("s11_knn_components")))
+    row(Similarity.knnGraphMemo, Some("s09_knn_graph")),
+    row(Similarity.lloydStateMemo, Some("s26_kmeans_lloyd")),
+    row(TextAnalysis.labeledFeaturesMemo),
+    row(TextAnalysis.clsWeightsMemo),
+    row(TextAnalysis.clsEvalMemo),
+    row(DupCluster.minhashLabels, Some("d06_dup_clusters")),
+    row(DupCluster.embLabels, Some("d09_embedding_clusters")),
+    row(DupCluster.ahashLabels, Some("m07_ahash_clusters")),
+    row(DupCluster.knnLabels, Some("s11_knn_components")))
 
   /** Every frame of `a` is the one in `b` / none of them is. */
   private def same(a: Seq[DataFrame], b: Seq[DataFrame]): Boolean =

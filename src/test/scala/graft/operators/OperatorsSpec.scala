@@ -234,7 +234,7 @@ class OperatorsSpec extends AnyFunSuite {
   test("lsh ann candidates are a subset ranked consistently with brute force") {
     val brute = Similarity.annTopK(spark, dir, k = 100).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val lsh = Similarity.annLshTopK(spark, dir, k = 5).collect()
+    val lsh = Similarity.annLshTopK(spark, dir).collect()
     assert(lsh.nonEmpty)
     // subset property: every LSH (query, neighbor) pair must appear in
     // the brute-force top-100 (k=5 from LSH buckets can't out-rank the
@@ -1021,8 +1021,8 @@ class OperatorsSpec extends AnyFunSuite {
       df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val exact = top5(Similarity.annTopK(spark, dir, 5))
-    val lsh = top5(Similarity.annLshTopK(spark, dir, 5))
-    val ivf = top5(Similarity.annIvfTopK(spark, dir, 5))
+    val lsh = top5(Similarity.annLshTopK(spark, dir))
+    val ivf = top5(Similarity.annIvfTopK(spark, dir))
     val rows = Similarity.annRecall(spark, dir).collect()
     assert(rows.map(_.getAs[Long]("query_id")).toSet == exact.keySet)
     rows.foreach { r =>

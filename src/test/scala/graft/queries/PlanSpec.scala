@@ -145,16 +145,16 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * entries hand out the memo's checkpoint scan, so a memo frame's
     * shape is pinned on `lazyBuild`, explained inside the scope that
     * frees the build's persists. */
-  private def memoPlan[K, V](m: graft.operators.Memo[K, V], key: K)(
+  private def memoPlan[V](m: graft.operators.Memo[V])(
       frame: V => DataFrame): String =
-    graft.engine.Caches.scoped(plan(frame(m.lazyBuild(spark, dir, key))))
+    graft.engine.Caches.scoped(plan(frame(m.lazyBuild(spark, dir))))
 
   test("bucketed near-dup candidates come from an equi-join, not a cross join") {
     import graft.operators.{Dedup, Similarity}
     for (p <- Seq(
-        memoPlan(Similarity.embeddingNearDupsBucketedMemo, ())(identity),
-        memoPlan(Similarity.knnGraphMemo, 3)(identity),
-        memoPlan(Dedup.minhashLshPairsMemo, ())(identity))) {
+        memoPlan(Similarity.embeddingNearDupsBucketedMemo)(identity),
+        memoPlan(Similarity.knnGraphMemo)(identity),
+        memoPlan(Dedup.minhashLshPairsMemo)(identity))) {
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
         p.contains("BroadcastHashJoin"),
         s"banded candidate generation lost its equi-join:\n$p")
@@ -596,7 +596,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // pair join would make duplication density quadratic
     // the gated d19 entry reads the span memo's checkpoint scan, so
     // the shuffle contract is pinned on the memo's lazyBuild
-    val p = memoPlan(graft.operators.Dedup.substringSpansMemo, ())(identity)
+    val p = memoPlan(graft.operators.Dedup.substringSpansMemo)(identity)
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"),
       s"d19 must stay hash-keyed:\n$p")
     val cols = hashExchangeCols(p)
@@ -615,7 +615,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // no vec_id exchange. The gated s26/s27/d21 entries ride the
     // build-once memo (checkpoint scan), so the shape is pinned on
     // the memo's lazyBuild, as for d19.
-    val p = memoPlan(graft.operators.Similarity.lloydStateMemo, ())(_._2)
+    val p = memoPlan(graft.operators.Similarity.lloydStateMemo)(_._2)
     assert(!raw"\(\d+\) Window".r.findFirstIn(p).isDefined,
       s"Lloyd assignment regressed to a window argmin:\n$p")
     // the only exchanges the loop may plan are the (bucket, dim)

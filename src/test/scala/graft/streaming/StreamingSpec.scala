@@ -778,15 +778,61 @@ class StreamingSpec extends AnyFunSuite {
       Seq((1L, 100L, 1L, 10L), (2L, 100L, 2L, 20L)),
       Seq((1L, 50L, 3L, 11L), (2L, 200L, 4L, 21L)),
       Seq((2L, 150L, 5L, 22L), (3L, 10L, 6L, 30L)))
-    // the change-feed consumer: each batch's touched keys overwrite
-    def served(restartAt: Set[Int]): Map[Long, Long] =
+    def feed(restartAt: Set[Int]): Seq[(Long, Long)] =
       runRestarting(MemoryStream[(Long, Long, Long, Long)], batches,
           restartAt, "update")(df =>
         StreamUpsert.latestValueStream(df.toDF("user_id", "us", "event_id", "v_e6")))
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val uninterrupted = served(Set.empty)
-    assert(uninterrupted == Map(1L -> 10L, 2L -> 21L, 3L -> 30L))
-    assert(served(Set(1, 2)) == uninterrupted,
-      "a restarted upsert lost the per-key state kept before the restart")
+        .map(r => r.getLong(0) -> r.getLong(1))
+    val uninterrupted = feed(Set.empty)
+    // the change-feed consumer: each batch's touched keys overwrite
+    assert(uninterrupted.toMap == Map(1L -> 10L, 2L -> 21L, 3L -> 30L))
+    assertSameFeed(feed(Set(1, 2)), uninterrupted, "upsert")
+  }
+
+  /** A restarted stateful query ends where an uninterrupted run ends
+    * (the last row per key, in emission order) and emits the same
+    * rows: a restart that replayed the stream from its start would
+    * rebuild the same final state but emit the early batches' keys
+    * again. */
+  private def assertSameFeed[K: Ordering, V: Ordering](restarted: Seq[(K, V)],
+      uninterrupted: Seq[(K, V)], what: String): Unit = {
+    assert(restarted.toMap == uninterrupted.toMap,
+      s"a restarted $what lost the state kept before the restart")
+    assert(restarted.sorted == uninterrupted.sorted,
+      s"a restarted $what re-emitted rows an uninterrupted run emits once")
+  }
+
+  test("streaming count-min restarted from its checkpoint keeps its cell counts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val batches = Seq(Seq("the cat sat", "the dog ran"), Seq("the cat ran fast"),
+      Seq("a dog sat", "the end"))
+    def cells(restartAt: Set[Int]): Seq[(Long, Long)] =
+      runRestarting(MemoryStream[String], batches, restartAt, "update")(df =>
+        StreamSketch.countMinStream(df.toDF("text")))
+        .map(r => r.getLong(0) -> r.getLong(1))
+    val uninterrupted = cells(Set.empty)
+    // update mode: each batch emits the cells it touched, with their
+    // running counts, so the last row per cell is its final count
+    assert(uninterrupted.toMap == StreamSketch.countMinStream(batches.flatten.toDF("text"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assertSameFeed(cells(Set(1, 2)), uninterrupted, "count-min")
+  }
+
+  test("streaming drift cells restarted from their checkpoint keep their counts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val topTerms = Seq("the", "cat").toDF("term")
+    val batches = Seq(Seq(("a", "the cat sat"), ("b", "the dog")),
+      Seq(("a", "a cat ran")), Seq(("b", "the cat the end"), ("a", "dog")))
+    def cells(restartAt: Set[Int]): Seq[((String, String), Long)] =
+      runRestarting(MemoryStream[(String, String)], batches, restartAt, "update")(df =>
+        StreamDrift.driftCellsStream(df.toDF("source", "text"), topTerms))
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+    val uninterrupted = cells(Set.empty)
+    assert(uninterrupted.toMap == StreamDrift
+      .driftCellsStream(batches.flatten.toDF("source", "text"), topTerms)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
+    assertSameFeed(cells(Set(1, 2)), uninterrupted, "drift-cell count")
   }
 }
