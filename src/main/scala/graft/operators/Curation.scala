@@ -413,16 +413,12 @@ object Curation {
     * S, one partial-agg'd groupBy on the shard id. Output is S rows.
     * Nothing global-ordered, nothing driver-side. */
   def shardManifest(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir)
-      .select(col("doc_id"),
-        size(tokens(col("text"))).cast("long").as("n_toks"),
-        expr(rollingHashExpr(
-          s"concat(cast(doc_id as string), ':$ShardEpoch')", P)).as("key"))
+    val base = shardInputs(docs(s, dir))
     val tot = base.agg(sum("n_toks").as("total_toks"))
     base.crossJoin(broadcast(tot))
       .withColumn("n_shards",
         expr(s"(total_toks + ${ShardBudget - 1}L) div ${ShardBudget}L"))
-      .withColumn("shard", col("key") % col("n_shards"))
+      .withColumn("shard", shardOf)
       .groupBy("shard", "n_shards", "total_toks")
       .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("n_tokens"),
         min(struct(col("key"), col("doc_id"))).as("f"))
@@ -432,6 +428,23 @@ object Curation {
         col("f.doc_id").as("first_doc"))
       .orderBy("shard")
   }
+
+  /** x30's per-document inputs over a (doc_id, text) frame:
+    * (doc_id, n_toks, key) — the whitespace-token count and the
+    * [[shardKey]]. Shared with the streaming twin
+    * ([[graft.streaming.StreamShard]]). */
+  def shardInputs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      size(tokens(col("text"))).cast("long").as("n_toks"),
+      shardKey.as("key"))
+
+  /** x30's shard key: the rolling hash of the doc_id string with
+    * [[ShardEpoch]] folded in (metadata only — see [[shardManifest]]). */
+  def shardKey: Column =
+    expr(rollingHashExpr(s"concat(cast(doc_id as string), ':$ShardEpoch')", P))
+
+  /** x30's assignment of a row with `key` and `n_shards`: key mod S. */
+  def shardOf: Column = col("key") % col("n_shards")
 
   /** t27: per-document keyword extraction — the top-3 terms by
     * tf·idf, the metadata tag every search/curation pipeline attaches

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -886,10 +886,16 @@ object Dedup {
           tokens(col("text")).as("tk"))
         .select(col("doc_id"), col("source"),
           splitOf(expr(rollingHashExpr("t", P)) % 100).as("split"),
-          expr(s"array_distinct(${hashArrayExpr(ngramsExpr("tk", DecontamN), P)})")
-            .as("gs"))
+          decontamGrams("tk").as("gs"))
         .filter(size(col("gs")) > 0)
     }
+
+  /** x29's gram set of a token-array column `tk`: the distinct rolling
+    * hashes of its [[DecontamN]]-grams — shared with the streaming
+    * twin ([[graft.streaming.StreamLeak]]) for both the benchmark side
+    * and the arriving documents. */
+  def decontamGrams(tk: String): Column =
+    expr(s"array_distinct(${hashArrayExpr(ngramsExpr(tk, DecontamN), P)})")
 
   /** The x29 chain up to (train docs with gram counts, per-doc hit
     * counts) — shared with the x31 card so the split rule, gram

@@ -408,9 +408,8 @@ object Pipeline {
       .withColumn("n_shards", greatest(lit(1L),
         expr(s"(total_toks + ${Curation.ShardBudget - 1}L) div " +
           s"${Curation.ShardBudget}L")))
-      .withColumn("key", expr(rollingHashExpr(
-        s"concat(cast(doc_id as string), ':${Curation.ShardEpoch}')", P)))
-      .withColumn("shard", col("key") % col("n_shards"))
+      .withColumn("key", Curation.shardKey)
+      .withColumn("shard", Curation.shardOf)
       .withColumn("end_tok", sum(col("n_bpe")).over(w))
       .withColumn("start_tok", col("end_tok") - col("n_bpe"))
       .select(col("doc_id"), col("source"), col("n_bpe"), col("shard"),

@@ -29,6 +29,12 @@ object Similarity {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "embeddings")
 
+  /** The `embedding` column as e6 fixed-point BIGINT components,
+    * floor(v·1e6): the integer coordinates s26's Lloyd state and s29's
+    * centroid moments (and its streaming twin) sum exactly. */
+  val EmbeddingE6 =
+    "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"
+
   /** Raw embeddings table (native expressions registered), WITHOUT
     * the fan-out or the norm projection — for consumers that keep
     * only a broadcast-joined handful of rows (round 16): computing
@@ -544,9 +550,7 @@ object Similarity {
     * dedup) read the memo. */
   private[graft] val lloydStateMemo = Memo("lloyd_state") { (s, dir) =>
     val x = graft.operators.TextHash.fanOut(emb(s, dir))
-      .select(col("vec_id"), expr(
-        "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))")
-        .as("x"))
+      .select(col("vec_id"), expr(EmbeddingE6).as("x"))
       .transform(Caches.persist) // both assignment rounds scan the e6 components
     // data-derived K (see the KmeansK scaladoc): a 1-row scalar —
     // x30's idiom — so K never touches the driver; first-K init
@@ -1597,24 +1601,27 @@ object Similarity {
     * runs on |sources|²·dims centroid rows, never members. */
   def sourceEmbeddingDrift(s: SparkSession, dir: String): DataFrame = {
     val src = Tables.t(s, dir, "documents").select(col("doc_id"), col("source"))
-    val ex = graft.operators.TextHash.fanOut(emb(s, dir))
-      .join(src, col("vec_id") === col("doc_id"))
-      .select(col("source"), posexplode(expr(
-        "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"))
-        .as(Seq("dim", "v_e6")))
-    driftFromMoments(ex.groupBy("source", "dim")
-      .agg(count(lit(1)).as("n"), sum("v_e6").as("s_e6"),
-        sum(expr("cast(v_e6 as decimal(38,0)) * v_e6")).as("ss")))
+    driftFromMoments(centroidMoments(graft.operators.TextHash.fanOut(emb(s, dir))
+      .join(src, col("vec_id") === col("doc_id"))))
   }
 
-  /** The s29 card from a (source, dim, n, s_e6, ss) moment table —
-    * public so the streaming twin's batch probe
-    * ([[graft.streaming.StreamCentroid.driftCard]]) shares the EXACT
-    * report logic with the gated query (the
-    * sourceSimilaritySketchFrom precedent: one definition, no drift
-    * between the live and batch forms). The moments are mergeable by
-    * construction (counts and sums), which is what makes the
-    * streaming form's state bounded at |sources|·dims rows. */
+  /** s29's moment aggregation over (source, embedding) rows: the
+    * running (source, dim, n, s_e6, ss) table — count, Σv and Σv² of
+    * the [[EmbeddingE6]] components, Σv² on DECIMAL(38,0). Shared
+    * with the streaming twin
+    * ([[graft.streaming.StreamCentroid.centroidMomentsStream]]), whose
+    * state IS this table. */
+  def centroidMoments(vecs: DataFrame): DataFrame =
+    vecs
+      .select(col("source"), posexplode(expr(EmbeddingE6)).as(Seq("dim", "v_e6")))
+      .groupBy("source", "dim")
+      .agg(count(lit(1)).as("n"), sum("v_e6").as("s_e6"),
+        sum(expr("cast(v_e6 as decimal(38,0)) * v_e6")).as("ss"))
+
+  /** The s29 card from a [[centroidMoments]] table — public so the
+    * streaming twin's batch probe
+    * ([[graft.streaming.StreamCentroid.driftCard]]) runs the EXACT
+    * report logic of the gated query. */
   def driftFromMoments(moments: DataFrame): DataFrame = {
     val cent = moments
       .select(col("source"), col("dim"), col("n"), col("ss"), col("s_e6"),

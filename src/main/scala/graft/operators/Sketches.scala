@@ -126,8 +126,7 @@ object Sketches {
 
   /** SQL fragment: the `CmDepth` sketch cells of a token-hash column
     * `h` (affine family, row j offset by j·width). Shared by the
-    * batch fill, the probe, and the streaming fill so the cell math
-    * cannot drift. */
+    * fill, the probe and the specs so the cell math cannot drift. */
   def cmCellsExpr(h: String): String =
     s"transform(sequence(0, ${CmDepth - 1}), " +
       s"j -> ((2*j + 1) * $h + 7919 * (j + 1)) % ${P}L " +
@@ -142,9 +141,7 @@ object Sketches {
     * table is what a streaming frequent-terms job would maintain
     * per-partition and merge by cell-wise sum. */
   def countMinTopTerms(s: SparkSession, dir: String): DataFrame = {
-    val toks = fanOut(Tables.t(s, dir, "documents"))
-      .select(explode(tokens(col("text"))).as("term"))
-      .select(col("term"), expr(rollingHashExpr("term", P)).as("h"))
+    val toks = termHashes(fanOut(Tables.t(s, dir, "documents")))
       // exact counts + sketch fill share one tokenize pass
       .transform(Caches.persist)
     // exact counts (the ground truth the sketch is gated against).
@@ -155,10 +152,7 @@ object Sketches {
     val top = exact.orderBy(col("exact_n").desc, col("term")).limit(10)
       .withColumn("rnk", row_number().over(
         Window.partitionBy().orderBy(col("exact_n").desc, col("term"))))
-    // sketch fill: each occurrence increments depth cells
-    val cells = toks
-      .select(explode(expr(cmCellsExpr("h"))).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
+    val cells = cmFill(toks)
     // probe: the same depth cells for each top term, estimate = min
     val probes = top.select(col("term"), col("exact_n"), col("rnk"),
       explode(expr(cmCellsExpr("h"))).as("cell"))
@@ -169,4 +163,19 @@ object Sketches {
         col("exact_n"), col("cm_est"))
       .orderBy("rnk")
   }
+
+  /** t15's token stream: one (term, h) row per token occurrence of a
+    * frame's `text` column, h the term's rolling hash. */
+  def termHashes(docs: DataFrame): DataFrame =
+    docs
+      .select(explode(tokens(col("text"))).as("term"))
+      .select(col("term"), expr(rollingHashExpr("term", P)).as("h"))
+
+  /** t15's sketch fill over a [[termHashes]] stream: each occurrence
+    * increments its `CmDepth` cells; the (cell, cnt) result is the
+    * count-min table, at most depth·width rows. */
+  def cmFill(toks: DataFrame): DataFrame =
+    toks
+      .select(explode(expr(cmCellsExpr("h"))).as("cell"))
+      .groupBy("cell").agg(count(lit(1)).as("cnt"))
 }

@@ -316,11 +316,11 @@ object TextAnalysis {
       .orderBy("w1", "w2")
   }
 
-  /** i03's exact-integer BM25 fragments, factored so i12's
-    * second-round scorer is the SAME expression text — a drifted copy
-    * would desynchronize the feedback rescoring from the gated
-    * first-round form. Columns referenced: tf, dl, df (per term-doc)
-    * and nn, ll (corpus stats). */
+  /** i03's exact-integer BM25 fragments, factored so every scorer
+    * ([[bm25ContribOf]]), i12's expansion weights and i07's idf are
+    * the SAME expression text — a drifted copy would desynchronize
+    * them from the gated form. Columns referenced: tf, dl, df (per
+    * term-doc) and nn, ll (corpus stats). */
   private val Bm25TfPartExpr =
     """cast((cast(22 as decimal(38,0)) * tf * ll * 1000000)
              div (cast(10 as decimal(38,0)) * tf * ll
@@ -331,17 +331,39 @@ object TextAnalysis {
              div (2 * df + 1) as long)"""
 
   /** The i03 contribution stage over any (doc_id, dl, term, tf) frame
-    * with a (term, df) side and the 1-row corpus stats. */
+    * with a (term, df) side and the 1-row corpus stats: the `keep`
+    * columns and the per-posting contribution, named `as`. */
   private def bm25ContribOf(tf: DataFrame, dfreq: DataFrame,
-      stats: DataFrame): DataFrame =
+      stats: DataFrame, keep: Seq[String], as: String): DataFrame = {
+    val k = keep.map(col)
     tf.join(broadcast(dfreq), "term")
       .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        expr(Bm25TfPartExpr).as("tfpart_e6"),
-        expr(Bm25IdfExpr).as("idf_e6"))
-      .select(col("doc_id"),
-        expr("""cast((cast(tfpart_e6 as decimal(38,0)) * idf_e6)
-             div 1000000 as long)""").as("contrib_e6"))
+      .select(k :+ expr(Bm25TfPartExpr).as("tfpart_e6") :+
+        expr(Bm25IdfExpr).as("idf_e6"): _*)
+      .select(k :+ expr("""cast((cast(tfpart_e6 as decimal(38,0)) * idf_e6)
+             div 1000000 as long)""").as(as): _*)
+  }
+
+  /** The matched postings of every BM25 scorer (i03, i12's first
+    * round, i13, i14) for the SQL IN list `termsIn`: the 1-row corpus
+    * stats (nn, ll), the (doc_id, dl, term, tf) query-term hits
+    * (filtered before the explode, so only matches shuffle) after
+    * `postingsStage`, and their (term, df) side. */
+  private def bm25Postings(s: SparkSession, dir: String, termsIn: String,
+      postingsStage: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val base = docs(s, dir)
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
+      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
+        expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
+      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
+    val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
+    val tf = base.filter(size(col("qtk")) > 0)
+      .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
+      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
+      .transform(postingsStage)
+    (stats, tf, tf.groupBy("term").agg(count(lit(1)).as("df")))
+  }
 
   /** Fixed sizes and floors, each interpolated into its oracle: the
     * length of the i03 ranking (and so of every BM25 shortlist), the
@@ -380,18 +402,9 @@ object TextAnalysis {
     * top-[[Bm25Shortlist]] is TakeOrderedAndProject — per-partition
     * local top-k, never a full sort. */
   def bm25(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
-      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
-    val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
-    val tf = base.filter(size(col("qtk")) > 0)
-      .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val contrib = bm25ContribOf(tf, dfreq, stats)
-    val sc = contrib.groupBy("doc_id")
+    val (stats, tf, dfreq) = bm25Postings(s, dir, HybridTermsIn, identity)
+    val sc = bm25ContribOf(tf, dfreq, stats, Seq("doc_id"), "contrib_e6")
+      .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_matched"),
         sum("contrib_e6").as("score_e6"))
       .orderBy(col("score_e6").desc, col("doc_id"))
@@ -416,8 +429,8 @@ object TextAnalysis {
     * lexical stack. Per probe term, the "known item" is the document
     * with the highest raw tf (ties → lowest doc_id) and the system
     * under test is the single-term exact-integer BM25 scorer (i03's
-    * [[Bm25TfPartExpr]]·[[Bm25IdfExpr]] fragments verbatim — a
-    * drifted copy would evaluate a different engine than i03 ships).
+    * own [[bm25Postings]] and [[bm25ContribOf]] — a drifted copy
+    * would evaluate a different engine than i03 ships).
     * Reported per term: df, the known item and its tf, the item's
     * BM25 rank, reciprocal rank ·1e6, hit@1, hit@10 — measuring how
     * far tf-saturation + length normalization reorder raw term
@@ -434,25 +447,10 @@ object TextAnalysis {
     * probe list (≤8 rows of truth/df, 1-row corpus stats). */
   def retrievalEval(s: SparkSession, dir: String): DataFrame = {
     val termsIn = RetrievalEvalTerms.map(t => s"'$t'").mkString("(", ", ", ")")
-    val base = docs(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        expr(s"filter(tk, x -> x IN $termsIn)").as("qtk"))
-      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
-    val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
-    val tf = base.filter(size(col("qtk")) > 0)
-      .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-      .transform(Caches.persist) // matches-bound, skinny; feeds df, scores, truth
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val psc = tf.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("doc_id"), col("tf"),
-        expr(Bm25TfPartExpr).as("tfpart_e6"),
-        expr(Bm25IdfExpr).as("idf_e6"))
-      .select(col("term"), col("doc_id"), col("tf"),
-        expr("""cast((cast(tfpart_e6 as decimal(38,0)) * idf_e6)
-             div 1000000 as long)""").as("score_e6"))
+    // postings persisted: matches-bound, skinny; feed df, scores, truth
+    val (stats, tf, dfreq) = bm25Postings(s, dir, termsIn, Caches.persist)
+    val psc = bm25ContribOf(tf, dfreq, stats, Seq("term", "doc_id", "tf"),
+      "score_e6")
     // known item per term: argmax without a window (min over (−tf, id))
     val truth = tf.groupBy("term")
       .agg(min(struct((-col("tf")).as("ntf"), col("doc_id").as("d"))).as("m"))
@@ -490,24 +488,8 @@ object TextAnalysis {
     * skew at scale: BASELINE.md §sf1 scale-stress). */
   private[graft] def indexPruningPostings(
       s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
-      .transform(Caches.persist) // feeds the corpus stats AND the per-doc tf counts
-    val stats = base.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
-    val tf = base.filter(size(col("qtk")) > 0)
-      .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .select(col("term"), col("doc_id"), col("df"),
-        expr(Bm25TfPartExpr).as("tfpart_e6"),
-        expr(Bm25IdfExpr).as("idf_e6"))
-      .select(col("term"), col("doc_id"), col("df"),
-        expr("""cast((cast(tfpart_e6 as decimal(38,0)) * idf_e6)
-             div 1000000 as long)""").as("contrib_e6"))
+    val (stats, tf, dfreq) = bm25Postings(s, dir, HybridTermsIn, identity)
+    bm25ContribOf(tf, dfreq, stats, Seq("term", "doc_id", "df"), "contrib_e6")
   }
 
   /** i14's bounded tie-resolution ceiling. Through round 14 this
@@ -1271,9 +1253,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("tf_c"))
     sel
       .crossJoin(broadcast(nDocs)) // 1-row corpus size (allowlisted NLJ)
-      .withColumn("idf_e6",
-        expr("""cast((cast(2 as decimal(38,0)) * (nn - df) + 1) * 1000000
-             div (2 * df + 1) as long)"""))
+      .withColumn("idf_e6", expr(Bm25IdfExpr))
       .join(candTf, Seq("term"))
       .filter(col("doc_id") =!= col("probe_id"))
       .groupBy(col("probe_id"), col("doc_id").as("neighbor_id"))
@@ -1588,13 +1568,26 @@ object TextAnalysis {
     * [[noveltyFrom]]). */
   def sourceSimilaritySketchFrom(sh: DataFrame,
       srcMap: DataFrame): DataFrame = {
-    val merged = sh
-      .filter(col("n_sh") > 0)
-      .join(srcMap, "doc_id")
+    sketchPairs(sourceSketch(sh.filter(col("n_sh") > 0).join(srcMap, "doc_id"))
+      .transform(Caches.persist)) // both sides of the pair join share one reduce
+  }
+
+  /** t32's signature fold: (source, hv) rows of shingle hashes to the
+    * per-(source, i) MinHash component minima (source, i, v) — a
+    * plain min aggregate, mergeable across any split of the rows,
+    * which is why the streaming twin
+    * ([[graft.streaming.StreamMinhash]]) keeps exactly this table as
+    * its state. */
+  def sourceSketch(hashed: DataFrame): DataFrame =
+    hashed
       .select(col("source"),
         posexplode(expr(minhashExpr("hv", Dedup.MinhashK))).as(Seq("i", "v")))
       .groupBy("source", "i").agg(min("v").as("v"))
-      .transform(Caches.persist) // both sides of the pair join share one reduce
+
+  /** t32's pair estimator over a (source, i, v) sketch table:
+    * matching components / k for every source pair. The input must be
+    * self-joinable (a batch frame, not a raw streaming state view). */
+  def sketchPairs(merged: DataFrame): DataFrame =
     merged.as("a")
       .join(merged.as("b"),
         col("a.i") === col("b.i") && col("a.source") < col("b.source"))
@@ -1604,7 +1597,6 @@ object TextAnalysis {
       .withColumn("est_jac_e6",
         expr(s"(1000000L * match_k) div ${Dedup.MinhashK}"))
       .orderBy("source_a", "source_b")
-  }
 
   /** Vocabulary cut for t33: drift is measured over the corpus's
     * DriftTopV most frequent terms (ties → term asc) plus one "rest"
@@ -1695,29 +1687,18 @@ object TextAnalysis {
     * only in the shuffle. No stage depends on corpus² or on an
     * uncapped broadcast. */
   def rocchioFeedback(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir)
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-        col("tk"))
-    val qbase = base
-      .select(col("doc_id"), col("dl"),
-        expr(s"filter(tk, x -> x IN $HybridTermsIn)").as("qtk"))
-      .transform(Caches.persist) // round-1 stats + tf share it (i03's persist)
-    val stats = qbase.agg(count(lit(1)).as("nn"), sum("dl").as("ll"))
-    val tf1 = qbase.filter(size(col("qtk")) > 0)
-      .select(col("doc_id"), col("dl"), explode(col("qtk")).as("term"))
-      .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val df1 = tf1.groupBy("term").agg(count(lit(1)).as("df"))
-    val sc1 = bm25ContribOf(tf1, df1, stats).groupBy("doc_id")
+    val (stats, tf1, df1) = bm25Postings(s, dir, HybridTermsIn, identity)
+    val sc1 = bm25ContribOf(tf1, df1, stats, Seq("doc_id"), "contrib_e6")
+      .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_orig"),
         sum("contrib_e6").as("orig_e6"))
     val topR = sc1.orderBy(col("orig_e6").desc, col("doc_id"))
       .limit(RocchioTopR)
     // candidate expansion vocabulary: the R docs' non-query terms.
-    // Join BEFORE tokenizing (round 16): `base` carries the tokens()
-    // projection, so probing it with the R-doc roster evaluated the
-    // corpus-wide tokenize only to keep R documents — Catalyst cannot
-    // hoist a join above a projection the join output needs. Joining
+    // Join BEFORE tokenizing (round 16): probing the tokenized corpus
+    // with the R-doc roster evaluated the corpus-wide tokenize only to
+    // keep R documents — Catalyst cannot hoist a join above a
+    // projection the join output needs. Joining
     // the raw table first tokenizes exactly R rows (identical rows
     // out: the same explode over the same R documents' tokens), and
     // the branch needs no fan-out — R = 3 rows of work.
@@ -1738,7 +1719,9 @@ object TextAnalysis {
     // is a skinny post-aggregation (doc_id, dl, term, tf) frame
     // restricted to the R docs' vocabulary — the capped-postings
     // class, never raw text.
-    val candTf = base
+    val candTf = docs(s, dir)
+      .select(col("doc_id"), tokens(col("text")).as("tk"))
+      .select(col("doc_id"), size(col("tk")).cast("long").as("dl"), col("tk"))
       .select(col("doc_id"), col("dl"), explode(col("tk")).as("term"))
       .join(broadcast(rtf.select("term")), "term")
       .groupBy("doc_id", "dl", "term").agg(count(lit(1)).as("tf"))
@@ -1755,7 +1738,8 @@ object TextAnalysis {
     val tf2 = candTf
       .join(broadcast(expTerms.select("term")), "term")
       .select("doc_id", "dl", "term", "tf")
-    val sc2 = bm25ContribOf(tf2, dfCand, stats).groupBy("doc_id")
+    val sc2 = bm25ContribOf(tf2, dfCand, stats, Seq("doc_id"), "contrib_e6")
+      .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_exp"),
         sum("contrib_e6").as("exp_e6"))
     val w = Window.orderBy(col("score_e6").desc, col("doc_id"))
@@ -1819,19 +1803,30 @@ object TextAnalysis {
 
   /** The fastText-style hashed feature stream (unigrams + word
     * bigrams → [[ClsBuckets]] buckets), one row per feature
-    * OCCURRENCE — the ONE featurization shared by t35 (inference)
-    * and t36 (training), so the two sides of the model can never
-    * disagree on tokenize/hash/bucket. `source` rides along for
-    * t36's label rule; t35 prunes it. */
+    * OCCURRENCE — the ONE featurization ([[clsFeatureTerms]],
+    * [[clsHashes]], [[clsBucket]]) shared by t35 (inference), t36
+    * (training) and the serving twin
+    * ([[graft.streaming.StreamClassifier]]), so the sides of the model
+    * can never disagree on tokenize/hash/bucket. `source` rides along
+    * for t36's label rule; t35 prunes it. */
   private def clsFeatures(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    clsFeatureTerms(docs(s, dir))
+      .select(col("doc_id"), col("source"), explode(clsHashes).as("h"))
+      .select(col("doc_id"), col("source"), clsBucket(col("h")).as("bucket"))
+
+  /** (doc_id, source, fts) of a (doc_id, source, text) frame: each
+    * document's unigrams then its word bigrams, one per occurrence. */
+  def clsFeatureTerms(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"), col("source"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("source"),
         expr(s"concat(tk, ${ngramsExpr("tk", 2)})").as("fts"))
-      .select(col("doc_id"), col("source"),
-        explode(expr(hashArrayExpr("fts", P))).as("h"))
-      .select(col("doc_id"), col("source"),
-        (col("h") % ClsBuckets).as("bucket"))
+
+  /** The rolling hashes of a [[clsFeatureTerms]] row's features. */
+  def clsHashes: Column = expr(hashArrayExpr("fts", P))
+
+  /** A feature hash's bucket in the [[ClsBuckets]] space. */
+  def clsBucket(h: Column): Column = h % ClsBuckets
 
   /** t36/t37 geometry, shared with the unrolled oracle: fixed update
     * rounds, the per-class hard-example budget, and the bias bucket

@@ -131,10 +131,16 @@ object TextHash {
 
   /** doc_id + shingle-hash array for the documents table. */
   def shingleHashes(documents: DataFrame): DataFrame =
-    fanOut(documents)
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
-      .select(col("doc_id"), expr(shingleExpr("tk")).as("shs"))
-      .select(col("doc_id"), expr(hashArrayExpr("shs", P)).as("hv"),
+    shingleHashesBy(fanOut(documents), "doc_id")
+
+  /** (key, hv, n_sh) of a frame with `key` and `text` columns: the
+    * rolling hashes of each row's [[shingleExpr]] shingles and their
+    * count. */
+  def shingleHashesBy(docs: DataFrame, key: String): DataFrame =
+    docs
+      .select(col(key), tokens(col("text")).as("tk"))
+      .select(col(key), expr(shingleExpr("tk")).as("shs"))
+      .select(col(key), expr(hashArrayExpr("shs", P)).as("hv"),
         size(col("shs")).as("n_sh"))
 
   /** Build-once corpus fingerprint table — [[shingleHashes]] of the

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 
@@ -32,16 +31,10 @@ object StreamCentroid {
 
   /** Input: streaming frame with (source, embedding array&lt;float&gt;);
     * output: running (source, dim, n, s_e6, ss) — the live mergeable
-    * centroid moments (s29's integer-e6 coordinates, Σv² on
-    * DECIMAL(38,0)). */
+    * centroid moments, by s29's own
+    * [[Similarity.centroidMoments]]. */
   def centroidMomentsStream(vecs: DataFrame): DataFrame =
-    vecs
-      .select(col("source"), posexplode(expr(
-        "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"))
-        .as(Seq("dim", "v_e6")))
-      .groupBy("source", "dim")
-      .agg(count(lit(1)).as("n"), sum("v_e6").as("s_e6"),
-        sum(expr("cast(v_e6 as decimal(38,0)) * v_e6")).as("ss"))
+    Similarity.centroidMoments(vecs)
 
   /** Batch probe of a (source, dim, n, s_e6, ss) moment table: the
     * full s29 drift card via the SAME

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{TextAnalysis, TextHash}
+import graft.operators.TextAnalysis
 
 /** Streaming quality-classifier SERVING: the live form of the trained
   * filter x33 applies in batch ([[graft.operators.TextAnalysis]]'s
@@ -40,17 +40,12 @@ object StreamClassifier {
     * verdicts — the serving rule x33 uses (m > 0; sign(0) negative). */
   def scoreStream(docs: DataFrame, weights: DataFrame): DataFrame = {
     graft.functions.TextHashExprs.register(docs.sparkSession)
-    docs
-      .select(col("doc_id"), col("source"),
-        TextHash.tokens(col("text")).as("tk"))
-      .select(col("doc_id"), col("source"),
-        expr(s"concat(tk, ${TextHash.ngramsExpr("tk", 2)})").as("fts"))
+    TextAnalysis.clsFeatureTerms(docs)
       // per-occurrence hashed buckets (tf carried by multiplicity) +
-      // the always-on bias bucket — t36/t37's featurization verbatim
-      .select(col("doc_id"), col("source"), expr(
-        s"concat(transform(${TextHash.hashArrayExpr("fts", TextHash.P)}, " +
-          s"h -> h % ${TextAnalysis.ClsBuckets}L), " +
-          s"array(${TextAnalysis.ClsBiasBucket}L))").as("bk"))
+      // the always-on bias bucket — t36/t37's featurization
+      .select(col("doc_id"), col("source"),
+        concat(transform(TextAnalysis.clsHashes, TextAnalysis.clsBucket(_)),
+          array(lit(TextAnalysis.ClsBiasBucket))).as("bk"))
       .crossJoin(weights) // 1-row static model artifact
       .select(col("doc_id"), col("source"),
         expr("aggregate(bk, 0L, (acc, b) -> acc + coalesce(wm[b], 0L))")

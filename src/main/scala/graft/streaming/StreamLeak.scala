@@ -32,13 +32,13 @@ object StreamLeak {
 
   /** The static side: distinct benchmark gram hashes as ONE row
     * holding the array — built once from a batch frame of benchmark
-    * documents (text column). */
+    * documents (text column), by x29's own
+    * [[Dedup.decontamGrams]]. */
   def benchmarkGrams(benchDocs: DataFrame): DataFrame = {
     graft.functions.TextHashExprs.register(benchDocs.sparkSession)
     benchDocs
       .select(TextHash.tokens(col("text")).as("tk"))
-      .select(explode(expr(TextHash.hashArrayExpr(
-        TextHash.ngramsExpr("tk", Dedup.DecontamN), TextHash.P))).as("g"))
+      .select(explode(Dedup.decontamGrams("tk")).as("g"))
       .distinct()
       .agg(collect_list(col("g")).as("bg"))
   }
@@ -52,10 +52,7 @@ object StreamLeak {
     docs
       .select(col("doc_id"), col("source"),
         TextHash.tokens(col("text")).as("tk"))
-      .select(col("doc_id"), col("source"),
-        expr(s"array_distinct(${TextHash.hashArrayExpr(
-          TextHash.ngramsExpr("tk", Dedup.DecontamN), TextHash.P)})")
-          .as("gs"))
+      .select(col("doc_id"), col("source"), Dedup.decontamGrams("tk").as("gs"))
       .filter(size(col("gs")) > 0)
       .crossJoin(benchGrams) // 1-row static benchmark array
       .select(col("doc_id"), col("source"),

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TextHash}
+import graft.operators.{TextAnalysis, TextHash}
 
 /** Streaming per-source MinHash sketch: the live form of the gated t32
   * source-overlap estimate
@@ -28,37 +28,21 @@ import graft.operators.{Dedup, TextHash}
 object StreamMinhash {
 
   /** Input: streaming frame with (source, text); output: running
-    * (source, i, v) — the live per-source MinHash component minima.
-    * Docs with no shingles (< 5 tokens) carry no signature, matching
-    * the batch twin. */
+    * (source, i, v) — the live per-source MinHash component minima,
+    * by t32's own [[TextAnalysis.sourceSketch]]. Docs with no
+    * shingles (< 5 tokens) carry no signature, matching the batch
+    * twin. */
   def sourceMinhashStream(docs: DataFrame): DataFrame = {
     // batch operators reach the native hash expressions through
     // Tables.t; streaming takes a bare frame, so register here
     graft.functions.TextHashExprs.register(docs.sparkSession)
-    docs
-      .select(col("source"), TextHash.tokens(col("text")).as("tk"))
-      .select(col("source"), expr(TextHash.shingleExpr("tk")).as("shs"))
-      .filter(size(col("shs")) > 0)
-      .select(col("source"),
-        expr(TextHash.hashArrayExpr("shs", TextHash.P)).as("hv"))
-      .select(col("source"), posexplode(
-        expr(TextHash.minhashExpr("hv", Dedup.MinhashK))).as(Seq("i", "v")))
-      .groupBy("source", "i").agg(min("v").as("v"))
+    TextAnalysis.sourceSketch(
+      TextHash.shingleHashesBy(docs, "source").filter(col("n_sh") > 0))
   }
 
-  /** Batch probe of a (source, i, v) sketch table: t32's pair
-    * estimator — matching components / k over every source pair. The
-    * input is |sources|·k rows, so this is metadata-scale. */
+  /** Batch probe of a (source, i, v) sketch table: t32's
+    * [[TextAnalysis.sketchPairs]] over a snapshot of the state (the
+    * estimator self-joins; see [[StreamCentroid.driftCard]]). */
   def pairEstimates(sk: DataFrame): DataFrame =
-    // column renames (not plan aliases): the input may be a table view
-    // whose self-join would otherwise hit identical attribute ids
-    sk.toDF("source_a", "i", "va")
-      .join(sk.toDF("source_b", "ib", "vb"),
-        col("i") === col("ib") && col("source_a") < col("source_b"))
-      .groupBy("source_a", "source_b")
-      .agg(sum(when(col("va") === col("vb"), 1L).otherwise(0L))
-        .as("match_k"))
-      .withColumn("est_jac_e6",
-        expr(s"(1000000L * match_k) div ${Dedup.MinhashK}"))
-      .orderBy("source_a", "source_b")
+    TextAnalysis.sketchPairs(sk.localCheckpoint())
 }

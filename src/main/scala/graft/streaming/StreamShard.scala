@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, TextHash}
+import graft.operators.Curation
 
 /** Streaming shard assignment: the live form of the gated x30
   * ([[graft.operators.Curation.shardManifest]]) — the shape a
@@ -31,22 +31,16 @@ object StreamShard {
 
   /** Input: streaming (doc_id, text) plus the 1-row planned-shards
     * static frame; output: appended per-doc shard assignments
-    * (doc_id, n_toks, key, shard) under the planned shard count and
-    * [[Curation.ShardEpoch]] — x30's assignment rule verbatim.
+    * (doc_id, n_toks, key, shard) under the planned shard count, by
+    * x30's own [[Curation.shardInputs]] and [[Curation.shardOf]].
     * The shard count rides as a stream-static crossJoin of the 1-row
     * planning frame (the idiom every gated scalar uses), so nothing is
     * read at the driver at plan-build time. */
   def shardStream(docs: DataFrame, planned: DataFrame): DataFrame = {
     graft.functions.TextHashExprs.register(docs.sparkSession)
-    docs
-      .select(col("doc_id"),
-        size(TextHash.tokens(col("text"))).cast("long").as("n_toks"),
-        expr(TextHash.rollingHashExpr(
-          s"concat(cast(doc_id as string), ':${Curation.ShardEpoch}')",
-          TextHash.P))
-          .as("key"))
+    Curation.shardInputs(docs)
       .crossJoin(planned) // 1-row static side per micro-batch
-      .withColumn("shard", col("key") % col("n_shards"))
+      .withColumn("shard", Curation.shardOf)
       .drop("n_shards")
   }
 

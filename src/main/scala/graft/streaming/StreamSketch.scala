@@ -1,10 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.operators.Sketches
-import graft.operators.TextHash
 
 /** Streaming count-min sketch fill: an incremental frequency sketch of
   * an unbounded token stream.
@@ -14,23 +12,21 @@ import graft.operators.TextHash
   * holds at most depth·width rows however much data streams through —
   * the defining property that makes frequency tracking viable on an
   * unbounded feed (a streaming exact `groupBy(term)` would grow state
-  * with the vocabulary). Cell math is identical to the batch
-  * [[graft.operators.Sketches.countMinTopTerms]], so a batch probe of
-  * the streamed cell table yields the same one-sided estimates.
+  * with the vocabulary). The fill is the batch
+  * [[graft.operators.Sketches.countMinTopTerms]]'s own
+  * ([[Sketches.termHashes]] then [[Sketches.cmFill]]), so a batch
+  * probe of the streamed cell table yields the same one-sided
+  * estimates.
   */
 object StreamSketch {
 
   /** Input: streaming frame with a `text` column; output: running
     * (cell, cnt) — the live count-min table. */
   def countMinStream(docs: DataFrame): DataFrame = {
-    // every batch operator reaches the native hash functions through
-    // Tables.t; this is the one operator taking a bare DataFrame, so
-    // it must register them itself or fail analysis on a fresh session
+    // batch operators reach the native hash functions through
+    // Tables.t; a streaming twin takes a bare DataFrame, so it must
+    // register them itself or fail analysis on a fresh session
     graft.functions.TextHashExprs.register(docs.sparkSession)
-    docs
-      .select(explode(TextHash.tokens(col("text"))).as("term"))
-      .select(expr(s"rolling_hash_str(term, ${TextHash.P}L)").as("h"))
-      .select(explode(expr(Sketches.cmCellsExpr("h"))).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt"))
+    Sketches.cmFill(Sketches.termHashes(docs))
   }
 }

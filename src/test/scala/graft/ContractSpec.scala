@@ -368,4 +368,24 @@ class ContractSpec extends AnyFunSuite {
       s"default-valued parameters: added ${found.toSet -- kept}, " +
         s"removed ${kept -- found.toSet}")
   }
+
+  test("streaming twins call their batch operators' rules") {
+    // a twin that rebuilds its batch operator's rule from the hash
+    // primitives keeps a second copy a change to the batch rule does
+    // not reach; outside comments, no streaming source may name one
+    val primitives = Seq("rolling_hash_str", "rolling_hash_arr",
+      "affine_minhash", "rollingHashExpr", "hashArrayExpr", "shingleExpr",
+      "ngramsExpr", "minhashExpr", "cmCellsExpr", "ClsBuckets",
+      "ShardEpoch", "DecontamN", "MinhashK", "transform(embedding")
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val hits = for {
+      p <- Files.walk(Paths.get("src/main/scala/graft/streaming")).iterator
+        .asScala.toSeq.sorted
+      if p.toString.endsWith(".scala")
+      code = comment.replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"), "")
+      used = primitives.filter(code.contains)
+      if used.nonEmpty
+    } yield s"${p.getFileName}: ${used.mkString(", ")}"
+    assert(hits.isEmpty, "streaming twins naming rule primitives")
+  }
 }

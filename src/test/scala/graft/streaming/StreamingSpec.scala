@@ -835,4 +835,68 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
     assertSameFeed(cells(Set(1, 2)), uninterrupted, "drift-cell count")
   }
+
+  test("streaming MinHash sketch restarted from its checkpoint keeps its minima") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // texts of at least 5 tokens, so each carries a signature
+    val batches = Seq(
+      Seq(("a", "the quick brown fox jumps over the lazy dog"),
+        ("b", "a slow green turtle walks under the busy bridge")),
+      Seq(("a", "the quick brown fox sleeps beside the warm fire")),
+      Seq(("b", "a slow green turtle swims across the cold river"),
+        ("a", "one two three four five six")))
+    def sketch(restartAt: Set[Int]): Seq[((String, Int), Long)] =
+      runRestarting(MemoryStream[(String, String)], batches, restartAt, "update")(df =>
+        StreamMinhash.sourceMinhashStream(df.toDF("source", "text")))
+        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
+    val uninterrupted = sketch(Set.empty)
+    assert(uninterrupted.toMap == StreamMinhash
+      .sourceMinhashStream(batches.flatten.toDF("source", "text"))
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap)
+    assertSameFeed(sketch(Set(1, 2)), uninterrupted, "MinHash sketch")
+  }
+
+  test("streaming centroid moments restarted from their checkpoint keep their sums") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val batches = Seq(
+      Seq(("a", Array(0.5f, -0.25f, 1.0f)), ("b", Array(0.1f, 0.2f, 0.3f))),
+      Seq(("a", Array(0.25f, 0.75f, -1.0f))),
+      Seq(("b", Array(-0.4f, 0.0f, 0.9f)), ("a", Array(1.0f, 1.0f, 1.0f))))
+    def moments(restartAt: Set[Int]): Seq[((String, Int), (Long, Long, BigDecimal))] =
+      runRestarting(MemoryStream[(String, Array[Float])], batches, restartAt,
+          "update")(df =>
+        StreamCentroid.centroidMomentsStream(df.toDF("source", "embedding")))
+        .map(r => (r.getString(0), r.getInt(1)) ->
+          (r.getLong(2), r.getLong(3), BigDecimal(r.getDecimal(4))))
+    val uninterrupted = moments(Set.empty)
+    assert(uninterrupted.toMap.values.map(_._1).sum == 5L * 3,
+      "every vector component must fold into the moments once")
+    assertSameFeed(moments(Set(1, 2)), uninterrupted, "centroid moment")
+  }
+
+  test("stateful sessionizer restarted from its checkpoint keeps its open sessions") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // a session is open across each restart, and user 1's first one
+    // closes before the second restart, so a replay would emit it twice
+    val batches = Seq(
+      Seq(Event(1L, ts("2024-01-01 10:00:00")), Event(1L, ts("2024-01-01 10:02:00")),
+        Event(2L, ts("2024-01-01 10:00:00"))),
+      Seq(Event(1L, ts("2024-01-01 10:30:00")), Event(2L, ts("2024-01-01 10:03:00"))),
+      Seq(Event(1L, ts("2024-01-01 10:31:00")), Event(1L, ts("2024-01-01 11:30:00")),
+        Event(2L, ts("2024-01-01 11:00:00"))))
+    def sessions(restartAt: Set[Int]): Seq[(Long, (Long, Long, Long))] =
+      runRestarting(MemoryStream[Event], batches, restartAt, "append")(df =>
+        sessionizeStateful(df.as[Event]).toDF())
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+    val uninterrupted = sessions(Set.empty)
+    def ms(s: String) = ts(s).getTime
+    assert(uninterrupted.toSet == Set(
+      1L -> (ms("2024-01-01 10:00:00"), ms("2024-01-01 10:02:00"), 2L),
+      1L -> (ms("2024-01-01 10:30:00"), ms("2024-01-01 10:31:00"), 2L),
+      2L -> (ms("2024-01-01 10:00:00"), ms("2024-01-01 10:03:00"), 2L)))
+    assertSameFeed(sessions(Set(1, 2)), uninterrupted, "sessionizer")
+  }
 }
